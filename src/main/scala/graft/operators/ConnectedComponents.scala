@@ -90,8 +90,6 @@ object ConnectedComponents {
         .resetStatsKeepLayout(cp)
       (out, fresh)
     }
-    val debug = sys.env.contains("GRAFT_CC_DEBUG")
-    val t0 = System.nanoTime()
     // materialize the edge list ONCE before symmetrizing: unioning two
     // selects of `edges` would otherwise evaluate the whole upstream edge
     // pipeline (e.g. the MinHash-LSH candidate+verify DAG) once per union
@@ -100,25 +98,8 @@ object ConnectedComponents {
     if (e1.count() <= driverMaxEdges) {
       val out = driverPath(nodes, e1)
       e1Rdds.foreach(_.unpersist(blocking = false))
-      if (debug) System.err.println(
-        f"[cc] driver union-find: ${(System.nanoTime() - t0) / 1e9}%.2fs")
       return out
     }
-    // per-round shuffle ledger (GRAFT_CC_DEBUG): real bytes from stage
-    // metrics, not a proxy — listener events are async but settle by the
-    // time the next round's action returns, good enough for a ledger
-    val shuffleW = new java.util.concurrent.atomic.AtomicLong
-    val listener =
-      if (!debug) None
-      else {
-        val l = new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-            shuffleW.addAndGet(
-              s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-        }
-        sc.addSparkListener(l); Some(l)
-      }
     // CANONICAL orientation (lo, hi): half the rows/bytes of a
     // symmetrized edge list through every remap join and distinct below;
     // the neighbor-min aggregation reads both directions via a cheap
@@ -130,14 +111,9 @@ object ConnectedComponents {
           greatest(col("x"), col("y")).as("y"))
         .filter(col("x") =!= col("y")))
     e1Rdds.foreach(_.unpersist(blocking = false))
-    if (debug) System.err.println(
-      f"[cc] canon ckpt: ${(System.nanoTime() - t0) / 1e9}%.2fs")
-    val t1 = System.nanoTime()
     var (labels, labelRdds) = ckpt(
       e0.select(col("x").as("id")).unionAll(e0.select(col("y").as("id")))
         .distinct().select(col("id"), col("id").as("label")))
-    if (debug) System.err.println(
-      f"[cc] labels ckpt: ${(System.nanoTime() - t1) / 1e9}%.2fs")
     // POINTER JUMPING OVER A CONTRACTING EDGE SET. Two pieces of state:
     // the per-node label table (all connected nodes — this is the
     // pointer memory that makes propagation double each round, so the
@@ -173,41 +149,12 @@ object ConnectedComponents {
     // the loop fully distributed to absolute convergence — the
     // spec-pinned pure path.)
     val finishBelow = driverMaxEdges / 8
-    // ADAPTIVE contraction: re-expressing + dedup'ing the class-edge set
-    // costs two extra edge joins per round, which pays off exactly when
-    // edges actually disappear (dense near-dup cliques: all class edges
-    // become self-loops in round 1) and is pure toll when they don't
-    // (chains: the contracted graph of a path is again a path — r7
-    // measured ~2.5 s/round of toll over the constant-shuffle loop on
-    // the 1.2 M-edge chain fixture). Two detectors, both measured:
-    // STATIC — average degree decides the OPENING mode (an LSH near-dup
-    // cluster graph runs at 2|E|/|V| ≥ ~2(k-1) ≈ dozens; chains/trees
-    // sit at 2), so a sparse graph never pays even one contraction
-    // round; DYNAMIC — a contraction round that removed <30% of the
-    // class edges flips to the fixed-edge loop anyway (a dense-looking
-    // graph that refuses to collapse). Both loops compute the same pure
-    // min-per-component function, so results are byte-identical.
-    // STRATEGY: contraction by default, the constant-shuffle fixed-edge
-    // loop behind `spark.graft.cc.mode=fixed`. The round-7 verdict asked
-    // for an adaptive switch (contract cliques, constant-shuffle chains)
-    // premised on contraction costing ~2.5 s of toll on the chain
-    // fixture — but a SAME-HOST warm min-of-3 A/B this round refuted the
-    // premise: chain fixture (1.2 M edges, the adversarial case for
-    // contraction) measured contract 21.1 s / fixed 22.7 s /
-    // flip-after-round-1 25.3 s. Contraction's shrinking late rounds
-    // (152→66 MB) and its FREE convergence test (class-edge set empty —
-    // the fixed loop must pay a full confirming round for its label-sum
-    // fixpoint) pay for the two extra remap joins even on chains, and on
-    // cliques it exits in one round where the fixed loop would pay
-    // several. Measured and kept: one default, no shape detector; the
-    // fixed loop stays a pinned-equal alternative (spec-exercised) for
-    // A/B ledgers.
-    val mode = nodes.sparkSession.conf
-      .getOption("spark.graft.cc.mode").getOrElse("contract")
-    var contracting = mode != "fixed"
-    while (contracting && active > finishBelow && i < maxIter) {
-      val tRound = System.nanoTime()
-      val s0 = shuffleW.get()
+    // Contraction is the only distributed loop: a same-host A/B against
+    // a constant-shuffle fixed-edge loop measured it faster even on a
+    // 1.2 M-edge chain, its worst case (BASELINE.md, round 8), because its
+    // late rounds shrink and its convergence test (class-edge set empty)
+    // is free, while on cliques it exits after one round.
+    while (active > finishBelow && i < maxIter) {
       // per-class candidate: min over the class and its neighbor classes
       // — one aggregation over the (shrinking) active edge set, reading
       // both directions of the canonical list. Classes whose component
@@ -268,80 +215,11 @@ object ConnectedComponents {
       labels = step; labelRdds = stepRdds
       e = stepE; eRdds = stepERdds
       i += 1
-      if (debug) System.err.println(
-        f"[cc] round $i: ${(System.nanoTime() - tRound) / 1e9}%.2fs " +
-          f"active=$active shuffleMB=${(shuffleW.get() - s0) / 1e6}%.1f")
-    }
-    if (!contracting && active > finishBelow && i < maxIter) {
-      // FIXED-EDGE pointer-jump loop on the frozen class graph: a
-      // class-label table (cl -> lbl, the pointer memory that keeps
-      // rounds O(log diameter)) evolves over a constant symmetrized
-      // edge set. Per round: ONE edge-sized join (self-messages ride
-      // the same shuffle as neighbor messages, so no labels-back join)
-      // + the class-sized jump self-join — the r6 constant-shuffle
-      // shape, whose per-round cost the contraction loop's two remap
-      // joins + distinct roughly double. Convergence piggybacks on a
-      // decimal label-sum (labels only decrease, so sum equality ⟺
-      // fixpoint — no changed-flag column through the joins). Node
-      // labels fold ONCE at the end (labels' values at freeze time ARE
-      // frozen class ids).
-      val (symc, symcRdds) = ckpt(
-        e.select(col("x"), col("y")).unionAll(
-          e.select(col("y").as("x"), col("x").as("y"))))
-      var (cls, clsRdds) = ckpt(
-        symc.select(col("x").as("cl")).distinct()
-          .select(col("cl"), col("cl").as("lbl")))
-      def labelSum(df: DataFrame): java.math.BigDecimal =
-        df.agg(org.apache.spark.sql.functions.sum(
-          col("lbl").cast("decimal(38,0)"))).head().getDecimal(0)
-      var prevSum = labelSum(cls)
-      var converged = false
-      while (!converged && i < maxIter) {
-        val tRound = System.nanoTime()
-        val s0 = shuffleW.get()
-        val (mid, midRdds) = ckpt(
-          symc.join(cls.select(col("cl").as("y"), col("lbl").as("ly")),
-              Seq("y"))
-            .select(col("x"), col("ly"))
-            .unionAll(cls.select(col("cl").as("x"), col("lbl").as("ly")))
-            .groupBy("x").agg(min("ly").as("m"))
-            .select(col("x").as("cl"), col("m")))
-        // jump: label-of-label through the same materialized frame —
-        // total, because every label VALUE is itself a frozen class id
-        // that emits a self-message
-        val (next, nextRdds) = ckpt(
-          mid.join(mid.select(col("cl").as("m"), col("m").as("j")),
-              Seq("m"))
-            .select(col("cl"), least(col("m"), col("j")).as("lbl")))
-        val curSum = labelSum(next)
-        converged = curSum.compareTo(prevSum) == 0
-        prevSum = curSum
-        (clsRdds ++ midRdds).foreach(_.unpersist(blocking = false))
-        cls = next; clsRdds = nextRdds
-        i += 1
-        if (debug) System.err.println(
-          f"[cc] fixed round $i: ${(System.nanoTime() - tRound) / 1e9}%.2fs " +
-            f"shuffleMB=${(shuffleW.get() - s0) / 1e6}%.1f")
-      }
-      symcRdds.foreach(_.unpersist(blocking = false))
-      if (converged) {
-        // fold the class fixpoint into the node labels once. A node
-        // whose class had no frozen edges passes through — its
-        // component was already collapsed when the set froze.
-        val (fl, flRdds) = ckpt(labels
-          .join(cls.select(col("cl").as("label"), col("lbl").as("nl")),
-            Seq("label"), "left")
-          .select(col("id"), coalesce(col("nl"), col("label")).as("label")))
-        labelRdds.foreach(_.unpersist(blocking = false))
-        clsRdds.foreach(_.unpersist(blocking = false))
-        labels = fl; labelRdds = flRdds
-        active = 0
-      } else clsRdds.foreach(_.unpersist(blocking = false))
     }
     // a silent non-converged result would diverge from the transitive
     // closure with no error — fail loudly instead
     if (active > finishBelow) {
-      listener.foreach(sc.removeSparkListener)
+      (labelRdds ++ eRdds).foreach(_.unpersist(blocking = false))
       throw new IllegalStateException(
         s"connected components did not converge after $maxIter rounds " +
           s"($active active edges remain); raise maxIter")
@@ -354,7 +232,6 @@ object ConnectedComponents {
       // labels. Classes outside the residue pass through (already
       // final). Same pure function of the edge set as looping to
       // absolute convergence (both compute min-per-component).
-      val tFin = System.nanoTime()
       val fin = unionFindPairs(e.collect().map(r =>
         (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue)))
       val spark = nodes.sparkSession
@@ -374,12 +251,8 @@ object ConnectedComponents {
           .select(col("id"), coalesce(col("fl"), col("label")).as("label")))
       labelRdds.foreach(_.unpersist(blocking = false))
       labels = fl2; labelRdds = fl2Rdds
-      if (debug) System.err.println(
-        f"[cc] driver finish: ${(System.nanoTime() - tFin) / 1e9}%.2fs " +
-          f"residual=$active")
     }
     eRdds.foreach(_.unpersist(blocking = false))
-    listener.foreach(sc.removeSparkListener)
     // the final label table has exactly one row per edge-connected node,
     // so it doubles as the connected-id set for the isolated anti-join
     val isolated = nodes.join(labels, Seq("id"), "left_anti")
@@ -387,11 +260,6 @@ object ConnectedComponents {
     labels.unionAll(isolated)
   }
 
-  /** Small-graph fast path: one collect, classic union-find with the max
-    * root always attached under the min root — so every root IS its
-    * component's minimum id and the result is the same pure function of
-    * the edge set as the distributed loop (equality pinned per-seed in
-    * GraphLayoutPropertySpec). */
   /** (id -> min-root) for every id appearing in `pairs`: classic
     * union-find, max root always attached under the min root — so every
     * root IS its component's minimum. LongMap: open-addressed
@@ -414,6 +282,11 @@ object ConnectedComponents {
     parent.keys.toSeq.sorted.map(v => (v, find(v)))
   }
 
+  /** Small-graph fast path: one collect, classic union-find with the max
+    * root always attached under the min root — so every root IS its
+    * component's minimum id and the result is the same pure function of
+    * the edge set as the distributed loop (equality pinned per-seed in
+    * GraphLayoutPropertySpec). */
   private def driverPath(nodes: DataFrame, e1: DataFrame): DataFrame = {
     val spark = nodes.sparkSession
     import spark.implicits._

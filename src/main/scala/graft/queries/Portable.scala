@@ -38,7 +38,7 @@ object Portable {
 
   /** Order-independent exact sum of a double expression, as double.
     *
-    * Cost, measured (tools/DecimalBench, sf0.1 lineitem, 4 sums):
+    * Cost, measured (sf0.1 lineitem, 4 sums):
     * plain double 0.32 s, DECIMAL(18,8) 1.08 s, DECIMAL(30,10) 0.96 s —
     * narrower decimals don't help (the sum buffer widens past the compact
     * long-backed representation either way), so ~3x vs double is the price

@@ -6,7 +6,8 @@ import graft.core.EngineSession
 /** Dev tool: assert the physical plans have the scale-critical shapes —
   * filter/column pushdown into the parquet scan, broadcast joins for dims,
   * TakeOrderedAndProject for global top-k, whole-stage codegen coverage.
-  * Prints PLAN-OK / PLAN-BAD lines; run after plan-affecting changes.
+  * Prints PLAN-OK / PLAN-BAD lines and exits 1 when any check is bad, so
+  * it can gate a script; run after plan-affecting changes.
   */
 object ExplainCheck {
 
@@ -19,11 +20,18 @@ object ExplainCheck {
       df.queryExecution.executedPlan.toString
     }
 
+    var bad = 0
+    def report(ok: Boolean, name: String, what: String, p: String): Unit = {
+      println(s"${if (ok) "PLAN-OK " else "PLAN-BAD"} $name: $what")
+      if (!ok) {
+        bad += 1
+        println(p.linesIterator.take(40).mkString("\n"))
+      }
+    }
+
     def check(name: String, what: String, pred: String => Boolean): Unit = {
       val p = plan(name)
-      val ok = pred(p)
-      println(s"${if (ok) "PLAN-OK " else "PLAN-BAD"} $name: $what")
-      if (!ok) println(p.linesIterator.take(40).mkString("\n"))
+      report(pred(p), name, what, p)
     }
 
     // restore whatever value was configured before (set or unset), rather
@@ -79,14 +87,13 @@ object ExplainCheck {
       // codegen stages render as "*(n) Project ..." in the simple plan
       val ok = p.linesIterator.exists(l => l.contains("*(") && l.contains("Project")) &&
         !p.contains("CodegenFallback")
-      println(s"${if (ok) "PLAN-OK " else "PLAN-BAD"} Q-llm-03: " +
-        "cosine_sim projection inside a WholeStageCodegen stage")
-      if (!ok) println(p.linesIterator.take(40).mkString("\n"))
+      report(ok, "Q-llm-03",
+        "cosine_sim projection inside a WholeStageCodegen stage", p)
       // the auto partial top-k is the 100 TB safeguard: only k rows per
       // partition reach the rank shuffle
       val gl = p.contains("WindowGroupLimit") && p.contains("Partial")
-      println(s"${if (gl) "PLAN-OK " else "PLAN-BAD"} Q-llm-03: " +
-        "partial WindowGroupLimit before exchange")
+      report(gl, "Q-llm-03",
+        "partial WindowGroupLimit before exchange", p)
     }
     // dynamic partition pruning: the fact scan must carry a runtime
     // partition filter fed by the dim side
@@ -111,9 +118,8 @@ object ExplainCheck {
         // renders as might_contain(<bloom_filter_agg subquery>) on the fact
         // side's pre-shuffle Filter
         val ok = p.contains("might_contain") && p.contains("bloom_filter_agg")
-        println(s"${if (ok) "PLAN-OK " else "PLAN-BAD"} Q-join-13: " +
-          "bloom might_contain on fact side before shuffle (broadcast disabled)")
-        if (!ok) println(p.linesIterator.take(40).mkString("\n"))
+        report(ok, "Q-join-13",
+          "bloom might_contain on fact side before shuffle (broadcast disabled)", p)
       }
     }
     // correlated LATERAL top-1 decorrelates to a partial WindowGroupLimit
@@ -156,9 +162,8 @@ object ExplainCheck {
         val ok = p.contains("SortMergeJoin") &&
           p.contains("Bucketed: true") &&
           !joinUp.contains("Exchange hashpartitioning")
-        println(s"${if (ok) "PLAN-OK " else "PLAN-BAD"} Q-join-11: " +
-          "bucketed SMJ, no join-side shuffle (broadcast disabled)")
-        if (!ok) println(p.linesIterator.take(40).mkString("\n"))
+        report(ok, "Q-join-11",
+          "bucketed SMJ, no join-side shuffle (broadcast disabled)", p)
       }
     }
     // fuzzy dedup: length-band blocking must make the pair space an
@@ -354,9 +359,8 @@ object ExplainCheck {
       val pb = graft.operators.TxTable.read(s, root)
         .queryExecution.executedPlan.toString
       val okB = pb.contains("BroadcastHashJoin") && pb.contains("LeftAnti")
-      println(s"${if (okB) "PLAN-OK " else "PLAN-BAD"} mor-read: " +
-        "small delete set broadcasts the anti-join build side")
-      if (!okB) println(pb.linesIterator.take(40).mkString("\n"))
+      report(okB, "mor-read",
+        "small delete set broadcasts the anti-join build side", pb)
       s.conf.set("spark.graft.mor.broadcastMaxBytes", "0")
       try {
         val ps = graft.operators.TxTable.read(s, root)
@@ -367,11 +371,14 @@ object ExplainCheck {
         val okS = ps.contains("SortMergeJoin") && ps.contains("LeftAnti") &&
           !ps.linesIterator.exists(l =>
             l.contains("BroadcastHashJoin") && l.contains("LeftAnti"))
-        println(s"${if (okS) "PLAN-OK " else "PLAN-BAD"} mor-read: " +
-          "over-threshold delete set falls back to shuffled anti-join")
-        if (!okS) println(ps.linesIterator.take(40).mkString("\n"))
+        report(okS, "mor-read",
+          "over-threshold delete set falls back to shuffled anti-join", ps)
       } finally s.conf.unset("spark.graft.mor.broadcastMaxBytes")
     }
     s.stop()
+    if (bad > 0) {
+      System.err.println(s"[explain-check] $bad plan check(s) bad")
+      sys.exit(1)
+    }
   }
 }

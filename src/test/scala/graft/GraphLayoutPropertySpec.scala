@@ -78,8 +78,9 @@ class GraphLayoutPropertySpec extends AnyFunSuite {
     }
   }
 
-  // soak tier: ~30 s of distributed rounds; the seeded-random and
-  // fixed-mode cases below pin the same convergence contract faster
+  // soak tier: ~30 s of distributed rounds; the seeded-random case above
+  // and the contracted-finish and clique cases below pin the same
+  // convergence contract faster
   test("ConnectedComponents converges on a chain with diameter >> 25",
       SlowTest) {
     // a 400-node path through the DISTRIBUTED loop: O(diameter)
@@ -99,23 +100,21 @@ class GraphLayoutPropertySpec extends AnyFunSuite {
     checkGraph(n, edges, driverMaxEdges = 50L)
   }
 
-  test("ConnectedComponents fixed-edge loop (spark.graft.cc.mode=fixed) equals union-find") {
-    // the A/B alternative strategy must stay the same pure function of
-    // the edge set on chains, cliques, and random graphs
-    spark.conf.set("spark.graft.cc.mode", "fixed")
-    try {
-      checkGraph(400, (0L until 399L).map(i => (i, i + 1)), driverMaxEdges = 0L)
-      val k = 6
-      val cl = for {
-        c <- 0 until 20; i <- 0 until k; j <- (i + 1) until k
-      } yield ((c * k + i).toLong, (c * k + j).toLong)
-      checkGraph(20 * k, cl, driverMaxEdges = 0L)
-      val gen = Gen.listOfN(80, for {
-        a <- Gen.chooseNum(0L, 59L); b <- Gen.chooseNum(0L, 59L) if a != b
-      } yield (a, b))
-      val edges = gen.apply(Gen.Parameters.default, Seed(7L)).get
-      checkGraph(60, edges, driverMaxEdges = 0L)
-    } finally spark.conf.unset("spark.graft.cc.mode")
+  test("ConnectedComponents non-convergence throws and frees its checkpoints") {
+    // one round cannot converge a 400-node chain on the fully distributed
+    // path: the loop must fail loudly AND release every localCheckpoint it
+    // made — a caller that catches and retries would otherwise pin them
+    val n = 400
+    val nodes = (0L until n.toLong).toDF("id")
+    val edges = (0L until n - 1L).map(i => (i, i + 1)).toDF("a", "b")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val err = intercept[IllegalStateException] {
+      ConnectedComponents.minLabel(nodes, edges, maxIter = 1, driverMaxEdges = 0L)
+    }
+    assert(err.getMessage.contains("maxIter"), err.getMessage)
+    val leaked = sc.getPersistentRDDs.keySet.toSet -- before
+    assert(leaked.isEmpty, s"RDDs still persisted after the throw: $leaked")
   }
 
   test("ConnectedComponents on dense cliques (distributed + contracted finish)") {
