@@ -113,10 +113,10 @@ object Graph {
     // ---- Q-graph-12: PageRank on the POWER-LAW fixture — the Zipf
     // in-degree twin of Q-graph-01's uniform trade graph. Hubs
     // concentrate ~40% of all rank contributions onto <1% of keys, the
-    // exact shape the per-dst partial agg (map-side combine before the
-    // |V|-bounded exchange) exists to absorb; the decimal contribution
-    // algebra stays bit-exact vs the unrolled-CTE oracle regardless of
-    // how skewed the per-key addend counts are.
+    // shape the operator's map-side per-destination sums (one block per
+    // target partition before each round's shuffle) exist to absorb; the
+    // exact decimal contribution sums stay bit-exact vs the unrolled-CTE
+    // oracle regardless of how skewed the per-key addend counts are.
     "Q-graph-12" -> { (s, _) =>
       val e = powerLawEdges(s, 1)
       val edges = e.select(col("a").as("src"), col("b").as("dst"))
@@ -129,9 +129,10 @@ object Graph {
 
     // ---- Q-graph-01: PageRank over the symmetrized customer–supplier
     // trade graph, 8 fixed iterations, scaled form (rank mass = |V|).
-    // Plan shape: one setup shuffle attaches out-degrees and partitions
-    // edges by src; each round is two |V|-bounded exchanges (operator
-    // scaladoc). Edges never re-shuffle after setup.
+    // Shape: one setup shuffle partitions the edges by src into
+    // adjacency arrays; the 8 rounds run in one Spark job, one shuffle
+    // of per-destination contribution sums each (operator scaladoc).
+    // Edges never re-shuffle after setup.
     "Q-graph-01" -> { (s, d) =>
       val pairs = Tables.orders(s, d)
         .join(Tables.lineitem(s, d),
@@ -407,9 +408,10 @@ object Graph {
     // cohort — authority RELATIVE to a seed set (the "expand this
     // curated corpus" crawl primitive; same seeds as BFS/Q-graph-03).
     // Teleport mass lands only on seeds; everything else is the
-    // Q-graph-01 machinery: two bounded exchanges per round, decimal
-    // contribution sums, bit-exact vs the unrolled-CTE chain. Output
-    // trimmed to the nonzero-rank nodes (reached mass) ordered by id.
+    // Q-graph-01 machinery: one shuffle per round in a single job,
+    // decimal contribution sums, bit-exact vs the unrolled-CTE chain.
+    // Output trimmed to the nonzero-rank nodes (reached mass) ordered
+    // by id.
     "Q-graph-06" -> { (s, d) =>
       val pairs = Tables.orders(s, d)
         .join(Tables.lineitem(s, d),

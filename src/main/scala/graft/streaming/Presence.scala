@@ -32,25 +32,43 @@ object Presence {
       deviceId: String,
       events: Iterator[DeviceEvent],
       state: GroupState[DeviceState]): Iterator[PresenceEvent] = {
+    val seen = state.getOption.map(_.lastSeenMs)
+    val (out, moved) = step(deviceId, events, seen, ttlMillis)
+    moved.foreach(l => state.update(DeviceState(l)))
+    out
+  }
+
+  /** The state machine all three operators share: walks one key's batch
+    * in event-time order from the stored last-seen and returns the
+    * transitions and the new last-seen if it moved.
+    * Last-seen never moves backwards: an event older than it, arriving
+    * in a later micro-batch, neither emits nor rewinds it (a rewind
+    * would make the next event look like a gap past the TTL). */
+  private def step(key: String, events: Iterator[DeviceEvent], seen: Option[Long],
+                   ttlMillis: Long): (Iterator[PresenceEvent], Option[Long]) = {
     // micro-batch rows arrive unsorted: order by event time within the batch
     val sorted = events.toSeq.sortBy(_.ts_ms)
-    if (sorted.isEmpty) return Iterator.empty
+    if (sorted.isEmpty) return (Iterator.empty, None)
     val out = Seq.newBuilder[PresenceEvent]
-    var last: Option[Long] = state.getOption.map(_.lastSeenMs)
+    var last = seen
     for (e <- sorted) {
       last match {
         case None =>
-          out += PresenceEvent(deviceId, "online", e.ts_ms)
+          out += PresenceEvent(key, "online", e.ts_ms)
         case Some(prev) if e.ts_ms - prev > ttlMillis =>
-          out += PresenceEvent(deviceId, "offline", prev + ttlMillis)
-          out += PresenceEvent(deviceId, "online", e.ts_ms)
+          out += PresenceEvent(key, "offline", prev + ttlMillis)
+          out += PresenceEvent(key, "online", e.ts_ms)
         case _ => () // still online
       }
-      last = Some(e.ts_ms)
+      last = Some(last.fold(e.ts_ms)(math.max(_, e.ts_ms)))
     }
-    state.update(DeviceState(last.get))
-    out.result().iterator
+    (out.result().iterator, last.filterNot(seen.contains))
   }
+
+  /** One state lookup: `ValueState.exists()` is itself a `get()`, and a
+    * missing `Long` reads back as a null box. */
+  private def read(s: ValueState[Long]): Option[Long] =
+    Option(s.asInstanceOf[ValueState[java.lang.Long]].get()).map(_.longValue)
 
   /** Wire the stateful operator over a (device_id, ts) stream. */
   def detect(spark: SparkSession, events: DataFrame, ttlMillis: Long): Dataset[PresenceEvent] = {
@@ -79,23 +97,10 @@ object Presence {
     override def handleInputRows(
         key: String, rows: Iterator[DeviceEvent],
         tv: TimerValues): Iterator[PresenceEvent] = {
-      val sorted = rows.toSeq.sortBy(_.ts_ms)
-      if (sorted.isEmpty) return Iterator.empty
-      val out = Seq.newBuilder[PresenceEvent]
-      var last: Option[Long] = if (lastSeen.exists()) Some(lastSeen.get()) else None
-      for (e <- sorted) {
-        last match {
-          case None =>
-            out += PresenceEvent(key, "online", e.ts_ms)
-          case Some(prev) if e.ts_ms - prev > ttlMillis =>
-            out += PresenceEvent(key, "offline", prev + ttlMillis)
-            out += PresenceEvent(key, "online", e.ts_ms)
-          case _ => ()
-        }
-        last = Some(e.ts_ms)
-      }
-      lastSeen.update(last.get)
-      out.result().iterator
+      val seen = read(lastSeen)
+      val (out, moved) = step(key, rows, seen, ttlMillis)
+      moved.foreach(lastSeen.update)
+      out
     }
   }
 
@@ -121,36 +126,20 @@ object Presence {
     override def handleInputRows(
         key: String, rows: Iterator[DeviceEvent],
         tv: TimerValues): Iterator[PresenceEvent] = {
-      val sorted = rows.toSeq.sortBy(_.ts_ms)
-      if (sorted.isEmpty) return Iterator.empty
-      val out = Seq.newBuilder[PresenceEvent]
+      val seen = read(lastSeen)
+      val (out, moved) = step(key, rows, seen, ttlMillis)
       // the armed timer is always a pure function of state (lastSeen +
       // ttl), so re-arming can DELETE the superseded timer without a
       // second state variable — a chatty device would otherwise
       // accumulate one stale timer per batch it appears in (each a
       // guarded no-op, but timer state and expired-timer work growing
       // without bound at fleet scale)
-      val prevArmed: Option[Long] =
-        if (lastSeen.exists()) Some(lastSeen.get() + ttlMillis) else None
-      var last: Option[Long] = if (lastSeen.exists()) Some(lastSeen.get()) else None
-      for (e <- sorted) {
-        last match {
-          case None =>
-            out += PresenceEvent(key, "online", e.ts_ms)
-          case Some(prev) if e.ts_ms - prev > ttlMillis =>
-            out += PresenceEvent(key, "offline", prev + ttlMillis)
-            out += PresenceEvent(key, "online", e.ts_ms)
-          case _ => ()
-        }
-        last = Some(e.ts_ms)
+      moved.foreach { l =>
+        lastSeen.update(l)
+        seen.foreach(s => getHandle.deleteTimer(s + ttlMillis))
+        getHandle.registerTimer(l + ttlMillis)
       }
-      lastSeen.update(last.get)
-      val expiry = last.get + ttlMillis
-      if (!prevArmed.contains(expiry)) {
-        prevArmed.foreach(getHandle.deleteTimer)
-        getHandle.registerTimer(expiry)
-      }
-      out.result().iterator
+      out
     }
 
     override def handleExpiredTimer(
@@ -159,12 +148,12 @@ object Presence {
       // re-arming deletes the superseded timer, so a firing timer is the
       // latest one; the guard stays as defense against a delete racing a
       // same-batch fire
-      if (lastSeen.exists() &&
-          info.getExpiryTimeInMs() >= lastSeen.get() + ttlMillis) {
-        val off = lastSeen.get() + ttlMillis
-        lastSeen.clear()
-        Iterator.single(PresenceEvent(key, "offline", off))
-      } else Iterator.empty
+      read(lastSeen) match {
+        case Some(seen) if info.getExpiryTimeInMs() >= seen + ttlMillis =>
+          lastSeen.clear()
+          Iterator.single(PresenceEvent(key, "offline", seen + ttlMillis))
+        case _ => Iterator.empty
+      }
     }
   }
 

@@ -1,13 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.EngineSession
 import graft.operators.PageRank
 
-/** PageRank invariants on graphs with known fixed points. */
+/** PageRank invariants on graphs with known fixed points, and bit-exact
+  * agreement with the DataFrame reference loop ([[PageRankReference]]). */
 class PageRankSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = EngineSession.getOrCreate("graft-test")
@@ -61,5 +65,105 @@ class PageRankSpec extends AnyFunSuite {
     val r17 = PageRank.run(df17, 6).collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(r1 == r17) // decimal sums make this EXACT, not approximate
+  }
+
+  /** id -> the rank's IEEE bits. */
+  private def bits(df: DataFrame): Map[Long, Long] =
+    df.collect().map(r =>
+      r.getAs[Number](0).longValue -> java.lang.Double.doubleToLongBits(r.getDouble(1))).toMap
+
+  /** The reference's ranks, run with AQE off and one shuffle partition,
+    * which makes each of its rounds one job instead of about five; its
+    * exact sums do not depend on the plan. */
+  private def reference(run: => DataFrame): Map[Long, Long] = {
+    val conf = Seq("spark.sql.adaptive.enabled" -> "false", "spark.sql.shuffle.partitions" -> "1")
+    val prev = conf.map { case (k, _) => k -> spark.conf.get(k) }
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try bits(run) finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
+  /** A seeded random digraph: every node has an out-edge, destinations
+    * are hub-skewed, some edges repeat, and some point outside the node
+    * set. Ids are scattered and partly negative. */
+  private def randomGraph(seed: Long, n: Int, extra: Int): DataFrame = {
+    val rnd = new scala.util.Random(seed)
+    def id(i: Int): Long = (i.toLong - n / 3) * 7919L
+    def hub(): Int = math.min(n - 1, (n * math.pow(rnd.nextDouble(), 3)).toInt)
+    val out = (0 until n).map(i => id(i) -> id(hub()))
+    val more = Seq.fill(extra)(id(rnd.nextInt(n)) -> id(hub()))
+    val outside = Seq.fill(n / 20)(id(rnd.nextInt(n)) -> ((1L << 40) + rnd.nextInt(100)))
+    (out ++ more ++ outside ++ more.take(extra / 10)).toDF("src", "dst")
+  }
+
+  private def seedsOf(edges: DataFrame, every: Int): DataFrame =
+    edges.select(col("src").as("id")).distinct().where(abs(col("id")) % (7919L * every) === 0)
+
+  test("run and runPersonalized equal the DataFrame reference bit for bit, at 1 and 17 input partitions") {
+    for (seed <- Seq(1L, 2L)) {
+      val edges = randomGraph(seed, 400, 1200)
+      val seeds = seedsOf(edges, 7)
+      val want = reference(PageRankReference.run(edges, 8))
+      val wantP = reference(PageRankReference.runPersonalized(edges, 8, seeds))
+      assert(want.size == 400 && wantP.size == 400)
+      for (parts <- Seq(1, 17)) {
+        val in = edges.repartition(parts)
+        assert(bits(PageRank.run(in, 8)) == want, s"run, seed $seed, $parts partitions")
+        assert(bits(PageRank.runPersonalized(in, 8, seeds)) == wantP,
+          s"runPersonalized, seed $seed, $parts partitions")
+      }
+    }
+  }
+
+  test("a 2,000-leaf star whose hub has out-degree 1 equals the reference bit for bit") {
+    // every leaf points at the hub, the hub at leaf 1: the hub's rank,
+    // and its single edge's contribution, grow past 500
+    val star = ((1L to 2000L).map(_ -> 0L) :+ (0L -> 1L)).toDF("src", "dst")
+    val seeds = Seq(0L, 5L).toDF("id")
+    val got = bits(PageRank.run(star, 8))
+    assert(got == reference(PageRankReference.run(star, 8)))
+    assert(java.lang.Double.longBitsToDouble(got(0L)) > 500.0)
+    assert(bits(PageRank.runPersonalized(star, 8, seeds)) ==
+      reference(PageRankReference.runPersonalized(star, 8, seeds)))
+  }
+
+  test("60 rounds, across the lineage cut, equal the reference bit for bit") {
+    val edges = randomGraph(3L, 60, 120)
+    assert(60 > PageRank.RoundsPerJob)
+    assert(bits(PageRank.run(edges, 60)) == reference(PageRankReference.run(edges, 60)))
+  }
+
+  test("run(edges, 8) submits at most 3 Spark jobs") {
+    val edges = randomGraph(4L, 200, 400)
+    val sc = spark.sparkContext
+    val group = s"pagerank-jobs-${System.nanoTime}"
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "PageRankSpec job count")
+    try {
+      PageRank.run(edges, 8)
+      // job-start events are delivered asynchronously; the drain is
+      // package-private to Spark but public in bytecode
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.get >= 1 && jobs.get <= 3, s"${jobs.get} jobs")
+  }
+
+  test("ids come back in their integral input type; other id types are rejected") {
+    val edges = Seq(1 -> 2, 2 -> 1).toDF("src", "dst")
+    val out = PageRank.run(edges, 2)
+    assert(out.schema("id").dataType == org.apache.spark.sql.types.IntegerType)
+    assert(out.collect().map(_.getInt(0)).sorted.toSeq == Seq(1, 2))
+    intercept[IllegalArgumentException] {
+      PageRank.run(Seq("a" -> "b").toDF("src", "dst"), 2)
+    }
   }
 }

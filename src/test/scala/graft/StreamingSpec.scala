@@ -106,6 +106,32 @@ class StreamingSpec extends AnyFunSuite {
     assert(state.value.contains(DeviceState(100000L)))
   }
 
+  test("presence last-seen never moves backwards across micro-batches") {
+    // an event older than last-seen, arriving in a later batch, must not
+    // rewind it: the third event is then within the TTL of the first
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import graft.streaming.Presence
+    import graft.streaming.Presence.PresenceEvent
+    import spark.implicits._
+    val ttl = 60000L
+    val ckpt = java.nio.file.Files.createTempDirectory("presence-monotone")
+    val in = MemoryStream[(String, Long)](spark)
+    val q = Presence.detect(spark, in.toDF().toDF("device_id", "ts_ms"), ttl).toDF()
+      .writeStream.format("memory").queryName("presence_monotone")
+      .option("checkpointLocation", ckpt.toString).outputMode("append").start()
+    try {
+      for (ts <- Seq(100000L, 50000L, 100000L + ttl - 1)) {
+        in.addData("A" -> ts)
+        q.processAllAvailable()
+      }
+      assert(spark.table("presence_monotone").as[PresenceEvent].collect().toSeq ==
+        Seq(PresenceEvent("A", "online", 100000L)))
+    } finally {
+      q.stop()
+      org.apache.commons.io.FileUtils.deleteDirectory(ckpt.toFile)
+    }
+  }
+
   test("quota admission on a hand fixture: order, cross-batch draw, timeout") {
     import graft.streaming.Quota._
     def ev(id: Long, tsMs: Long) =
