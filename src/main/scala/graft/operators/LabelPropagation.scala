@@ -35,7 +35,7 @@ import org.apache.spark.storage.StorageLevel
   * stationary edges, (b) one partial-agg count keyed (dst, label) whose
   * exchange is bounded by distinct (dst, label) pairs ≤ |E|, and (c)
   * one |V|-bounded max. Per-round plans stay constant-size via eager
-  * localCheckpoint (the ConnectedComponents discipline).
+  * localCheckpoint.
   */
 object LabelPropagation {
 

@@ -5,8 +5,6 @@ import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
@@ -84,7 +82,7 @@ object PageRank {
     // HashPartitioner maps to itself
     val hash = new HashPartitioner(n)
 
-    val edgeBlocks = longs(edges, "src", "dst").mapPartitions { rows =>
+    val edgeBlocks = IntegralIds.longs(edges, "PageRank", "src", "dst").mapPartitions { rows =>
       val src = Array.fill(n)(Array.newBuilder[Long])
       val dst = Array.fill(n)(Array.newBuilder[Long])
       val dangling = Array.fill(n)(Array.newBuilder[Long]) // null dst
@@ -98,7 +96,7 @@ object PageRank {
       Iterator.tabulate(n)(p => p -> (src(p).result(), dst(p).result(), dangling(p).result()))
         .filter { case (_, (s, _, d)) => s.nonEmpty || d.nonEmpty }
     }.partitionBy(hash)
-    val seedBlocks = seeds.map(s => longs(s, "id").mapPartitions { rows =>
+    val seedBlocks = seeds.map(s => IntegralIds.longs(s, "PageRank", "id").mapPartitions { rows =>
       val ids = Array.fill(n)(Array.newBuilder[Long])
       rows.foreach(r => if (!r.isNullAt(0)) ids(hash.getPartition(r.getLong(0))) += r.getLong(0))
       Iterator.tabulate(n)(p => p -> ids(p).result()).filter(_._2.nonEmpty)
@@ -122,12 +120,7 @@ object PageRank {
       }
     }
 
-    val toId: Long => Any = idField.dataType match {
-      case LongType => identity
-      case IntegerType => _.toInt
-      case ShortType => _.toShort
-      case ByteType => _.toByte
-    }
+    val toId = IntegralIds.toId(idField.dataType)
     val rows = graph.zipPartitions(ranks) { (g, r) =>
       val part = g.next(); val rank = r.next()
       Iterator.tabulate(part.ids.length)(i => Row(toId(part.ids(i)), rank(i)))
@@ -138,18 +131,6 @@ object PageRank {
     cut.foreach(_.unpersist(blocking = false))
     graph.unpersist(blocking = false)
     out
-  }
-
-  /** `cols` of `df` cast to long; any non-integral id type is rejected. */
-  private def longs(df: DataFrame, cols: String*): RDD[InternalRow] = {
-    cols.foreach { c =>
-      df.schema(c).dataType match {
-        case LongType | IntegerType | ShortType | ByteType => ()
-        case t => throw new IllegalArgumentException(
-          s"PageRank needs integral ids; column $c is ${t.simpleString}")
-      }
-    }
-    df.select(cols.map(c => col(c).cast(LongType)): _*).queryExecution.toRdd
   }
 
   /** Assembles one partition's [[Part]] from its edge blocks. */

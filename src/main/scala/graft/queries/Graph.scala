@@ -268,11 +268,11 @@ object Graph {
     // but had no bench/shuffle row). 1.2M nodes in 12000 chain blocks
     // of 100: 1.188M edges exceed ConnectedComponents' 1M
     // driverMaxEdges, so the driver fast path is ineligible and the
-    // O(log diameter) doubling loop runs for real (diameter 100 ≈ 7
-    // rounds). The
-    // fixture is synthetic (sfDir-independent) because its POINT is a
-    // fixed supra-cap scale; components are closed-form (block starts),
-    // so the oracle is non-recursive SQL.
+    // O(log diameter) doubling loop runs for real: diameter 100 takes 6
+    // rounds, one Spark job each. The fixture is synthetic
+    // (sfDir-independent) because its POINT is a fixed supra-cap scale;
+    // components are closed-form (block starts), so the oracle is
+    // non-recursive SQL.
     "Q-graph-09" -> { (s, _) =>
       val N = 1200000L
       val B = 100L
@@ -297,7 +297,7 @@ object Graph {
     // driver cap, so the distributed loop runs — and the contracting
     // edge set earns its keep: every clique collapses to one label in
     // round 1, the remap drops ALL class edges as self-loops, and the
-    // loop exits after a single round (vs 6 label-doubling rounds on
+    // loop exits after a single round, one Spark job (vs 6 rounds on
     // the chain fixture). Components are closed-form (clique minimum),
     // so the oracle is non-recursive SQL. Together 09+10 ledger both
     // ends of the contraction tradeoff documented in BASELINE.md.
@@ -331,7 +331,7 @@ object Graph {
     // first reached last round (never the full distance table), dedups
     // the expansion, and anti-joins out already-settled nodes; per-round
     // shuffle = frontier-adjacent edges, and the plan stays constant-size
-    // via per-round localCheckpoint (the ConnectedComponents discipline).
+    // via per-round localCheckpoint.
     // The fixpoint (min hop count, capped) is identical to the oracle's
     // full min-union unrolled-CTE rendering.
     "Q-graph-03" -> { (s, d) =>

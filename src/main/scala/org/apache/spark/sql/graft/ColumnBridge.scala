@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** `private[sql]` bridge for Column <-> Expression conversion (the
-  * [[StreamingBridge]]/[[CheckpointBridge]] pattern): Spark 4's public
+  * [[StreamingBridge]] pattern): Spark 4's public
   * Column wraps a ColumnNode, so a library expression that carries
   * driver-side state (e.g. a trained model array inside
   * [[graft.functions.KMeansDists]]) cannot be constructed through the

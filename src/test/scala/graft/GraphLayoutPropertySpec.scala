@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
@@ -78,17 +79,55 @@ class GraphLayoutPropertySpec extends AnyFunSuite {
     }
   }
 
-  // soak tier: ~30 s of distributed rounds; the seeded-random case above
-  // and the contracted-finish and clique cases below pin the same
-  // convergence contract faster
-  test("ConnectedComponents converges on a chain with diameter >> 25",
-      SlowTest) {
+  test("ConnectedComponents converges on a chain with diameter >> 25") {
     // a 400-node path through the DISTRIBUTED loop: O(diameter)
     // propagation would need 400 rounds and previously exited silently at
     // 25; pointer jumping needs ~log2(400)
     val n = 400
     val edges = (0L until n - 1L).map(i => (i, i + 1))
     checkGraph(n, edges, driverMaxEdges = 0L)
+  }
+
+  test("ConnectedComponents runs one job per round on the distributed path") {
+    // a 400-node chain: the cap check, the setup, one job per round and
+    // the result's checkpoint. The round count is not visible, so the
+    // bound jobs <= rounds + 4 is checked from the other side: the call
+    // must not converge within jobs - 5 rounds.
+    val n = 400
+    val nodes = (0L until n.toLong).toDF("id")
+    val edges = (0L until n - 1L).map(i => (i, i + 1)).toDF("a", "b")
+    var out: DataFrame = null
+    val jobs = JobCount(spark.sparkContext, "ConnectedComponents job count") {
+      out = ConnectedComponents.minLabel(nodes, edges, driverMaxEdges = 0L)
+    }
+    assert(out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      (0L until n.toLong).map(_ -> 0L).toMap)
+    info(s"$jobs jobs")
+    intercept[IllegalStateException] {
+      ConnectedComponents.minLabel(nodes, edges, maxIter = jobs - 5, driverMaxEdges = 0L)
+    }
+  }
+
+  test("ConnectedComponents drops an edge with a null endpoint on both paths") {
+    val n = 8
+    val edges = Seq[(Option[Long], Option[Long])](
+      Some(0L) -> Some(1L), Some(1L) -> None, None -> Some(5L), None -> None,
+      Some(5L) -> Some(6L), Some(2L) -> Some(3L), Some(3L) -> Some(4L))
+    val want = unionFind(n, edges.collect { case (Some(a), Some(b)) => (a, b) })
+    for (cap <- Seq(1000000L, 0L)) {
+      val got = ConnectedComponents
+        .minLabel((0L until n.toLong).toDF("id"), edges.toDF("a", "b"), driverMaxEdges = cap)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == want, s"driverMaxEdges = $cap")
+    }
+  }
+
+  test("ConnectedComponents keeps int-typed ids int on the distributed path") {
+    val edges = Seq(0 -> 1, 2 -> 1, 4 -> 5).toDF("a", "b")
+    val out = ConnectedComponents.minLabel((0 until 7).toDF("id"), edges, driverMaxEdges = 0L)
+    assert(out.schema.map(_.dataType) == Seq(IntegerType, IntegerType))
+    assert(out.collect().map(r => r.getInt(0) -> r.getInt(1)).toMap ==
+      Map(0 -> 0, 1 -> 0, 2 -> 0, 3 -> 3, 4 -> 4, 5 -> 4, 6 -> 6))
   }
 
   test("ConnectedComponents contracted driver finish matches union-find") {

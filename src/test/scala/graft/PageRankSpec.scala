@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -134,27 +131,8 @@ class PageRankSpec extends AnyFunSuite {
 
   test("run(edges, 8) submits at most 3 Spark jobs") {
     val edges = randomGraph(4L, 200, 400)
-    val sc = spark.sparkContext
-    val group = s"pagerank-jobs-${System.nanoTime}"
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "PageRankSpec job count")
-    try {
-      PageRank.run(edges, 8)
-      // job-start events are delivered asynchronously; the drain is
-      // package-private to Spark but public in bytecode
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-    assert(jobs.get >= 1 && jobs.get <= 3, s"${jobs.get} jobs")
+    val jobs = JobCount(spark.sparkContext, "PageRankSpec job count")(PageRank.run(edges, 8))
+    assert(jobs >= 1 && jobs <= 3, s"$jobs jobs")
   }
 
   test("ids come back in their integral input type; other id types are rejected") {
