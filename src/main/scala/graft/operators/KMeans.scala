@@ -70,9 +70,9 @@ object KMeans {
     * pinned by KMeansSpec's parity case. */
   private def distsNative(cents: Array[Array[Long]],
       vec: org.apache.spark.sql.Column, scale: Int): org.apache.spark.sql.Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
+    org.apache.spark.sql.graft.Bridge.column(
       graft.functions.KMeansDists(
-        org.apache.spark.sql.graft.ColumnBridge.expression(vec), cents, scale))
+        org.apache.spark.sql.graft.Bridge.expression(vec), cents, scale))
 
   /** Cell assignment of an arbitrary embedding column against FROZEN
     * centroids — the trained partitioner function of an IVF-shaped

@@ -4,7 +4,10 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference,
+  Expression, GreaterThanOrEqual, In, LessThanOrEqual, Literal, StartsWith}
+import org.apache.spark.sql.types.{LongType, StringType}
 
 /** A minimal log-structured ACID table over parquet — the transactional
   * story the MERGE/SCD2/diff dataflows (Q-qual-03/04/05) compose with:
@@ -187,7 +190,45 @@ object TxTable {
       strCols: Seq[String] = Seq.empty,
       shingleCols: Seq[String] = Seq.empty,
       shingleN: Int = 0,
-      fileShBlooms: Map[String, Seq[String]] = Map.empty)
+      fileShBlooms: Map[String, Seq[String]] = Map.empty) {
+
+    /** Logged [min,max] of stats column `col` in file `f` — long-
+      * normalized, prefix64 codes for a STRING column (None = nothing
+      * recorded: never prune). The empty range (MaxValue, MinValue) is a
+      * real recording: every row of the file is NULL in that column. */
+    def statsOf(f: String, col: String): Option[(Long, Long)] =
+      if (statsKey.contains(col)) fileStats.get(f)
+      else statsCols.indexOf(col) match {
+        case -1 => None
+        case j => fileStatsN.get(f).flatMap(_.lift(j))
+      }
+
+    /** Logged key bloom (hex) of `col` in file `f`; "" = none recorded. */
+    def bloomOf(f: String, col: String): String =
+      if (statsKey.contains(col)) fileBlooms.getOrElse(f, "")
+      else statsCols.indexOf(col) match {
+        case -1 => ""
+        case j => fileBloomsN.get(f).flatMap(_.lift(j)).getOrElse("")
+      }
+
+    /** The live files `cond` might match, decided from the log alone by
+      * [[GraftSkipping.provesEmpty]]: a file is dropped only when its
+      * logged ranges (and, with `useBlooms`, its key blooms — no false
+      * negatives) prove no row matches. Each consulted bloom is decoded
+      * once per (file, column), not per probe key. */
+    def kept(cond: Expression, useBlooms: Boolean = true): Seq[String] =
+      files.filter { f =>
+        val words = scala.collection.mutable.HashMap.empty[String, Array[Long]]
+        def admits(col: String, key: Long): Boolean = !useBlooms || {
+          val w = words.getOrElseUpdate(col, bloomOf(f, col) match {
+            case "" => null
+            case hex => KeyBloom.fromHex(hex)
+          })
+          w == null || KeyBloom.mightContainWords(w, key)
+        }
+        !GraftSkipping.provesEmpty(cond, statsOf(f, _), admits)
+      }
+  }
 
   private val emptySnapshot =
     Snapshot(-1L, Seq.empty, Seq.empty, None, Map.empty, Set.empty)
@@ -1096,7 +1137,7 @@ object TxTable {
     try {
       val conv = new org.apache.spark.sql.execution.datasources.parquet
         .ParquetToSparkSchemaConverter(
-          org.apache.spark.sql.graft.StreamingBridge.sqlConf(spark))
+          org.apache.spark.sql.graft.Bridge.sqlConf(spark))
       val hconf = new org.apache.hadoop.conf.Configuration()
       def one(f: String): StructType = {
         val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
@@ -1171,36 +1212,41 @@ object TxTable {
       s"table at $root declares no stats key — use create(df, root, Some(col))"))
   }
 
-  /** Per-file [min, max] for any DECLARED stats column — the primary key
-    * or a secondary `statsCols` entry; files without an entry are read
-    * conservatively by every pruning decision. */
-  private def colStats(snap: Snapshot, column: String): Map[String, (Long, Long)] =
-    if (snap.statsKey.contains(column)) snap.fileStats
-    else {
-      val j = snap.statsCols.indexOf(column)
-      require(j >= 0, s"no stats declared for column '$column' " +
-        s"(primary = ${snap.statsKey.getOrElse("-")}, " +
-        s"secondary = ${snap.statsCols.mkString("[", ",", "]")})")
-      snap.fileStatsN.collect { case (f, ss) if ss.length > j => f -> ss(j) }
-    }
-
-  /** STRING stats columns hold prefix64-ENCODED bounds (see stageData) —
-    * numeric pruning entry points must refuse them loudly rather than
-    * compare encoded codes against raw longs. */
-  private def requireNumericStats(snap: Snapshot, column: String): Unit =
+  /** Numeric pruning entry points need a DECLARED stats column (the
+    * primary key or a secondary `statsCols` entry) that is not a STRING
+    * one: STRING stats columns hold prefix64-ENCODED bounds (see
+    * stageData), so they are refused loudly rather than compared as raw
+    * longs. */
+  private def requireNumericStats(snap: Snapshot, column: String): Unit = {
     require(!snap.strCols.contains(column),
       s"'$column' is a STRING stats column (prefix64-encoded bounds) — " +
         "use readPrunedOnStr / prefixRead / pointReadOnStr")
+    require(snap.statsKey.contains(column) || snap.statsCols.contains(column),
+      s"no stats declared for column '$column' " +
+        s"(primary = ${snap.statsKey.getOrElse("-")}, " +
+        s"secondary = ${snap.statsCols.mkString("[", ",", "]")})")
+  }
 
-  private def colBlooms(snap: Snapshot, column: String): Map[String, String] =
-    if (snap.statsKey.contains(column)) snap.fileBlooms
-    else {
-      val j = snap.statsCols.indexOf(column)
-      if (j < 0) Map.empty
-      else snap.fileBloomsN.collect {
-        case (f, bs) if bs.length > j && bs(j).nonEmpty => f -> bs(j)
-      }
-    }
+  // Pruning conditions are built in the log's own domain — a LongType
+  // attribute with long literals for numeric stats columns, a StringType
+  // one for string columns — so [[Snapshot.kept]] compares them exactly
+  // against the logged bounds. The residual `pred` applied inside kept
+  // files makes every result exact.
+  private def longAttr(column: String): Expression =
+    AttributeReference(column, LongType)()
+  private def strAttr(column: String): Expression =
+    AttributeReference(column, StringType)()
+  private def between(a: Expression, lo: Any, hi: Any): Expression =
+    And(GreaterThanOrEqual(a, Literal(lo)), LessThanOrEqual(a, Literal(hi)))
+  private def in(a: Expression, keys: Seq[Any]): Expression =
+    In(a, keys.map(Literal(_)))
+
+  /** `read(...).where(pred)` opening only the `kept` files; with every
+    * file pruned the result is empty with the table's schema. */
+  private def readKept(spark: SparkSession, root: String, snap: Snapshot,
+                       kept: Seq[String], pred: Column): DataFrame =
+    (if (kept.isEmpty) emptyRead(spark, root, snap)
+     else morRead(spark, root, snap, kept)).where(pred)
 
   /** [[readPruned]] on ANY declared stats column: after a z-order
     * OPTIMIZE the files tile BOTH clustered dimensions, so a range read
@@ -1212,55 +1258,16 @@ object TxTable {
     val snap = snapshot(root)
     require(snap.version >= 0, s"not a TxTable (no committed log): $root")
     requireNumericStats(snap, column)
-    val st = colStats(snap, column)
-    val kept = snap.files.filter { f =>
-      st.get(f) match {
-        case Some((mn, mx)) => mx >= lo && mn <= hi
-        case None => true
-      }
-    }
-    val pred = col(column).cast("long").between(lo, hi)
-    if (kept.isEmpty) // every file pruned: empty result, correct schema
-      emptyRead(spark, root, snap).where(pred)
-    else morRead(spark, root, snap, kept).where(pred)
+    readKept(spark, root, snap, snap.kept(between(longAttr(column), lo, hi)),
+      col(column).cast("long").between(lo, hi))
   }
-
-  /** Which files a point read of `keys` must open, decided from the LOG
-    * alone: a file survives only if its [min,max] range admits some key
-    * AND its bloom (when present) claims possible membership of some key
-    * — zero data I/O either way. Blooms have no false negatives, so the
-    * kept set is always a superset of the files actually holding the
-    * keys; the residual IN-filter inside kept files makes the result
-    * exact. This is the point-lookup story on the layout range stats
-    * can't help with: per-epoch appended files each spanning the whole
-    * key domain. */
-  private def pointKeptMaps(files: Seq[String],
-                            st: Map[String, (Long, Long)],
-                            bl: Map[String, String],
-                            keys: Seq[Long]): Seq[String] = {
-    // decode each file's 16 Kchar hex bloom ONCE, probe all keys against
-    // the word array — not per (file, key)
-    val decoded: Map[String, Array[Long]] = bl.collect {
-      case (f, b) if b.nonEmpty => f -> KeyBloom.fromHex(b)
-    }
-    files.filter { f =>
-      val rangeOk = st.get(f) match {
-        case Some((mn, mx)) => keys.exists(k => k >= mn && k <= mx)
-        case None => true
-      }
-      rangeOk && (decoded.get(f) match {
-        case Some(words) =>
-          keys.exists(k => KeyBloom.mightContainWords(words, k))
-        case None => true
-      })
-    }
-  }
-
-  private def pointKept(snap: Snapshot, keys: Seq[Long]): Seq[String] =
-    pointKeptMaps(snap.files, snap.fileStats, snap.fileBlooms, keys)
 
   /** Point read: result ≡ `read(...).where(key IN keys)`, but only the
-    * bloom-and-range-surviving files are opened. */
+    * files whose logged range admits some key AND whose bloom claims
+    * possible membership of that key are opened — zero data I/O to
+    * decide. This is the point-lookup story on the layout range stats
+    * can't help with: per-epoch appended files each spanning the whole
+    * key domain. */
   def pointRead(spark: SparkSession, root: String,
                 keys: Seq[Long]): DataFrame =
     pointReadOn(spark, root, primaryKey(snapshot(root), root), keys)
@@ -1274,21 +1281,15 @@ object TxTable {
     val snap = snapshot(root)
     require(snap.version >= 0, s"not a TxTable (no committed log): $root")
     requireNumericStats(snap, column)
-    val kept = pointKeptMaps(snap.files, colStats(snap, column),
-      colBlooms(snap, column), keys)
-    val pred = col(column).cast("long").isin(keys: _*)
-    if (kept.isEmpty)
-      emptyRead(spark, root, snap).where(pred)
-    else morRead(spark, root, snap, kept).where(pred)
+    readKept(spark, root, snap, snap.kept(in(longAttr(column), keys)),
+      col(column).cast("long").isin(keys: _*))
   }
 
   // ---- STRING-axis pruning reads ------------------------------------
   // A string statsCol's logged (min, max) live in the prefix64 domain
-  // and its bloom keys on hash64 of the full value (see stageData), so
-  // every decision below is the numeric machinery applied to encoded
-  // bounds: monotonicity of the encoding makes the kept set a SUPERSET
-  // of the files actually holding matches, and the residual exact
-  // predicate inside kept files makes the result exact.
+  // and its bloom keys on hash64 of the full value (see stageData):
+  // monotonicity of the encoding makes the kept set a SUPERSET of the
+  // files actually holding matches.
 
   private def requireStrStats(root: String,
                               snap: Snapshot, column: String): Unit = {
@@ -1309,19 +1310,8 @@ object TxTable {
     import org.apache.spark.sql.functions.{col, lit}
     val snap = snapshot(root)
     requireStrStats(root, snap, column)
-    val (encLo, encHi) =
-      (graft.functions.StrKey.prefix64(lo), graft.functions.StrKey.prefix64(hi))
-    val st = colStats(snap, column)
-    val kept = snap.files.filter { f =>
-      st.get(f) match {
-        case Some((mn, mx)) => mx >= encLo && mn <= encHi
-        case None => true
-      }
-    }
-    val pred = col(column).between(lit(lo), lit(hi))
-    if (kept.isEmpty)
-      emptyRead(spark, root, snap).where(pred)
-    else morRead(spark, root, snap, kept).where(pred)
+    readKept(spark, root, snap, snap.kept(between(strAttr(column), lo, hi)),
+      col(column).between(lit(lo), lit(hi)))
   }
 
   /** PREFIX read (`column LIKE 'p%'`): the value range of every string
@@ -1333,19 +1323,9 @@ object TxTable {
     import org.apache.spark.sql.functions.col
     val snap = snapshot(root)
     requireStrStats(root, snap, column)
-    val (encLo, encHi) =
-      (graft.functions.StrKey.prefix64(p), graft.functions.StrKey.upper64(p))
-    val st = colStats(snap, column)
-    val kept = snap.files.filter { f =>
-      st.get(f) match {
-        case Some((mn, mx)) => mx >= encLo && mn <= encHi
-        case None => true
-      }
-    }
-    val pred = col(column).startsWith(p)
-    if (kept.isEmpty)
-      emptyRead(spark, root, snap).where(pred)
-    else morRead(spark, root, snap, kept).where(pred)
+    readKept(spark, root, snap,
+      snap.kept(StartsWith(strAttr(column), Literal(p))),
+      col(column).startsWith(p))
   }
 
   /** [[pointReadOn]] for a STRING stats column: the prefix64 range test
@@ -1357,66 +1337,24 @@ object TxTable {
     import org.apache.spark.sql.functions.col
     val snap = snapshot(root)
     requireStrStats(root, snap, column)
-    val kept = strPointKept(snap, column, keys)
-    val pred = col(column).isin(keys: _*)
-    if (kept.isEmpty)
-      emptyRead(spark, root, snap).where(pred)
-    else morRead(spark, root, snap, kept).where(pred)
-  }
-
-  private def strPointKept(snap: Snapshot, column: String,
-                           keys: Seq[String]): Seq[String] = {
-    val st = colStats(snap, column)
-    val bl = colBlooms(snap, column)
-    val encs = keys.map(graft.functions.StrKey.prefix64)
-    val hashes = keys.map(graft.functions.StrKey.hash64)
-    val decoded: Map[String, Array[Long]] = bl.collect {
-      case (f, b) if b.nonEmpty => f -> KeyBloom.fromHex(b)
-    }
-    snap.files.filter { f =>
-      val rangeOk = st.get(f) match {
-        case Some((mn, mx)) => encs.exists(e => e >= mn && e <= mx)
-        case None => true
-      }
-      rangeOk && (decoded.get(f) match {
-        case Some(words) =>
-          hashes.exists(h => KeyBloom.mightContainWords(words, h))
-        case None => true
-      })
-    }
+    readKept(spark, root, snap, snap.kept(in(strAttr(column), keys)),
+      col(column).isin(keys: _*))
   }
 
   /** (kept, total) accounting for a string range read — the log-only
-    * selection rule of [[readPrunedOnStr]] / [[prefixRead]] (pass
-    * `prefix = true` for the latter's bounds). */
+    * selection rule of [[readPrunedOnStr]]. */
   def pruneAccountingOnStr(root: String, column: String,
                            lo: String, hi: String): (Int, Int) = {
     val snap = snapshot(root)
     requireStrStats(root, snap, column)
-    val st = colStats(snap, column)
-    val (encLo, encHi) =
-      (graft.functions.StrKey.prefix64(lo), graft.functions.StrKey.prefix64(hi))
-    (snap.files.count { f =>
-      st.get(f) match {
-        case Some((mn, mx)) => mx >= encLo && mn <= encHi
-        case None => true
-      }
-    }, snap.files.size)
+    (snap.kept(between(strAttr(column), lo, hi)).size, snap.files.size)
   }
 
-  /** [[pruneAccountingOnStr]] with [[prefixRead]]'s bounds. */
+  /** [[pruneAccountingOnStr]] with [[prefixRead]]'s selection rule. */
   def prefixAccounting(root: String, column: String, p: String): (Int, Int) = {
     val snap = snapshot(root)
     requireStrStats(root, snap, column)
-    val st = colStats(snap, column)
-    val (encLo, encHi) =
-      (graft.functions.StrKey.prefix64(p), graft.functions.StrKey.upper64(p))
-    (snap.files.count { f =>
-      st.get(f) match {
-        case Some((mn, mx)) => mx >= encLo && mn <= encHi
-        case None => true
-      }
-    }, snap.files.size)
+    (snap.kept(StartsWith(strAttr(column), Literal(p))).size, snap.files.size)
   }
 
   /** (files kept by prefix-range stats alone, by range+bloom, total) for
@@ -1427,15 +1365,9 @@ object TxTable {
                                 keys: Seq[String]): (Int, Int, Int) = {
     val snap = snapshot(root)
     requireStrStats(root, snap, column)
-    val st = colStats(snap, column)
-    val encs = keys.map(graft.functions.StrKey.prefix64)
-    val rangeKept = snap.files.count { f =>
-      st.get(f) match {
-        case Some((mn, mx)) => encs.exists(e => e >= mn && e <= mx)
-        case None => true
-      }
-    }
-    (rangeKept, strPointKept(snap, column, keys).size, snap.files.size)
+    val cond = in(strAttr(column), keys)
+    (snap.kept(cond, useBlooms = false).size, snap.kept(cond).size,
+      snap.files.size)
   }
 
   // ---- SHINGLE (word n-gram) phrase probes --------------------------
@@ -1498,10 +1430,7 @@ object TxTable {
       array_join(org.apache.spark.sql.functions.filter(
         split(lower(col(column)), "[^a-z0-9]+"), x => x =!= lit("")), " "),
       lit(" "))
-    val pred = hay.contains(s" $canon ")
-    if (kept.isEmpty)
-      emptyRead(spark, root, snap).where(pred)
-    else morRead(spark, root, snap, kept).where(pred)
+    readKept(spark, root, snap, kept, hay.contains(s" $canon "))
   }
 
   /** Point read driven by a DATAFRAME of keys — the delta-join shape
@@ -1515,12 +1444,13 @@ object TxTable {
                     maxDriverKeys: Int = 10000): DataFrame = {
     import org.apache.spark.sql.functions.col
     val snap = snapshot(root)
-    require(snap.version >= 0, s"not a TxTable (no committed log): $root")
-    val key = snap.statsKey.getOrElse(throw new IllegalArgumentException(
-      s"table at $root declares no stats key — use create(df, root, Some(col))"))
-    // probe column name must not collide with any table column
+    val key = primaryKey(snap, root)
+    // probe column name must not collide with any table column; a NULL
+    // key matches no row (as in `key IN keys`), so it is dropped before
+    // the driver collect, whose longs cannot hold it
     val kd = keys.select(
-      col(keys.columns.head).cast("long").as("__graft_probe_k")).distinct()
+      col(keys.columns.head).cast("long").as("__graft_probe_k"))
+      .where(col("__graft_probe_k").isNotNull).distinct()
     val head = kd.limit(maxDriverKeys + 1).collect()
     if (head.length <= maxDriverKeys)
       pointRead(spark, root, head.map(_.getLong(0)).toSeq.sorted)
@@ -1613,15 +1543,8 @@ object TxTable {
                              keys: Seq[Long]): (Int, Int, Int) = {
     val snap = snapshot(root)
     requireNumericStats(snap, column)
-    val st = colStats(snap, column)
-    val rangeKept = snap.files.count { f =>
-      st.get(f) match {
-        case Some((mn, mx)) => keys.exists(k => k >= mn && k <= mx)
-        case None => true
-      }
-    }
-    (rangeKept,
-      pointKeptMaps(snap.files, st, colBlooms(snap, column), keys).size,
+    val cond = in(longAttr(column), keys)
+    (snap.kept(cond, useBlooms = false).size, snap.kept(cond).size,
       snap.files.size)
   }
 
@@ -1719,23 +1642,21 @@ object TxTable {
       max => smax, min => smin}
     val snap = snapshot(root, versionAsOf)
     require(snap.version >= 0, s"not a TxTable (no committed log): $root")
-    val st: Map[String, (Long, Long)] =
-      if (snap.statsKey.contains(column)) snap.fileStats
-      // a STRING stats column's logged bounds are prefix64 CODES, not
-      // values — fall through to the scan path (count still folds from
-      // metadata via fileRows; min/max degrade to None via try_cast)
-      else if (snap.statsCols.contains(column) &&
-               !snap.strCols.contains(column)) colStats(snap, column)
-      else Map.empty
+    // a STRING stats column's logged bounds are prefix64 CODES, not
+    // values — fall through to the scan path (count still folds from
+    // metadata via fileRows; min/max degrade to None via try_cast)
+    val numeric = snap.statsKey.contains(column) || !snap.strCols.contains(column)
+    def st(f: String): Option[(Long, Long)] =
+      if (numeric) snap.statsOf(f, column) else None
     val sorted = snap.ledgers.sortBy(_.version)
     def ledgerScoped(f: String): Boolean = {
       val av = snap.fileAddV.getOrElse(f, Long.MaxValue)
       sorted.exists(_.version > av)
     }
     val (scan, meta) = snap.files.partition(f =>
-      ledgerScoped(f) || !snap.fileRows.contains(f) || !st.contains(f))
+      ledgerScoped(f) || !snap.fileRows.contains(f) || st(f).isEmpty)
     var cnt = meta.map(snap.fileRows).sum
-    val ranges = meta.map(st).filter(r => r._1 <= r._2) // skip empty/all-NULL
+    val ranges = meta.flatMap(st).filter(r => r._1 <= r._2) // skip empty/all-NULL
     var mn = if (ranges.isEmpty) None else Some(ranges.map(_._1).min)
     var mx = if (ranges.isEmpty) None else Some(ranges.map(_._2).max)
     if (scan.nonEmpty) {
@@ -2539,12 +2460,8 @@ object TxTable {
         "the replaced range — refused (the commit would silently write " +
         "beyond its own scope)")
     transactFiles(spark, root, "replace-where", tag) { snap =>
-      val touched = snap.files.filter { f =>
-        snap.fileStats.get(f) match {
-          case Some((mn, mx)) => mx >= lo && mn <= hi
-          case None => true // stats-less file: rewrite conservatively
-        }
-      }
+      // stats-less files rewrite conservatively
+      val touched = snap.kept(between(longAttr(key), lo, hi))
       val keep = snap.files.diff(touched)
       val survivors =
         if (touched.isEmpty)
@@ -2564,12 +2481,8 @@ object TxTable {
     * files) — the metadata-only selection rule, exposed. */
   def replaceAccounting(root: String, lo: Long, hi: Long): (Int, Int) = {
     val snap = snapshot(root)
-    (snap.files.count { f =>
-      snap.fileStats.get(f) match {
-        case Some((mn, mx)) => mx >= lo && mn <= hi
-        case None => true
-      }
-    }, snap.files.size)
+    (snap.statsKey.fold(snap.files)(k => snap.kept(between(longAttr(k), lo, hi))).size,
+      snap.files.size)
   }
 
   /** TIME-BASED retention — the "RETAIN N DAYS" policy spelled as an
@@ -3153,14 +3066,7 @@ object TxTable {
                         lo: Long, hi: Long): (Int, Int) = {
     val snap = snapshot(root)
     requireNumericStats(snap, column)
-    val st = colStats(snap, column)
-    val kept = snap.files.count { f =>
-      st.get(f) match {
-        case Some((mn, mx)) => mx >= lo && mn <= hi
-        case None => true
-      }
-    }
-    (kept, snap.files.length)
+    (snap.kept(between(longAttr(column), lo, hi)).size, snap.files.length)
   }
 
   /** Copy-on-write MERGE — the merge shape that holds at 100 TB: only
@@ -3323,11 +3229,8 @@ object TxTable {
         if (keyRows.length > 10000) applicable // too many to prune by
         else {
           val doomedKeys = keyRows.map(_.getLong(0)).toSeq
-          val prunable = pointKept(
-            to.copy(files = applicable,
-              fileStats = to.fileStats, fileBlooms = to.fileBlooms),
-            doomedKeys).toSet
-          applicable.filter(prunable)
+          to.statsKey.fold(applicable)(k =>
+            to.copy(files = applicable).kept(in(longAttr(k), doomedKeys)))
         }
         }
       }

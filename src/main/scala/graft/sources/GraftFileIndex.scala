@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
 import org.apache.spark.sql.types._
 
-import graft.operators.{KeyBloom, TxTable}
+import graft.operators.TxTable
 
 /** A Catalyst [[FileIndex]] over a TxTable snapshot — the Delta-style
   * integration point that makes the table's log stats a PLANNING-TIME
@@ -25,12 +25,9 @@ import graft.operators.{KeyBloom, TxTable}
   * the right strategy from the log, not from a user annotation.
   *
   * Skipping is strictly conservative: a file is dropped only when a
-  * top-level conjunct provably matches no row. Long-normalized stats
-  * are EXACT for integral and date columns (bit-preserving casts —
-  * point probes may also consult the bloom) and WIDENED BY ±1 for
-  * fractional/timestamp columns, whose write-time cast truncates
-  * (`|cast(x) - x| < 1`); predicates on columns without logged stats,
-  * non-literal comparisons, and unrecognized shapes keep the file.
+  * top-level conjunct provably matches no row. The decision is
+  * [[TxTable.Snapshot.kept]] — the same [[graft.operators.GraftSkipping]]
+  * evaluator the TxTable API's pruned reads use.
   *
   * File sizes come from one filesystem stat per live file at index
   * construction; a production deployment would record lengths in the
@@ -56,41 +53,9 @@ final class GraftFileIndex(
   override def listFiles(
       partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    // decode each consulted bloom once per listing, not per (file, probe)
-    val bloomCache = new ConcurrentHashMap[String, Array[Long]]()
-    def bloom(hex: String): Array[Long] =
-      bloomCache.computeIfAbsent(hex, KeyBloom.fromHex)
-    val kept = snap.files.filter { f =>
-      !dataFilters.exists(e =>
-        GraftSkipping.provesEmpty(e, col => statsOf(f, col),
-          (col, key) => bloomAdmits(f, col, key, bloom)))
-    }
+    val kept = dataFilters.reduceOption(And).fold(snap.files)(snap.kept(_))
     GraftFileIndex.record(root, snap.files.size, kept.size)
     Seq(PartitionDirectory(InternalRow.empty, kept.map(statusOf).toArray))
-  }
-
-  /** Logged [min,max] of `col` in file `f` (None = no stats recorded —
-    * never prune). The empty range (MaxValue, MinValue) is a real
-    * recording: every row of the file is NULL in that column. */
-  private def statsOf(f: String, col: String): Option[(Long, Long)] =
-    snap.statsKey match {
-      case Some(k) if k == col => snap.fileStats.get(f)
-      case _ =>
-        val j = snap.statsCols.indexOf(col)
-        if (j < 0) None else snap.fileStatsN.get(f).flatMap(_.lift(j))
-    }
-
-  /** False only when the file's logged bloom for `col` PROVES `key`
-    * absent (no false negatives by construction). */
-  private def bloomAdmits(f: String, col: String, key: Long,
-                          decode: String => Array[Long]): Boolean = {
-    val hex = snap.statsKey match {
-      case Some(k) if k == col => snap.fileBlooms.getOrElse(f, "")
-      case _ =>
-        val j = snap.statsCols.indexOf(col)
-        if (j < 0) "" else snap.fileBloomsN.get(f).flatMap(_.lift(j)).getOrElse("")
-    }
-    hex.isEmpty || KeyBloom.mightContainWords(decode(hex), key)
   }
 
   override def inputFiles: Array[String] =
@@ -113,14 +78,7 @@ final class GraftFileIndex(
     * EXACT only for integral/date columns (the caller checks the type);
     * the empty fold (MaxValue, MinValue) means every row is NULL. */
   def statsRangeFromLog(col: String): Option[(Long, Long)] = {
-    val perFile = snap.files.map { f =>
-      snap.statsKey match {
-        case Some(k) if k == col => snap.fileStats.get(f)
-        case _ =>
-          val j = snap.statsCols.indexOf(col)
-          if (j < 0) None else snap.fileStatsN.get(f).flatMap(_.lift(j))
-      }
-    }
+    val perFile = snap.files.map(snap.statsOf(_, col))
     if (perFile.isEmpty || perFile.exists(_.isEmpty)) None
     else Some(perFile.flatten.reduce { (a, b) =>
       (math.min(a._1, b._1), math.max(a._2, b._2))
@@ -138,162 +96,4 @@ object GraftFileIndex {
   def lastListing(root: String): Option[(Int, Int)] =
     Option(listings.get(root))
   def resetListing(root: String): Unit = listings.remove(root)
-}
-
-/** The conservative stats/bloom evaluator: can this predicate match any
-  * row of a file with the given per-column [min,max] (long-normalized)
-  * and bloom? Split from the index for direct spec coverage. */
-object GraftSkipping {
-
-  /** True iff `e` PROVABLY matches no row of the file. `stats` returns
-    * the logged long-normalized range per column (None = unknown);
-    * `admits` is the bloom probe (true = might contain). */
-  def provesEmpty(e: Expression,
-                  stats: String => Option[(Long, Long)],
-                  admits: (String, Long) => Boolean): Boolean = e match {
-    case And(l, r) => provesEmpty(l, stats, admits) || provesEmpty(r, stats, admits)
-    case Or(l, r)  => provesEmpty(l, stats, admits) && provesEmpty(r, stats, admits)
-
-    case EqualTo(AttrCol(c, dt), Literal(v, _)) => emptyEq(c, dt, v, stats, admits)
-    case EqualTo(Literal(v, _), AttrCol(c, dt)) => emptyEq(c, dt, v, stats, admits)
-    case EqualNullSafe(AttrCol(c, dt), Literal(v, _)) if v != null =>
-      emptyEq(c, dt, v, stats, admits)
-    case EqualNullSafe(Literal(v, _), AttrCol(c, dt)) if v != null =>
-      emptyEq(c, dt, v, stats, admits)
-
-    case GreaterThan(AttrCol(c, dt), Literal(v, _)) => emptyCmp(c, dt, v, stats, Gt)
-    case GreaterThan(Literal(v, _), AttrCol(c, dt)) => emptyCmp(c, dt, v, stats, Lt)
-    case GreaterThanOrEqual(AttrCol(c, dt), Literal(v, _)) => emptyCmp(c, dt, v, stats, Ge)
-    case GreaterThanOrEqual(Literal(v, _), AttrCol(c, dt)) => emptyCmp(c, dt, v, stats, Le)
-    case LessThan(AttrCol(c, dt), Literal(v, _)) => emptyCmp(c, dt, v, stats, Lt)
-    case LessThan(Literal(v, _), AttrCol(c, dt)) => emptyCmp(c, dt, v, stats, Gt)
-    case LessThanOrEqual(AttrCol(c, dt), Literal(v, _)) => emptyCmp(c, dt, v, stats, Le)
-    case LessThanOrEqual(Literal(v, _), AttrCol(c, dt)) => emptyCmp(c, dt, v, stats, Ge)
-
-    case In(AttrCol(c, dt), vs) if vs.forall(_.isInstanceOf[Literal]) =>
-      vs.forall(l => emptyEq(c, dt, l.asInstanceOf[Literal].value, stats, admits))
-    case InSet(AttrCol(c, dt), vs) =>
-      vs.forall(v => emptyEq(c, dt, v, stats, admits))
-
-    // a recorded EMPTY range means every row is NULL in that column
-    case IsNotNull(AttrCol(c, _)) =>
-      stats(c).exists { case (mn, mx) => mn == Long.MaxValue && mx == Long.MinValue }
-
-    // prefix predicate on a STRING stats axis: every string starting
-    // with p encodes into [prefix64(p), upper64(p)] (see StrKey), so a
-    // file whose logged range misses that window provably has no match
-    case StartsWith(AttrCol(c, StringType), Literal(p, StringType)) if p != null =>
-      stats(c).exists { case (mn, mx) =>
-        graft.functions.StrKey.upper64(p.toString) < mn ||
-          graft.functions.StrKey.prefix64(p.toString) > mx
-      }
-
-    case _ => false // unknown shape: keep the file
-  }
-
-  /** Bare column reference, looking through value-preserving integral
-    * widening casts (Catalyst promotes `int_col = 5L` to
-    * `cast(int_col as bigint) = 5L`; the cast is bit-exact, so skipping
-    * still applies). The returned type is the CAST's target — that is
-    * the type the comparison's literal carries, and for a widening cast
-    * both sides sit on the same long-normalized axis as the stats. */
-  private object AttrCol {
-    def unapply(e: Expression): Option[(String, DataType)] = e match {
-      case a: AttributeReference => Some((a.name, a.dataType))
-      case Cast(a: AttributeReference, dt, _, _)
-          if integral(a.dataType) && (integral(dt) || dt.isInstanceOf[DecimalType]) =>
-        Some((a.name, dt))
-      case _ => None
-    }
-  }
-
-  private def integral(dt: DataType): Boolean = dt match {
-    case ByteType | ShortType | IntegerType | LongType => true
-    case _ => false
-  }
-
-  private sealed trait Cmp
-  private case object Gt extends Cmp; private case object Ge extends Cmp
-  private case object Lt extends Cmp; private case object Le extends Cmp
-
-  /** The literal's value on the long-normalized axis, with the exactness
-    * flag: (value, exact). Exact types compare bit-for-bit against the
-    * logged range; inexact ones (write-time cast truncates toward zero /
-    * floors) get a ±1 guard band. None = don't prune on this literal. */
-  private def normalized(dt: DataType, v: Any): Option[(BigDecimal, Boolean)] =
-    (dt, v) match {
-      case (ByteType, b: Byte)   => Some((BigDecimal(b.toLong), true))
-      case (ShortType, s: Short) => Some((BigDecimal(s.toLong), true))
-      case (IntegerType, i: Int) => Some((BigDecimal(i.toLong), true))
-      case (LongType, l: Long)   => Some((BigDecimal(l), true))
-      case (DateType, d: Int)    => Some((BigDecimal(d.toLong), true)) // days
-      case (TimestampType, m: Long) => // micros -> seconds, floored cast
-        Some((BigDecimal(m) / BigDecimal(1000000L), false))
-      case (TimestampNTZType, m: Long) =>
-        Some((BigDecimal(m) / BigDecimal(1000000L), false))
-      case (FloatType, f: Float) if !f.isNaN && !f.isInfinite =>
-        Some((BigDecimal(f.toDouble), false))
-      case (DoubleType, d: Double) if !d.isNaN && !d.isInfinite =>
-        Some((BigDecimal(d), false))
-      case (_: DecimalType, d: org.apache.spark.sql.types.Decimal) =>
-        Some((d.toBigDecimal, false))
-      case _ => None
-    }
-
-  private def emptyEq(c: String, dt: DataType, v: Any,
-                      stats: String => Option[(Long, Long)],
-                      admits: (String, Long) => Boolean): Boolean =
-    if (v == null) false
-    // STRING axis: the logged range lives in the prefix64 domain (8-byte
-    // granularity — equal-prefix siblings collapse, so the range test
-    // alone stays conservative) and the bloom keys on hash64 of the FULL
-    // value, making equality probes exact-on-membership
-    else if (dt == StringType) {
-      val s = v.toString
-      stats(c).exists { case (mn, mx) =>
-        val e = graft.functions.StrKey.prefix64(s)
-        e < mn || e > mx || !admits(c, graft.functions.StrKey.hash64(s))
-      }
-    }
-    else (stats(c), normalized(dt, v)) match {
-      case (Some((mn, mx)), Some((bd, exact))) =>
-        if (exact) {
-          val k = bd.toLongExact
-          k < mn || k > mx || !admits(c, k)
-        } else bd < BigDecimal(mn) - 1 || bd > BigDecimal(mx) + 1
-      case _ => false
-    }
-
-  private def emptyCmp(c: String, dt: DataType, v: Any,
-                       stats: String => Option[(Long, Long)],
-                       op: Cmp): Boolean =
-    if (v == null) false
-    // STRING axis: prefix64 is monotone but collapses equal-prefix
-    // siblings, so strict and non-strict comparisons share the
-    // DEMOTED test — x > v implies enc(x) >= enc(v), so only
-    // mx < enc(v) proves "no x > v" (mx == enc(v) might hide a longer
-    // sibling); symmetrically for the low side
-    else if (dt == StringType) {
-      val s = v.toString
-      stats(c).exists { case (mn, mx) =>
-        val e = graft.functions.StrKey.prefix64(s)
-        op match {
-          case Gt | Ge => mx < e // all enc(x) < enc(v): no x can be >= v
-          case Lt | Le => mn > e // all enc(x) > enc(v): no x can be <= v
-        }
-      }
-    }
-    else (stats(c), normalized(dt, v)) match {
-      case (Some((mn, mx)), Some((bd, exact))) =>
-        val (lo, hi) =
-          if (exact) (BigDecimal(mn), BigDecimal(mx))
-          else (BigDecimal(mn) - 1, BigDecimal(mx) + 1)
-        op match {
-          case Gt => hi <= bd // need some x > v
-          case Ge => hi < bd
-          case Lt => lo >= bd
-          case Le => lo > bd
-        }
-      case _ => false
-    }
 }

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession, SQLContext}
 import org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow
 import org.apache.spark.sql.execution.streaming.{Offset => V1Offset, Sink, Source}
-import org.apache.spark.sql.graft.StreamingBridge
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.{StructField, StructType}
 
@@ -29,7 +29,7 @@ object GraftOffset {
   * each batch is the data ADDED between two log versions, read as a
   * normal pruned parquet scan and handed to the engine with the
   * streaming flag stamped on (see
-  * [[org.apache.spark.sql.graft.StreamingBridge]]).
+  * [[org.apache.spark.sql.graft.Bridge]]).
   *
   * Semantics are APPENDS-ONLY: a commit that REMOVES files (CoW
   * merge/delete, OPTIMIZE, compaction) is refused loudly — the stream
@@ -115,7 +115,7 @@ final class GraftStreamSource(
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
       else spark.read.schema(schema).parquet(files.map(f => s"$root/$f"): _*)
-    StreamingBridge.asStreaming(batch)
+    Bridge.retag(batch, isStreaming = true)
   }
 
   override def commit(end: V1Offset): Unit = ()
@@ -202,7 +202,7 @@ final class GraftChangeFeedSource(
         else TxTable.changeFeed(spark, root, startV, endV, keys)
           .select(ordered: _*)
     }
-    StreamingBridge.asStreaming(batch)
+    Bridge.retag(batch, isStreaming = true)
   }
 
   override def commit(end: V1Offset): Unit = ()
@@ -240,7 +240,7 @@ final class GraftStreamSink(
     maxLedgers: Int = 8) extends Sink {
 
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
-    val raw = StreamingBridge.asBatch(data)
+    val raw = Bridge.retag(data, isStreaming = false)
     if (TxTable.snapshot(root).version < 0)
       TxTable.create(raw.limit(0), root, statsKey) // schema-only v0
     // materialize the micro-batch ONCE: the commit path reads it twice

@@ -702,9 +702,7 @@ object ScaleCurve {
         val sec = (System.nanoTime() - t0) / 1e9
         // listener events post asynchronously — drain before reading the
         // balance map or the last stage's tasks may be missing from it
-        ShuffleCheck.drainListenerBus(sc,
-          () => { import scala.jdk.CollectionConverters._
-            balance.values.asScala.map(_._3).sum })
+        org.apache.spark.sql.graft.Bridge.drainListenerBus(sc)
         // the HEAVIEST stage (largest Σ task time) is where the verify
         // join's shuffle work lands; a straggler plan shows its max
         // task owning ~the whole stage (share → 1 with tasks ≫ 1)
@@ -765,8 +763,7 @@ object ScaleCurve {
           "spark.sql.autoBroadcastJoinThreshold", bcast0)
       val sec = (System.nanoTime() - t0) / 1e9
       import scala.jdk.CollectionConverters._
-      ShuffleCheck.drainListenerBus(sc,
-        () => balance.values.asScala.map(_._3).sum)
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(sc)
       val (hTasks, hMax, hSum) = balance.values.asScala.maxBy(_._3)
       val gMax = balance.values.asScala.map(_._2).max
       println(f"""{"name":"mm-dedup-hub","scale":$m,"sec":$sec%.2f,""" +

@@ -72,34 +72,13 @@ object ShuffleCheck {
         try SparkEntry.queries(name)(s, sf)
           .write.format("noop").mode("overwrite").save()
         finally if (broadcastOff) prevB.fold(s.conf.unset(key))(s.conf.set(key, _))
-        // stage-completed events are posted asynchronously: drain the
-        // listener bus deterministically (waitUntilEmpty is private[spark],
-        // which is public in bytecode; fall back to polling the counters
-        // until they stop changing if the internal API moves)
-        drainListenerBus(s.sparkContext, () => input.get + sw.get + srec.get)
+        // stage-completed events are posted asynchronously
+        org.apache.spark.sql.graft.Bridge.drainListenerBus(s.sparkContext)
       } finally s.sparkContext.removeSparkListener(listener)
       s.catalog.clearCache()
       s.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
       println(f"$name%-12s ${input.get / 1e6}%10.2f ${sw.get / 1e6}%11.3f ${srec.get}%13d")
     }
     s.stop()
-  }
-
-  /** Block until all queued listener events are delivered. */
-  private[tools] def drainListenerBus(sc: org.apache.spark.SparkContext,
-                               probe: () => Long): Unit = {
-    try {
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-    } catch {
-      case _: Throwable =>
-        // poll until the ledger counters are stable for 2 consecutive reads
-        var last = -1L; var stable = 0; var spins = 0
-        while (stable < 2 && spins < 100) {
-          val now = probe()
-          if (now == last) stable += 1 else { stable = 0; last = now }
-          spins += 1; Thread.sleep(50)
-        }
-    }
   }
 }

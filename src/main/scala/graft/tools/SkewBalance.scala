@@ -45,7 +45,7 @@ object SkewBalance {
       s.sparkContext.addSparkListener(listener)
       try {
         df.write.format("noop").mode("overwrite").save()
-        ShuffleCheck.drainListenerBus(s.sparkContext, () => reads.synchronized(reads.sum))
+        org.apache.spark.sql.graft.Bridge.drainListenerBus(s.sparkContext)
       } finally s.sparkContext.removeSparkListener(listener)
       val r = reads.synchronized(reads.toSeq).sorted
       val (mx, mean) = (r.last, r.sum.toDouble / r.size)

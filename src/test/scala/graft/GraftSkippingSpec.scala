@@ -5,7 +5,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.GraftSkipping
+import graft.operators.GraftSkipping
 
 /** Unit drill of the conservative stats/bloom evaluator — the component
   * where a wrong answer SILENTLY LOSES ROWS, so every edge gets a

@@ -20,10 +20,8 @@ object JobCount {
     sc.setJobGroup(group, what)
     try {
       body
-      // job-start events are delivered asynchronously; the drain is
-      // package-private to Spark but public in bytecode
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+      // job-start events are delivered asynchronously
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(sc)
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)

@@ -115,7 +115,7 @@ class KMeansSpec extends AnyFunSuite {
 
   test("native kmeans_dists kernel ≡ the higher-order composition it replaced") {
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.graft.ColumnBridge
+    import org.apache.spark.sql.graft.Bridge
     val emb = Tables.embeddings(spark, sf)
     val cents = KMeans.centroids(emb, "vec_id", "embedding", 5, 2)
     // the exact Catalyst composition the r13 kernel replaced: quantize by
@@ -128,8 +128,8 @@ class KMeansSpec extends AnyFunSuite {
           lit(0L), (acc, v) => acc + v))
     }
     def newDists(vec: org.apache.spark.sql.Column, scale: Int) =
-      ColumnBridge.column(graft.functions.KMeansDists(
-        ColumnBridge.expression(vec), cents, scale))
+      Bridge.column(graft.functions.KMeansDists(
+        Bridge.expression(vec), cents, scale))
     // float input path (fused quantization)
     val diffF = emb.select(
         oldDists(col("embedding"), 1000).as("o"),
@@ -159,8 +159,8 @@ class KMeansSpec extends AnyFunSuite {
           lit(0L), (acc, v) => acc + v))
     }
     def new2(vec: org.apache.spark.sql.Column) =
-      ColumnBridge.column(graft.functions.KMeansDists(
-        ColumnBridge.expression(vec), cents2, 1000))
+      Bridge.column(graft.functions.KMeansDists(
+        Bridge.expression(vec), cents2, 1000))
     val weird = Seq(
       (1L, Seq[java.lang.Float](1.0f, null)), // null element, right length
       (2L, Seq[java.lang.Float](1.0f)),       // too short

@@ -536,6 +536,22 @@ class TxTableSpec extends AnyFunSuite {
     assert(bulk.getLong(1) == 119999L * 120000L / 2)
   }
 
+  test("pointReadKeys: a NULL probe key matches nothing on both sides of the driver cap") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val root = freshRoot()
+    TxTable.create((0L until 40L).map(k => (k, s"v$k")).toDF("k", "v")
+      .repartitionByRange(4, col("k")), root, Some("k"))
+    val keys = Seq(Some(3L), None, Some(17L), Some(3L)).toDF("k")
+    val want = TxTable.read(spark, root).where(col("k").isin(3L, 17L))
+      .as[(Long, String)].collect().toSet
+    assert(want == Set((3L, "v3"), (17L, "v17")))
+    // maxDriverKeys = 10: collected and pruned; = 1: the semi-join
+    for (cap <- Seq(10, 1))
+      assert(TxTable.pointReadKeys(spark, root, keys, maxDriverKeys = cap)
+        .as[(Long, String)].collect().toSet == want, s"maxDriverKeys = $cap")
+  }
+
   test("merge-on-read delete: zero rewrites, scoped ledgers, folding, correct feed") {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
