@@ -35,26 +35,19 @@ import graft.streaming.{Presence, SourceProvider, Supervisor}
 object WeatherJob {
 
   /** The transformation plan the reference left empty: decoded readings ->
-    * presence transition events.
-    *
-    * PRODUCTION DEFAULT (round 11) is the v2 arbitrary-state operator
-    * ([[Presence.detectEvict]], `transformWithState` + event-time
-    * timers): it emits the trailing OFFLINE when a device goes silent —
-    * the core presence semantic a purely data-driven operator can only
-    * produce on the device's NEXT event, i.e. never for a device that
-    * stays gone — and state is bounded by the ACTIVE key set instead of
-    * every device ever seen (priced at 5M devices in PresenceScaleSpec;
-    * A/B throughput ledgered there too). Requires the RocksDB state
-    * store (main defaults `--state.store rocksdb`); `boundedState =
-    * false` keeps the v1 `flatMapGroupsWithState` form for HDFS-backed
-    * state, equivalence-modulo-trailing-offlines pinned in specs. */
+    * presence transition events through [[Presence.detectEvict]]. It
+    * emits the trailing OFFLINE when a device goes silent — the core
+    * presence semantic a purely data-driven operator can only produce on
+    * the device's NEXT event, i.e. never for a device that stays gone —
+    * and state is bounded by the ACTIVE key set instead of every device
+    * ever seen (priced at 5M devices in PresenceScaleSpec). It runs on
+    * any state store provider. */
   def plan(spark: SparkSession, readings: Dataset[WeatherReading],
-           ttlMillis: Long, boundedState: Boolean = true): DataFrame = {
+           ttlMillis: Long): DataFrame = {
     val keyed = readings.toDF().select(
       col("deviceId").as("device_id"),
       col("timestamp").as("ts_ms"))
-    if (boundedState) Presence.detectEvict(spark, keyed, ttlMillis).toDF()
-    else Presence.detect(spark, keyed, ttlMillis).toDF()
+    Presence.detectEvict(spark, keyed, ttlMillis).toDF()
   }
 
   /** Keyed JSON egress projection (ref serializer semantics): key =
@@ -98,15 +91,12 @@ object WeatherJob {
     val spark = EngineSession.getOrCreate("weatherProcessingJob")
     spark.streams.addListener(new MetricsListener)
     val ttl = conf.getLong("presence.ttl.ms", 3600000L)
-    // --state.store rocksdb (THE DEFAULT since round 11): per-device
-    // state at fleet scale outlives executor heap; RocksDB keeps it on
-    // local disk with incremental checkpoints, and EngineSession's
+    // --state.store rocksdb (the default) | hdfs: per-device state at
+    // fleet scale outlives executor heap; RocksDB keeps it on local disk
+    // with incremental checkpoints, and EngineSession's
     // changelog-checkpointing default makes per-batch uploads
-    // delta-sized. RocksDB also unlocks the bounded-state presence plan
-    // (transformWithState); `--state.store hdfs` falls back to the v1
-    // data-driven operator (no trailing offlines, state ∝ devices seen).
-    val bounded = conf.getOrElse("state.store", "rocksdb") == "rocksdb"
-    if (bounded)
+    // delta-sized. The presence plan is the same on either provider.
+    if (conf.getOrElse("state.store", "rocksdb") == "rocksdb")
       spark.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
@@ -128,7 +118,7 @@ object WeatherJob {
         .toDF()
         .observe("graft_ingest", count(lit(1)).as("decoded_rows"))
         .as[AvroEnvelope.WeatherReading]
-      val out = sinkProjection(plan(spark, readings, ttl, bounded))
+      val out = sinkProjection(plan(spark, readings, ttl))
       val writer = out.writeStream
         .option("checkpointLocation", conf.getOrElse("checkpoint",
           java.nio.file.Files.createTempDirectory("weatherjob_ckpt").toString))

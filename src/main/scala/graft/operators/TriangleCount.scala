@@ -43,7 +43,10 @@ import org.apache.spark.sql.functions._
   */
 object TriangleCount {
 
-  /** @param cap max out-edges per wedge-join chunk (per-key work ≤ cap²) */
+  /** @param edges undirected edges (a, b), a ≠ b, each at most once in
+    *              either direction: a duplicated edge inflates n_triangles
+    *              and n_wedges (dedup first, as Q-graph-02 does)
+    * @param cap max out-edges per wedge-join chunk (per-key work ≤ cap²) */
   def run(edges: DataFrame, cap: Int = 64): DataFrame = {
     // checkpoint the edge list: it feeds the degree table, the
     // orientation join, and the n_edges aggregate — without it each

@@ -3173,7 +3173,7 @@ object TxTable {
     * diffing across a schema evolution). */
   def changeFeed(spark: SparkSession, root: String,
                  fromV: Long, toV: Long, keys: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.{col, struct, when}
+    import org.apache.spark.sql.functions.{coalesce, col, struct, when}
     require(fromV <= toV, s"changeFeed range inverted: $fromV > $toV")
     val from = snapshot(root, fromV)
     val to = snapshot(root, toV)
@@ -3224,7 +3224,8 @@ object TxTable {
              else spark.read.parquet(s"$root/${l.path}"))
               .select(col(ns.head).cast("long").as("k"))
           }
-          .reduce(_.unionByName(_)).distinct()
+          // a NULL ledger key deletes nothing and proves no file empty
+          .reduce(_.unionByName(_)).where(col("k").isNotNull).distinct()
           .limit(10001).collect()
         if (keyRows.length > 10000) applicable // too many to prune by
         else {
@@ -3241,10 +3242,13 @@ object TxTable {
       df.select(keys.map(col) :+
         struct(valueCols.map(col): _*).as(name): _*)
     }
-    side(from, preFiles ++ morTouched, "pre")
-      .join(side(to, postFiles ++ morTouched, "post"), keys, "full_outer")
+    // null-safe key equality: a NULL-key row both sides hold unchanged
+    // cancels instead of surfacing as a delete + insert pair
+    side(from, preFiles ++ morTouched, "pre").as("a")
+      .join(side(to, postFiles ++ morTouched, "post").as("b"),
+        keys.map(k => col(s"a.$k") <=> col(s"b.$k")).reduce(_ && _), "full_outer")
       .filter(!(col("pre") <=> col("post")))
-      .select(keys.map(col) ++ Seq(
+      .select(keys.map(k => coalesce(col(s"a.$k"), col(s"b.$k")).as(k)) ++ Seq(
         when(col("pre").isNull, "insert")
           .when(col("post").isNull, "delete")
           .otherwise("update").as("change"),

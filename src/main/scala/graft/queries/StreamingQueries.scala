@@ -898,13 +898,13 @@ object StreamingQueries {
     },
 
     // ---- Q-str-29: presence with EVENT-TIME STATE EVICTION
-    // (Presence.detectEvict): timers emit the trailing OFFLINE the
-    // data-driven operator (Q-str-05) can only produce on a device's
-    // NEXT event, and clear the state row — fleet-scale presence state
-    // bounded by the active key set (5M-device soak: PresenceScaleSpec).
-    // The emitted set is batch-partitioning-independent (a timer firing
-    // before a device's next event yields the same offline the data
-    // path would have; stale timers are guarded), so the oracle is the
+    // (Presence.detectEvict): event-time timeouts emit the trailing
+    // OFFLINE the data-driven operator (Q-str-05) can only produce on a
+    // device's NEXT event, and remove the state row — fleet-scale
+    // presence state bounded by the active key set (5M-device soak:
+    // PresenceScaleSpec). The emitted set is batch-partitioning-
+    // independent (a timeout firing before a device's next event yields
+    // the same offline the data path would have), so the oracle is the
     // Q-str-05 rendering PLUS one trailing offline per device whose
     // last event sits a full TTL before the stream's final watermark.
     "Q-str-29" -> { (s, d) =>
@@ -930,9 +930,9 @@ object StreamingQueries {
     // kafka-shaped records (key/value/topic/partition/offset/timestamp/
     // timestampType/headers) staged and replayed under the connector's
     // exact schema (`KafkaShape.source`) → the production branch's
-    // `.select(value)` → envelope decode → the presence plan (since
-    // round 11 the plan's production default: detectEvict on RocksDB
-    // state — the oracle is Q-str-29's evict rendering, presenceSql
+    // `.select(value)` → envelope decode → the presence plan
+    // (WeatherJob.plan: detectEvict, here on the production RocksDB
+    // state store — the oracle is Q-str-29's evict rendering, presenceSql
     // plus one trailing offline per device whose last event sits a full
     // TTL before the final watermark; the ingest envelope must remain
     // semantically invisible, hash-checked by the driver).

@@ -2,9 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
-  GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode,
-  TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
+  OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
 /** Per-device presence detection — the reference's eponymous purpose
   * (`WeatherProcessingJob.java:93` `getDronePresenceProducer`, sink topic
@@ -13,12 +12,12 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
   *
   * Semantics: a device is ONLINE from its first event; if the gap to the
   * next event exceeds `ttlMillis`, it went OFFLINE at `last_seen + ttl` and
-  * comes ONLINE again at the next event. Only data-derived transitions are
-  * emitted (the trailing timeout needs a later watermark advance to be
-  * observable — deterministic replay keeps to what the data proves).
+  * comes ONLINE again at the next event. [[detect]] and [[detectTws]] emit
+  * only data-derived transitions; [[detectEvict]] (the production plan)
+  * also emits the trailing OFFLINE once the watermark proves it.
   *
-  * Scale: state is ONE long per device (last-seen), evicted by event-time
-  * timeout on a cluster run; a flooding device costs O(its events in the
+  * Scale: state is ONE long per device (last-seen); [[detectEvict]] evicts
+  * it by event-time timeout. A flooding device costs O(its events in the
   * batch) sorted in memory — bounded by micro-batch size, spillable via
   * maxFilesPerTrigger/maxOffsetsPerTrigger admission control.
   */
@@ -84,8 +83,7 @@ object Presence {
   /** Same state machine on Spark 4's arbitrary-state v2 API
     * (`transformWithState` + typed `ValueState`). Requires the RocksDB
     * state store provider; equivalence with [[detect]] is asserted in
-    * StreamingSpec. The v2 API is where per-key TTL (`TTLConfig`) and
-    * event-time timers live — the scale path for fleet-sized state. */
+    * StreamingSpec. */
   class PresenceProcessor(ttlMillis: Long)
       extends StatefulProcessor[String, DeviceEvent, PresenceEvent] {
     @transient private var lastSeen: ValueState[Long] = _
@@ -104,61 +102,37 @@ object Presence {
     }
   }
 
-  /** [[PresenceProcessor]] with EVENT-TIME state eviction — the piece
-    * that makes fleet-scale presence state BOUNDED by the open (recently
-    * seen) key set instead of every device ever seen: each event (re)arms
-    * a timer at last_seen + ttl; when the watermark passes it, the
-    * trailing OFFLINE transition (the one [[detect]] can only emit on the
-    * device's next event) is emitted and the device's state row is
-    * CLEARED. A device reappearing later is a fresh key (online again).
-    * Stale timers (device seen again before expiry) are guarded by
-    * comparing the firing timer against the current last-seen. State ≈
-    * |devices active within one TTL of the watermark| — asserted at 5M
-    * planted devices in PresenceScaleSpec. */
-  class PresenceEvictProcessor(ttlMillis: Long)
-      extends StatefulProcessor[String, DeviceEvent, PresenceEvent] {
-    @transient private var lastSeen: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      lastSeen = getHandle.getValueState[Long](
-        "lastSeen", Encoders.scalaLong, TTLConfig.NONE)
-
-    override def handleInputRows(
-        key: String, rows: Iterator[DeviceEvent],
-        tv: TimerValues): Iterator[PresenceEvent] = {
-      val seen = read(lastSeen)
-      val (out, moved) = step(key, rows, seen, ttlMillis)
-      // the armed timer is always a pure function of state (lastSeen +
-      // ttl), so re-arming can DELETE the superseded timer without a
-      // second state variable — a chatty device would otherwise
-      // accumulate one stale timer per batch it appears in (each a
-      // guarded no-op, but timer state and expired-timer work growing
-      // without bound at fleet scale)
-      moved.foreach { l =>
-        lastSeen.update(l)
-        seen.foreach(s => getHandle.deleteTimer(s + ttlMillis))
-        getHandle.registerTimer(l + ttlMillis)
-      }
+  /** [[transitions]] with EVENT-TIME state eviction, which bounds
+    * presence state by the open (recently seen) key set instead of every
+    * device ever seen. Each data call re-arms the group's event-time
+    * timeout; when the watermark passes last_seen + ttl, the trailing
+    * OFFLINE (the one [[detect]] can only emit on the device's next
+    * event) is emitted and the state row is removed. A device reappearing
+    * later is a fresh key (online again).
+    *
+    * The timeout lives in the state row itself: one state lookup per
+    * device per batch and no separate timer store. Spark fires a timeout
+    * when it is strictly below the watermark, so arming it at
+    * last_seen + ttl - 1 fires exactly when last_seen + ttl <= watermark. */
+  private def evicting(ttlMillis: Long)(
+      deviceId: String,
+      events: Iterator[DeviceEvent],
+      state: GroupState[DeviceState]): Iterator[PresenceEvent] =
+    if (state.hasTimedOut) {
+      val seen = state.get.lastSeenMs
+      state.remove()
+      Iterator.single(PresenceEvent(deviceId, "offline", seen + ttlMillis))
+    } else {
+      val out = transitions(ttlMillis)(deviceId, events, state)
+      // Spark unsets the timeout on every call: re-arm it even when
+      // last-seen did not move
+      state.setTimeoutTimestamp(state.get.lastSeenMs + ttlMillis - 1)
       out
     }
 
-    override def handleExpiredTimer(
-        key: String, tv: TimerValues,
-        info: ExpiredTimerInfo): Iterator[PresenceEvent] = {
-      // re-arming deletes the superseded timer, so a firing timer is the
-      // latest one; the guard stays as defense against a delete racing a
-      // same-batch fire
-      read(lastSeen) match {
-        case Some(seen) if info.getExpiryTimeInMs() >= seen + ttlMillis =>
-          lastSeen.clear()
-          Iterator.single(PresenceEvent(key, "offline", seen + ttlMillis))
-        case _ => Iterator.empty
-      }
-    }
-  }
-
-  /** [[detectTws]] with event-time TTL eviction: requires a watermark on
-    * the stream's `ts` column (event-time timers fire off it). */
+  /** [[detect]] with event-time eviction ([[evicting]]). Runs on any state
+    * store provider. The watermark on the stream's `ts` column drives the
+    * timeouts and drops rows at or below it. */
   def detectEvict(spark: SparkSession, events: DataFrame,
                   ttlMillis: Long): Dataset[PresenceEvent] = {
     import spark.implicits._
@@ -168,8 +142,8 @@ object Presence {
       .withWatermark("ts", "0 milliseconds")
       .as[DeviceEvent]
       .groupByKey(_.device_id)
-      .transformWithState(new PresenceEvictProcessor(ttlMillis),
-        TimeMode.EventTime(), OutputMode.Append())
+      .flatMapGroupsWithState(
+        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(evicting(ttlMillis))
   }
 
   /** [[detect]] on the v2 state API. */

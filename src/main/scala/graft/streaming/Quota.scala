@@ -24,17 +24,16 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * window end + the out-of-orderness bound — bounded state on an
   * unbounded stream, the same contract the windowed aggregates obey.
   *
-  * v2-API migration evaluated and DECLINED (round 11, alongside the
-  * Presence migration): this operator is the case the old API already
-  * serves — one state variable, one timeout that `GroupStateTimeout
-  * .EventTimeTimeout` expresses directly, no cross-variable state and
-  * no timer-vs-data races. `transformWithState` buys per-variable
-  * TTLConfig and multiple typed variables (the reasons Presence DID
-  * move — see Presence.detectEvict and the PresenceScaleSpec A/B, which
-  * priced the v2 operator at 1.48x the v1 drain); here it would change
-  * no semantics, add the RocksDB-provider requirement, and pay that
-  * same overhead for nothing. Revisit if quota ever needs a second
-  * state variable (e.g. a token-bucket refill timestamp).
+  * Not on the v2 API (`transformWithState`): this operator is the case
+  * the old API already serves — one state variable, one timeout that
+  * `GroupStateTimeout.EventTimeTimeout` expresses directly, no
+  * cross-variable state and no timer-vs-data races. The v2 API buys
+  * per-variable TTLConfig and multiple typed variables; here it would
+  * change no semantics, add the RocksDB-provider requirement, and pay
+  * its separate timer store (Presence.detectEvict left it for the same
+  * form as this operator; see the PresenceScaleSpec A/B). Revisit if
+  * quota ever needs a second state variable (e.g. a token-bucket refill
+  * timestamp).
   */
 object Quota {
 

@@ -15,7 +15,7 @@ import graft.streaming.{Presence, Replay}
   * RocksDB and asserts the state-observability contract — rows left in
   * the store ≈ devices still inside one TTL of the watermark, with the
   * 4.9M idle devices both EVICTED from state and given their trailing
-  * offline transition by the event-time timer.
+  * offline transition by the event-time timeout.
   */
 class PresenceScaleSpec extends AnyFunSuite {
 
@@ -25,9 +25,9 @@ class PresenceScaleSpec extends AnyFunSuite {
   private val T0 = 1700000000000L
   private val T1 = T0 + 2 * TTL  // past the TTL: every T0 device idle
   // the sentinel advances the final watermark to BETWEEN the idle
-  // timers (T0 + TTL) and the active ones (T1 + TTL): AvailableNow runs
+  // timeouts (T0 + TTL) and the active ones (T1 + TTL): AvailableNow runs
   // a last no-data batch at wm = max event time, so a sentinel beyond
-  // T1 + TTL would fire the ACTIVE devices' timers too and the state
+  // T1 + TTL would fire the ACTIVE devices' timeouts too and the state
   // assertion would measure nothing
   private val T2 = T1 + TTL / 2
 
@@ -49,7 +49,7 @@ class PresenceScaleSpec extends AnyFunSuite {
           java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
       }
     }
-    // a: seen at T0 only -> timer offline at T0+TTL, evicted
+    // a: seen at T0 only -> timeout offline at T0+TTL, evicted
     // b: seen at T0 and T1 -> data-derived offline+online, stays in state
     // c: first seen at T1 -> online, stays
     writeChunk(1, Seq("a" -> T0, "b" -> T0))
@@ -66,13 +66,13 @@ class PresenceScaleSpec extends AnyFunSuite {
       val got = out.as[(String, String, Long)].collect().toSet
       assert(got == Set(
         ("a", "online", T0), ("b", "online", T0),
-        ("a", "offline", T0 + TTL),            // timer-driven eviction
+        ("a", "offline", T0 + TTL),            // timeout-driven eviction
         ("b", "offline", T0 + TTL), ("b", "online", T1), // data-derived
         ("c", "online", T1), ("sentinel", "online", T2)))
       // state holds only the keys inside one TTL of the final watermark:
-      // b, c idle since T1 have timers beyond wm=T1; a is evicted
-      val stateRows = usage.filter(_._1.contains("transformWithState"))
-        .map(_._2).sum
+      // b, c idle since T1 time out beyond wm=T1; a is evicted
+      assert(usage.size == 1, s"one stateful operator expected: $usage")
+      val stateRows = usage.head._2
       assert(stateRows == 3L, s"state should hold b, c, sentinel: $usage")
     } finally
       spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
@@ -118,14 +118,15 @@ class PresenceScaleSpec extends AnyFunSuite {
       val counts = out.groupBy("state").count()
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       // every device came online; the ACTIVE set re-cycled offline+online;
-      // the idle (N - ACTIVE) fleet got its offline from the TIMER
+      // the idle (N - ACTIVE) fleet got its offline from the TIMEOUT
       assert(counts("online") == N + ACTIVE + 1, s"online: $counts")
       assert(counts("offline") == N, s"offline: $counts")
       // the state-observability contract at 5M keys: rows ≈ open keys
       // (ACTIVE re-seen at T1 + sentinel), NOT the 5M that flowed through
-      val stateRows = usage.filter(_._1.contains("transformWithState"))
-        .map(_._2).sum
-      info(s"state rows after drain: $stateRows (open keys = ${ACTIVE + 1})")
+      assert(usage.size == 1, s"one stateful operator expected: $usage")
+      val (_, stateRows, stateBytes) = usage.head
+      info(s"state rows after drain: $stateRows (open keys = ${ACTIVE + 1}), " +
+        s"memoryUsedBytes $stateBytes")
       assert(stateRows >= ACTIVE + 1, s"state under-counts open keys: $usage")
       assert(stateRows <= (ACTIVE + 1) * 2,
         s"state not bounded by open keys: $stateRows rows vs ${ACTIVE + 1} open")
@@ -133,16 +134,16 @@ class PresenceScaleSpec extends AnyFunSuite {
       spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
   }
 
-  test("A/B: v1 flatMapGroupsWithState vs v2 evicting transformWithState (WeatherJob default)",
+  test("A/B: data-driven detect vs evicting detectEvict (event-time timeout, WeatherJob default)",
       SlowTest) {
-    // Round-11 migration evidence: WeatherJob.plan's production default
-    // moved from the v1 data-driven operator (Presence.detect) to the v2
-    // evicting one (Presence.detectEvict). This pins (a) SEMANTICS — the
-    // v2 output is exactly v1 plus one trailing offline per device the
-    // final watermark proves idle (the presence event v1 structurally
+    // WeatherJob.plan runs the evicting operator (Presence.detectEvict)
+    // where the data-driven one (Presence.detect) emits no trailing
+    // offlines. This pins (a) SEMANTICS — the evicting output is exactly
+    // the data-driven one plus one trailing offline per device the final
+    // watermark proves idle (the presence event detect structurally
     // cannot emit for a device that stays gone), and (b) COST — same
     // drain, same RocksDB store, wall-clock ratio ledgered (BASELINE.md)
-    // with a loose 3x tripwire so a v2 regression fails loudly.
+    // with a loose 3x tripwire so an eviction regression fails loudly.
     import spark.implicits._
     val DEV = 60000L
     val tmp = graft.queries.tempDir("graft_presence_ab")
@@ -179,20 +180,20 @@ class PresenceScaleSpec extends AnyFunSuite {
           .collect().toSet
         (out, (System.nanoTime() - t) / 1e9)
       }
-      // v2 first: the JVM/page-cache warmup lands on the NEW operator,
-      // biasing the ratio AGAINST the migration — conservative
-      val (v2, v2Sec) = drain(Presence.detectEvict(spark, src, TTL).toDF())
-      val (v1, v1Sec) = drain(Presence.detect(spark, src, TTL).toDF())
+      // evicting first: the JVM/page-cache warmup lands on it, biasing
+      // the ratio AGAINST it — conservative
+      val (evict, evictSec) = drain(Presence.detectEvict(spark, src, TTL).toDF())
+      val (data, dataSec) = drain(Presence.detect(spark, src, TTL).toDF())
       // devices idle since T0 (not re-seen at T1): T0 + TTL <= wm = T2
       val trailing = (DEV / 3 until DEV).map(i =>
         (s"d$i", "offline", T0 + TTL)).toSet
-      assert(v2 == v1 ++ trailing,
-        s"v2 != v1 + trailing: extra=${(v2 -- v1 -- trailing).take(3)} " +
-          s"missing=${(v1 ++ trailing -- v2).take(3)}")
-      info(f"v1 detect: $v1Sec%.1f s, v2 detectEvict: $v2Sec%.1f s " +
-        f"(ratio ${v2Sec / v1Sec}%.2f, ${v1.size} + ${trailing.size} rows)")
-      assert(v2Sec <= v1Sec * 3,
-        f"v2 drain regressed past the 3x tripwire: $v2Sec%.1f vs $v1Sec%.1f")
+      assert(evict == data ++ trailing,
+        s"evicting != detect + trailing: extra=${(evict -- data -- trailing).take(3)} " +
+          s"missing=${(data ++ trailing -- evict).take(3)}")
+      info(f"detect: $dataSec%.1f s, detectEvict: $evictSec%.1f s " +
+        f"(ratio ${evictSec / dataSec}%.2f, ${data.size} + ${trailing.size} rows)")
+      assert(evictSec <= dataSec * 3,
+        f"evicting drain regressed past the 3x tripwire: $evictSec%.1f vs $dataSec%.1f")
     } finally
       spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
   }
@@ -294,8 +295,17 @@ class PresenceScaleSpec extends AnyFunSuite {
     }
     val ckptFull = tmp.resolve("ckpt_full").toString
     val ckptClog = tmp.resolve("ckpt_clog").toString
-    drain(clog = false, ckptFull)
-    drain(clog = true, ckptClog)
+    // both drains at one fixed state partition count: every partition
+    // commits its own snapshot zip + SST (full) or changelog (clog) per
+    // version, so the ratio depends on the count, which must not follow
+    // the host's cpus
+    val partsKey = "spark.sql.shuffle.partitions"
+    val prevParts = spark.conf.getOption(partsKey)
+    spark.conf.set(partsKey, "4")
+    try {
+      drain(clog = false, ckptFull)
+      drain(clog = true, ckptClog)
+    } finally prevParts.fold(spark.conf.unset(partsKey))(spark.conf.set(partsKey, _))
     val (fullV1, fullLater) = steadyBytes(ckptFull)
     val (clogV1, clogLater) = steadyBytes(ckptClog)
     info(f"v1 bytes: full=$fullV1%,d clog=$clogV1%,d; " +

@@ -193,6 +193,67 @@ class StreamingSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
   }
 
+  /** Drains `rows` (one parquet file, so one data batch and then the
+    * AvailableNow no-data batch at wm = max event time) through
+    * `Presence.detectEvict` under the given state store provider.
+    * Returns the output and the names of the files under the state dir. */
+  private def drainEvict(tag: String, rows: Seq[(String, Long)], ttl: Long,
+                         provider: String): (Set[(String, String, Long)], Seq[String]) = {
+    import spark.implicits._
+    import graft.streaming.Presence
+    val tmp = graft.queries.tempDir(s"graft_evict_$tag")
+    val src = tmp.resolve("src").toString
+    rows.toDF("device_id", "ts_ms").coalesce(1).write.parquet(src)
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, provider)
+    try {
+      val stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
+      val ckpt = tmp.resolve("ckpt")
+      val q = Presence.detectEvict(spark, stream, ttl).toDF()
+        .writeStream.format("memory").queryName(s"evict_$tag")
+        .option("checkpointLocation", ckpt.toString).outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      val out = spark.table(s"evict_$tag").as[(String, String, Long)].collect().toSet
+      val walk = java.nio.file.Files.walk(ckpt.resolve("state"))
+      val names = try walk.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
+        .filter(java.nio.file.Files.isRegularFile(_))
+        .map(_.getFileName.toString) finally walk.close()
+      (out, names)
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  private val RocksDbProvider =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+  private val HdfsProvider =
+    "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+
+  // a: last-seen + ttl == the final watermark (set by z) -> offline;
+  // b: one millisecond later -> still online at the final watermark
+  private val EvictTtl = 60000L
+  private val EvictT0 = 1700000000000L
+  private val evictRows = Seq(
+    "a" -> EvictT0, "b" -> (EvictT0 + 1), "z" -> (EvictT0 + EvictTtl))
+  private val evictExpected = Set(
+    ("a", "online", EvictT0), ("a", "offline", EvictT0 + EvictTtl),
+    ("b", "online", EvictT0 + 1), ("z", "online", EvictT0 + EvictTtl))
+
+  test("evicting presence: last-seen + ttl equal to the final watermark emits the OFFLINE") {
+    val (out, _) = drainEvict("boundary", evictRows, EvictTtl, RocksDbProvider)
+    assert(out == evictExpected)
+  }
+
+  test("evicting presence runs on the default HDFS-backed state store") {
+    val (out, files) = drainEvict("hdfs", evictRows, EvictTtl, HdfsProvider)
+    assert(out == evictExpected)
+    // the HDFS-backed provider commits N.delta files; RocksDB would
+    // commit N.zip / N.changelog
+    assert(files.exists(_.endsWith(".delta")), s"no HDFS state files: $files")
+    assert(!files.exists(f => f.endsWith(".zip") || f.endsWith(".changelog")),
+      s"RocksDB state files under the HDFS provider: $files")
+  }
+
   test("crash recovery: restarted-from-checkpoint drains equal the uninterrupted batch answer") {
     // Q-str-23 / Q-str-24 internally crash a streaming query AFTER a
     // sink effect lands, restart it in a FRESH SparkSession over the same

@@ -552,6 +552,18 @@ class TxTableSpec extends AnyFunSuite {
         .as[(Long, String)].collect().toSet == want, s"maxDriverKeys = $cap")
   }
 
+  test("changeFeed over a MoR ledger holding a NULL key: only the real delete surfaces") {
+    import spark.implicits._
+    val root = freshRoot()
+    TxTable.create(Seq((Some(1L), "a"), (None, "n"), (Some(3L), "c"))
+      .toDF("k", "v").coalesce(1), root, Some("k"))
+    // a NULL ledger key deletes nothing: the NULL-key row stays unchanged
+    TxTable.deleteMor(spark, root, Seq(Some(1L), None).toDF("k"), "k")
+    val feed = TxTable.changeFeed(spark, root, 0L, 1L, Seq("k"))
+      .select("k", "change").as[(Option[Long], String)].collect().toSeq
+    assert(feed == Seq((Some(1L), "delete")))
+  }
+
   test("merge-on-read delete: zero rewrites, scoped ledgers, folding, correct feed") {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
