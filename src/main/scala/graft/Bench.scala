@@ -153,7 +153,7 @@ object Bench {
     "Q-llm-59",   // vector index maintained from the change feed
     "Q-scan-22",  // per-stratum A-ES weighted sampling (WindowGroupLimit)
     "Q-qual-34",  // ledger-pressure fold bounds the MoR read chain
-    "Q-qual-35",  // delete-set broadcast guard: both plan forms priced
+    "Q-qual-35",  // delete-set guard: in-scan and shuffled forms priced
     "Q-llm-63",   // mega-cluster dedup via star edges (hot-bucket armor)
     "Q-llm-64",   // Gopher repetition rules (map-side gram collapse)
     "Q-llm-65",   // dedup savings report over the star-edge clusters

@@ -68,6 +68,14 @@ object WeatherJob {
         to_binary(lpad(hex(col("ts_ms")), 16, "0"), lit("hex"))
           .as("value"))).as("headers")))
 
+  /** The plan artifact `main` logs (ref :90, getExecutionPlan): the
+    * analyzed logical plan of the streaming query. It exists before
+    * `start()`; a streaming frame's optimized and physical plans do not
+    * (its `queryExecution.toString` prints an AnalysisException in their
+    * place), they live inside the running query. */
+  def planArtifact(out: DataFrame): String =
+    out.queryExecution.analyzed.treeString
+
   /** The reference's logging map (`WeatherProcessingJob.java:81-84`) is dead
     * code (its stream is never consumed); its evident intent — per-record
     * visibility — is realized Spark-first as `observe()` metrics surfaced
@@ -135,8 +143,7 @@ object WeatherJob {
         case "memory" => writer.format("memory")
           .queryName(conf.getOrElse("sink.table", "presence"))
       }).trigger(trigger).start()
-      // plan artifact log, mirroring ref :90 (getExecutionPlan dump)
-      System.err.println(out.queryExecution.toString())
+      System.err.println(planArtifact(out))
       q.awaitTermination()
     }
 

@@ -732,12 +732,16 @@ object TxTable {
     * eras union by name. Old rows surface under the CURRENT column names
     * and types; a parquet-level merge of int-vs-long or old-vs-new names
     * (which `mergeSchema` would refuse or split) never happens because
-    * no single read spans an evolution boundary. */
+    * no single read spans an evolution boundary. `perScan` applies to
+    * each era's frame before the union, where file metadata columns
+    * (`_metadata.file_path`) still resolve. */
   private def readFilesEvolved(spark: SparkSession, root: String,
                                snap: Snapshot, files: Seq[String],
-                               useCachedSchema: Boolean = true): DataFrame = {
+                               useCachedSchema: Boolean = true,
+                               perScan: DataFrame => DataFrame = identity)
+      : DataFrame = {
     val evos = snap.evos.sortBy(_._1)
-    if (evos.isEmpty || files.isEmpty)
+    if (evos.isEmpty || files.isEmpty) perScan(
       // the no-evolution path (every live file shares the table's
       // current schema by construction — appends/upserts are
       // schema-validated and rewrites preserve schema) reads under the
@@ -747,43 +751,21 @@ object TxTable {
       readFiles(spark, root, files,
         if (evos.isEmpty && files.nonEmpty && useCachedSchema)
           Some(currentSchema(spark, root, snap))
-        else None)
+        else None))
     else {
       files.groupBy { f =>
         val av = snap.fileAddV.getOrElse(f, Long.MaxValue)
         evos.count(_._1 > av) // pending ops form a suffix of the order
       }.toSeq.sortBy(_._1)
         .map { case (pending, fs) =>
-          evos.takeRight(pending).foldLeft(readFiles(spark, root, fs)) {
+          perScan(evos.takeRight(pending).foldLeft(readFiles(spark, root, fs)) {
             (df, ev) => applyEvo(df, ev._2)
-          }
+          })
         }
         .reduce(_.unionByName(_, allowMissingColumns = true))
     }
   }
 
-  /** MERGE-ON-READ resolution: the content of `files` under `snap`'s
-    * live delete ledgers. A ledger applies to a data file iff the file
-    * was added at or before the ledger's version — so files land in
-    * groups by the SUFFIX of ledgers that applies to them (ledgers are
-    * totally ordered by the log). With no live ledgers this IS
-    * readFiles.
-    *
-    * ONE anti-join resolves every group, because the suffix sets are
-    * NESTED (group g is scoped by exactly the ledgers indexed ≥ g): a
-    * row from group g is doomed iff its key appears in some ledger with
-    * index ≥ g, i.e. iff max ledger-index over its key ≥ g. So the
-    * build side is the union of all ledger keys reduced to (key,
-    * max-index) — still broadcast-sized by construction (ledgers are
-    * the POINT-delete path; bulk deletes are copy-on-write) — and the
-    * probe is the group-tagged union of the file scans, anti-joined on
-    * key equality plus `max-index >= group`. Read cost is one pass over
-    * the data and ONE join regardless of chain length (the chained
-    * per-ledger form measured ~0.66 s/ledger/scan on a 600 k-row table
-    * — linear read degradation under a streaming-upsert drain; this
-    * form is flat). A key deleted at ledger i and re-inserted by a
-    * later epoch lands in a group > i, so the inequality correctly
-    * spares the re-insert while dooming the older copies. */
   /** Ledger column signatures (names, catalogString types, is-single-
     * long), cached per root: a ledger file is immutable, so its
     * signature never changes; the map is REPLACED with exactly the live
@@ -793,28 +775,127 @@ object TxTable {
     * field existed. Types are part of the signature so two ledgers
     * sharing column names but differing in key type (string vs
     * timestamp from different deleteMorKeys calls) never share one
-    * multi-file scan's inferred schema — they land in separate groups
-    * and separate anti-joins. */
+    * multi-file scan's inferred schema — they land in separate
+    * families, resolved apart. */
   private val ledgerSigCache = new java.util.concurrent.ConcurrentHashMap[
     String, Map[String, (Seq[String], Seq[String], Boolean)]]()
 
+  /** Non-NULL keys of each long-signature ledger, cached per root by
+    * ledger path. A ledger is immutable, so its keys load once; the map
+    * is REPLACED with the snapshot's live ledgers on every lookup, so it
+    * holds no retired ledger. */
+  private val ledgerKeyCache = new java.util.concurrent.ConcurrentHashMap[
+    String, Map[String, Array[Long]]]()
+
+  /** The long keys of `ls` (ledger, key column), from [[ledgerKeyCache]].
+    * Every ledger not cached yet loads in ONE job: a plain ledger from
+    * its file (schema from the signature, so no inference job), an
+    * aliased one from the key column of its backing data files. NULL
+    * keys are dropped: `===` never matches them. */
+  private def ledgerLongKeys(spark: SparkSession, root: String,
+                             snap: Snapshot, ls: Seq[(Ledger, String)])
+      : Map[String, Array[Long]] = {
+    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.types.{StructField, StructType}
+    val cached = Option(ledgerKeyCache.get(root))
+      .getOrElse(Map.empty[String, Array[Long]])
+    val missing = ls.filterNot(t => cached.contains(t._1.path))
+    val loaded =
+      if (missing.isEmpty) Map.empty[String, Array[Long]]
+      else {
+        val byLedger = missing.zipWithIndex.map { case ((l, kc), j) =>
+          (if (isAliased(l.path))
+             readFilesEvolved(spark, root, snap, ledgerFiles(l.path))
+           else spark.read.schema(StructType(Seq(StructField(kc, LongType))))
+             .parquet(s"$root/${l.path}"))
+            .select(col(kc).cast("long").as("k"), lit(j).as("j"))
+        }.reduce(_.union(_)).where(col("k").isNotNull)
+          .collect().groupBy(_.getInt(1))
+        missing.zipWithIndex.map { case ((l, _), j) =>
+          l.path -> byLedger.get(j)
+            .fold(Array.emptyLongArray)(_.map(_.getLong(0)))
+        }.toMap
+      }
+    val live = snap.ledgers.map(_.path).toSet
+    ledgerKeyCache.compute(root, (_, old) =>
+      Option(old).getOrElse(Map.empty[String, Array[Long]])
+        .filter(e => live(e._1)) ++ loaded)
+    cached ++ loaded
+  }
+
+  /** Key → highest index of the ledgers holding it (-1: none), on
+    * primitive arrays (open addressing, linear probing), which serialize
+    * flat into a broadcast where a `LongMap` boxes every entry through
+    * its serialization proxy. Ledgers fold in ascending index, so a
+    * later ledger overwrites an earlier one. */
+  private final class DoomIndex(ledgers: Seq[(Array[Long], Int)])
+      extends Serializable {
+    private val mask = {
+      val n = ledgers.iterator.map(_._1.length).sum
+      var c = 4
+      while (c < 2 * n) c <<= 1
+      c - 1
+    }
+    private val keys = new Array[Long](mask + 1)
+    private val idx = Array.fill(mask + 1)(-1)
+    private def slot(k: Long): Int = {
+      var s = java.lang.Long.hashCode(k * 0x9E3779B97F4A7C15L) & mask
+      while (idx(s) >= 0 && keys(s) != k) s = (s + 1) & mask
+      s
+    }
+    ledgers.sortBy(_._2).foreach { case (ks, i) =>
+      ks.foreach { k => val s = slot(k); keys(s) = k; idx(s) = i }
+    }
+    def apply(k: Long): Int = idx(slot(k))
+  }
+
+  /** MERGE-ON-READ resolution: the content of `files` under `snap`'s
+    * live delete ledgers. A ledger applies to a data file iff the file
+    * was added before the ledger's version — so files land in groups by
+    * the SUFFIX of ledgers that applies to them (ledgers are totally
+    * ordered by the log). With no live ledgers this IS readFiles.
+    *
+    * The suffix sets are NESTED (group g is scoped by exactly the
+    * ledgers indexed ≥ g): a row from group g is doomed iff its key
+    * appears in some ledger with index ≥ g, i.e. iff max ledger-index
+    * over its key ≥ g. A key deleted at ledger i and re-inserted by a
+    * later epoch lands in a group > i, so the test spares the re-insert
+    * while dooming the older copies. Each group is one scan branch; the
+    * branches union into one stage.
+    *
+    * LONG-key ledgers — the point-delete and keyed-upsert path — resolve
+    * INSIDE that stage while their logged volume is within
+    * `spark.graft.mor.broadcastMaxBytes`: their keys load onto the
+    * driver once per ledger ([[ledgerLongKeys]]), fold into a primitive
+    * key → max-index map shipped by `sc.broadcast` (no job), and each
+    * branch keeps a row iff its key is NULL (never doomed under `===`)
+    * or maps below g. The filter is deterministic, so a caller's
+    * residual `where` still reaches parquet as a pushed filter. A read
+    * is then ONE Spark job whatever the ledger count, plus one key-load
+    * job on the first read after new ledgers.
+    *
+    * Everything else subtracts by a left anti-join against the union of
+    * its ledgers tagged with their index, on key equality plus
+    * `index >= group`: long ledgers over the bound or with unknown row
+    * counts (a billion-key accumulation must not land on the driver;
+    * shuffled) and natural-typed or composite keys (null-safe equality;
+    * broadcast under the bound). */
   private def morRead(spark: SparkSession, root: String, snap: Snapshot,
                       files: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col, input_file_name,
-      lit, substring_index}
+    import org.apache.spark.sql.functions.{broadcast, col, lit, udf}
     // a ledger applying to NONE of the asked files can't doom anything —
-    // skip it (pruned reads only anti-join the ledgers that scope their
+    // skip it (pruned reads only resolve the ledgers that scope their
     // kept files; zombie ledgers awaiting retirement cost nothing)
     val sorted = snap.ledgers.sortBy(_.version).filter(l =>
       files.exists(f =>
         snap.fileAddV.getOrElse(f, Long.MaxValue) < l.version))
     if (sorted.isEmpty || files.isEmpty) readFilesEvolved(spark, root, snap, files)
     else {
-      import spark.implicits._
       // every staged batch lands in a fresh uuid dir, so the 2-segment
       // name suffix ("<uuid>/part-...parquet") identifies a file
       // uniquely — the handle that lets ONE scan carry per-file tags
-      def suffix2(p: String): String = p.split('/').takeRight(2).mkString("/")
+      def suffix2(p: String): String =
+        p.substring(p.lastIndexOf('/', p.lastIndexOf('/') - 1) + 1)
       // group = index of the first ledger applying to the file (all
       // later ledgers apply too); sorted.length = none apply
       def firstApplicable(f: String): Int = {
@@ -822,35 +903,12 @@ object TxTable {
         val i = sorted.indexWhere(_.version > av)
         if (i < 0) sorted.length else i
       }
-      // probe side, adaptive (both ends measured): per-group scan
-      // branches cost ~0.15 s each of pure plan overhead, so MANY
-      // groups want ONE scan of every live file with the group tag
-      // attached by a broadcast suffix join; but that join is itself
-      // ~0.5 s of fixed machinery that a 1-2-ledger table (the common
-      // steady state between maintenance runs) shouldn't pay — few
-      // groups keep the literal-tag branch form.
-      val grouped = files.groupBy(firstApplicable).toSeq.sortBy(_._1)
-      val tagged =
-        if (grouped.size <= 3)
-          grouped.map { case (g, fs) =>
-            readFilesEvolved(spark, root, snap, fs)
-              .withColumn("__graft_g", lit(g))
-          }.reduce(_.unionByName(_, allowMissingColumns = true))
-        else {
-          val gdf = broadcast(
-            files.map(f => (suffix2(f), firstApplicable(f)))
-              .toDF("__graft_f", "__graft_g"))
-          readFilesEvolved(spark, root, snap, files)
-            .withColumn("__graft_f",
-              substring_index(input_file_name(), "/", -2))
-            .join(gdf, Seq("__graft_f")).drop("__graft_f")
-        }
       // the ledger's columns NAME the key columns: one LONG column =
       // the long-normalized point-delete path; anything else (several
       // columns, or one natural-typed column — a string/double/
       // timestamp key is stored unconverted) = natural types, null-safe
       // equality. A table writes ledgers with one signature in
-      // practice; if signatures ever mix, each gets its own join.
+      // practice; if signatures ever mix, each family resolves apart.
       val sigOf = ledgerSigCache.compute(root, (_, old) => {
         val prev =
           if (old == null) Map.empty[String, (Seq[String], Seq[String], Boolean)]
@@ -875,71 +933,92 @@ object TxTable {
             })
         }.toMap
       })
-      // broadcast-vs-shuffle policy for the delete-set anti-join: the
-      // ledger row counts ride the commit log (drows), so the build
-      // side's size is known without touching data. Below the byte
-      // threshold the build side broadcasts (zero shuffle of the probe —
-      // the common case: ledgers are the POINT-delete path); above it —
-      // a long streaming-upsert accumulation between folds can reach
-      // billions of keys on a 100 TB table — the join falls back to a
-      // shuffled left_anti instead of OOMing the driver or tripping the
-      // 8 GB broadcast hard cap. Estimate is rows × a conservative
-      // in-memory row cost (unknown counts, -1, price as unbounded).
+      // the driver-memory bound on a delete set: the ledger row counts
+      // ride the commit log (drows), so a family's volume is known
+      // without touching data — rows × a conservative in-memory row
+      // cost (unknown counts, -1, price as unbounded). Within it a long
+      // family resolves in the scan and a natural one broadcasts its
+      // anti-join build side; above it — a long streaming-upsert
+      // accumulation between folds can reach billions of keys on a
+      // 100 TB table — the join is a shuffled left_anti instead of
+      // OOMing the driver or tripping the 8 GB broadcast hard cap.
       val maxBcastBytes = spark.conf.getOption(
         "spark.graft.mor.broadcastMaxBytes").map(_.toLong)
         .getOrElse(100L * 1024 * 1024)
-      val resolved = sorted.zipWithIndex
+      def withinBound(kcs: Seq[String], ls: Seq[(Ledger, Int)]): Boolean =
+        ls.iterator.map { case (l, _) =>
+          if (l.rows >= 0) l.rows * (24L + 24L * kcs.length)
+          else Long.MaxValue / 1024 // unknown: never held blindly
+        }.foldLeft(0L)((a, b) => if (a + b < a) Long.MaxValue else a + b) <=
+          maxBcastBytes
+      val (inScan, joined) = sorted.zipWithIndex
         .groupBy(t => (sigOf(t._1.path), isAliased(t._1.path))).toSeq
         .sortBy { case (((ns, ts, _), al), _) =>
           ((ns ++ ts).mkString(","), al) }
-        .foldLeft(tagged) { case (df, (((kcs, _, isLong), aliased), ls)) =>
-          val estBytes = ls.iterator.map { case (l, _) =>
-            if (l.rows >= 0) l.rows * (24L + 24L * kcs.length)
-            else Long.MaxValue / 1024 // unknown: never broadcast blindly
-          }.foldLeft(0L)((a, b) => if (a + b < a) Long.MaxValue else a + b)
-          val doBcast = estBytes <= maxBcastBytes
+        .partition { case (((kcs, _, isLong), _), ls) =>
+          isLong && withinBound(kcs, ls) }
+      val scoped = inScan.flatMap { case (((kcs, _, _), _), ls) =>
+        ls.map { case (l, i) => (l, i, kcs.head) } }
+      val keysOf = ledgerLongKeys(spark, root, snap, scoped.map(t => (t._1, t._3)))
+      // one key → max-index map per key column (aliased and plain
+      // ledgers on the same key share it)
+      val dooms = scoped.groupBy(_._3).toSeq.sortBy(_._1).map { case (kc, ls) =>
+        kc -> spark.sparkContext.broadcast(
+          new DoomIndex(ls.map { case (l, i, _) => (keysOf(l.path), i) }))
+      }
+      // a scan whose rows carry their group: a row survives the in-scan
+      // families iff its key is NULL or maps below the group
+      def resolve(group: Column)(df: DataFrame): DataFrame = {
+        val kept = dooms.foldLeft(df) { case (d, (kc, idx)) =>
+          d.where(udf((g: Int, k: java.lang.Long) =>
+            k == null || idx.value(k) < g).apply(group, col(kc).cast("long")))
+        }
+        if (joined.isEmpty) kept else kept.withColumn("__graft_g", group)
+      }
+      // a scan row's tag, looked up by its file. `_metadata.file_path`
+      // is deterministic (input_file_name() is not), so a residual
+      // filter still reaches parquet
+      def byFile(tags: Seq[(String, Int)]): Column = {
+        val m = spark.sparkContext.broadcast(
+          tags.map(t => suffix2(t._1) -> t._2).toMap)
+        udf((p: String) => m.value(suffix2(p)))
+          .apply(col("_metadata.file_path"))
+      }
+      // probe side: few groups read as one scan branch per group with a
+      // LITERAL group; many as ONE scan of every file, tagged by file.
+      // Either form keeps a compaction's output layout: coalesce packs
+      // the input partitions in scan order.
+      val grouped = files.groupBy(firstApplicable).toSeq.sortBy(_._1)
+      val tagged =
+        if (grouped.size <= 3)
+          grouped.map { case (g, fs) =>
+            resolve(lit(g))(readFilesEvolved(spark, root, snap, fs))
+          }.reduce(_.unionByName(_, allowMissingColumns = true))
+        else readFilesEvolved(spark, root, snap, files, perScan =
+          resolve(byFile(files.map(f => f -> firstApplicable(f)))))
+      if (joined.isEmpty) tagged
+      else joined.foldLeft(tagged) {
+        case (df, (((kcs, _, isLong), aliased), ls)) =>
           // same answer either way; spec-pinned in both forms. The
           // shuffled form carries a merge hint so Spark's own file-size
           // estimate (which has no idea the parquet decompresses into a
           // driver-resident hash relation) can't re-broadcast it.
           def placed(b: DataFrame): DataFrame =
-            if (doBcast) broadcast(b) else b.hint("shuffle_merge")
-          // build side, same adaptivity: few ledgers read as per-file
-          // scans with a LITERAL index (tiny files, no tag join); many
-          // read as ONE scan index-tagged by the suffix join. No
-          // per-key max aggregation either way: LEFT ANTI drops a
-          // probe row if ANY build row matches (key equal ∧ idx ≥
-          // group), which IS the max-index test — duplicate keys
-          // across ledgers change nothing and the build side stays
-          // shuffle-free. Aliased entries read their backing DATA
-          // files through the evolution-reconciled path (a widen can
-          // postdate them) and project the signature's key columns —
-          // parquet column pruning keeps the scan key-only.
-          def entry(l: Ledger): DataFrame =
-            if (aliased)
-              readFilesEvolved(spark, root, snap, ledgerFiles(l.path))
-                .select(kcs.map(col): _*)
-            else spark.read.parquet(s"$root/${l.path}")
+            if (withinBound(kcs, ls)) broadcast(b) else b.hint("shuffle_merge")
+          // build side: ONE scan of the family's ledger files, each row
+          // tagged with its ledger's index by file. No per-key max
+          // aggregation: LEFT ANTI drops a probe row if ANY build row
+          // matches (key equal ∧ idx ≥ group), which IS the max-index
+          // test. Aliased entries read their backing DATA files through
+          // the evolution-reconciled path (a widen can postdate them)
+          // and project the signature's key columns.
+          val lfs = ls.flatMap { case (l, i) => ledgerFiles(l.path).map(_ -> i) }
+          val li = byFile(lfs).as("__graft_li")
+          val keyed = (d: DataFrame) => d.select(kcs.map(col) :+ li: _*)
           val build =
-            if (ls.size <= 4)
-              ls.map { case (l, i) =>
-                entry(l).withColumn("__graft_li", lit(i))
-              }.reduce(_.unionByName(_))
-            else {
-              val idxDf = broadcast(
-                ls.flatMap { case (l, i) =>
-                  ledgerFiles(l.path).map(f => (suffix2(f), i)) }
-                  .toDF("__graft_lf", "__graft_li"))
-              val allFiles = ls.flatMap(t => ledgerFiles(t._1.path))
-              (if (aliased)
-                 readFilesEvolved(spark, root, snap, allFiles)
-               else spark.read
-                 .parquet(allFiles.map(f => s"$root/$f"): _*))
-                .withColumn("__graft_lf",
-                  substring_index(input_file_name(), "/", -2))
-                .join(idxDf, Seq("__graft_lf"))
-                .select((kcs.map(col) :+ col("__graft_li")): _*)
-            }
+            if (aliased) readFilesEvolved(spark, root, snap, lfs.map(_._1),
+              perScan = keyed)
+            else keyed(spark.read.parquet(lfs.map(t => s"$root/${t._1}"): _*))
           if (isLong) {
             val kc = kcs.head
             df.join(
@@ -958,8 +1037,7 @@ object TxTable {
                 renamed.col("__graft_li") >= df.col("__graft_g"),
               "left_anti")
           }
-        }
-      resolved.drop("__graft_g")
+      }.drop("__graft_g")
     }
   }
 
@@ -1203,8 +1281,10 @@ object TxTable {
     * that only touches pre-evolution files won't surface the new column
     * (read the full table when the complete schema matters). */
   def readPruned(spark: SparkSession, root: String,
-                 lo: Long, hi: Long): DataFrame =
-    readPrunedOn(spark, root, primaryKey(snapshot(root), root), lo, hi)
+                 lo: Long, hi: Long): DataFrame = {
+    val snap = snapshot(root)
+    readPrunedAt(spark, root, snap, primaryKey(snap, root), lo, hi)
+  }
 
   private def primaryKey(snap: Snapshot, root: String): String = {
     require(snap.version >= 0, s"not a TxTable (no committed log): $root")
@@ -1253,9 +1333,12 @@ object TxTable {
     * on the secondary column prunes from the log exactly like one on the
     * primary key. Result ≡ `read(...).where(column BETWEEN lo AND hi)`. */
   def readPrunedOn(spark: SparkSession, root: String, column: String,
-                   lo: Long, hi: Long): DataFrame = {
+                   lo: Long, hi: Long): DataFrame =
+    readPrunedAt(spark, root, snapshot(root), column, lo, hi)
+
+  private def readPrunedAt(spark: SparkSession, root: String, snap: Snapshot,
+                           column: String, lo: Long, hi: Long): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val snap = snapshot(root)
     require(snap.version >= 0, s"not a TxTable (no committed log): $root")
     requireNumericStats(snap, column)
     readKept(spark, root, snap, snap.kept(between(longAttr(column), lo, hi)),
@@ -1269,16 +1352,21 @@ object TxTable {
     * can't help with: per-epoch appended files each spanning the whole
     * key domain. */
   def pointRead(spark: SparkSession, root: String,
-                keys: Seq[Long]): DataFrame =
-    pointReadOn(spark, root, primaryKey(snapshot(root), root), keys)
+                keys: Seq[Long]): DataFrame = {
+    val snap = snapshot(root)
+    pointReadAt(spark, root, snap, primaryKey(snap, root), keys)
+  }
 
   /** [[pointRead]] on ANY declared stats column — secondary columns carry
     * their own per-file blooms in the log, so a point probe on a
     * non-primary dimension skips files with zero data I/O too. */
   def pointReadOn(spark: SparkSession, root: String, column: String,
-                  keys: Seq[Long]): DataFrame = {
+                  keys: Seq[Long]): DataFrame =
+    pointReadAt(spark, root, snapshot(root), column, keys)
+
+  private def pointReadAt(spark: SparkSession, root: String, snap: Snapshot,
+                          column: String, keys: Seq[Long]): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val snap = snapshot(root)
     require(snap.version >= 0, s"not a TxTable (no committed log): $root")
     requireNumericStats(snap, column)
     readKept(spark, root, snap, snap.kept(in(longAttr(column), keys)),
@@ -1535,13 +1623,18 @@ object TxTable {
 
   /** (files kept by range stats alone, files kept by range+bloom, total
     * live files) for a point read — the log-only pruning ledger. */
-  def pointPruneAccounting(root: String, keys: Seq[Long]): (Int, Int, Int) =
-    pointPruneAccountingOn(root, primaryKey(snapshot(root), root), keys)
+  def pointPruneAccounting(root: String, keys: Seq[Long]): (Int, Int, Int) = {
+    val snap = snapshot(root)
+    pointPruneAccountingAt(snap, primaryKey(snap, root), keys)
+  }
 
   /** [[pointPruneAccounting]] for any declared stats column. */
   def pointPruneAccountingOn(root: String, column: String,
-                             keys: Seq[Long]): (Int, Int, Int) = {
-    val snap = snapshot(root)
+                             keys: Seq[Long]): (Int, Int, Int) =
+    pointPruneAccountingAt(snapshot(root), column, keys)
+
+  private def pointPruneAccountingAt(snap: Snapshot, column: String,
+                                     keys: Seq[Long]): (Int, Int, Int) = {
     requireNumericStats(snap, column)
     val cond = in(longAttr(column), keys)
     (snap.kept(cond, useBlooms = false).size, snap.kept(cond).size,
@@ -2533,7 +2626,7 @@ object TxTable {
   }
 
   /** Applicable-ledger chain length of a live data file: how many live
-    * MoR delete ledgers the read path must anti-join for it (a ledger
+    * MoR delete ledgers the read path must resolve for it (a ledger
     * applies iff the file was added strictly before the ledger's
     * commit). */
   private def ledgerChain(snap: Snapshot, f: String): Int = {
@@ -2552,11 +2645,11 @@ object TxTable {
 
   /** Total LIVE delete-set rows across the table's ledgers, resolved
     * from the commit log alone (drows; pre-drows ledgers fall back to a
-    * footer read) — the volume [[morRead]]'s broadcast-vs-shuffle
+    * footer read) — the volume [[morRead]]'s in-scan-vs-shuffle
     * policy prices and [[foldLedgersOver]] bounds. A maintenance planner
     * watches this next to [[ledgerPressure]]: chain length tells how
-    * many ledger GROUPS a scan joins, volume tells how big the
-    * anti-join's build side is. */
+    * many ledger GROUPS a scan resolves, volume tells how many keys the
+    * driver holds for it. */
   def ledgerVolume(root: String): Long = {
     val snap = snapshot(root)
     snap.ledgers.map { l =>
@@ -2568,10 +2661,10 @@ object TxTable {
   /** LEDGER-PRESSURE policy — the merge-on-read counterpart of
     * [[binPack]]'s small-file policy. A hot file on a streaming-upsert
     * table accumulates one delete ledger per epoch that touches it.
-    * (The read path resolves ALL live ledgers in one broadcast
-    * anti-join — [[morRead]] — so scan cost no longer grows per epoch;
-    * what still grows unboundedly without a fold is the delete-set the
-    * read must broadcast, the live ledger file count, and the log
+    * (The read path resolves ALL live ledgers inside one scan stage —
+    * [[morRead]] — so scan cost no longer grows per epoch; what still
+    * grows unboundedly without a fold is the delete-set the read must
+    * hold and broadcast, the live ledger file count, and the log
     * metadata every snapshot resolution carries.) This operator
     * BOUNDS the chain: every live data file with MORE than `maxLedgers`
     * applicable ledgers is rewritten from its EFFECTIVE content (ledger
@@ -3058,13 +3151,18 @@ object TxTable {
     * would open, live files total) — [[readPruned]]'s selection rule,
     * exposed so layout decisions (did OPTIMIZE help?) are checkable
     * without scanning data. */
-  def pruneAccounting(root: String, lo: Long, hi: Long): (Int, Int) =
-    pruneAccountingOn(root, primaryKey(snapshot(root), root), lo, hi)
+  def pruneAccounting(root: String, lo: Long, hi: Long): (Int, Int) = {
+    val snap = snapshot(root)
+    pruneAccountingAt(snap, primaryKey(snap, root), lo, hi)
+  }
 
   /** [[pruneAccounting]] for any declared stats column. */
   def pruneAccountingOn(root: String, column: String,
-                        lo: Long, hi: Long): (Int, Int) = {
-    val snap = snapshot(root)
+                        lo: Long, hi: Long): (Int, Int) =
+    pruneAccountingAt(snapshot(root), column, lo, hi)
+
+  private def pruneAccountingAt(snap: Snapshot, column: String,
+                                lo: Long, hi: Long): (Int, Int) = {
     requireNumericStats(snap, column)
     (snap.kept(between(longAttr(column), lo, hi)).size, snap.files.length)
   }
@@ -3327,10 +3425,13 @@ object TxTable {
     * key is NOT re-deleted (newer files escape older ledgers), and any
     * full rewrite — compact / OPTIMIZE / merge touching the file —
     * folds the ledger's effect into data and retires it. This is the
-    * deletion-vector trade: O(doomed keys) commit cost now, one extra
-    * anti-join per read until the next compaction — what per-epoch
-    * streaming upserts against a hot 100 TB table need (CoW would pay
-    * file-rewrite costs every epoch). `key` must cast to long. */
+    * deletion-vector trade: O(doomed keys) commit cost now, and until
+    * the next compaction a key filter inside every read's scan (the
+    * first read after the ledger loads its keys once; over
+    * `spark.graft.mor.broadcastMaxBytes`, a shuffled anti-join instead)
+    * — what per-epoch streaming upserts against a hot 100 TB table need
+    * (CoW would pay file-rewrite costs every epoch). `key` must cast to
+    * long. */
   def deleteMor(spark: SparkSession, root: String, doomed: DataFrame,
                 key: String, tag: Option[String] = None,
                 maxAttempts: Int = 12): CommitResult =
@@ -3406,8 +3507,10 @@ object TxTable {
     * suppressed at read. Commit cost is O(changed rows) — the per-epoch
     * streaming-upsert path a hot, poorly-clustered 100 TB table needs,
     * where [[mergeCow]] pays a rewrite of every file that merely
-    * CONTAINS a touched key. Reads pay the ledger anti-join until
-    * [[compact]]/[[optimize]] fold ledgers back into data; stats,
+    * CONTAINS a touched key. Until [[compact]]/[[optimize]] fold
+    * ledgers back into data, reads resolve them in [[morRead]] — inside
+    * the scan for a single integral key, by anti-join for a composite
+    * or natural-typed one; stats,
     * blooms and row counts for the adds are captured as for any append,
     * so pruning and [[metaAggregate]] stay correct across MoR upserts
     * (ledger-scoped files simply drop off the metadata fast path until
@@ -3467,8 +3570,8 @@ object TxTable {
     // drain), covers exactly the rows that landed even if the upstream
     // plan is non-deterministic between executions, and rebased
     // retries re-reference the same staging.
-    // MoR adds have no layout contract (reads union them through the
-    // ledger anti-join; the next compaction re-clusters) — let staging
+    // MoR adds have no layout contract (reads union them under the
+    // ledger resolution; the next compaction re-clusters) — let staging
     // right-size a shattered small batch (a streaming upsert sink's
     // state-store output otherwise lands ~20 near-empty files per
     // epoch; profiled 656 staged files over a 32-commit drain).

@@ -1594,9 +1594,9 @@ object Extras {
     // point-delete path); the commit log carries each ledger's row
     // count (drows), so `ledgerVolume` resolves the live delete-set
     // size with zero data I/O (asserted == the closed-form doomed
-    // count). The read prices the anti-join build side from that
-    // volume: under the default 100 MB threshold it broadcasts
-    // (asserted: BroadcastHashJoin LeftAnti), over it — forced here
+    // count). The read prices the delete set from that volume: under
+    // the default 100 MB threshold the long keys resolve inside the
+    // scan (asserted: no join in the plan), over it — forced here
     // via spark.graft.mor.broadcastMaxBytes=0, the stand-in for a
     // billion-key accumulation between folds — the SAME read falls
     // back to a shuffled sort-merge anti-join (asserted) instead of
@@ -1675,9 +1675,9 @@ object Extras {
       val bform = rollup(TxTable.read(s, root))
       val brows = bform.collect()
       val bplan = bform.queryExecution.executedPlan.toString
-      if (!(bplan.contains("BroadcastHashJoin") && bplan.contains("LeftAnti")))
+      if (bplan.contains("Join"))
         throw new IllegalStateException(
-          s"under-threshold delete set must broadcast:\n$bplan")
+          s"under-threshold delete set must resolve in the scan:\n$bplan")
       s.conf.set("spark.graft.mor.broadcastMaxBytes", "0")
       try {
         val sform = rollup(TxTable.read(s, root))
@@ -1689,7 +1689,7 @@ object Extras {
         if (!java.util.Arrays.equals(
             brows.asInstanceOf[Array[AnyRef]], srows.asInstanceOf[Array[AnyRef]]))
           throw new IllegalStateException(
-            "broadcast and shuffled anti-join forms diverged")
+            "in-scan and shuffled anti-join forms diverged")
       } finally s.conf.unset("spark.graft.mor.broadcastMaxBytes")
       bform
     },

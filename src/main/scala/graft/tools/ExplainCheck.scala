@@ -343,10 +343,11 @@ object ExplainCheck {
     check("Q-graph-07", "LPA vote join keyed; no cartesian/BNLJ",
       p => !p.contains("CartesianProduct") &&
            !p.contains("BroadcastNestedLoopJoin"))
-    // MoR read, BOTH delete-set plan forms: a small logged volume
-    // broadcasts the build side (zero probe shuffle); over the byte
-    // threshold the same read falls back to a shuffled sort-merge
-    // anti-join — the form that survives a billion-key accumulation
+    // MoR read, BOTH delete-set plan forms: a small logged volume of
+    // long keys resolves inside the scan (no join at all); over the
+    // byte threshold the same read falls back to a shuffled sort-merge
+    // anti-join — the form that survives a billion-key accumulation —
+    // and both forms read the same rows
     locally {
       import s.implicits._
       val root = java.nio.file.Files
@@ -356,15 +357,17 @@ object ExplainCheck {
         root, statsKey = Some("k"))
       graft.operators.TxTable.mergeMor(s, root,
         (0L until 50L).map(i => (i, "upd")).toDF("k", "v"), "k")
-      val pb = graft.operators.TxTable.read(s, root)
-        .queryExecution.executedPlan.toString
-      val okB = pb.contains("BroadcastHashJoin") && pb.contains("LeftAnti")
-      report(okB, "mor-read",
-        "small delete set broadcasts the anti-join build side", pb)
+      val small = graft.operators.TxTable.read(s, root)
+      val pb = small.queryExecution.executedPlan.toString
+      val smallRows = small.collect().toSet
+      report(!pb.contains("Join"), "mor-read",
+        "small long-key delete set resolves in the scan, no join", pb)
       s.conf.set("spark.graft.mor.broadcastMaxBytes", "0")
       try {
-        val ps = graft.operators.TxTable.read(s, root)
-          .queryExecution.executedPlan.toString
+        val big = graft.operators.TxTable.read(s, root)
+        val ps = big.queryExecution.executedPlan.toString
+        report(big.collect().toSet == smallRows, "mor-read",
+          "in-scan and over-threshold forms read the same rows", ps)
         // line-wise regex: Spark prints the join type AFTER the key
         // lists ("BroadcastHashJoin [k], [k], LeftAnti, ..."), so a
         // plain substring "BroadcastHashJoin LeftAnti" can never match

@@ -11,12 +11,14 @@ import graft.core.EngineSession
 import graft.operators.TxTable
 
 /** Model-based property test for the ACID table: a seeded random sequence
-  * of merge / CoW-merge / CoW-delete / compact operations applied to a
-  * TxTable must equal the same sequence applied to a plain in-memory
-  * Map — at EVERY intermediate version (time travel replays the whole
-  * history), for both merge implementations, under random batch sizes
-  * and key overlap — and the log-only [[TxTable.changeFeed]] between any
-  * two versions must equal the model states' brute-force diff. */
+  * of merge / CoW-merge / MoR-merge / CoW-delete / MoR-delete / compact
+  * operations applied to a TxTable must equal the same sequence applied
+  * to a plain in-memory Map — at EVERY intermediate version (time travel
+  * replays the whole history), for every merge implementation, under
+  * random batch sizes and key overlap, with the MoR delete sets resolved
+  * in the scan (default bound) and by the shuffled anti-join (bound 0)
+  * — and the log-only [[TxTable.changeFeed]] between any two versions
+  * must equal the model states' brute-force diff. */
 class TxTablePropertySpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = EngineSession.getOrCreate("graft-test")
@@ -25,6 +27,7 @@ class TxTablePropertySpec extends AnyFunSuite {
   private case class Merge(batch: Map[Long, String], cow: Boolean) extends Op
   private case class MergeMor(batch: Map[Long, String]) extends Op
   private case class Delete(keys: Set[Long]) extends Op
+  private case class DeleteMor(keys: Set[Long]) extends Op
   private case object Compact extends Op
   private case object Optimize extends Op
 
@@ -43,18 +46,25 @@ class TxTablePropertySpec extends AnyFunSuite {
       // deletes never target the two init keys, so the table (like any
       // real one with a retained dimension row) never goes fully empty
       (2, Gen.listOfN(3, Gen.chooseNum(2L, 30L)).map(ks => Delete(ks.toSet))),
+      (2, Gen.listOfN(3, Gen.chooseNum(2L, 30L)).map(ks => DeleteMor(ks.toSet))),
       (1, Gen.const(Compact)),
       // re-clustering is content-preserving like compact but also folds
       // live MoR ledgers and rewrites the whole layout
       (1, Gen.const(Optimize)))
-    Gen.listOfN(n, op).apply(Gen.Parameters.default, Seed(seed)).get
+    // the tail re-inserts a key a MoR ledger deleted: the newer file
+    // escapes the older ledger
+    Gen.listOfN(n, op).apply(Gen.Parameters.default, Seed(seed)).get ++
+      List(DeleteMor(Set(5L, 6L)), MergeMor(Map(5L -> s"back$seed")))
   }
 
-  // 31 s soak; the per-op contracts have fast unit coverage in TxTableSpec
+  // ~1 min soak; the per-op contracts have fast unit coverage in TxTableSpec
   test("random op sequences: table == in-memory model at every version",
       SlowTest) {
     import spark.implicits._
-    for (seed <- 1L to 3L) {
+    val boundKey = "spark.graft.mor.broadcastMaxBytes"
+    for (bound <- Seq(None, Some("0")); seed <- 1L to 3L) try {
+      bound.foreach(spark.conf.set(boundKey, _))
+      val at = s"seed=$seed bound=${bound.getOrElse("default")}"
       val root = Files.createTempDirectory(s"graft_txprop_$seed").toString
       val init = Map(0L -> "init0", 1L -> "init1")
       TxTable.create(init.toSeq.toDF("k", "v"), root, statsKey = Some("k"))
@@ -76,6 +86,10 @@ class TxTablePropertySpec extends AnyFunSuite {
           TxTable.deleteCow(spark, root, keys.toSeq.toDF("k"), "k")
           model = model -- keys
           states += model
+        case DeleteMor(keys) =>
+          TxTable.deleteMorKeys(spark, root, keys.toSeq.toDF("k"), Seq("k"))
+          model = model -- keys
+          states += model
         case Compact =>
           TxTable.compact(spark, root, targetFiles = 1)
           states += model // compaction must not change content
@@ -85,15 +99,24 @@ class TxTablePropertySpec extends AnyFunSuite {
       }
       val snap = TxTable.snapshot(root)
       assert(snap.version == states.length - 1,
-        s"seed=$seed: ${states.length - 1} ops committed, table at v${snap.version}")
+        s"$at: ${states.length - 1} ops committed, table at v${snap.version}")
       // every version (incl. across the v10 checkpoint) replays the model
       for (v <- states.indices) {
         val got = TxTable.read(spark, root, v)
           .as[(Long, String)].collect().toMap
-        assert(got == states(v), s"seed=$seed version=$v diverged")
+        assert(got == states(v), s"$at version=$v diverged")
       }
       // log stats stay complete through arbitrary op interleavings
-      assert(snap.fileStats.keySet == snap.files.toSet, s"seed=$seed stats")
+      assert(snap.fileStats.keySet == snap.files.toSet, s"$at stats")
+      // the pruned reads resolve the same ledgers at the final version
+      val probe = Seq(0L, 5L, 6L, 17L, 30L, 99L)
+      assert(TxTable.pointRead(spark, root, probe).as[(Long, String)]
+        .collect().toMap == model.filter(e => probe.contains(e._1)),
+        s"$at pointRead diverged")
+      assert(TxTable.readPrunedOn(spark, root, "k", 4L, 20L)
+        .as[(Long, String)].collect().toMap ==
+        model.filter(e => e._1 >= 4L && e._1 <= 20L),
+        s"$at readPrunedOn diverged")
       // the LOG-ONLY change feed between any two versions must equal the
       // brute-force diff of the model states (net semantics: intermediate
       // churn cancels; compact-only intervals are empty)
@@ -113,8 +136,8 @@ class TxTablePropertySpec extends AnyFunSuite {
               else "update"
             (k, change, sa.get(k), sb.get(k))
         }
-        assert(got == want, s"seed=$seed feed [$a,$b] diverged from model")
+        assert(got == want, s"$at feed [$a,$b] diverged from model")
       }
-    }
+    } finally spark.conf.unset(boundKey)
   }
 }

@@ -564,6 +564,124 @@ class TxTableSpec extends AnyFunSuite {
     assert(feed == Seq((Some(1L), "delete")))
   }
 
+  test("NULL keys on a long MoR ledger: a NULL data key survives, on both sides of the bound") {
+    import spark.implicits._
+    val root = freshRoot()
+    TxTable.create(Seq((Some(1L), "a"), (None, "n"), (Some(3L), "c"),
+        (Some(4L), "d")).toDF("k", "v").coalesce(1), root, Some("k"))
+    TxTable.deleteMorKeys(spark, root, Seq(Some(3L), None).toDF("k"), Seq("k"))
+    assert(TxTable.snapshot(root).ledgers.map(_.sig) == Seq("k:bigint"))
+    // in-scan filter (default bound) and shuffled anti-join (bound 0):
+    // `===` never matches NULL, so the ledger's NULL dooms nothing
+    for (bound <- Seq("104857600", "0"))
+      withConf("spark.graft.mor.broadcastMaxBytes" -> bound) {
+        def got(df: org.apache.spark.sql.DataFrame) =
+          df.as[(Option[Long], String)].collect().toSet
+        val all = TxTable.read(spark, root)
+        assert(got(all) == Set((Some(1L), "a"), (None, "n"), (Some(4L), "d")),
+          s"bound $bound")
+        assert(got(TxTable.readPrunedOn(spark, root, "k", 0L, 10L)) ==
+          got(all.where(col("k").between(0L, 10L))), s"bound $bound")
+        assert(got(TxTable.pointRead(spark, root, Seq(1L, 3L))) ==
+          got(all.where(col("k").isin(1L, 3L))), s"bound $bound")
+        assert(got(all.where(col("k").isNull)) == Set((None, "n")),
+          s"bound $bound")
+      }
+  }
+
+  test("MoR reads over 1-4 live long-key ledgers: one Spark job once the ledger keys are loaded") {
+    import spark.implicits._
+    val root = freshRoot()
+    TxTable.create((0L until 400L).map(i => (i, "base")).toDF("k", "v")
+      .coalesce(2), root, Some("k"))
+    var model = (0L until 400L).map(i => i -> "base").toMap
+    val probe = Seq(5L, 12L, 31L, 399L, 1012L)
+    def jobs(what: String): Int = {
+      var reads = Seq.empty[Set[(Long, String)]]
+      val n = JobCount(spark.sparkContext, what) {
+        reads = Seq(TxTable.read(spark, root),
+          TxTable.pointRead(spark, root, probe),
+          TxTable.readPrunedOn(spark, root, "k", 10L, 40L))
+          .map(_.as[(Long, String)].collect().toSet)
+      }
+      assert(reads == Seq(model.toSet,
+        model.filter(e => probe.contains(e._1)).toSet,
+        model.filter(e => e._1 >= 10L && e._1 <= 40L).toSet), what)
+      n
+    }
+    jobs("before any ledger")
+    // an append, then a mergeMor (aliased ledger) or a deleteMorKeys
+    // (plain ledger) in turn: from 3 ledgers on the files fall into more
+    // than 3 groups, so the full read takes the one-scan form. The
+    // third upsert re-inserts a key the second ledger deleted.
+    val changes = Seq(
+      Left((10L until 20L).map(i => i -> "m1")),
+      Right(Seq(5L, 12L, 13L, 300L)),
+      Left(Seq(12L -> "back", 31L -> "m3")),
+      Right(Seq(31L, 399L, 1012L)))
+    for ((c, k) <- changes.zip(1 to 4)) {
+      val fresh = (0 until 5).map(i => (1000L + 10 * k + i) -> s"a$k")
+      TxTable.append(spark, root, fresh.toDF("k", "v"))
+      model = model ++ fresh
+      c match {
+        case Left(rows) =>
+          TxTable.mergeMor(spark, root, rows.toDF("k", "v"), "k")
+          model = model ++ rows
+        case Right(keys) =>
+          TxTable.deleteMorKeys(spark, root, keys.toDF("k"), Seq("k"))
+          model = model -- keys
+      }
+      assert(TxTable.snapshot(root).ledgers.size == k)
+      // three reads; the first loads the new ledger's keys
+      val first = jobs(s"first reads over $k ledgers")
+      assert(first >= 3 && first <= 4, s"$k ledgers: $first jobs")
+      assert(jobs(s"reads over $k loaded ledgers") == 3, s"$k ledgers")
+    }
+    // the in-scan filter is deterministic: the range still reaches
+    // parquet through the one-scan form
+    val plan = TxTable.readPrunedOn(spark, root, "k", 0L, 2000L)
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("GreaterThanOrEqual(k,0)") && !plan.contains("Join"),
+      plan)
+  }
+
+  test("MoR over evolved eras: rows tag their group by file through rename and widen") {
+    import spark.implicits._
+    val root = freshRoot()
+    TxTable.create((0L until 20L).map(i => (i, i.toInt, s"v$i"))
+      .toDF("k", "n", "v"), root, Some("k"))
+    TxTable.renameColumn(spark, root, "v", "s")
+    TxTable.widenColumn(spark, root, "n", "long")
+    var model = (0L until 20L).map(i => i -> ((i, s"v$i"))).toMap
+    // four ledgers, plain and aliased, each after an append: five
+    // groups, so the reads take the one-scan form across two eras
+    for (r <- 1 to 4) {
+      val fresh = (0 until 3).map(j => 100L * r + j)
+      TxTable.append(spark, root,
+        fresh.map(k => (k, k, s"a$r")).toDF("k", "n", "s"))
+      model = model ++ fresh.map(k => k -> ((k, s"a$r")))
+      if (r % 2 == 1) {
+        val keys = Seq(r.toLong, 100L * r)
+        TxTable.deleteMorKeys(spark, root, keys.toDF("k"), Seq("k"))
+        model = model -- keys
+      } else {
+        val up = Seq(r.toLong + 10, 100L * (r - 1) + 1)
+        TxTable.mergeMor(spark, root,
+          up.map(k => (k, k * 2, s"m$r")).toDF("k", "n", "s"), "k")
+        model = model ++ up.map(k => k -> ((k * 2, s"m$r")))
+      }
+    }
+    val want = model.map { case (k, (n, s)) => (k, n, s) }.toSet
+    for (bound <- Seq("104857600", "0"))
+      withConf("spark.graft.mor.broadcastMaxBytes" -> bound) {
+        assert(TxTable.read(spark, root).as[(Long, Long, String)]
+          .collect().toSet == want, s"bound $bound")
+        assert(TxTable.readPrunedOn(spark, root, "k", 0L, 150L)
+          .as[(Long, Long, String)].collect().toSet ==
+          want.filter(_._1 <= 150L), s"bound $bound")
+      }
+  }
+
   test("merge-on-read delete: zero rewrites, scoped ledgers, folding, correct feed") {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
@@ -1668,10 +1786,11 @@ class TxTableSpec extends AnyFunSuite {
     // volume is resolved from the log alone (drows stamped at publish)
     assert(TxTable.ledgerVolume(root) == 150L)
     val expected = rows(root)
-    // default threshold (100 MB): 150 stamped keys broadcast
+    // default threshold (100 MB): 150 stamped long keys resolve inside
+    // the scan — no join at all in the executed plan
     val bplan = TxTable.read(spark, root).queryExecution.executedPlan.toString
-    assert(bplan.contains("BroadcastHashJoin") && bplan.contains("LeftAnti"),
-      s"small delete set must broadcast:\n$bplan")
+    assert(!bplan.contains("Join"),
+      s"small long-key delete set must resolve in the scan:\n$bplan")
     // threshold 0 prices every non-empty delete set as too big: the
     // SAME read falls back to a shuffled sort-merge anti-join — the
     // plan a billion-key delete accumulation needs instead of an OOM

@@ -62,6 +62,16 @@ class WeatherJobSpec extends AnyFunSuite {
     }
   }
 
+  test("plan artifact: the analyzed streaming plan names the presence operator") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    val in = MemoryStream[AvroEnvelope.WeatherReading](spark)
+    val text = WeatherJob.planArtifact(WeatherJob.sinkProjection(
+      WeatherJob.plan(spark, in.toDS(), 3600000L)))
+    assert(text.contains("FlatMapGroupsWithState"), text)
+    assert(!text.contains("must be executed"), text)
+  }
+
   test("WeatherJob end-to-end: envelopes -> presence JSON (file source, memory sink)") {
     import spark.implicits._
     // build an envelope parquet dir: device A with a 2-hour gap (one
