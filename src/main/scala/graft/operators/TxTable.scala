@@ -2118,9 +2118,9 @@ object TxTable {
   /** Jittered exponential backoff between publish races — the
     * thundering-herd damper: N writers losing the same head otherwise
     * re-resolve and re-race in lockstep, burning their whole attempt
-    * budget on collisions (measured: 8 writers exhausted 12 attempts
-    * with zero backoff; ScaleCurve multi-writer). Base 25 ms doubling,
-    * capped at 1.6 s, ±50% uniform jitter to de-synchronize. */
+    * budget on collisions (8 writers exhausted 12 attempts with zero
+    * backoff). Base 25 ms doubling, capped at 1.6 s, ±50% uniform
+    * jitter to de-synchronize. */
   private def backoff(attempt: Int): Unit = {
     val base = math.min(25L << math.min(attempt, 6), 1600L)
     val jitter = java.util.concurrent.ThreadLocalRandom.current()
@@ -2940,9 +2940,9 @@ object TxTable {
     * head version instead of re-running the staging write job — under
     * N-writer contention a lost race costs a log re-read + one
     * hard-link attempt, never a data rewrite (same discipline as
-    * [[mergeMorKeys]]/[[deleteMorKeys]]). Measured in ScaleCurve
-    * multi-writer: with per-attempt re-staging, 8 writers exhausted
-    * their attempt budget; staged-once they serialize cleanly. */
+    * [[mergeMorKeys]]/[[deleteMorKeys]]). With per-attempt re-staging,
+    * 8 writers exhausted their attempt budget; staged-once they
+    * serialize cleanly. */
   def append(spark: SparkSession, root: String, batch: DataFrame,
              tag: Option[String] = None,
              maxAttempts: Int = 12): CommitResult = {

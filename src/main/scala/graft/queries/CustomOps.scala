@@ -119,8 +119,9 @@ object CustomOps {
     // repaired per epoch from the CHANGE FEED alone: touched ids die by
     // a MoR ledger (zero index rewrites), post-images assign against
     // the frozen centroids (broadcast literal — new vectors never
-    // shuffle toward the model) and append. Cost per epoch O(changed
-    // vectors), never the corpus. After each repair a DRIFT GATE
+    // shuffle toward the model) and append. Cost per epoch follows the
+    // corpus files the changes touch (the feed reads them whole), never
+    // the untouched files. After each repair a DRIFT GATE
     // (Q-llm-52's metric per cell: ||current cell mean − stored
     // centroid||, quantized space) decides retraining: when the
     // re-embedding epoch flips half the vectors, drift blows past the

@@ -304,8 +304,8 @@ object Extras {
     // shuffled join on a single reducer at 100 TB) pushed through the
     // salted join. SHUFFLE_HASH pins the cluster shape (a broadcast
     // would dissolve the skew at toy SF and prove nothing); the salt
-    // spreads key 1 across 16 reducers (per-task balance quantified by
-    // tools/SkewBalance, ledgered in BASELINE.md), and the oracle is
+    // spreads key 1 across 16 reducers (per-task balance pinned by
+    // SkewJoinSpec's salted case), and the oracle is
     // the PLAIN join — the hash-match proves salting changes nothing
     // but the distribution. AQE's runtime skew split over the same
     // planted key is proven separately in SkewJoinSpec.
@@ -470,7 +470,7 @@ object Extras {
     // distributed min-label components. Every 50th asset gets a planted
     // re-encode variant whose fingerprint drifts ≤ 2 deterministic bits
     // — the near-dup (not just exact-dup) path the oracle replays.
-    // Shuffle ∝ fingerprints + star edges, never pairs (ShuffleCheck).
+    // Shuffle ∝ fingerprints + star edges, never pairs.
     "Q-mm-13" -> { (s, d) =>
       val fp0 = aHash64(s, d)
         .select(col("doc_id"), col("ahash_lo").as("lo"),
@@ -503,7 +503,7 @@ object Extras {
     // against the global mean — the real perceptual hash), not the
     // text-byte proxy. Decode + hash run IN ONE PARTITION KERNEL (the
     // 100 TB shape: pixels never leave the executor; shuffle carries
-    // 16-byte fingerprints, ∝ assets — ShuffleCheck pins it).
+    // 16-byte fingerprints, ∝ assets).
     // Two planted re-encode variants exercise the hash's semantics
     // through the real codec:
     //  * every 50th asset re-encodes at +32 brightness — different
@@ -760,7 +760,8 @@ object Extras {
     // changed docs' old postings die by a doc_id delete ledger (one tiny
     // file, zero data rewrites — asserted: the index file set only ever
     // GROWS until compaction) and their re-tokenized post-images append.
-    // Per-epoch cost is O(changed docs), never the corpus — how a 100 TB
+    // Per-epoch cost follows the doc files the changes touch (the feed
+    // reads them whole), never the untouched files — how a 100 TB
     // corpus keeps its BM25/grep index fresh. Compaction folds the
     // ledgers; the folded index is asserted row-identical to a
     // from-scratch index of the final doc state, and the df/tf rollup
@@ -2810,8 +2811,8 @@ object Extras {
     *
     * fp is persisted (used by bands, both verify attaches, and the CC
     * seed — 4 consumers) and NOT unpersisted in-query: the cache must
-    * live until the returned DataFrame executes, and the Bench/Verify/
-    * ShuffleCheck harnesses sweep persistent RDDs between runs (round-11
+    * live until the returned DataFrame executes, and the Bench/Verify
+    * harnesses sweep persistent RDDs between runs (round-11
     * ADVICE: this reliance is by design — documented, not accidental).
     * Repeated ad-hoc builds in one session accumulate cache entries
     * until the sweep or LRU eviction reclaims them. */
@@ -2854,10 +2855,11 @@ object Extras {
   /** The block-and-verify half of the Hamming cluster algebra: band
     * explode → star edges → exact XOR+popcount verify (Hamming ≤ 3) via
     * two 1-row-per-key fingerprint attaches. `private[graft]` so
-    * ScaleCurve's `mm-dedup-hub` cell prices THIS code path (the verify
-    * attach keys on the bare hub id — deg(hub) rows on one join key at a
-    * viral re-encoded asset; the cell pins that AQE skew-split holds the
-    * stage flat at 64× cluster size). Expects fp(asset_id, lo, hi);
+    * ImageDedupSpec measures THIS code path (the verify attach keys on
+    * the bare hub id — deg(hub) rows on one join key at a viral
+    * re-encoded asset; the spec pins that AQE's skew split keeps every
+    * stage's busiest task under 30% of its shuffle reads at 8× cluster
+    * size). Expects fp(asset_id, lo, hi);
     * callers persist fp (it is consumed by bands and both attaches). */
   private[graft] def hammingEdges(fp: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {

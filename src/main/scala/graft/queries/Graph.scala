@@ -88,8 +88,7 @@ object Graph {
     *    ([[graft.operators.TriangleCount]]'s cap/chunk re-key).
     *
     * Scale m multiplies hubs/degrees/spokes (edges ≈ linear in m, the
-    * clique grows ∛m so its wedge output also grows ~m) — ScaleCurve's
-    * `triangles` rows pin the near-linear claim at m=1 vs 8. */
+    * clique grows ∛m so its wedge output also grows ~m). */
   def powerLawEdges(s: org.apache.spark.sql.SparkSession, m: Int)
       : org.apache.spark.sql.DataFrame =
     graft.tools.SkewFixtures.powerLawEdges(s, m) // shared skew generator

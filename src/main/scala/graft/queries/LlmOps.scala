@@ -73,8 +73,8 @@ object LlmOps {
     * output. Total row volume is symmetric to the a-first order
     * (Σ_edges |sh(b)| vs Σ_edges |sh(a)|); only the distribution
     * changes, so every consumer's result — and its oracle — is
-    * unchanged. Pinned by ScaleCurve `dedup-star` max-task balance at
-    * 64x cluster size. */
+    * unchanged. Pinned by LlmOpsSpec's star-edge verify case: no task
+    * writes a quarter of the heaviest stage as the cluster grows 8x. */
   private[graft] def jaccardOn(cand0: DataFrame, sh: DataFrame,
                                sigs: DataFrame): DataFrame = {
     // the candidate set is consumed twice (intersection build + the
@@ -1628,7 +1628,7 @@ object LlmOps {
     // exchange ∝ batch ([[probeSigIndex]]'s broadcast bucket
     // prefilter), admit cost = one append commit of |survivor
     // signatures| rows; the corpus contributes only the 2-column
-    // columnar index scan — ScaleCurve `dedup-index-batch` pins the
+    // columnar index scan — LlmOpsSpec's index-batch case pins the
     // flat-shuffle claim at corpus ×8.
     "Q-llm-67" -> { (s, d) =>
       import graft.operators.TxTable
@@ -1652,9 +1652,9 @@ object LlmOps {
       // in-query unpersist would let a recompute see the post-admit
       // index and change the answer. b1, by contrast, is fully consumed
       // inside this builder (probe + admit anti-join), so it IS dropped
-      // below; r1 is reclaimed by the harness cache sweep (Bench/Verify/
-      // ShuffleCheck) — the same documented reliance as hammingClusters'
-      // fingerprint cache.
+      // below; r1 is reclaimed by the harness cache sweep (Bench/Verify)
+      // — the same documented reliance as hammingClusters' fingerprint
+      // cache.
       val r1 = probeSigIndex(s.read.format("graft").load(root), b1)
         .persist()
       r1.count()  // materialize BEFORE the admit mutates the index

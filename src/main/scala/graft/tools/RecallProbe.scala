@@ -22,8 +22,6 @@ import graft.operators.IvfIndex
   *  - int8  — Q-llm-15 (symmetric int8 + exact re-rank) vs Q-llm-03
   *
   * Usage: runMain graft.tools.RecallProbe [sfDir ...] (default sf0.1).
-  * Also prints the legacy per-query IVF breakdown (Q-llm-08's per-query
-  * bound literal must sit under the worst per-query value across SFs).
   */
 object RecallProbe {
 
@@ -50,29 +48,6 @@ object RecallProbe {
       "int8" -> recall(topSet(SparkEntry.queries("Q-llm-15")(spark, d)), exactCos))
   }
 
-  /** Legacy per-query IVF breakdown (the Q-llm-08 bound literal). */
-  def ivfPerQuery(spark: SparkSession, d: String): Map[Long, Long] = {
-    graft.functions.CosineSim.register(spark)
-    val emb = Tables.embeddings(spark, d)
-    val qs = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val ivf = IvfIndex.search(emb, qs, "vec_id", "embedding",
-        "query_id", "q_emb", nlist = 16, nprobe = 8, k = 10)
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"))
-    val scored = emb.crossJoin(broadcast(qs))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        expr("cosine_sim(q_emb, embedding)").as("sim"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("sim").desc, col("vec_id"))
-    val exact = scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 10).select(col("query_id"), col("vec_id"))
-    exact.join(ivf, Seq("query_id", "vec_id"), "left_semi")
-      .groupBy("query_id").agg(count(lit(1)).as("n_hits"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-  }
-
   def main(args: Array[String]): Unit = {
     val spark = EngineSession.getOrCreate("graft-recall-probe")
     val dirs = if (args.nonEmpty) args.toSeq else Seq("/root/testdata/sf0.1")
@@ -81,9 +56,6 @@ object RecallProbe {
       val m = measure(spark, d)
       for ((path, r) <- m.toSeq.sortBy(_._1))
         println(f"""{"name":"recall","path":"$path","sf":"$d","recall_at_10":$r%.3f}""")
-      val hits = ivfPerQuery(spark, d)
-      val out = (0L to 4L).map(q => s"$q:${hits.getOrElse(q, 0L)}/10")
-      println(s"[recall] $d  ivf per-query ${out.mkString("  ")}")
     }
     spark.stop()
   }

@@ -32,8 +32,7 @@ object SkewFixtures {
     *    ([[graft.operators.TriangleCount]]'s cap/chunk re-key).
     *
     * Scale m multiplies hubs/degrees/spokes (edges ≈ linear in m, the
-    * clique grows ∛m so its wedge output also grows ~m) — ScaleCurve's
-    * `triangles` rows pin the near-linear claim at m=1 vs 8. */
+    * clique grows ∛m so its wedge output also grows ~m). */
   def powerLawEdges(s: SparkSession, m: Int): DataFrame = {
     val hubs = 400L * m; val dmax = 2000L * m
     val spokes = 20011L * m; val soff = 1000000L
@@ -75,9 +74,10 @@ object SkewFixtures {
         concat(col("text"), lit(" megadup variant "),
           col("i").cast("string")).as("text"))
 
-  /** Synthetic unique-text corpus for dedup curves: `n` documents of 24
-    * distinct words each (no cross-doc shingle collisions), ids 0..n-1.
-    * Union with [[megaDupVariants]] of row 0 for the planted cluster. */
+  /** Synthetic unique-text corpus for the dedup scale specs: `n`
+    * documents of 24 distinct words each (no cross-doc shingle
+    * collisions), ids 0..n-1. Union with [[megaDupVariants]] of row 0
+    * for the planted cluster. */
   def uniqueDocs(s: SparkSession, n: Long): DataFrame =
     s.range(n).select(col("id").as("doc_id"),
       expr("array_join(transform(sequence(0, 23), " +

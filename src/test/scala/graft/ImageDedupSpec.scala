@@ -116,4 +116,37 @@ class ImageDedupSpec extends AnyFunSuite {
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))
   }
+
+  test("Hamming verify: AQE's skew split keeps the viral hub's attach off one task as the cluster grows 8x") {
+    import org.apache.spark.sql.functions._
+    // a viral asset re-encoded 256m times: its star edges all carry the
+    // hub as `a`, so the first fingerprint attach holds deg(hub) rows on
+    // one key until AQE splits that partition. Thresholds scaled to the
+    // fixture; no stage may leave 30% of its shuffle reads to one task
+    def verify(m: Int) = JobCount.pinned(spark, aqe = true, confs = Seq(
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1024",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1024")) {
+      val base = spark.range(1L, 501L).select(col("id").as("asset_id"),
+        xxhash64(col("id")).as("lo"), xxhash64(col("id"), lit(7)).as("hi"))
+      val viral = spark.range(2000000L, 2000000L + 256L * m).select(col("id").as("asset_id"),
+        // every 5th re-encode drifts one bit: all stay within Hamming 3
+        expr("6148914691236517205L ^ IF(id % 5 = 0, " +
+          "shiftleft(1L, CAST(id % 32 AS INT)), 0L)").as("lo"),
+        lit(-7905747460161236407L).as("hi"))
+      val fp = base.unionByName(viral).persist()
+      fp.count()
+      try JobCount.counters(spark.sparkContext, s"hamming x$m") {
+        graft.queries.Extras.hammingEdges(fp).write.format("noop").mode("overwrite").save()
+      } finally fp.unpersist()
+    }
+    for (m <- Seq(1, 8)) {
+      val c = verify(m)
+      val share = c.worstShare(_.read)
+      info(f"cluster x$m: $c worstReadShare=$share%.3f")
+      assert(share < 0.3, s"cluster x$m: $share")
+    }
+  }
 }

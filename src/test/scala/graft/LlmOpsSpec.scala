@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -419,5 +419,74 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(naive >= 100L * 99L / 2, "fixture must share the rare shingle")
     assert(pref <= 100L,
       s"prefix candidates must stay sub-quadratic under a shared rare token: $pref")
+  }
+
+  private def shingleSet(docs: DataFrame): DataFrame = graft.functions.TextFunctions
+    .shingleRows(docs, "doc_id", "text", 3).distinct()
+
+  // (doc_id, band_id, key) MinHash bands over a distinct shingle set
+  private def bandsOf(sh: DataFrame): DataFrame = {
+    graft.functions.MinHashSig.register(spark)
+    sh.groupBy("doc_id").agg(expr("minhash_sig(sh, 6)").as("sig"))
+      .select(col("doc_id"), posexplode(col("sig")))
+      .select(col("doc_id"), col("pos").cast("long").as("band_id"), col("col").as("key"))
+  }
+
+  test("Q-llm-67 index batch: probe + admit shuffle stays flat as the index grows 8x") {
+    import graft.operators.TxTable
+    import graft.tools.SkewFixtures
+    // probeSigIndex's broadcast bucket prefilter keeps the corpus-sized
+    // index from shuffling: one batch's probe and admit write the same
+    // shuffle records at index x1 and x8. A fixed batch: 200 exact dups
+    // of index docs 0..199 and 200 fresh docs
+    val batch = spark.range(400L).select((lit(8000000L) + col("id")).as("doc_id"),
+      expr("array_join(transform(sequence(0, 23), j -> concat('w', " +
+        "CASE WHEN id < 200 THEN id ELSE 8000000 + id END, 'x', j)), ' ')").as("text"))
+    def epoch(m: Int) = JobCount.pinned(spark, aqe = false) {
+      val root = java.nio.file.Files.createTempDirectory("graft_idxbatch").toString + "/idx"
+      TxTable.create(bandsOf(shingleSet(SkewFixtures.uniqueDocs(spark, 2000L * m))), root,
+        statsKey = Some("band_id"))
+      JobCount.counters(spark.sparkContext, s"index batch x$m") {
+        val pb = bandsOf(shingleSet(batch)).persist()
+        val matched = graft.queries.LlmOps
+          .probeSigIndex(spark.read.format("graft").load(root), pb).persist()
+        assert(matched.count() == 200L)
+        TxTable.append(spark, root, pb.join(matched.select(col("new_doc").as("doc_id")),
+          Seq("doc_id"), "left_anti").repartition(2))
+        pb.unpersist(); matched.unpersist()
+      }
+    }
+    val (c1, c8) = (epoch(1), epoch(8))
+    info(s"index x1: $c1; x8: $c8")
+    assert(c8.shuffleWritten == c1.shuffleWritten, s"x1: $c1; x8: $c8")
+  }
+
+  test("star-edge Jaccard verify: no task writes most of its heaviest stage as the cluster grows 8x") {
+    import graft.tools.SkewFixtures
+    // every star edge of the planted cluster carries the hub as `a`:
+    // jaccardOn's b-first, then (a, sh) join order spreads the hub's
+    // intersect rows over its shingle keys, where an a-keyed first hop
+    // leaves one task writing deg(hub) x |sh(hub)| rows. AQE off: the
+    // plan alone must spread them
+    for (m <- Seq(1, 8)) {
+      val c = JobCount.pinned(spark, aqe = false,
+          confs = Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1")) {
+        val base = SkewFixtures.uniqueDocs(spark, 200L)
+        val corpus = base.unionByName(SkewFixtures.megaDupVariants(
+          base.filter(col("doc_id") === 0), k = 256L * m))
+        val sh = shingleSet(corpus).persist()
+        val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh")).persist()
+        val star = graft.operators.BucketJoin
+          .starEdges(bandsOf(sh), Seq("band_id", "key"), "doc_id").persist()
+        star.count(); sizes.count()
+        try JobCount.counters(spark.sparkContext, s"jaccard x$m") {
+          graft.queries.LlmOps.jaccardOn(star, sh, sizes)
+            .write.format("noop").mode("overwrite").save()
+        } finally { sh.unpersist(); sizes.unpersist(); star.unpersist() }
+      }
+      val share = c.heaviestShare(_.written)
+      info(f"cluster x$m: $c heaviestWriteShare=$share%.3f")
+      assert(share < 0.25, s"cluster x$m: $share")
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -45,6 +45,19 @@ class SkewJoinSpec extends AnyFunSuite {
     // the hot key is really planted: key 0 carries ~30% of the fact
     val hot = plain.find(_._1 == 0L).get._2
     assert(hot > 100000L, s"hot key carries $hot rows — fixture broken")
+    // per-task balance of the join stage: the unsalted join strands the
+    // hot key on one reducer, the salted one spreads it. AQE off, so
+    // coalescing cannot fold idle reducers and hide the imbalance
+    JobCount.pinned(spark, aqe = false, partitions = 32,
+        Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1")) {
+      def balance(j: DataFrame) = JobCount.counters(spark.sparkContext,
+        "join balance")(j.write.format("noop").mode("overwrite").save())
+      val unsalted = balance(fact.join(dim, Seq("k"), "inner"))
+      val salted = balance(SaltedJoin.inner(fact, dim, "k", col("v"), buckets = 16))
+      val (u, s) = (unsalted.readSkew, salted.readSkew)
+      info(f"max/mean shuffle-read records per task: unsalted $u%.2f, salted $s%.2f")
+      assert(u > 8.0 && s < 4.0, s"unsalted $u, salted $s")
+    }
   }
 
   test("AQE skew-join splits the hot partition (skew=true in final plan)") {

@@ -18,7 +18,7 @@ import graft.core.{EngineSession, Tables}
   *     one TTL before the global max event time — asserted here per SF.
   *
   *  2. VARIANT-ID OFFSET (Q-mm-13): the planted-drift variants use
-  *     doc_id + 7,000,000 (and the ScaleCurve batch fixture 8,000,000),
+  *     doc_id + 7,000,000 (and LlmOpsSpec's index-batch fixture 8,000,000),
   *     assuming the doc_id domain stays far below 7M. Oracle parity
   *     would survive a collision (both sides mirror the arithmetic) but
   *     cluster semantics would quietly degrade — asserted here per SF.

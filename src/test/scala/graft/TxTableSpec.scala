@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.EngineSession
@@ -645,6 +645,33 @@ class TxTableSpec extends AnyFunSuite {
       plan)
   }
 
+  test("change-feed index repair: one epoch's records follow the files it touches, not the corpus") {
+    // one repair epoch (feed -> index delete ledger -> post-image append)
+    // for the same 50-key upsert while the corpus grows x10 in 500-row
+    // files: the feed reads whole touched files, so when the corpus grows
+    // by file size instead, the epoch grows with it
+    def epoch(m: Int) = JobCount.pinned(spark, aqe = false) {
+      val base = freshRoot(); val (docs, idx) = (s"$base/docs", s"$base/idx")
+      TxTable.create(spark.range(0L, 2000L * m, 1L, 4 * m)
+        .select(col("id").as("k"), (col("id") % 97).as("v")), docs, Some("k"))
+      TxTable.create(TxTable.read(spark, docs).select(col("k"), (col("v") % 8).as("cell")),
+        idx, Some("cell"))
+      val v0 = TxTable.snapshot(docs).version
+      TxTable.mergeMor(spark, docs,
+        spark.range(50L).select(col("id").as("k"), lit(-1L).as("v")), "k")
+      JobCount.counters(spark.sparkContext, s"repair x$m") {
+        val feed = TxTable.changeFeed(spark, docs, v0, v0 + 1, Seq("k")).localCheckpoint()
+        TxTable.deleteMor(spark, idx, feed.select("k"), "k")
+        TxTable.append(spark, idx, feed.filter(col("change") =!= "delete")
+          .select(col("k"), (col("post.v") % 8).as("cell")))
+      }
+    }
+    val (c1, c10) = (epoch(1), epoch(10))
+    info(s"corpus x1: $c1; x10: $c10")
+    assert(c10.inputRecords == c1.inputRecords && c10.shuffleWritten == c1.shuffleWritten,
+      s"x1: $c1; x10: $c10")
+  }
+
   test("MoR over evolved eras: rows tag their group by file through rename and widen") {
     import spark.implicits._
     val root = freshRoot()
@@ -999,7 +1026,11 @@ class TxTableSpec extends AnyFunSuite {
     val filesBefore = dataFiles()
     val ts2 = TxTable.commitTs(root, 2L).get
     val ts11 = TxTable.commitTs(root, 11L).get
-    val (dropped, archived) = TxTable.expireHistory(root, beforeVersion = 12L)
+    var expired = (0L, 0L)
+    assert(JobCount(spark.sparkContext, "expireHistory") {
+      expired = TxTable.expireHistory(root, beforeVersion = 12L)
+    } == 0, "retention must touch metadata only")
+    val (dropped, archived) = expired
     assert(archived == 10L, s"commits 0..9 should archive, archived $archived")
     assert(dropped > 0L && dataFiles() == filesBefore - dropped)
     // retained range (>= cutoff 10) fully intact
@@ -1478,7 +1509,11 @@ class TxTableSpec extends AnyFunSuite {
     assert(TxTable.snapshot(root).shingleN == 3)
     // a phrase present in batch 1 keeps only its file
     val phrase = "w1t4 w1t5 w1t6" // doc(1, 4)'s first three tokens
-    val (k1, n1) = TxTable.shinglePruneAccounting(root, "text", phrase)
+    var probed = (0, 0)
+    assert(JobCount(spark.sparkContext, "phrase probe") {
+      probed = TxTable.shinglePruneAccounting(root, "text", phrase)
+    } == 0, "a phrase probe must read the log alone")
+    val (k1, n1) = probed
     assert(n1 == 3 && k1 == 1, s"phrase probe kept $k1 of $n1")
     val got = TxTable.shingleRead(spark, root, "text", phrase)
       .as[(Long, String)].collect()
@@ -2019,6 +2054,21 @@ class TxTableSpec extends AnyFunSuite {
       TxTable.adoptFrom(spark, main, branch3))
     assert(ex.getMessage.toLowerCase.contains("check"))
     assert(rows(main).size == 150, "failed audit must leave main untouched")
+    // publish is flat in rows: with no CHECK to audit, adopting 4 staged
+    // files submits the same jobs and reads the same input records
+    // whether they hold 100 k or 800 k rows
+    val adopt = Seq(1, 8).map(m => JobCount.pinned(spark, aqe = false, partitions = 4) {
+      val (mn, br) = (s"$tmp/main$m", s"$tmp/branch$m")
+      TxTable.create(spark.range(1000L).select(col("id").as("k"), lit("base").as("v")),
+        mn, statsKey = Some("k"))
+      TxTable.cloneShallow(mn, br)
+      TxTable.append(spark, br, spark.range(1000L, 1000L + 100000L * m)
+        .select(col("id").as("k"), lit("staged").as("v")))
+      JobCount.counters(spark.sparkContext, s"adopt x$m")(TxTable.adoptFrom(spark, mn, br))
+    })
+    info(s"adopt x1: ${adopt(0)}; x8: ${adopt(1)}")
+    assert(adopt(0).jobs == adopt(1).jobs && adopt(0).inputRecords == adopt(1).inputRecords,
+      s"x1: ${adopt(0)}; x8: ${adopt(1)}")
   }
 
   test("adopt widens the union schema: a branch-added column surfaces as NULL on old rows") {
