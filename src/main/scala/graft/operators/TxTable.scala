@@ -192,6 +192,13 @@ object TxTable {
       shingleN: Int = 0,
       fileShBlooms: Map[String, Seq[String]] = Map.empty) {
 
+    /** A schema evolution postdates some live file: reads reconcile
+      * eras per file, so the file set cannot be taken by reference
+      * (clone, adopt) nor scanned as one plain parquet relation. */
+    private[graft] def pendingEvo: Boolean = evos.exists { case (v, _) =>
+      files.exists(f => fileAddV.getOrElse(f, Long.MaxValue) < v)
+    }
+
     /** Logged [min,max] of stats column `col` in file `f` — long-
       * normalized, prefix64 codes for a STRING column (None = nothing
       * recorded: never prune). The empty range (MaxValue, MinValue) is a
@@ -1107,20 +1114,12 @@ object TxTable {
     // O(table) footer I/O per commit. Removals (compaction, expiry) can
     // shrink the union, so any remove forces the full inference.
     val ver = (snap.evos, snap.files)
-    // name match mirrors Spark's resolution (same rule as the seed and
-    // merge-validation paths): case-insensitive unless
-    // spark.sql.caseSensitive — otherwise a same-typed column differing
-    // only in case would be silently dropped from the folded union
-    val cs = spark.conf.getOption("spark.sql.caseSensitive")
-      .exists(_.toBoolean)
-    def sameName(a: String, b: String): Boolean =
-      if (cs) a == b else a.equalsIgnoreCase(b)
-    def infer(files: Seq[String]): org.apache.spark.sql.types.StructType =
-      prof("schema.infer")(
-        footerSchema(spark, root, files, sameName).getOrElse(
-          readFiles(spark, root, files, None).schema))
+    // Spark's name rule — otherwise a same-typed column differing only
+    // in case would be silently dropped from the folded union
+    val same = sameName(spark)
     def full: org.apache.spark.sql.types.StructType =
-      if (snap.evos.isEmpty && snap.files.nonEmpty) infer(snap.files)
+      if (snap.evos.isEmpty && snap.files.nonEmpty)
+        inferSchema(spark, root, snap.files)
       else emptyRead(spark, root, snap).schema
     schemaCache.compute(root, (_, old) => {
       val entries =
@@ -1140,17 +1139,17 @@ object TxTable {
                   val delta = snap.files.diff(files0)
                   if (delta.isEmpty) Some(s0)
                   else {
-                    val ds = infer(delta)
+                    val ds = inferSchema(spark, root, delta)
                     // fold the delta into the cached union by name; a
                     // same-name type clash can't happen on the
                     // validated write paths, but if one ever surfaces
                     // (hand-placed files), fall back to full inference
                     if (ds.forall(f => s0.find(t =>
-                        sameName(t.name, f.name))
+                        same(t.name, f.name))
                         .forall(_.dataType == f.dataType)))
                       Some(org.apache.spark.sql.types.StructType(
                         s0.fields ++ ds.fields.filterNot(f =>
-                          s0.exists(t => sameName(t.name, f.name)))))
+                          s0.exists(t => same(t.name, f.name)))))
                     else None
                   }
               }.flatten
@@ -1160,22 +1159,6 @@ object TxTable {
     }).head._2
   }
 
-  /** Driver-side union schema of `files` from their parquet FOOTERS —
-    * the same information `spark.read.option("mergeSchema", true)`'s
-    * distributed inference reads, without the per-call DataSource
-    * resolution + FileIndex + inference-job setup (measured ~90 ms per
-    * call vs ~2 ms here; the r12 lifecycle profile charged 21 s of a
-    * 74 s 11-query block to `schema.infer`). Semantics preserved
-    * exactly: per-file schemas convert through Spark's own
-    * ParquetToSparkSchemaConverter built from the session's SQLConf (so
-    * every inference flag matches the read path), fold by name in log
-    * file order (same-name fields must agree on type exactly — a clash
-    * falls back to the distributed path, mirroring the delta-fold rule
-    * above — and new fields append, which is also what StructType.merge
-    * does for the width-differing commits the no-evolution path can
-    * legally hold), and the result is made fully nullable, matching the
-    * file-source read-back contract. Any surprise (unreadable footer,
-    * unconvertible type) returns None → caller falls back. */
   /** `dt` with every nesting level nullable — the shape a file-source
     * read-back reports regardless of how the data was written. */
   private def asNullable(dt: org.apache.spark.sql.types.DataType)
@@ -1195,10 +1178,42 @@ object TxTable {
       : org.apache.spark.sql.types.StructType =
     asNullable(s).asInstanceOf[org.apache.spark.sql.types.StructType]
 
+  /** Spark's column-name resolution rule: case-insensitive unless
+    * `spark.sql.caseSensitive`. Every by-name schema match here (union
+    * folds, type guards, cache seeds) uses it, so a column differing
+    * only in case binds the way a read will bind it. */
+  private def sameName(spark: SparkSession): (String, String) => Boolean =
+    if (spark.conf.getOption("spark.sql.caseSensitive").exists(_.toBoolean))
+      _ == _
+    else _.equalsIgnoreCase(_)
+
+  /** Union schema of `files`: from their footers on the driver
+    * ([[footerSchema]]), falling back to Spark's distributed
+    * mergeSchema inference. */
+  private def inferSchema(spark: SparkSession, root: String,
+                          files: Seq[String]): org.apache.spark.sql.types.StructType =
+    prof("schema.infer")(
+      footerSchema(spark, root, files).getOrElse(
+        readFiles(spark, root, files, None).schema))
+
+  /** Driver-side union schema of `files` from their parquet FOOTERS —
+    * the same information `spark.read.option("mergeSchema", true)`'s
+    * distributed inference reads, without the per-call DataSource
+    * resolution + FileIndex + inference-job setup (measured ~90 ms per
+    * call vs ~2 ms here; the r12 lifecycle profile charged 21 s of a
+    * 74 s 11-query block to `schema.infer`). Semantics preserved
+    * exactly: per-file schemas convert through Spark's own
+    * ParquetToSparkSchemaConverter built from the session's SQLConf (so
+    * every inference flag matches the read path), fold by name in log
+    * file order (same-name fields must agree on type exactly — a clash
+    * falls back to the distributed path, mirroring the delta-fold rule
+    * above — and new fields append, which is also what StructType.merge
+    * does for the width-differing commits the no-evolution path can
+    * legally hold), and the result is made fully nullable, matching the
+    * file-source read-back contract. Any surprise (unreadable footer,
+    * unconvertible type) returns None → caller falls back. */
   private def footerSchema(spark: SparkSession, root: String,
-      files: Seq[String],
-      sameName: (String, String) => Boolean)
-      : Option[org.apache.spark.sql.types.StructType] = {
+      files: Seq[String]): Option[org.apache.spark.sql.types.StructType] = {
     import org.apache.spark.sql.types._
     if (files.isEmpty) return None
     // DRIVER-I/O CAP (r12 verdict item 9): this path reads one footer per
@@ -1230,12 +1245,13 @@ object TxTable {
           import scala.collection.parallel.CollectionConverters._
           files.par.map(one).seq
         }
+      val same = sameName(spark)
       val acc = scala.collection.mutable.ArrayBuffer
         .empty[org.apache.spark.sql.types.StructField]
       acc ++= schemas.head.fields
       schemas.iterator.drop(1).foreach { s =>
         s.fields.foreach { f =>
-          acc.find(t => sameName(t.name, f.name)) match {
+          acc.find(t => same(t.name, f.name)) match {
             case Some(t) =>
               if (t.dataType != f.dataType) return None // clash: fall back
             case None => acc += f
@@ -1267,6 +1283,22 @@ object TxTable {
         else old
       ((ver, schema) :: entries.filterNot(_._1 == ver)).take(4)
     })
+
+  /** Seed [[schemaCache]] after an ADDS-ONLY commit of `adds` on `snap`:
+    * the post-commit union is `tbl` plus `batch`'s new columns, nullable,
+    * so the next cached read or validation of the table pays zero
+    * inference. The caller guards soundness: `tbl` must be the union at
+    * `snap` (a removal can shrink a union, a rebase can race in columns
+    * `tbl` never saw). */
+  private def seedAppended(spark: SparkSession, root: String, snap: Snapshot,
+      adds: Seq[String], tbl: org.apache.spark.sql.types.StructType,
+      batch: org.apache.spark.sql.types.StructType): Unit = {
+    val same = sameName(spark)
+    seedSchema(root, (snap.evos, snap.files ++ adds),
+      org.apache.spark.sql.types.StructType(tbl.fields ++ batch.fields
+        .filterNot(f => tbl.exists(t => same(t.name, f.name)))
+        .map(_.copy(nullable = true))))
+  }
 
   /** Range read with METADATA-ONLY file pruning: the commit log's
     * per-file [min, max] stats decide which files can hold rows in
@@ -1552,9 +1584,9 @@ object TxTable {
     * version, removes = files live now. Metadata-only — no data is
     * rewritten or deleted; the bad epochs stay in history (time travel to
     * them keeps working) and their files remain referenced by their own
-    * commits, so vacuum won't reclaim them. Stats and blooms for the
-    * restored files re-enter the live state from the log fold of their
-    * original adds. */
+    * commits, so vacuum won't reclaim them. Stats, blooms and row counts
+    * for the restored files carry over from the target snapshot
+    * ([[carried]]). */
   def restore(spark: SparkSession, root: String, toVersion: Long,
               tag: Option[String] = None): CommitResult = {
     val target = snapshot(root, toVersion)
@@ -1569,56 +1601,11 @@ object TxTable {
     if (target.ledgers.nonEmpty)
       return transact(spark, root, "restore", tag)(_ =>
         morRead(spark, root, target, target.files))
-    var attempt = 0
-    val maxAttempts = 12
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val now = snapshot(root)
-      if (tag.exists(now.tags))
-        return CommitResult(now.version, attempt, skipped = true)
-      val c = Commit(now.version + 1, "restore",
-        adds = target.files,
-        removes = now.files.diff(target.files) ++ now.ledgers.map(_.path), tag,
-        statsKey = None,
-        addStats = target.files.flatMap(f => target.fileStats.get(f)) match {
-          case st if st.size == target.files.size => st
-          case _ => Seq.empty // partial stats: drop rather than misalign
-        },
-        addBlooms = target.files.map(f =>
-          target.fileBlooms.getOrElse(f, "")) match {
-          case bl if bl.exists(_.nonEmpty) => bl
-          case _ => Seq.empty
-        },
-        // secondary stats re-enter only while complete for every file
-        // (same drop-rather-than-misalign policy as primary)
-        addStatsN =
-          if (target.statsCols.nonEmpty && target.files.forall(f =>
-              target.fileStatsN.get(f).exists(_.length == target.statsCols.length)))
-            target.statsCols.indices.map(j =>
-              target.files.map(f => target.fileStatsN(f)(j)))
-          else Seq.empty,
-        addBloomsN =
-          if (target.statsCols.nonEmpty && target.files.forall(f =>
-              target.fileBloomsN.get(f).exists(_.length == target.statsCols.length)))
-            target.statsCols.indices.map(j =>
-              target.files.map(f => target.fileBloomsN(f)(j)))
-          else Seq.empty,
-        addShBlooms =
-          if (target.shingleCols.nonEmpty && target.files.forall(f =>
-              target.fileShBlooms.get(f).exists(_.length == target.shingleCols.length)))
-            target.shingleCols.indices.map(j =>
-              target.files.map(f => target.fileShBlooms(f)(j)))
-          else Seq.empty)
-      if (tryPublish(root, c)) {
-        maybeCheckpoint(root, c.version)
-        return CommitResult(c.version, attempt, skipped = false)
-      }
-      // no backoff after the FINAL failed attempt — the exception should
-      // surface immediately, not after one more jittered sleep
-      if (attempt < maxAttempts) backoff(attempt)
+    val restored = carried(target, target.files)
+    commitLoop(root, tag, s"restore of $root") { now =>
+      Some(restored.commit(now.version + 1, "restore",
+        now.files.diff(target.files) ++ now.ledgers.map(_.path), tag))
     }
-    throw new IllegalStateException(
-      s"restore of $root failed after $maxAttempts attempts (contention)")
   }
 
   /** (files kept by range stats alone, files kept by range+bloom, total
@@ -1794,21 +1781,6 @@ object TxTable {
     finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
-  /** @param sizeStaged right-size a SHATTERED small staging: when the
-    *   written batch lands as many near-empty files (its plan inherited
-    *   upstream partitioning — e.g. a streaming state-store output
-    *   arrives as shuffle.partitions near-empty partitions, and the
-    *   stateful subtree disables AQE so neither the advisory nor a
-    *   REBALANCE hint can size the write), one driver-visible check of
-    *   the actual staged bytes triggers a tiny read-back+coalesce(1)
-    *   rewrite. Bounded by `spark.graft.stage.compactBytes` (default
-    *   16 MiB) so a real backfill epoch never pays it — this is the
-    *   AQE-independent form of write-side file sizing for the paths
-    *   with no layout contract (MoR adds, CoW verbatim batches); layout-
-    *   bearing stagings (optimize/compact/explicit coalesce) keep it
-    *   off. Without it a 20-file epoch SNOWBALLS: every later CoW
-    *   epoch's touched-file count (and its coalesce target) inherits
-    *   the shatter, and every read pays ~20 opens per epoch forever. */
   /** The per-column stats/bloom aggregate list shared by the two stats
     * paths below: (min, max, bloom) per stats column plus one row count.
     * String columns bound via the order-preserving prefix64 and bloom on
@@ -1833,12 +1805,93 @@ object TxTable {
     } :+ count(lit(1)).as("cnt")
   }
 
+  /** Data files staged (or carried by reference) for one commit, with
+    * the per-file metadata the commit records for them: primary and
+    * secondary stats and blooms, row counts (empty = [[tryPublish]]
+    * reads them from the footers) and shingle blooms. */
+  private final case class Staged(
+      files: Seq[String],
+      stats: Seq[(Long, Long)] = Seq.empty,
+      blooms: Seq[String] = Seq.empty,
+      statsN: Seq[Seq[(Long, Long)]] = Seq.empty,
+      bloomsN: Seq[Seq[String]] = Seq.empty,
+      rows: Seq[Long] = Seq.empty,
+      shBlooms: Seq[Seq[String]] = Seq.empty) {
+    /** The commit that adds these files with their metadata. */
+    def commit(version: Long, op: String, removes: Seq[String],
+               tag: Option[String]): Commit =
+      Commit(version, op, files, removes, tag, addStats = stats,
+        addBlooms = blooms, addStatsN = statsN, addBloomsN = bloomsN,
+        addRows = rows, addShBlooms = shBlooms)
+  }
+
+  /** `files` carried BY REFERENCE from `s` (restore, clone, adopt), with
+    * the metadata `s`'s log holds for them. A MISSING stats entry means
+    * UNKNOWN range, not empty file: it carries as the full range, which
+    * keeps the file in every pruned read (the (MaxValue, MinValue)
+    * empty-file sentinel would make its rows vanish from them). A
+    * missing bloom carries as "" (none: keep), a missing row count as -1
+    * (unknown). */
+  private def carried(s: Snapshot, files: Seq[String]): Staged = {
+    val full = (Long.MinValue, Long.MaxValue)
+    def perCol[T](n: Int, m: Map[String, Seq[T]], none: T) =
+      (0 until n).map(j => files.map(f => m.get(f).flatMap(_.lift(j)).getOrElse(none)))
+    Staged(files,
+      stats = if (s.statsKey.isEmpty) Seq.empty
+        else files.map(s.fileStats.getOrElse(_, full)),
+      blooms = if (s.statsKey.isEmpty) Seq.empty
+        else files.map(s.fileBlooms.getOrElse(_, "")),
+      statsN = perCol(s.statsCols.size, s.fileStatsN, full),
+      bloomsN = perCol(s.statsCols.size, s.fileBloomsN, ""),
+      rows = files.map(s.fileRows.getOrElse(_, -1L)),
+      shBlooms = perCol(s.shingleCols.size, s.fileShBlooms, ""))
+  }
+
+  /** Hard-link `f` from `srcRoot` into `dstRoot` under the same relative
+    * path, unless it is already there; across filesystems, copy it —
+    * still correct, data files being immutable. */
+  private def linkInto(srcRoot: String, dstRoot: String, f: String): Unit = {
+    val src = Paths.get(srcRoot, f).toAbsolutePath
+    val dst = Paths.get(dstRoot, f)
+    Files.createDirectories(dst.getParent)
+    if (!Files.exists(dst))
+      try Files.createLink(dst, src)
+      catch {
+        case _: UnsupportedOperationException |
+             _: java.nio.file.FileSystemException => Files.copy(src, dst)
+      }
+  }
+
+  /** Stage `df` under `snap`'s stats and shingle declarations. */
+  private def stageOn(df: DataFrame, root: String, snap: Snapshot,
+                      sizeStaged: Boolean = false): Staged = {
+    val st = stageData(df, root, snap.statsKey, snap.statsCols, sizeStaged)
+    st.copy(shBlooms =
+      stageShingles(df, root, st.files, snap.shingleCols, snap.shingleN))
+  }
+
+  /** Write `df` as new data files under `root` and gather the metadata
+    * its commit records for them, shingle blooms aside (see
+    * [[Staged]], [[stageShingles]]).
+    * @param sizeStaged right-size a SHATTERED small staging: when the
+    *   written batch lands as many near-empty files (its plan inherited
+    *   upstream partitioning — e.g. a streaming state-store output
+    *   arrives as shuffle.partitions near-empty partitions, and the
+    *   stateful subtree disables AQE so neither the advisory nor a
+    *   REBALANCE hint can size the write), one driver-visible check of
+    *   the actual staged bytes triggers a tiny read-back+coalesce(1)
+    *   rewrite. Bounded by `spark.graft.stage.compactBytes` (default
+    *   16 MiB) so a real backfill epoch never pays it — this is the
+    *   AQE-independent form of write-side file sizing for the paths
+    *   with no layout contract (MoR adds, CoW verbatim batches); layout-
+    *   bearing stagings (optimize/compact/explicit coalesce) keep it
+    *   off. Without it a 20-file epoch SNOWBALLS: every later CoW
+    *   epoch's touched-file count (and its coalesce target) inherits
+    *   the shatter, and every read pays ~20 opens per epoch forever. */
   private def stageData(df: DataFrame, root: String,
                         statsKey: Option[String],
                         statsCols: Seq[String] = Seq.empty,
-                        sizeStaged: Boolean = false)
-      : (Seq[String], Seq[(Long, Long)], Seq[String],
-         Seq[Seq[(Long, Long)]], Seq[Seq[String]], Seq[Long]) = {
+                        sizeStaged: Boolean = false): Staged = {
     val unique0 = java.util.UUID.randomUUID().toString.take(8)
     val dir0 = dataDir(root).resolve(unique0)
     val allColsPre = statsKey.toSeq ++ statsCols
@@ -1939,8 +1992,7 @@ object TxTable {
         scala.util.Try(Await.result(Future(o.get),
           scala.concurrent.duration.Duration(10, "s"))).toOption
       }
-    if (allCols.isEmpty)
-      (files, Seq.empty, Seq.empty, Seq.empty, Seq.empty, Seq.empty)
+    if (allCols.isEmpty) Staged(files)
     else if (observed.isDefined) prof("stage.observed") {
       val m = observed.get
       val cnt = m("cnt").asInstanceOf[Number].longValue
@@ -1963,7 +2015,7 @@ object TxTable {
       }
       val statsSecondary = statsCols.indices.map(j => Seq(colStats(nOff + j)._1))
       val bloomsSecondary = statsCols.indices.map(j => Seq(colStats(nOff + j)._2))
-      (files, stats, blooms, statsSecondary, bloomsSecondary, Seq(cnt))
+      Staged(files, stats, blooms, statsSecondary, bloomsSecondary, Seq(cnt))
     }
     else {
       import org.apache.spark.sql.functions.input_file_name
@@ -2012,7 +2064,7 @@ object TxTable {
       val rows = files.map(f =>
         byName.get(Paths.get(f).getFileName.toString).map(_._2)
           .getOrElse(0L))
-      (files, stats, blooms, statsSecondary, bloomsSecondary, rows)
+      Staged(files, stats, blooms, statsSecondary, bloomsSecondary, rows)
     }
   }
 
@@ -2110,11 +2162,6 @@ object TxTable {
     }
   }
 
-  /** Atomic publish of version `v`: hard-link the rendered body into the
-    * log slot — exactly one writer wins; everyone else gets
-    * FileAlreadyExistsException and must rebase. Every commit that adds
-    * data files gets their footer row counts stamped into the log here —
-    * one chokepoint covers create/append/merge/compact/optimize alike. */
   /** Jittered exponential backoff between publish races — the
     * thundering-herd damper: N writers losing the same head otherwise
     * re-resolve and re-race in lockstep, burning their whole attempt
@@ -2128,6 +2175,11 @@ object TxTable {
     Thread.sleep(jitter)
   }
 
+  /** Atomic publish of version `v`: hard-link the rendered body into the
+    * log slot — exactly one writer wins; everyone else gets
+    * FileAlreadyExistsException and must rebase. Every commit that adds
+    * data files gets their footer row counts stamped into the log here —
+    * one chokepoint covers create/append/merge/compact/optimize alike. */
   private def tryPublish(root: String, c: Commit): Boolean = prof("publish") {
     Files.createDirectories(logDir(root))
     val withRows0 =
@@ -2170,6 +2222,45 @@ object TxTable {
     } finally Files.deleteIfExists(tmp)
   }
 
+  /** Attempts one commit gets before [[commitLoop]] reports contention. */
+  private val commitAttempts = 12
+
+  /** The optimistic-commit protocol every writer shares. Each attempt
+    * resolves a fresh snapshot; a `tag` already in its log is a replayed
+    * epoch and returns as skipped (exactly-once without a transactional
+    * sink). Otherwise `body` turns the snapshot into a commit at
+    * `snap.version + 1`, or into None when there is nothing to do
+    * (skipped at the snapshot's version). A won publish runs
+    * `afterPublish` with the pre-commit snapshot, then the checkpoint. A
+    * lost publish REBASES: back off, re-resolve, re-run `body`; what the
+    * lost attempt staged stays orphaned (referenced by no commit,
+    * invisible to readers) until [[vacuumOrphans]]. No backoff after the
+    * final attempt — the contention error, naming `what`, surfaces at
+    * once. */
+  private def commitLoop(root: String, tag: Option[String], what: String,
+                         afterPublish: (Snapshot, Commit) => Unit = (_, _) => ())
+                        (body: Snapshot => Option[Commit]): CommitResult = {
+    var attempt = 0
+    while (attempt < commitAttempts) {
+      attempt += 1
+      val snap = snapshot(root)
+      require(snap.version >= 0, s"not a TxTable: $root")
+      if (tag.exists(snap.tags))
+        return CommitResult(snap.version, attempt, skipped = true)
+      body(snap) match {
+        case None => return CommitResult(snap.version, attempt, skipped = true)
+        case Some(c) if tryPublish(root, c) =>
+          afterPublish(snap, c)
+          maybeCheckpoint(root, c.version)
+          return CommitResult(c.version, attempt, skipped = false)
+        case Some(_) =>
+          if (attempt < commitAttempts) backoff(attempt)
+      }
+    }
+    throw new IllegalStateException(
+      s"$what failed after $commitAttempts attempts (contention)")
+  }
+
   /** Refuse a batch that violates the table's declared CHECK constraint.
     * Validation runs over the INCOMING data only — one extra codegen pass
     * on the batch, never the table (rows carried by reference were
@@ -2183,34 +2274,24 @@ object TxTable {
         s"CHECK constraint ($c) violated by $bad row(s) in $where — commit refused")
     }
 
-  /** Create a new table at `root` from `df` (version 0). */
-  def create(df: DataFrame, root: String): CommitResult = {
-    create(df, root, None)
-  }
-
-  /** Create with a declared stats column (must be integral): every commit
-    * then records per-file [min, max] of `statsKey` for its adds, making
-    * [[readPruned]] and [[mergeCow]]'s file selection metadata-only. */
-  def create(df: DataFrame, root: String,
-             statsKey: Option[String]): CommitResult =
-    create(df, root, statsKey, check = None)
-
-  /** Create with a declared CHECK constraint (a boolean SQL predicate):
-    * this and every later append/merge batch must satisfy it or the
-    * commit is refused — the data-quality gate at the table boundary. */
-  def create(df: DataFrame, root: String, statsKey: Option[String],
-             check: Option[String]): CommitResult =
-    create(df, root, statsKey, check, Seq.empty)
-
-  /** Create with SECONDARY stats columns (each must cast to long):
-    * besides the primary `statsKey`, every commit records per-file
-    * [min, max] + key bloom for each of `statsCols` — so range and point
-    * reads on a NON-primary dimension prune files from the log alone.
-    * This is what makes a z-order OPTIMIZE ([[optimizeZ]]) pay off: after
-    * re-clustering, the second dimension's per-file ranges are tight and
-    * a predicate on it skips most files. */
-  def create(df: DataFrame, root: String, statsKey: Option[String],
-             check: Option[String], statsCols: Seq[String],
+  /** Create a new table at `root` from `df` (version 0).
+    * @param statsKey a declared stats column (must be integral): every
+    *   commit then records per-file [min, max] of it for its adds, making
+    *   [[readPruned]] and [[mergeCow]]'s file selection metadata-only.
+    * @param check a declared CHECK constraint (a boolean SQL predicate):
+    *   this and every later append/merge batch must satisfy it or the
+    *   commit is refused — the data-quality gate at the table boundary.
+    * @param statsCols SECONDARY stats columns (each must cast to long):
+    *   every commit records per-file [min, max] + key bloom for each — so
+    *   range and point reads on a NON-primary dimension prune files from
+    *   the log alone. This is what makes a z-order OPTIMIZE
+    *   ([[optimizeZ]]) pay off: after re-clustering, the second
+    *   dimension's per-file ranges are tight and a predicate on it skips
+    *   most files.
+    * @param shingleCols string columns that get per-file word n-gram
+    *   blooms of `shingleN` words (see [[stageShingles]]). */
+  def create(df: DataFrame, root: String, statsKey: Option[String] = None,
+             check: Option[String] = None, statsCols: Seq[String] = Seq.empty,
              shingleCols: Seq[String] = Seq.empty,
              shingleN: Int = 3): CommitResult = {
     require(statsCols.forall(c => !statsKey.contains(c)),
@@ -2251,14 +2332,13 @@ object TxTable {
       df.schema(df.schema.fieldIndex(c)).dataType ==
         org.apache.spark.sql.types.StringType
     }
-    val (adds, st, bl, stN, blN, rws) =
-      stageData(df, root, statsKey, statsCols)
-    val shBl = stageShingles(df, root, adds, shingleCols, shingleN)
+    val st = stageData(df, root, statsKey, statsCols)
+    val staged =
+      st.copy(shBlooms = stageShingles(df, root, st.files, shingleCols, shingleN))
     val ok = tryPublish(root,
-      Commit(0L, "create", adds, Seq.empty, None, statsKey, st, bl, check,
-        statsCols = statsCols, addStatsN = stN, addBloomsN = blN,
-        strCols = strCols, addRows = rws,
-        shCols = shingleCols, shN = shingleN, addShBlooms = shBl))
+      staged.commit(0L, "create", Seq.empty, None).copy(statsKey = statsKey,
+        check = check, statsCols = statsCols, strCols = strCols,
+        shCols = shingleCols, shN = shingleN))
     if (!ok) throw new IllegalStateException(s"table already exists: $root")
     CommitResult(0L, 1, skipped = false)
   }
@@ -2291,47 +2371,14 @@ object TxTable {
     require(snap.version >= 0, s"not a TxTable: $root")
     require(snap.ledgers.isEmpty,
       s"cannot shallow-clone with live MoR ledgers — compact $root first")
-    val pendingEvo = snap.evos.exists { case (v, _) =>
-      snap.files.exists(f => snap.fileAddV.getOrElse(f, Long.MaxValue) < v)
-    }
-    require(!pendingEvo, "cannot shallow-clone with schema evolutions " +
+    require(!snap.pendingEvo, "cannot shallow-clone with schema evolutions " +
       s"pending on live files — compact $root first")
-    snap.files.foreach { f =>
-      val src = Paths.get(root, f).toAbsolutePath
-      val dst = Paths.get(dstRoot, f)
-      Files.createDirectories(dst.getParent)
-      if (!Files.exists(dst))
-        try Files.createLink(dst, src)
-        catch { // cross-filesystem: fall back to a copy, still correct
-          case _: UnsupportedOperationException |
-               _: java.nio.file.FileSystemException =>
-            Files.copy(src, dst)
-        }
-    }
-    // missing stats entry = UNKNOWN, carried as the conservative full
-    // range (same reasoning as adoptFrom: the empty-file sentinel
-    // (MaxValue, MinValue) would prune the cloned rows out of reads)
-    val stats =
-      if (snap.statsKey.isEmpty) Seq.empty
-      else snap.files.map(f =>
-        snap.fileStats.getOrElse(f, (Long.MinValue, Long.MaxValue)))
-    val blooms =
-      if (snap.statsKey.isEmpty) Seq.empty
-      else snap.files.map(f => snap.fileBlooms.getOrElse(f, ""))
-    val statsN = snap.statsCols.indices.map(j => snap.files.map(f =>
-      snap.fileStatsN.get(f).flatMap(_.lift(j))
-        .getOrElse((Long.MinValue, Long.MaxValue))))
-    val bloomsN = snap.statsCols.indices.map(j => snap.files.map(f =>
-      snap.fileBloomsN.get(f).flatMap(_.lift(j)).getOrElse("")))
-    val rowsKnown = snap.files.map(f => snap.fileRows.getOrElse(f, -1L))
+    snap.files.foreach(linkInto(root, dstRoot, _))
     val ok = tryPublish(dstRoot,
-      Commit(0L, "clone", snap.files, Seq.empty, None, snap.statsKey,
-        stats, blooms, snap.check, statsCols = snap.statsCols,
-        addStatsN = statsN, addBloomsN = bloomsN, addRows = rowsKnown,
-        strCols = snap.strCols,
-        shCols = snap.shingleCols, shN = snap.shingleN,
-        addShBlooms = snap.shingleCols.indices.map(j => snap.files.map(f =>
-          snap.fileShBlooms.get(f).flatMap(_.lift(j)).getOrElse("")))))
+      carried(snap, snap.files).commit(0L, "clone", Seq.empty, None).copy(
+        statsKey = snap.statsKey, check = snap.check,
+        statsCols = snap.statsCols, strCols = snap.strCols,
+        shCols = snap.shingleCols, shN = snap.shingleN))
     if (!ok) throw new IllegalStateException(s"table already exists: $dstRoot")
     CommitResult(0L, 1, skipped = false)
   }
@@ -2349,21 +2396,18 @@ object TxTable {
     * zero data rewrite, O(new files) links + one metadata commit, the
     * same cost shape as the clone itself. Audits the adopted rows
     * against the table's CHECK constraint (a scan of ONLY the adopted
-    * files) and validates their schema against the table union with the
-    * merge-mor type guard. Stage-once + backoff publish race; `tag`
+    * files; no Spark job at all without a CHECK) and validates their
+    * footer schema against the table union with the merge-mor type
+    * guard. Links once, then publishes through [[commitLoop]]; `tag`
     * gives replay idempotence. Branch ledgers/pending evolutions must
     * be compacted first (same rule as the clone). */
   def adoptFrom(spark: SparkSession, dstRoot: String, srcRoot: String,
-                tag: Option[String] = None,
-                maxAttempts: Int = 12): CommitResult = {
+                tag: Option[String] = None): CommitResult = {
     val src = snapshot(srcRoot)
     require(src.version >= 0, s"not a TxTable: $srcRoot")
     require(src.ledgers.isEmpty,
       s"cannot adopt with live MoR ledgers on the branch — compact $srcRoot first")
-    val pendingEvo = src.evos.exists { case (v, _) =>
-      src.files.exists(f => src.fileAddV.getOrElse(f, Long.MaxValue) < v)
-    }
-    require(!pendingEvo, "cannot adopt with schema evolutions pending " +
+    require(!src.pendingEvo, "cannot adopt with schema evolutions pending " +
       s"on the branch's live files — compact $srcRoot first")
     val dst0 = snapshot(dstRoot)
     require(dst0.version >= 0, s"not a TxTable: $dstRoot")
@@ -2380,13 +2424,16 @@ object TxTable {
     if (branchAdds.isEmpty)
       return CommitResult(dst0.version, 1, skipped = true)
     // AUDIT: adopted rows must satisfy the table's CHECK (scan bounded
-    // to the adopted files) and bind to the table schema type-safely
-    val adoptedDf = readFiles(spark, srcRoot, branchAdds, None)
-    enforceCheck(adoptedDf, dst0.check, "adopted branch rows")
+    // to the adopted files — the only Spark job an adopt submits, and
+    // only when there is a CHECK) and bind to the table schema
+    // type-safely (footer-read on the driver)
+    val adopted = inferSchema(spark, srcRoot, branchAdds)
+    if (dst0.check.isDefined)
+      enforceCheck(readFiles(spark, srcRoot, branchAdds, Some(adopted)),
+        dst0.check, "adopted branch rows")
     locally {
       val tbl = currentSchema(spark, dstRoot, dst0)
-      val cs = spark.conf.getOption("spark.sql.caseSensitive")
-        .exists(_.toBoolean)
+      val same = sameName(spark)
       // names the table once knew but renamed away: a branch column
       // still carrying a pre-rename name must not silently adopt as a
       // brand-new column and fork the data across two names — the type
@@ -2394,11 +2441,9 @@ object TxTable {
       val renamedAway = dst0.evos.collect {
         case (_, op) if op.startsWith("rename:") => op.split(':')(1)
       }
-      adoptedDf.schema.foreach { f =>
-        val cur = tbl.find(t => if (cs) t.name == f.name
-          else t.name.equalsIgnoreCase(f.name))
-        require(cur.isDefined || !renamedAway.exists(r =>
-            if (cs) r == f.name else r.equalsIgnoreCase(f.name)),
+      adopted.foreach { f =>
+        val cur = tbl.find(t => same(t.name, f.name))
+        require(cur.isDefined || !renamedAway.exists(same(_, f.name)),
           s"adopted column '${f.name}' matches a name the table renamed " +
             s"away after the clone — rebase the branch onto the current " +
             s"schema before adopting")
@@ -2410,110 +2455,36 @@ object TxTable {
       }
     }
     // link ONCE (same relative paths; uuid staging dirs are unique)
-    branchAdds.foreach { f =>
-      val s0 = Paths.get(srcRoot, f).toAbsolutePath
-      val d0 = Paths.get(dstRoot, f)
-      Files.createDirectories(d0.getParent)
-      if (!Files.exists(d0))
-        try Files.createLink(d0, s0)
-        catch {
-          case _: UnsupportedOperationException |
-               _: java.nio.file.FileSystemException => Files.copy(s0, d0)
-        }
-    }
-    // a MISSING stats entry means UNKNOWN range, not empty file: carry
-    // the conservative full range (readPrunedOn's st.get(f) == None =>
-    // keep convention) — the (MaxValue, MinValue) empty-file sentinel
-    // would make the adopted rows vanish from every pruned read
-    val stats =
-      if (src.statsKey.isEmpty) Seq.empty
-      else branchAdds.map(f =>
-        src.fileStats.getOrElse(f, (Long.MinValue, Long.MaxValue)))
-    val blooms =
-      if (src.statsKey.isEmpty) Seq.empty
-      else branchAdds.map(f => src.fileBlooms.getOrElse(f, ""))
-    val statsN = src.statsCols.indices.map(j => branchAdds.map(f =>
-      src.fileStatsN.get(f).flatMap(_.lift(j))
-        .getOrElse((Long.MinValue, Long.MaxValue))))
-    val bloomsN = src.statsCols.indices.map(j => branchAdds.map(f =>
-      src.fileBloomsN.get(f).flatMap(_.lift(j)).getOrElse("")))
-    val shBl = src.shingleCols.indices.map(j => branchAdds.map(f =>
-      src.fileShBlooms.get(f).flatMap(_.lift(j)).getOrElse("")))
-    val rowsKnown = branchAdds.map(f => src.fileRows.getOrElse(f, -1L))
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val snap = snapshot(dstRoot)
-      if (tag.exists(snap.tags))
-        return CommitResult(snap.version, attempt, skipped = true)
+    branchAdds.foreach(linkInto(srcRoot, dstRoot, _))
+    commitLoop(dstRoot, tag, s"adopt into $dstRoot") { snap =>
       // a racing adopt of the same branch may have landed: adds-only
       // idempotence by content, not just by tag
       val adds = branchAdds.filterNot(snap.files.toSet)
-      if (adds.isEmpty) return CommitResult(snap.version, attempt, skipped = true)
-      val keep = adds.toSet
-      def sel[T](all: Seq[T]): Seq[T] =
-        branchAdds.zip(all).collect { case (f, v) if keep(f) => v }
-      val c = Commit(snap.version + 1, "adopt", adds, Seq.empty, tag,
-        statsKey = None, addStats = sel(stats), addBlooms = sel(blooms),
-        addStatsN = statsN.map(sel), addBloomsN = bloomsN.map(sel),
-        addRows = sel(rowsKnown), addShBlooms = shBl.map(sel))
-      if (tryPublish(dstRoot, c)) {
-        maybeCheckpoint(dstRoot, c.version)
-        return CommitResult(c.version, attempt, skipped = false)
-      }
-      // no backoff after the FINAL failed attempt — the exception should
-      // surface immediately, not after one more jittered sleep
-      if (attempt < maxAttempts) backoff(attempt)
+      if (adds.isEmpty) None
+      else Some(carried(src, adds).commit(snap.version + 1, "adopt", Seq.empty, tag))
     }
-    throw new IllegalStateException(
-      s"adopt into $dstRoot failed after $maxAttempts attempts (contention)")
   }
 
-  /** Transactional write loop: stage data from the CURRENT snapshot via
-    * `body`, publish optimistically, REBASE + retry on conflict. `body`
+  /** Transactional write: stage data from the CURRENT snapshot via
+    * `body`, publish optimistically, REBASE + retry on conflict (each
+    * [[commitLoop]] attempt re-runs `body`). `body`
     * receives the snapshot's DataFrame and returns the full new table
     * content (full-snapshot rewrite keeps the protocol simple; a
     * file-level merge would only change which files land in `removes`).
     * If `tag` is set and any committed version already carries it, the
     * write is a detected replay and becomes a no-op. */
   def transact(spark: SparkSession, root: String, op: String,
-               tag: Option[String] = None, maxAttempts: Int = 12)
-              (body: DataFrame => DataFrame): CommitResult = {
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val snap = snapshot(root)
-      require(snap.version >= 0, s"not a TxTable: $root")
-      if (tag.exists(snap.tags))
-        return CommitResult(snap.version, attempt, skipped = true) // replayed epoch
+               tag: Option[String] = None)
+              (body: DataFrame => DataFrame): CommitResult =
+    commitLoop(root, tag, s"commit to $root") { snap =>
       // a full-snapshot rewrite starts from the EFFECTIVE content (live
       // delete ledgers applied) and retires those ledgers in the same
       // commit — this is how compaction/OPTIMIZE fold merge-on-read
       // deletes back into the data
-      val current = morRead(spark, root, snap, snap.files)
-      val next = body(current)
-      val (adds, st, bl, stN, blN, rws) =
-        stageData(next, root, snap.statsKey, snap.statsCols)
-      val shBl = stageShingles(next, root, adds, snap.shingleCols, snap.shingleN)
-      val c = Commit(snap.version + 1, op, adds,
-        snap.files ++ snap.ledgers.map(_.path), tag,
-        statsKey = None, addStats = st, addBlooms = bl,
-        addStatsN = stN, addBloomsN = blN, addRows = rws,
-        addShBlooms = shBl)
-      if (tryPublish(root, c)) {
-        maybeCheckpoint(root, c.version)
-        return CommitResult(c.version, attempt, skipped = false)
-      }
-      // lost the race: loop rebases on the winner's snapshot. Our staged
-      // files stay orphaned (never referenced by any commit) — invisible
-      // to readers; a vacuum pass may reclaim them.
-      // no backoff after the FINAL failed attempt — the exception should
-      // surface immediately, not after one more jittered sleep
-      if (attempt < maxAttempts) backoff(attempt)
+      val next = body(morRead(spark, root, snap, snap.files))
+      Some(stageOn(next, root, snap).commit(snap.version + 1, op,
+        snap.files ++ snap.ledgers.map(_.path), tag))
     }
-    throw new IllegalStateException(
-      s"commit to $root failed after $maxAttempts attempts (contention)")
-  }
 
   /** Compaction as a normal commit: rewrite the live snapshot into
     * `targetFiles` files (removes = the old live set, adds = the rewrite).
@@ -2677,8 +2648,7 @@ object TxTable {
     * over-bound chain and the replay would otherwise read as "nothing to
     * do" instead of "done". */
   def foldLedgersOver(spark: SparkSession, root: String, maxLedgers: Int,
-                      tag: Option[String] = None,
-                      maxAttempts: Int = 12): Option[CommitResult] = {
+                      tag: Option[String] = None): Option[CommitResult] = {
     require(maxLedgers >= 0, s"maxLedgers must be >= 0: $maxLedgers")
     val snap0 = snapshot(root)
     require(snap0.version >= 0, s"not a TxTable: $root")
@@ -2694,49 +2664,25 @@ object TxTable {
         s.fileAddV.getOrElse(f, Long.MaxValue) < l.version)).map(_.path)
     if (!snap0.files.exists(ledgerChain(snap0, _) > maxLedgers) &&
         zombies(snap0).isEmpty) return None
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val snap = snapshot(root)
-      if (tag.exists(snap.tags))
-        return Some(CommitResult(snap.version, attempt, skipped = true))
+    var resolved = false // a rebase left nothing over the bound
+    val r = commitLoop(root, tag, s"commit to $root") { snap =>
       val hot = snap.files.filter(ledgerChain(snap, _) > maxLedgers)
       val dead = zombies(snap)
-      if (hot.isEmpty && dead.isEmpty) return None // a rebase resolved it
-      if (hot.isEmpty) {
-        val c = Commit(snap.version + 1, "fold-ledgers",
-          Seq.empty, dead, tag)
-        if (tryPublish(root, c)) {
-          maybeCheckpoint(root, c.version)
-          return Some(CommitResult(c.version, attempt, skipped = false))
-        }
-      } else {
-      val keep = snap.files.diff(hot)
-      val rewrite = morRead(spark, root, snap, hot)
-      val (adds, st, bl, stN, blN, rws) =
-        stageData(rewrite, root, snap.statsKey, snap.statsCols)
-      val shBl =
-        stageShingles(rewrite, root, adds, snap.shingleCols, snap.shingleN)
-      // a ledger whose whole applicability set was just rewritten is
-      // dead weight — retire it; one still scoping a kept file stays
-      val retired = snap.ledgers.filter(l =>
-        !keep.exists(f =>
-          l.version > snap.fileAddV.getOrElse(f, Long.MaxValue))).map(_.path)
-      val c = Commit(snap.version + 1, "fold-ledgers", adds, hot ++ retired,
-        tag, statsKey = None, addStats = st, addBlooms = bl,
-        addStatsN = stN, addBloomsN = blN, addRows = rws,
-        addShBlooms = shBl)
-      if (tryPublish(root, c)) {
-        maybeCheckpoint(root, c.version)
-        return Some(CommitResult(c.version, attempt, skipped = false))
+      if (hot.isEmpty && dead.isEmpty) { resolved = true; None }
+      else if (hot.isEmpty)
+        Some(Commit(snap.version + 1, "fold-ledgers", Seq.empty, dead, tag))
+      else {
+        val keep = snap.files.diff(hot)
+        val staged = stageOn(morRead(spark, root, snap, hot), root, snap)
+        // a ledger whose whole applicability set was just rewritten is
+        // dead weight — retire it; one still scoping a kept file stays
+        val retired = snap.ledgers.filter(l =>
+          !keep.exists(f =>
+            l.version > snap.fileAddV.getOrElse(f, Long.MaxValue))).map(_.path)
+        Some(staged.commit(snap.version + 1, "fold-ledgers", hot ++ retired, tag))
       }
-      }
-      // no backoff after the FINAL failed attempt — the exception should
-      // surface immediately, not after one more jittered sleep
-      if (attempt < maxAttempts) backoff(attempt)
     }
-    throw new IllegalStateException(
-      s"commit to $root failed after $maxAttempts attempts (contention)")
+    if (resolved) None else Some(r)
   }
 
   /** Reclaim ORPHANED data files: staged by writers that lost their
@@ -2879,56 +2825,24 @@ object TxTable {
     * returns (files to KEEP as-is, replacement content for the rest).
     * The commit removes only `snap.files -- keep`; kept files never move,
     * never rewrite, never re-stage — which is what makes incremental
-    * writes to a huge table affordable. Rebase/retry semantics are
-    * [[transact]]'s. */
+    * writes to a huge table affordable. Each attempt of [[commitLoop]]
+    * re-runs `body` on its fresh snapshot (rebase on a lost race). */
   def transactFiles(spark: SparkSession, root: String, op: String,
-                    tag: Option[String] = None, maxAttempts: Int = 12,
-                    sizeStaged: Boolean = false)
+                    tag: Option[String] = None, sizeStaged: Boolean = false)
                    (body: Snapshot => (Seq[String], DataFrame)): CommitResult = {
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val snap = snapshot(root)
-      require(snap.version >= 0, s"not a TxTable: $root")
-      if (tag.exists(snap.tags))
-        return CommitResult(snap.version, attempt, skipped = true)
-      val (keep, rewrite) = body(snap)
-      val (adds, st, bl, stN, blN, rws) =
-        stageData(rewrite, root, snap.statsKey, snap.statsCols,
-          sizeStaged = sizeStaged)
-      val shBl = stageShingles(rewrite, root, adds, snap.shingleCols, snap.shingleN)
-      val removes = snap.files.diff(keep)
-      val c = Commit(snap.version + 1, op, adds, removes, tag,
-        statsKey = None, addStats = st, addBlooms = bl,
-        addStatsN = stN, addBloomsN = blN, addRows = rws,
-        addShBlooms = shBl)
-      if (tryPublish(root, c)) {
-        // ADDS-ONLY commit (append shape): the post-commit union schema
-        // is the cached union plus the batch's new columns — seed the
-        // cache so the next cached read / validation of this table pays
-        // zero inference. (Removes can shrink the union; those commits
-        // leave the cache to the delta/full recompute path.)
-        if (removes.isEmpty && snap.evos.isEmpty && adds.nonEmpty)
-          cachedSchemaFor(root, (snap.evos, snap.files)).foreach { tbl =>
-            val cs = spark.conf.getOption("spark.sql.caseSensitive")
-              .exists(_.toBoolean)
-            seedSchema(root, (snap.evos, snap.files ++ adds),
-              org.apache.spark.sql.types.StructType(
-                tbl.fields ++ rewrite.schema.fields
-                  .filterNot(f => tbl.exists(t =>
-                    if (cs) t.name == f.name
-                    else t.name.equalsIgnoreCase(f.name)))
-                  .map(_.copy(nullable = true))))
-          }
-        maybeCheckpoint(root, c.version)
-        return CommitResult(c.version, attempt, skipped = false)
-      }
-      // no backoff after the FINAL failed attempt — the exception should
-      // surface immediately, not after one more jittered sleep
-      if (attempt < maxAttempts) backoff(attempt)
+    var rewrite: DataFrame = null // this attempt's staged content
+    // ADDS-ONLY commit (append shape): seed the schema cache from the
+    // cached union. (Removes can shrink the union; those commits leave
+    // the cache to the delta/full recompute path.)
+    commitLoop(root, tag, s"commit to $root", afterPublish = (snap, c) =>
+      if (c.removes.isEmpty && snap.evos.isEmpty && c.adds.nonEmpty)
+        cachedSchemaFor(root, (snap.evos, snap.files)).foreach(
+          seedAppended(spark, root, snap, c.adds, _, rewrite.schema))) { snap =>
+      val (keep, next) = body(snap)
+      rewrite = next
+      Some(stageOn(next, root, snap, sizeStaged).commit(snap.version + 1, op,
+        snap.files.diff(keep), tag))
     }
-    throw new IllegalStateException(
-      s"commit to $root failed after $maxAttempts attempts (contention)")
   }
 
   /** APPEND: the new batch lands as new files; every existing file
@@ -2944,53 +2858,22 @@ object TxTable {
     * 8 writers exhausted their attempt budget; staged-once they
     * serialize cleanly. */
   def append(spark: SparkSession, root: String, batch: DataFrame,
-             tag: Option[String] = None,
-             maxAttempts: Int = 12): CommitResult = {
+             tag: Option[String] = None): CommitResult = {
     val snap0 = snapshot(root)
     require(snap0.version >= 0, s"not a TxTable: $root")
     enforceCheck(batch, snap0.check, "append batch")
     if (tag.exists(snap0.tags))
       return CommitResult(snap0.version, 1, skipped = true)
-    val (adds, st, bl, stN, blN, rws) =
-      stageData(batch, root, snap0.statsKey, snap0.statsCols)
-    val shBl = stageShingles(batch, root, adds, snap0.shingleCols,
-      snap0.shingleN)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val snap = snapshot(root)
-      if (tag.exists(snap.tags))
-        // replay raced in while we staged: the duplicate staging is
-        // unreferenced and vacuumOrphans reclaims it
-        return CommitResult(snap.version, attempt, skipped = true)
-      val c = Commit(snap.version + 1, "append", adds, Seq.empty, tag,
-        statsKey = None, addStats = st, addBlooms = bl,
-        addStatsN = stN, addBloomsN = blN, addRows = rws,
-        addShBlooms = shBl)
-      if (tryPublish(root, c)) {
-        // adds-only commit: seed the schema cache exactly as
-        // transactFiles does for the append shape
-        if (snap.evos.isEmpty && adds.nonEmpty)
-          cachedSchemaFor(root, (snap.evos, snap.files)).foreach { tbl =>
-            val cs = spark.conf.getOption("spark.sql.caseSensitive")
-              .exists(_.toBoolean)
-            seedSchema(root, (snap.evos, snap.files ++ adds),
-              org.apache.spark.sql.types.StructType(
-                tbl.fields ++ batch.schema.fields
-                  .filterNot(f => tbl.exists(t =>
-                    if (cs) t.name == f.name
-                    else t.name.equalsIgnoreCase(f.name)))
-                  .map(_.copy(nullable = true))))
-          }
-        maybeCheckpoint(root, c.version)
-        return CommitResult(c.version, attempt, skipped = false)
-      }
-      // no backoff after the FINAL failed attempt — the exception should
-      // surface immediately, not after one more jittered sleep
-      if (attempt < maxAttempts) backoff(attempt)
+    // a replay that races in while we stage leaves this staging
+    // unreferenced; vacuumOrphans reclaims it
+    val staged = stageOn(batch, root, snap0)
+    // adds-only commit: seed the schema cache as transactFiles does
+    commitLoop(root, tag, s"commit to $root", afterPublish = (snap, c) =>
+      if (snap.evos.isEmpty && c.adds.nonEmpty)
+        cachedSchemaFor(root, (snap.evos, snap.files)).foreach(
+          seedAppended(spark, root, snap, c.adds, _, batch.schema))) { snap =>
+      Some(staged.commit(snap.version + 1, "append", Seq.empty, tag))
     }
-    throw new IllegalStateException(
-      s"commit to $root failed after $maxAttempts attempts (contention)")
   }
 
   /** OPTIMIZE: re-cluster the live snapshot by the table's stats key —
@@ -3433,9 +3316,8 @@ object TxTable {
     * (CoW would pay file-rewrite costs every epoch). `key` must cast to
     * long. */
   def deleteMor(spark: SparkSession, root: String, doomed: DataFrame,
-                key: String, tag: Option[String] = None,
-                maxAttempts: Int = 12): CommitResult =
-    deleteMorKeys(spark, root, doomed, Seq(key), tag, maxAttempts)
+                key: String, tag: Option[String] = None): CommitResult =
+    deleteMorKeys(spark, root, doomed, Seq(key), tag)
 
   /** Integral types that long-normalize LOSSLESSLY. A single-column
     * ledger over one of these is stored as long (the form the change
@@ -3468,35 +3350,18 @@ object TxTable {
     * of them. A single-column ledger stays long-normalized (the form the
     * change feed can prune against stats/blooms). */
   def deleteMorKeys(spark: SparkSession, root: String, doomed: DataFrame,
-                    keys: Seq[String], tag: Option[String] = None,
-                    maxAttempts: Int = 12): CommitResult = {
-    import org.apache.spark.sql.functions.col
+                    keys: Seq[String], tag: Option[String] = None): CommitResult = {
     require(keys.nonEmpty, "deleteMorKeys needs at least one key column")
     val ledgerDf = ledgerKeys(doomed, keys)
     // stage the ledger once; rebased retries re-reference the same file
-    val (dfiles, _, _, _, _, _) = stageData(
-      ledgerDf.distinct().coalesce(1), root, statsKey = None)
+    val dfiles = stageData(ledgerDf.distinct().coalesce(1), root,
+      statsKey = None).files
     val dsig = encodeSig(ledgerDf.schema)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val snap = snapshot(root)
-      require(snap.version >= 0, s"not a TxTable: $root")
-      if (tag.exists(snap.tags))
-        return CommitResult(snap.version, attempt, skipped = true)
-      val c = Commit(snap.version + 1, "delete-mor",
+    commitLoop(root, tag, s"delete-mor commit to $root") { snap =>
+      Some(Commit(snap.version + 1, "delete-mor",
         adds = Seq.empty, removes = Seq.empty, tag, dadds = dfiles,
-        dsigs = dfiles.map(_ => dsig))
-      if (tryPublish(root, c)) {
-        maybeCheckpoint(root, c.version)
-        return CommitResult(c.version, attempt, skipped = false)
-      }
-      // no backoff after the FINAL failed attempt — the exception should
-      // surface immediately, not after one more jittered sleep
-      if (attempt < maxAttempts) backoff(attempt)
+        dsigs = dfiles.map(_ => dsig)))
     }
-    throw new IllegalStateException(
-      s"delete-mor commit to $root failed after $maxAttempts attempts (contention)")
   }
 
   /** MERGE-ON-READ upsert — one commit, zero data-file rewrites: the
@@ -3517,18 +3382,15 @@ object TxTable {
     * compaction). CHECK constraints validate the incoming batch exactly
     * as [[append]] does. */
   def mergeMor(spark: SparkSession, root: String, changes: DataFrame,
-               key: String, tag: Option[String] = None,
-               maxAttempts: Int = 12): CommitResult =
-    mergeMorKeys(spark, root, changes, Seq(key), tag, maxAttempts)
+               key: String, tag: Option[String] = None): CommitResult =
+    mergeMorKeys(spark, root, changes, Seq(key), tag)
 
   /** [[mergeMor]] on a COMPOSITE key — the upsert identity a keyed
     * window aggregate sink needs (e.g. (window, event_type)): the ledger
     * carries all key columns in natural types; reads subtract by
     * null-safe equality on the whole tuple. */
   def mergeMorKeys(spark: SparkSession, root: String, changes: DataFrame,
-                   keys: Seq[String], tag: Option[String] = None,
-                   maxAttempts: Int = 12): CommitResult = {
-    import org.apache.spark.sql.functions.col
+                   keys: Seq[String], tag: Option[String] = None): CommitResult = {
     require(keys.nonEmpty, "mergeMorKeys needs at least one key column")
     val snap0 = snapshot(root)
     require(snap0.version >= 0, s"not a TxTable: $root")
@@ -3543,17 +3405,12 @@ object TxTable {
       s"merge key '$k' missing from the merge-mor batch " +
         s"(batch columns: ${changes.columns.mkString(", ")})"))
     val tbl = currentSchema(spark, root, snap0)
-    // name match mirrors Spark's resolution: case-insensitive unless
-    // spark.sql.caseSensitive — a batch column differing only in case
-    // still binds to the table column at read time, so it must hit the
-    // same type guard here
-    val cs = spark.conf.getOption("spark.sql.caseSensitive")
-      .exists(_.toBoolean)
-    def sameName(a: String, b: String): Boolean =
-      if (cs) a == b else a.equalsIgnoreCase(b)
+    // a batch column differing only in case may still bind to the table
+    // column at read time, so it must hit the same type guard here
+    val same = sameName(spark)
     locally {
       changes.schema.foreach { f =>
-        tbl.find(t => sameName(t.name, f.name)).foreach { t =>
+        tbl.find(t => same(t.name, f.name)).foreach { t =>
           require(t.dataType == f.dataType,
             s"merge-mor batch column '${f.name}' is " +
               s"${f.dataType.simpleString} but the table stores " +
@@ -3575,11 +3432,10 @@ object TxTable {
     // right-size a shattered small batch (a streaming upsert sink's
     // state-store output otherwise lands ~20 near-empty files per
     // epoch; profiled 656 staged files over a 32-commit drain).
-    val (adds, st, bl, stN, blN, rws) =
-      stageData(changes, root, snap0.statsKey, snap0.statsCols,
-        sizeStaged = true)
+    val staged = stageOn(changes, root, snap0, sizeStaged = true)
     val dfiles =
-      if (adds.isEmpty) Seq.empty[String] else Seq("@" + adds.mkString(";"))
+      if (staged.files.isEmpty) Seq.empty[String]
+      else Seq("@" + staged.files.mkString(";"))
     // the signature comes from the VALIDATED batch schema (the staged
     // parquet round-trips it exactly), long-normalized the same way
     // [[ledgerKeys]] would — no read-back job
@@ -3589,71 +3445,34 @@ object TxTable {
         Seq(org.apache.spark.sql.types.StructField(keys.head,
           org.apache.spark.sql.types.LongType))
       else keys.map(k => changes.schema(changes.schema.fieldIndex(k)))))
-    val shBl = stageShingles(changes, root, adds,
-      snap0.shingleCols, snap0.shingleN)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val snap = snapshot(root)
-      if (tag.exists(snap.tags))
-        return CommitResult(snap.version, attempt, skipped = true)
-      val c = Commit(snap.version + 1, "merge-mor",
-        adds = adds, removes = Seq.empty, tag,
-        statsKey = None, addStats = st, addBlooms = bl,
-        addStatsN = stN, addBloomsN = blN, addRows = rws, dadds = dfiles,
-        addShBlooms = shBl, dsigs = dfiles.map(_ => dsig))
-      if (tryPublish(root, c)) {
-        // seed the schema cache for the post-commit witness: the union
-        // schema grows only by the batch's validated new columns, so the
-        // NEXT micro-batch's validation pays zero inference jobs — the
-        // remaining per-commit footer job of a streaming MoR drain.
-        // Only on the un-rebased path (snap == the snapshot `tbl` was
-        // validated against): a rebase may have raced in columns this
-        // union can't see.
+    // seed the schema cache for the post-commit witness: the union
+    // schema grows only by the batch's validated new columns, so the
+    // NEXT micro-batch's validation pays zero inference jobs — the
+    // remaining per-commit footer job of a streaming MoR drain.
+    // Only on the un-rebased path (snap == the snapshot `tbl` was
+    // validated against): a rebase may have raced in columns this
+    // union can't see.
+    commitLoop(root, tag, s"merge-mor commit to $root",
+      afterPublish = (snap, c) =>
         if (snap.version == snap0.version)
-          seedSchema(root, (snap.evos, snap.files ++ adds),
-            org.apache.spark.sql.types.StructType(
-              tbl.fields ++ changes.schema.fields
-                .filterNot(f => tbl.exists(t => sameName(t.name, f.name)))
-                .map(_.copy(nullable = true))))
-        maybeCheckpoint(root, c.version)
-        return CommitResult(c.version, attempt, skipped = false)
-      }
-      // no backoff after the FINAL failed attempt — the exception should
-      // surface immediately, not after one more jittered sleep
-      if (attempt < maxAttempts) backoff(attempt)
+          seedAppended(spark, root, snap, c.adds, tbl, changes.schema)) { snap =>
+      Some(staged.commit(snap.version + 1, "merge-mor", Seq.empty, tag)
+        .copy(dadds = dfiles, dsigs = dfiles.map(_ => dsig)))
     }
-    throw new IllegalStateException(
-      s"merge-mor commit to $root failed after $maxAttempts attempts (contention)")
   }
 
   private val identName = "^[A-Za-z_][A-Za-z0-9_]*$".r
 
-  /** Shared metadata-only commit loop for schema evolutions. */
+  /** Metadata-only commit of one schema evolution, `validate`d against
+    * each attempt's snapshot. */
   private def commitEvo(root: String, op: String, evo: String,
-                        tag: Option[String], maxAttempts: Int = 12)
-                       (validate: Snapshot => Unit): CommitResult = {
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val snap = snapshot(root)
-      require(snap.version >= 0, s"not a TxTable: $root")
-      if (tag.exists(snap.tags))
-        return CommitResult(snap.version, attempt, skipped = true)
+                        tag: Option[String])
+                       (validate: Snapshot => Unit): CommitResult =
+    commitLoop(root, tag, s"$op commit to $root") { snap =>
       validate(snap)
-      val c = Commit(snap.version + 1, op, Seq.empty, Seq.empty, tag,
-        evos = Seq(evo))
-      if (tryPublish(root, c)) {
-        maybeCheckpoint(root, c.version)
-        return CommitResult(c.version, attempt, skipped = false)
-      }
-      // no backoff after the FINAL failed attempt — the exception should
-      // surface immediately, not after one more jittered sleep
-      if (attempt < maxAttempts) backoff(attempt)
+      Some(Commit(snap.version + 1, op, Seq.empty, Seq.empty, tag,
+        evos = Seq(evo)))
     }
-    throw new IllegalStateException(
-      s"$op commit to $root failed after $maxAttempts attempts (contention)")
-  }
 
   /** SCHEMA EVOLUTION: rename a column as a METADATA-ONLY commit — zero
     * data files rewritten (the Delta/Iceberg column-mapping idea held in

@@ -128,7 +128,7 @@ object GraftSource {
     require(snap.ledgers.isEmpty,
       s"table at $root has live merge-on-read ledgers — the format scan " +
         "cannot subtract them; compact() first or use GraftSource.read")
-    require(!pendingEvo(snap),
+    require(!snap.pendingEvo,
       s"table at $root has schema evolutions pending on live files — " +
         "compact() first or use GraftSource.read")
     val schema = scanSchema(spark, root, snap)
@@ -154,7 +154,7 @@ object GraftSource {
            versionAsOf: Long = Long.MaxValue): DataFrame = {
     val snap = TxTable.snapshot(root, versionAsOf)
     require(snap.version >= 0, s"not a TxTable (no committed log): $root")
-    if (snap.files.nonEmpty && snap.ledgers.isEmpty && !pendingEvo(snap))
+    if (snap.files.nonEmpty && snap.ledgers.isEmpty && !snap.pendingEvo)
       scan(spark, root, versionAsOf)
     else TxTable.read(spark, root, versionAsOf)
   }
@@ -167,11 +167,6 @@ object GraftSource {
       s"cannot derive a schema from an empty snapshot at $root")
     scanSchema(spark, root, snap)
   }
-
-  private def pendingEvo(snap: TxTable.Snapshot): Boolean =
-    snap.evos.exists { case (v, _) =>
-      snap.files.exists(f => snap.fileAddV.getOrElse(f, Long.MaxValue) < v)
-    }
 
   /** Schema from the live files' parquet footers (metadata-only reads;
     * a production log would record the schema at publish). Snapshot-

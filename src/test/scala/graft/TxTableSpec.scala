@@ -95,6 +95,52 @@ class TxTableSpec extends AnyFunSuite {
     assert(rows(root).count(_._1 == 2L) == 1)
   }
 
+  test("a lost publish race rebases: the retry re-runs the body on the winner's snapshot") {
+    import spark.implicits._
+    val root = freshRoot()
+    TxTable.create(Seq((1L, "a")).toDF("k", "v"), root)
+    var calls = 0
+    val r = TxTable.transact(spark, root, "interleaved") { current =>
+      calls += 1
+      // a rival append takes the version this attempt stages for
+      if (calls == 1) TxTable.append(spark, root, Seq((2L, "rival")).toDF("k", "v"))
+      current.union(Seq((3L, "outer")).toDF("k", "v"))
+    }
+    assert(!r.skipped && r.attempts == 2 && r.version == 2L, r)
+    assert(rows(root) == Set((1L, "a"), (2L, "rival"), (3L, "outer")))
+  }
+
+  test("a lost publish race to a commit carrying our tag ends as a replay skip") {
+    import spark.implicits._
+    val root = freshRoot()
+    TxTable.create(Seq((1L, "a")).toDF("k", "v"), root)
+    val tag = Some("app=loop/epoch=1")
+    var calls = 0
+    val r = TxTable.transact(spark, root, "interleaved", tag) { current =>
+      calls += 1
+      if (calls == 1) TxTable.append(spark, root, Seq((2L, "rival")).toDF("k", "v"), tag)
+      current.union(Seq((3L, "outer")).toDF("k", "v"))
+    }
+    assert(r.skipped && r.attempts == 2 && r.version == 1L, r)
+    assert(rows(root) == Set((1L, "a"), (2L, "rival")))
+  }
+
+  test("a commit that loses every race fails with the contention error after 12 attempts",
+      SlowTest) {
+    import spark.implicits._
+    val root = freshRoot()
+    TxTable.create(Seq((1L, "a")).toDF("k", "v"), root)
+    var calls = 0
+    val ex = intercept[IllegalStateException](
+      TxTable.transact(spark, root, "starved") { current =>
+        calls += 1
+        TxTable.append(spark, root, Seq((100L + calls, "rival")).toDF("k", "v"))
+        current
+      })
+    assert(ex.getMessage == s"commit to $root failed after 12 attempts (contention)")
+    assert(calls == 12 && TxTable.snapshot(root).version == 12L)
+  }
+
   test("compact rewrites to fewer files; history stays time-travelable") {
     import spark.implicits._
     val root = freshRoot()
@@ -1777,16 +1823,15 @@ class TxTableSpec extends AnyFunSuite {
           val lo = w * 200L
           TxTable.mergeMor(spark, root,
             (lo until lo + 30L).map(i => (i, s"w$w-e$e")).toDF("k", "v"),
-            "k", maxAttempts = 40)
+            "k")
         }
         TxTable.deleteMor(spark, root,
-          (w * 200L + 100L until w * 200L + 110L).toDF("k"), "k",
-          maxAttempts = 40)
+          (w * 200L + 100L until w * 200L + 110L).toDF("k"), "k")
       } catch { case t: Throwable => errs.add(t) })
     }
     val maintenance = new Thread(() => try {
       for (_ <- 1 to 4) {
-        TxTable.foldLedgersOver(spark, root, 2, maxAttempts = 50)
+        TxTable.foldLedgersOver(spark, root, 2)
         Thread.sleep(30)
       }
       TxTable.binPack(spark, root, minBytes = 1L << 20, targetFiles = 2)
@@ -2055,8 +2100,8 @@ class TxTableSpec extends AnyFunSuite {
     assert(ex.getMessage.toLowerCase.contains("check"))
     assert(rows(main).size == 150, "failed audit must leave main untouched")
     // publish is flat in rows: with no CHECK to audit, adopting 4 staged
-    // files submits the same jobs and reads the same input records
-    // whether they hold 100 k or 800 k rows
+    // files submits no Spark job at all (the schema guard reads footers
+    // on the driver) whether they hold 100 k or 800 k rows
     val adopt = Seq(1, 8).map(m => JobCount.pinned(spark, aqe = false, partitions = 4) {
       val (mn, br) = (s"$tmp/main$m", s"$tmp/branch$m")
       TxTable.create(spark.range(1000L).select(col("id").as("k"), lit("base").as("v")),
@@ -2069,6 +2114,7 @@ class TxTableSpec extends AnyFunSuite {
     info(s"adopt x1: ${adopt(0)}; x8: ${adopt(1)}")
     assert(adopt(0).jobs == adopt(1).jobs && adopt(0).inputRecords == adopt(1).inputRecords,
       s"x1: ${adopt(0)}; x8: ${adopt(1)}")
+    assert(adopt.forall(_.jobs == 0), s"a CHECK-free adopt runs no Spark job: $adopt")
   }
 
   test("adopt widens the union schema: a branch-added column surfaces as NULL on old rows") {
