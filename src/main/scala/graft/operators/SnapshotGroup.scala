@@ -33,10 +33,9 @@ object SnapshotGroup {
   private def slot(root: String, v: Long): Path =
     dir(root).resolve(f"$v%020d.json")
 
-  // member names must be plain identifiers: anything needing JSON escaping
-  // (quotes, backslashes) would corrupt render(), and a member literally
-  // named "gv" would vanish in parse()'s header filter — reject both at
-  // publish time rather than silently mis-reading later.
+  // member names must be plain identifiers, and a member literally named
+  // "gv" would vanish in parse()'s header filter — reject both at publish
+  // time rather than silently mis-reading later.
   private val memberName = "[A-Za-z0-9_-]+".r
   private def validateNames(members: Map[String, Long]): Unit =
     members.keys.foreach { t =>
@@ -44,16 +43,19 @@ object SnapshotGroup {
         s"invalid group member name '$t' — must match [A-Za-z0-9_-]+ and not be 'gv'")
     }
 
-  private def render(v: Long, members: Map[String, Long]): String =
-    members.toSeq.sortBy(_._1)
-      .map { case (t, tv) => s""""$t":$tv""" }
-      .mkString(s"""{"gv":$v,""", ",", "}")
+  // {"gv":<v>,"<member>":<version>,...}, members sorted by name
+  private def render(v: Long, members: Map[String, Long]): String = {
+    val o = TxTable.mapper.createObjectNode().put("gv", v)
+    members.toSeq.sortBy(_._1).foreach { case (t, tv) => o.put(t, tv) }
+    TxTable.mapper.writeValueAsString(o)
+  }
 
-  private def parse(json: String): Map[String, Long] =
-    "\"([^\"]+)\":(-?\\d+)".r.findAllMatchIn(json)
-      .map(m => m.group(1) -> m.group(2).toLong)
-      .filter(_._1 != "gv")
+  private def parse(json: String): Map[String, Long] = {
+    import scala.jdk.CollectionConverters._
+    TxTable.mapper.readTree(json).properties().asScala
+      .collect { case e if e.getKey != "gv" => e.getKey -> e.getValue.asLong }
       .toMap
+  }
 
   /** Highest contiguous published group version (-1 if none). */
   def currentVersion(root: String): Long = {
@@ -73,24 +75,15 @@ object SnapshotGroup {
   }
 
   /** Publish the next group version with this member vector; optimistic —
-    * retries the slot until it wins. Returns the group version. */
-  def publish(root: String, members: Map[String, Long],
-              maxAttempts: Int = 12): Long = {
+    * retries the slot (12 attempts) until it wins. Returns the group
+    * version. */
+  def publish(root: String, members: Map[String, Long]): Long = {
     validateNames(members)
     Files.createDirectories(dir(root))
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val v = currentVersion(root) + 1
-      val tmp = dir(root).resolve(
-        s".tmp-${java.util.UUID.randomUUID().toString}")
-      Files.writeString(tmp, render(v, members))
-      try { Files.createLink(slot(root, v), tmp); return v }
-      catch { case _: java.nio.file.FileAlreadyExistsException => () }
-      finally Files.deleteIfExists(tmp)
-    }
-    throw new IllegalStateException(
-      s"group commit to $root failed after $maxAttempts attempts")
+    (1 to 12).iterator.map(_ => currentVersion(root) + 1)
+      .find(v => TxTable.publishOnce(slot(root, v), render(v, members)))
+      .getOrElse(throw new IllegalStateException(
+        s"group commit to $root failed after 12 attempts"))
   }
 
   /** The member version vector at group version `gv` (default: latest).

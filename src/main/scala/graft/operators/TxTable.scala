@@ -91,33 +91,46 @@ object TxTable {
     System.err.println("[txprofile] " + lines.mkString(" "))
   }
 
-  /** One commit record. `adds`/`removes` are paths relative to the table
-    * root. `tag` is the idempotence identity (e.g. "app=x/epoch=7").
-    * `statsKey` (create commit only) declares the integral column whose
-    * per-file [min, max] every commit records for its adds — the
-    * metadata that makes file pruning and CoW file selection ZERO-I/O.
-    * `addStats` aligns 1:1 with `adds` when the table has a stats key. */
+  /** What the log records about one data file (`path` relative to the
+    * table root): the primary stats key's [min, max] and key bloom, the
+    * secondary stats columns' ranges and blooms (positional, aligned
+    * with `statsCols`), the parquet row count (-1 = unknown) and the
+    * shingle blooms (aligned with `shingleCols`). None / empty = nothing
+    * recorded; a bloom of "" = none (keep). The empty range (MaxValue,
+    * MinValue) is a real recording: every row of the file is NULL in
+    * that column. On a snapshot entry `version` is the commit that added
+    * the file; a commit's own adds leave it 0. */
+  final case class DataFile(
+      path: String,
+      range: Option[(Long, Long)] = None,
+      bloom: Option[String] = None,
+      ranges: Seq[(Long, Long)] = Seq.empty,
+      blooms: Seq[String] = Seq.empty,
+      rows: Long = -1L,
+      shBlooms: Seq[String] = Seq.empty,
+      version: Long = 0L)
+
+  /** One commit record: the data files it adds, with their metadata, and
+    * the table-relative paths it removes. `tag` is the idempotence
+    * identity (e.g. "app=x/epoch=7"). `statsKey` (create commit only)
+    * declares the integral column whose per-file [min, max] every commit
+    * records for its adds — the metadata that makes file pruning and CoW
+    * file selection ZERO-I/O. */
   final case class Commit(
       version: Long,
       op: String,
-      adds: Seq[String],
+      adds: Seq[DataFile],
       removes: Seq[String],
       tag: Option[String],
       statsKey: Option[String] = None,
-      addStats: Seq[(Long, Long)] = Seq.empty,
-      addBlooms: Seq[String] = Seq.empty,
       check: Option[String] = None,
       dadds: Seq[String] = Seq.empty,
       statsCols: Seq[String] = Seq.empty,
-      addStatsN: Seq[Seq[(Long, Long)]] = Seq.empty,
-      addBloomsN: Seq[Seq[String]] = Seq.empty,
       evos: Seq[String] = Seq.empty,
-      addRows: Seq[Long] = Seq.empty,
       ts: Long = 0L,
       strCols: Seq[String] = Seq.empty,
       shCols: Seq[String] = Seq.empty,
       shN: Int = 0,
-      addShBlooms: Seq[Seq[String]] = Seq.empty,
       drows: Seq[Long] = Seq.empty,
       dsigs: Seq[String] = Seq.empty)
 
@@ -169,54 +182,46 @@ object TxTable {
 
   /** A resolved table state. `commits` holds only the SUFFIX folded on
     * top of the base checkpoint (the whole history when no checkpoint
-    * exists); `statsKey`/`fileStats`/`tags` are fully folded — they
-    * include everything the checkpoint consolidated. */
+    * exists); everything else is fully folded — it includes what the
+    * checkpoint consolidated. `live` holds the log's record of each of
+    * `files`. */
   final case class Snapshot(
       version: Long,
       files: Seq[String],
       commits: Seq[Commit],
       statsKey: Option[String],
-      fileStats: Map[String, (Long, Long)],
       tags: Set[String],
-      fileBlooms: Map[String, String] = Map.empty,
+      live: Map[String, DataFile] = Map.empty,
       check: Option[String] = None,
-      fileAddV: Map[String, Long] = Map.empty,
       ledgers: Seq[Ledger] = Seq.empty,
       statsCols: Seq[String] = Seq.empty,
-      fileStatsN: Map[String, Seq[(Long, Long)]] = Map.empty,
-      fileBloomsN: Map[String, Seq[String]] = Map.empty,
       evos: Seq[(Long, String)] = Seq.empty,
-      fileRows: Map[String, Long] = Map.empty,
       strCols: Seq[String] = Seq.empty,
       shingleCols: Seq[String] = Seq.empty,
-      shingleN: Int = 0,
-      fileShBlooms: Map[String, Seq[String]] = Map.empty) {
+      shingleN: Int = 0) {
+
+    /** The version that added `f` (MaxValue: not live). */
+    def addedAt(f: String): Long = live.get(f).fold(Long.MaxValue)(_.version)
 
     /** A schema evolution postdates some live file: reads reconcile
       * eras per file, so the file set cannot be taken by reference
       * (clone, adopt) nor scanned as one plain parquet relation. */
     private[graft] def pendingEvo: Boolean = evos.exists { case (v, _) =>
-      files.exists(f => fileAddV.getOrElse(f, Long.MaxValue) < v)
+      files.exists(addedAt(_) < v)
     }
 
     /** Logged [min,max] of stats column `col` in file `f` — long-
       * normalized, prefix64 codes for a STRING column (None = nothing
-      * recorded: never prune). The empty range (MaxValue, MinValue) is a
-      * real recording: every row of the file is NULL in that column. */
+      * recorded: never prune). */
     def statsOf(f: String, col: String): Option[(Long, Long)] =
-      if (statsKey.contains(col)) fileStats.get(f)
-      else statsCols.indexOf(col) match {
-        case -1 => None
-        case j => fileStatsN.get(f).flatMap(_.lift(j))
-      }
+      live.get(f).flatMap(d =>
+        if (statsKey.contains(col)) d.range else d.ranges.lift(statsCols.indexOf(col)))
 
     /** Logged key bloom (hex) of `col` in file `f`; "" = none recorded. */
     def bloomOf(f: String, col: String): String =
-      if (statsKey.contains(col)) fileBlooms.getOrElse(f, "")
-      else statsCols.indexOf(col) match {
-        case -1 => ""
-        case j => fileBloomsN.get(f).flatMap(_.lift(j)).getOrElse("")
-      }
+      live.get(f).flatMap(d =>
+        if (statsKey.contains(col)) d.bloom else d.blooms.lift(statsCols.indexOf(col)))
+        .getOrElse("")
 
     /** The live files `cond` might match, decided from the log alone by
       * [[GraftSkipping.provesEmpty]]: a file is dropped only when its
@@ -238,7 +243,7 @@ object TxTable {
   }
 
   private val emptySnapshot =
-    Snapshot(-1L, Seq.empty, Seq.empty, None, Map.empty, Set.empty)
+    Snapshot(-1L, Seq.empty, Seq.empty, None, Set.empty)
 
   /** Result of a transactional write. */
   final case class CommitResult(version: Long, attempts: Int, skipped: Boolean)
@@ -250,163 +255,144 @@ object TxTable {
     logDir(root).resolve(f"$v%020d.json")
 
   // ------------------------------------------------------------- log I/O
-  // hand-rolled JSON (flat strings/longs only) — same policy as Verify:
-  // no json library dependency
-  private def esc(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    }
+  /** The JSON mapper of every log (tree model only), shared with
+    * [[SnapshotGroup]]. */
+  private[operators] val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
-  private def render(c: Commit): String = {
-    def arr(xs: Seq[String]) = xs.map(x => "\"" + esc(x) + "\"").mkString("[", ",", "]")
-    val tag = c.tag.map(t => s""","tag":"${esc(t)}"""").getOrElse("")
-    val sk = c.statsKey.map(k => s""","statskey":"${esc(k)}"""").getOrElse("")
-    val ck = c.check.map(k => s""","check":"${esc(k)}"""").getOrElse("")
-    val st =
-      if (c.addStats.isEmpty) ""
-      else s""","amin":${c.addStats.map(_._1).mkString("[", ",", "]")}""" +
-        s""","amax":${c.addStats.map(_._2).mkString("[", ",", "]")}"""
-    val bl =
-      if (c.addBlooms.isEmpty) ""
-      else s""","abloom":${arr(c.addBlooms)}"""
-    val da =
-      if (c.dadds.isEmpty) ""
-      else s""","dadds":${arr(c.dadds)}""" +
-        (if (c.drows.isEmpty) ""
-         else s""","drows":${c.drows.mkString("[", ",", "]")}""") +
-        (if (c.dsigs.isEmpty) "" else s""","dsigs":${arr(c.dsigs)}""")
-    // SECONDARY stats columns (declared at create): per column j, min/max
-    // (+bloom) arrays aligned with adds — the metadata that makes pruning
-    // on a NON-primary dimension log-only after a z-order OPTIMIZE
-    val sc =
-      if (c.statsCols.isEmpty) ""
-      else s""","statscols":${arr(c.statsCols)}"""
-    // which statsCols are STRING-typed (prefix64-encoded stats domain)
-    // — the marker that keeps numeric pruning/aggregate paths from
-    // misreading encoded bounds as values
-    val scS =
-      if (c.strCols.isEmpty) ""
-      else s""","strcols":${arr(c.strCols)}"""
-    // SHINGLE (word n-gram) bloom declaration + per-file blooms: the
-    // phrase-probe index — files a benchmark n-gram could hide in,
-    // decided from the log alone
-    val shDecl =
-      if (c.shCols.isEmpty) ""
-      else s""","shcols":${arr(c.shCols)},"shn":${c.shN}"""
-    val shBl = c.addShBlooms.zipWithIndex.collect {
-      case (bs, j) if bs.nonEmpty => s""","ash_$j":${arr(bs)}"""
-    }.mkString
-    val stN = c.addStatsN.zipWithIndex.collect {
-      case (ss, j) if ss.nonEmpty =>
-        s""","amin_$j":${ss.map(_._1).mkString("[", ",", "]")}""" +
-          s""","amax_$j":${ss.map(_._2).mkString("[", ",", "]")}"""
-    }.mkString
-    val blN = c.addBloomsN.zipWithIndex.collect {
-      case (bs, j) if bs.nonEmpty => s""","abloom_$j":${arr(bs)}"""
-    }.mkString
-    // schema-evolution ops ("rename:from:to" / "widen:col:type") — reads
-    // apply them to every data file the op POSTDATES
-    val ev =
-      if (c.evos.isEmpty) ""
-      else s""","evops":${arr(c.evos)}"""
-    // per-file row counts (parquet footer metadata captured at publish)
-    // — what makes count(*) and file-size accounting log-only reads
-    val ar =
-      if (c.addRows.isEmpty) ""
-      else s""","arows":${c.addRows.mkString("[", ",", "]")}"""
-    // commit wall-clock (epoch millis, publish-monotonic) — what
-    // TIMESTAMP AS OF resolves against; 0 = pre-timestamp commit
-    val cts = if (c.ts > 0) s""","ts":${c.ts}""" else ""
-    s"""{"version":${c.version},"op":"${esc(c.op)}","adds":${arr(c.adds)},"removes":${arr(c.removes)}$tag$sk$ck$st$bl$da$sc$scS$shDecl$shBl$stN$blN$ev$ar$cts}"""
+  /** Publish `body` at `slot` only if the slot is free: write it to a
+    * uniquely-named tmp file beside the slot, then hard-link that into
+    * place — a hard link is an ATOMIC create-if-absent on POSIX (unlike
+    * rename, which silently overwrites). False = another writer holds
+    * the slot. */
+  private[operators] def publishOnce(slot: Path, body: String): Boolean = {
+    val tmp = slot.resolveSibling(s".tmp-${java.util.UUID.randomUUID()}")
+    Files.writeString(tmp, body)
+    try { Files.createLink(slot, tmp); true }
+    catch { case _: java.nio.file.FileAlreadyExistsException => false }
+    finally Files.deleteIfExists(tmp)
   }
 
-  // minimal JSON field readers for the exact shapes render() writes
-  private def strField(json: String, k: String): Option[String] = {
-    val m = ("\"" + k + "\":\"").r.findFirstMatchIn(json)
-    m.map { mm =>
-      val sb = new StringBuilder; var i = mm.end; var done = false
-      while (!done) json.charAt(i) match {
-        case '\\' => sb.append(json.charAt(i + 1)); i += 2
-        case '"' => done = true
-        case c => sb.append(c); i += 1
-      }
-      sb.toString
-    }
+  private type Obj = com.fasterxml.jackson.databind.node.ObjectNode
+  private def putStrs(o: Obj, k: String, xs: Seq[String]): Unit = {
+    val a = o.putArray(k); xs.foreach(x => a.add(x))
+  }
+  private def putLongs(o: Obj, k: String, xs: Seq[Long]): Unit = {
+    val a = o.putArray(k); xs.foreach(x => a.add(x))
+  }
+  private def putRanges(o: Obj, lo: String, hi: String, rs: Seq[(Long, Long)]): Unit = {
+    putLongs(o, lo, rs.map(_._1)); putLongs(o, hi, rs.map(_._2))
   }
 
-  // quote-aware array scanner: a raw split on ',' would truncate any
-  // element whose VALUE contains ',' or ']' (a ledger signature carrying
-  // a catalogString type like decimal(10,2), a path with a comma), and
-  // worse, misalign every element after it. Walk the body tracking
-  // in-string state, reversing esc()'s escapes, and only treat ','/']'
-  // as structure when outside a quoted string.
-  private def arrField(json: String, k: String): Seq[String] = {
-    val start = json.indexOf("\"" + k + "\":[")
-    if (start < 0) Seq.empty
-    else {
-      val out = scala.collection.mutable.ArrayBuffer.empty[String]
-      val sb = new StringBuilder
-      var i = start + k.length + 4
-      var inStr = false; var quoted = false; var done = false
-      def flush(atEnd: Boolean): Unit = {
-        val bare = sb.toString.trim
-        if (quoted || bare.nonEmpty || !atEnd) out += (if (quoted) sb.toString else bare)
-        sb.clear(); quoted = false
-      }
-      while (!done) json.charAt(i) match {
-        case '\\' if inStr =>
-          json.charAt(i + 1) match {
-            case 'n' => sb.append('\n'); i += 2
-            case 'u' =>
-              sb.append(Integer.parseInt(json.substring(i + 2, i + 6), 16).toChar)
-              i += 6
-            case c => sb.append(c); i += 2
-          }
-        case '"' => inStr = !inStr; quoted = true; i += 1
-        case ',' if !inStr => flush(atEnd = false); i += 1
-        case ']' if !inStr => flush(atEnd = true); done = true
-        case c => if (inStr || !c.isWhitespace) sb.append(c); i += 1
-      }
-      out.toSeq
-    }
+  /** Typed reads of one log object; an absent key reads as empty. */
+  private final class Fields(json: String) {
+    private val n = mapper.readTree(json)
+    def str(k: String): Option[String] = Option(n.get(k)).map(_.asText)
+    def long(k: String): Option[Long] = Option(n.get(k)).map(_.asLong)
+    private def arr[T](k: String)(f: com.fasterxml.jackson.databind.JsonNode => T): Seq[T] =
+      Option(n.get(k)).fold(Seq.empty[T])(a => (0 until a.size).map(i => f(a.get(i))))
+    def strs(k: String): Seq[String] = arr(k)(_.asText)
+    def longs(k: String): Seq[Long] = arr(k)(_.asLong)
+    def ranges(lo: String, hi: String): Seq[(Long, Long)] = longs(lo).zip(longs(hi))
   }
 
-  private def numArrField(json: String, k: String): Seq[Long] =
-    arrField(json, k).map(_.toLong)
+  /** THE LOG FORMAT: one JSON object per file, keys in the order below,
+    * a key left out when it has nothing to record. `<v>.json` is commit
+    * v; every per-add array aligns by index with `adds`:
+    *
+    *  - `version`, `op`, `adds`, `removes` (table-relative paths)
+    *  - `tag`: the idempotence identity
+    *  - `statskey`, `check`: the declared primary stats key and CHECK
+    *    predicate (create and clone commits)
+    *  - `amin`, `amax`: each add's primary [min, max]; written only when
+    *    every add has one, read positionally
+    *  - `abloom`: each add's primary key bloom (hex; "" = none)
+    *  - `dadds`: delete ledgers added (`@a;b` = aliased onto data files),
+    *    with `drows` (row counts, -1 unknown) and `dsigs` (key
+    *    signatures) aligned with it
+    *  - `statscols`, `strcols` (the STRING ones), `shcols` + `shn`: the
+    *    secondary stats and shingle declarations (create and clone)
+    *  - `ash_<j>`: each add's shingle bloom of `shcols(j)`
+    *  - `amin_<j>`, `amax_<j>`, `abloom_<j>`: each add's range and bloom
+    *    of `statscols(j)`
+    *  - `evops`: schema-evolution ops (`rename:from:to`, `widen:col:type`)
+    *    that apply to every file the commit postdates
+    *  - `arows`: each add's row count (-1 unknown)
+    *  - `ts`: the commit's wall clock, epoch millis (absent: 0)
+    *
+    * The `_<j>` keys are probed j = 0, 1, ... until one is missing; a
+    * `_<j>` family, like `arows`, applies only when all its arrays align
+    * with `adds`.
+    *
+    * `<v>.ckpt.json` is the state folded at v; per-file arrays align with
+    * `files`, and "" / -1 mark a file without a bloom / row count:
+    *
+    *  - `version`, `files`, `tags` (sorted), `statskey`, `check`
+    *  - `fmin`, `fmax`: only while EVERY file has a primary range
+    *  - `fbloom`: when any file has a primary bloom
+    *  - `fver`: the version that added each file (always written)
+    *  - `dfiles`, `dvers`, `drows`, `dsigs`: the live delete ledgers
+    *  - `statscols`, `strcols`, `shcols` + `shn`
+    *  - `fsh_<j>`: for every shingle column, when any file has blooms
+    *  - `fmin_<j>`, `fmax_<j>`: only while every file has every
+    *    secondary range (partial coverage drops to full reads)
+    *  - `fbloom_<j>`: for every stats column, when any file has blooms
+    *  - `evv`, `evo`: schema evolutions with their commit versions
+    *  - `frows`: when any file has a row count
+    *
+    * The golden log-format case in `TxTableSpec` pins these bytes. */
+  private[graft] def render(c: Commit): String = {
+    val o = mapper.createObjectNode().put("version", c.version).put("op", c.op)
+    val a = c.adds
+    putStrs(o, "adds", a.map(_.path)); putStrs(o, "removes", c.removes)
+    c.tag.foreach(t => o.put("tag", t))
+    c.statsKey.foreach(k => o.put("statskey", k))
+    c.check.foreach(k => o.put("check", k))
+    if (a.nonEmpty && a.forall(_.range.isDefined))
+      putRanges(o, "amin", "amax", a.flatMap(_.range))
+    if (a.exists(_.bloom.isDefined))
+      putStrs(o, "abloom", a.map(_.bloom.getOrElse("")))
+    if (c.dadds.nonEmpty) {
+      putStrs(o, "dadds", c.dadds)
+      if (c.drows.nonEmpty) putLongs(o, "drows", c.drows)
+      if (c.dsigs.nonEmpty) putStrs(o, "dsigs", c.dsigs)
+    }
+    if (c.statsCols.nonEmpty) putStrs(o, "statscols", c.statsCols)
+    if (c.strCols.nonEmpty) putStrs(o, "strcols", c.strCols)
+    if (c.shCols.nonEmpty) { putStrs(o, "shcols", c.shCols); o.put("shn", c.shN) }
+    // the per-column families every add has
+    def cols(n: DataFile => Int): Range = 0 until a.map(n).minOption.getOrElse(0)
+    cols(_.shBlooms.size).foreach(j => putStrs(o, s"ash_$j", a.map(_.shBlooms(j))))
+    cols(_.ranges.size).foreach(j =>
+      putRanges(o, s"amin_$j", s"amax_$j", a.map(_.ranges(j))))
+    cols(_.blooms.size).foreach(j => putStrs(o, s"abloom_$j", a.map(_.blooms(j))))
+    if (c.evos.nonEmpty) putStrs(o, "evops", c.evos)
+    if (a.nonEmpty) putLongs(o, "arows", a.map(_.rows))
+    if (c.ts > 0) o.put("ts", c.ts)
+    mapper.writeValueAsString(o)
+  }
 
-  private def parse(json: String): Commit = {
-    val v = "\"version\":(\\d+)".r.findFirstMatchIn(json)
-      .map(_.group(1).toLong)
-      .getOrElse(throw new IllegalStateException(s"corrupt commit: $json"))
-    // secondary stats/bloom arrays: probe j = 0, 1, ... until absent
-    val statsN = Iterator.from(0)
-      .map(j => numArrField(json, s"amin_$j").zip(numArrField(json, s"amax_$j")))
-      .takeWhile(_.nonEmpty).toSeq
-    val bloomsN = Iterator.from(0)
-      .map(j => arrField(json, s"abloom_$j"))
-      .takeWhile(_.nonEmpty).toSeq
-    Commit(v, strField(json, "op").getOrElse("?"), arrField(json, "adds"),
-      arrField(json, "removes"), strField(json, "tag"),
-      strField(json, "statskey"),
-      numArrField(json, "amin").zip(numArrField(json, "amax")),
-      arrField(json, "abloom"),
-      strField(json, "check"),
-      arrField(json, "dadds"),
-      arrField(json, "statscols"),
-      statsN, bloomsN,
-      arrField(json, "evops"),
-      numArrField(json, "arows"),
-      "\"ts\":(\\d+)".r.findFirstMatchIn(json)
-        .map(_.group(1).toLong).getOrElse(0L),
-      arrField(json, "strcols"),
-      arrField(json, "shcols"),
-      "\"shn\":(\\d+)".r.findFirstMatchIn(json)
-        .map(_.group(1).toInt).getOrElse(0),
-      Iterator.from(0).map(j => arrField(json, s"ash_$j"))
-        .takeWhile(_.nonEmpty).toSeq,
-      numArrField(json, "drows"),
-      arrField(json, "dsigs"))
+  /** Decode a commit written by [[render]]. */
+  private[graft] def parse(json: String): Commit = {
+    val r = new Fields(json)
+    val paths = r.strs("adds")
+    def probe[T](col: Int => Seq[T]): Int => Seq[T] = {
+      val cs = Iterator.from(0).map(col).takeWhile(_.nonEmpty).toSeq
+      if (cs.forall(_.size == paths.size)) i => cs.map(_(i)) else _ => Seq.empty
+    }
+    val ranges = r.ranges("amin", "amax"); val blooms = r.strs("abloom")
+    val rangesN = probe(j => r.ranges(s"amin_$j", s"amax_$j"))
+    val bloomsN = probe(j => r.strs(s"abloom_$j"))
+    val shBlooms = probe(j => r.strs(s"ash_$j"))
+    val rows = Some(r.longs("arows")).filter(_.size == paths.size)
+    Commit(
+      r.long("version").getOrElse(throw new IllegalStateException(s"corrupt commit: $json")),
+      r.str("op").getOrElse("?"),
+      paths.indices.map(i => DataFile(paths(i), ranges.lift(i), blooms.lift(i),
+        rangesN(i), bloomsN(i), rows.fold(-1L)(_(i)), shBlooms(i))),
+      r.strs("removes"), r.str("tag"), r.str("statskey"), r.str("check"),
+      r.strs("dadds"), r.strs("statscols"), r.strs("evops"),
+      r.long("ts").getOrElse(0L), r.strs("strcols"), r.strs("shcols"),
+      r.long("shn").fold(0)(_.toInt), r.longs("drows"), r.strs("dsigs"))
   }
 
   /** Every `checkpointInterval` commits the winner consolidates the live
@@ -420,81 +406,66 @@ object TxTable {
   private def ckptPath(root: String, v: Long): Path =
     logDir(root).resolve(f"$v%020d.ckpt.json")
 
-  private def renderCkpt(s: Snapshot): String = {
-    def arr(xs: Seq[String]) = xs.map(x => "\"" + esc(x) + "\"").mkString("[", ",", "]")
-    val sk = s.statsKey.map(k => s""","statskey":"${esc(k)}"""").getOrElse("")
-    val ck = s.check.map(k => s""","check":"${esc(k)}"""").getOrElse("")
-    val st =
-      if (s.files.forall(s.fileStats.contains) && s.files.nonEmpty && s.fileStats.nonEmpty)
-        s""","fmin":${s.files.map(f => s.fileStats(f)._1).mkString("[", ",", "]")}""" +
-          s""","fmax":${s.files.map(f => s.fileStats(f)._2).mkString("[", ",", "]")}"""
-      else ""
-    // blooms consolidate aligned with files; "" marks a file without one
-    // (pre-bloom commits) — membership then stays conservative
-    val bl =
-      if (s.fileBlooms.nonEmpty)
-        s""","fbloom":${arr(s.files.map(f => s.fileBlooms.getOrElse(f, "")))}"""
-      else ""
-    // per-file add versions + live delete ledgers must survive the
-    // consolidation: merge-on-read applicability is an ORDER between them
-    val fv =
-      s""","fver":${s.files.map(f =>
-        s.fileAddV.getOrElse(f, 0L)).mkString("[", ",", "]")}"""
-    val dl =
-      if (s.ledgers.isEmpty) ""
-      else s""","dfiles":${arr(s.ledgers.map(_.path))}""" +
-        s""","dvers":${s.ledgers.map(_.version).mkString("[", ",", "]")}""" +
-        s""","drows":${s.ledgers.map(_.rows).mkString("[", ",", "]")}""" +
-        s""","dsigs":${arr(s.ledgers.map(_.sig))}"""
-    // secondary stats consolidate only while COMPLETE (every live file
-    // covered) — partial coverage drops to conservative full reads rather
-    // than misaligning; "" marks a file without a bloom, as for primary
-    val sc =
-      if (s.statsCols.isEmpty) ""
-      else s""","statscols":${arr(s.statsCols)}"""
-    val scS =
-      if (s.strCols.isEmpty) ""
-      else s""","strcols":${arr(s.strCols)}"""
-    // shingle-bloom declaration + per-file blooms consolidate aligned
-    // with files; "" marks a file without one (conservative keep)
-    val shDecl =
-      if (s.shingleCols.isEmpty) ""
-      else s""","shcols":${arr(s.shingleCols)},"shn":${s.shingleN}"""
-    val shBl =
-      if (s.fileShBlooms.nonEmpty)
-        s.shingleCols.indices.map { j =>
-          s""","fsh_$j":${arr(s.files.map(f =>
-            s.fileShBlooms.get(f).flatMap(_.lift(j)).getOrElse("")))}"""
-        }.mkString
-      else ""
-    val stN =
-      if (s.statsCols.nonEmpty && s.files.nonEmpty &&
-          s.files.forall(f => s.fileStatsN.get(f).exists(_.length == s.statsCols.length)))
-        s.statsCols.indices.map { j =>
-          s""","fmin_$j":${s.files.map(f => s.fileStatsN(f)(j)._1).mkString("[", ",", "]")}""" +
-            s""","fmax_$j":${s.files.map(f => s.fileStatsN(f)(j)._2).mkString("[", ",", "]")}"""
-        }.mkString
-      else ""
-    val blN =
-      if (s.fileBloomsN.nonEmpty)
-        s.statsCols.indices.map { j =>
-          s""","fbloom_$j":${arr(s.files.map(f =>
-            s.fileBloomsN.get(f).flatMap(_.lift(j)).getOrElse("")))}"""
-        }.mkString
-      else ""
-    // schema-evolution ops persist with their commit versions: era
-    // grouping at read time needs the op-vs-file-add ORDER
-    val ev =
-      if (s.evos.isEmpty) ""
-      else s""","evv":${s.evos.map(_._1).mkString("[", ",", "]")}""" +
-        s""","evo":${arr(s.evos.map(_._2))}"""
-    // per-file row counts, aligned with files; -1 = unknown (pre-count
-    // commits) — metadata-only aggregates then scan those files
-    val fr =
-      if (s.fileRows.isEmpty) ""
-      else s""","frows":${s.files.map(f =>
-        s.fileRows.getOrElse(f, -1L)).mkString("[", ",", "]")}"""
-    s"""{"version":${s.version},"files":${arr(s.files)},"tags":${arr(s.tags.toSeq.sorted)}$sk$ck$st$bl$fv$dl$sc$scS$shDecl$shBl$stN$blN$ev$fr}"""
+  /** Encode `s` as a checkpoint (format: [[render]]). */
+  private[graft] def renderCkpt(s: Snapshot): String = {
+    val o = mapper.createObjectNode().put("version", s.version)
+    val fs = s.files.map(s.live)
+    putStrs(o, "files", s.files); putStrs(o, "tags", s.tags.toSeq.sorted)
+    s.statsKey.foreach(k => o.put("statskey", k))
+    s.check.foreach(k => o.put("check", k))
+    if (fs.nonEmpty && fs.forall(_.range.isDefined))
+      putRanges(o, "fmin", "fmax", fs.flatMap(_.range))
+    if (fs.exists(_.bloom.isDefined)) putStrs(o, "fbloom", fs.map(_.bloom.getOrElse("")))
+    putLongs(o, "fver", fs.map(_.version))
+    if (s.ledgers.nonEmpty) {
+      putStrs(o, "dfiles", s.ledgers.map(_.path))
+      putLongs(o, "dvers", s.ledgers.map(_.version))
+      putLongs(o, "drows", s.ledgers.map(_.rows))
+      putStrs(o, "dsigs", s.ledgers.map(_.sig))
+    }
+    if (s.statsCols.nonEmpty) putStrs(o, "statscols", s.statsCols)
+    if (s.strCols.nonEmpty) putStrs(o, "strcols", s.strCols)
+    if (s.shingleCols.nonEmpty) {
+      putStrs(o, "shcols", s.shingleCols); o.put("shn", s.shingleN)
+    }
+    if (fs.exists(_.shBlooms.nonEmpty)) s.shingleCols.indices.foreach(j =>
+      putStrs(o, s"fsh_$j", fs.map(_.shBlooms.lift(j).getOrElse(""))))
+    if (fs.nonEmpty && s.statsCols.nonEmpty &&
+        fs.forall(_.ranges.length == s.statsCols.length))
+      s.statsCols.indices.foreach(j =>
+        putRanges(o, s"fmin_$j", s"fmax_$j", fs.map(_.ranges(j))))
+    if (fs.exists(_.blooms.nonEmpty)) s.statsCols.indices.foreach(j =>
+      putStrs(o, s"fbloom_$j", fs.map(_.blooms.lift(j).getOrElse(""))))
+    if (s.evos.nonEmpty) {
+      putLongs(o, "evv", s.evos.map(_._1)); putStrs(o, "evo", s.evos.map(_._2))
+    }
+    if (fs.exists(_.rows >= 0)) putLongs(o, "frows", fs.map(_.rows))
+    mapper.writeValueAsString(o)
+  }
+
+  /** Decode a checkpoint written by [[renderCkpt]] (no commits). */
+  private[graft] def parseCkpt(json: String): Snapshot = {
+    val r = new Fields(json)
+    val files = r.strs("files")
+    val statsCols = r.strs("statscols"); val shCols = r.strs("shcols")
+    val ranges = r.ranges("fmin", "fmax"); val blooms = r.strs("fbloom")
+    val vers = r.longs("fver"); val rows = r.longs("frows")
+    val rangesN = statsCols.indices.map(j => r.ranges(s"fmin_$j", s"fmax_$j"))
+    val bloomsN = statsCols.indices.map(j => r.strs(s"fbloom_$j"))
+    val shBlooms = shCols.indices.map(j => r.strs(s"fsh_$j"))
+    val dvs = r.longs("dvers"); val drs = r.longs("drows"); val dss = r.strs("dsigs")
+    Snapshot(r.long("version").getOrElse(-1L), files, Seq.empty, r.str("statskey"),
+      r.strs("tags").toSet,
+      files.indices.map(i => files(i) -> DataFile(files(i), ranges.lift(i),
+        blooms.lift(i).filter(_.nonEmpty), rangesN.flatMap(_.lift(i)),
+        bloomsN.flatMap(_.lift(i)), rows.lift(i).getOrElse(-1L),
+        shBlooms.flatMap(_.lift(i)), vers.lift(i).getOrElse(0L))).toMap,
+      r.str("check"),
+      r.strs("dfiles").zipWithIndex.map { case (p, i) =>
+        Ledger(p, dvs(i), drs.lift(i).getOrElse(-1L), dss.lift(i).getOrElse(""))
+      },
+      statsCols, r.longs("evv").zip(r.strs("evo")), r.strs("strcols"), shCols,
+      r.long("shn").fold(0)(_.toInt))
   }
 
   /** Best-effort checkpoint after a winning commit; losing the ckpt race
@@ -503,14 +474,8 @@ object TxTable {
     if (version > 0 && version % checkpointInterval == 0)
       try {
         val s = snapshot(root, version)
-        if (s.version == version && !Files.exists(ckptPath(root, version))) {
-          val tmp = logDir(root).resolve(
-            s".tmp-ckpt-${java.util.UUID.randomUUID().toString}")
-          Files.writeString(tmp, renderCkpt(s))
-          try Files.createLink(ckptPath(root, version), tmp)
-          catch { case _: java.nio.file.FileAlreadyExistsException => () }
-          finally Files.deleteIfExists(tmp)
-        }
+        if (s.version == version && !Files.exists(ckptPath(root, version)))
+          publishOnce(ckptPath(root, version), renderCkpt(s))
       } catch {
         case NonFatal(e) =>
           System.err.println(s"[txtable] checkpoint v$version failed: ${e.getMessage}")
@@ -548,76 +513,9 @@ object TxTable {
             "the oldest checkpoint was archived")
       return emptySnapshot
     }
-    val live = scala.collection.mutable.LinkedHashSet.empty[String]
-    val stats = scala.collection.mutable.LinkedHashMap.empty[String, (Long, Long)]
-    val blooms = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    val tags = scala.collection.mutable.LinkedHashSet.empty[String]
-    val addV = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    val ledgers = scala.collection.mutable.ArrayBuffer.empty[Ledger]
-    val statsN = scala.collection.mutable.LinkedHashMap.empty[String, Seq[(Long, Long)]]
-    val bloomsN = scala.collection.mutable.LinkedHashMap.empty[String, Seq[String]]
-    val evos = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
-    val rows = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    var statsKey: Option[String] = None
-    var statsCols: Seq[String] = Seq.empty
-    var strCols: Seq[String] = Seq.empty
-    var shingleCols: Seq[String] = Seq.empty
-    var shingleN: Int = 0
-    val shBlooms = scala.collection.mutable.LinkedHashMap.empty[String, Seq[String]]
-    var check: Option[String] = None
-    if (base >= 0) {
-      val j = Files.readString(ckptPath(root, base))
-      val files = arrField(j, "files")
-      live ++= files
-      val mins = numArrField(j, "fmin"); val maxs = numArrField(j, "fmax")
-      if (mins.nonEmpty)
-        files.zip(mins.zip(maxs)).foreach { case (f, st) => stats(f) = st }
-      val bl = arrField(j, "fbloom")
-      if (bl.nonEmpty)
-        files.zip(bl).foreach { case (f, b) => if (b.nonEmpty) blooms(f) = b }
-      tags ++= arrField(j, "tags")
-      statsKey = strField(j, "statskey")
-      statsCols = arrField(j, "statscols")
-      strCols = arrField(j, "strcols")
-      shingleCols = arrField(j, "shcols")
-      shingleN = "\"shn\":(\\d+)".r.findFirstMatchIn(j)
-        .map(_.group(1).toInt).getOrElse(0)
-      shingleCols.indices.foreach { jj =>
-        val bs = arrField(j, s"fsh_$jj")
-        if (bs.nonEmpty) files.zip(bs).foreach { case (f, b) =>
-          shBlooms(f) = shBlooms.getOrElse(f, Seq.empty) :+ b
-        }
-      }
-      check = strField(j, "check")
-      statsCols.indices.foreach { jj =>
-        val mnN = numArrField(j, s"fmin_$jj"); val mxN = numArrField(j, s"fmax_$jj")
-        if (mnN.nonEmpty) files.zip(mnN.zip(mxN)).foreach { case (f, st) =>
-          statsN(f) = statsN.getOrElse(f, Seq.empty) :+ st
-        }
-        // "" placeholders stay: the Seq is POSITIONAL (aligned with
-        // statsCols); probes treat "" as bloom-absent
-        val blN = arrField(j, s"fbloom_$jj")
-        if (blN.nonEmpty) files.zip(blN).foreach { case (f, b) =>
-          bloomsN(f) = bloomsN.getOrElse(f, Seq.empty) :+ b
-        }
-      }
-      val fv = numArrField(j, "fver")
-      files.zipAll(fv, "", 0L).foreach { case (f, v) =>
-        if (f.nonEmpty) addV(f) = v
-      }
-      val fr = numArrField(j, "frows")
-      if (fr.nonEmpty)
-        files.zip(fr).foreach { case (f, n) => if (n >= 0) rows(f) = n }
-      locally {
-        val dfs = arrField(j, "dfiles"); val dvs = numArrField(j, "dvers")
-        val drs = numArrField(j, "drows"); val dss = arrField(j, "dsigs")
-        ledgers ++= dfs.zipWithIndex.map { case (p, i) =>
-          Ledger(p, dvs(i), drs.lift(i).getOrElse(-1L),
-            dss.lift(i).getOrElse(""))
-        }
-      }
-      evos ++= numArrField(j, "evv").zip(arrField(j, "evo"))
-    }
+    val start =
+      if (base >= 0) parseCkpt(Files.readString(ckptPath(root, base)))
+      else emptySnapshot
     val suffix = ((base + 1) to upTo).map { i =>
       try parse(Files.readString(commitPath(root, i)))
       catch {
@@ -627,34 +525,17 @@ object TxTable {
               "history truncated without a covering checkpoint", e)
       }
     }
+    // ONE ordered map of live files: adds insert (a re-add keeps its
+    // place), removes delete
+    val live = scala.collection.mutable.LinkedHashMap.from(
+      start.files.map(f => f -> start.live(f)))
+    val ledgers = scala.collection.mutable.ArrayBuffer.from(start.ledgers)
+    val evos = scala.collection.mutable.ArrayBuffer.from(start.evos)
+    val tags = scala.collection.mutable.Set.from(start.tags)
+    var decl = start
     suffix.foreach { c =>
-      live ++= c.adds; live --= c.removes
-      c.adds.foreach(f => addV(f) = c.version)
-      if (c.addStats.nonEmpty)
-        c.adds.zip(c.addStats).foreach { case (f, st) => stats(f) = st }
-      if (c.addBlooms.nonEmpty)
-        c.adds.zip(c.addBlooms).foreach { case (f, b) => blooms(f) = b }
-      if (c.addStatsN.nonEmpty && c.addStatsN.forall(_.size == c.adds.size))
-        c.adds.zipWithIndex.foreach { case (f, i) =>
-          statsN(f) = c.addStatsN.map(_(i))
-        }
-      if (c.addBloomsN.nonEmpty && c.addBloomsN.forall(_.size == c.adds.size))
-        c.adds.zipWithIndex.foreach { case (f, i) =>
-          bloomsN(f) = c.addBloomsN.map(_(i))
-        }
-      if (c.addShBlooms.nonEmpty && c.addShBlooms.forall(_.size == c.adds.size))
-        c.adds.zipWithIndex.foreach { case (f, i) =>
-          shBlooms(f) = c.addShBlooms.map(_(i))
-        }
-      if (c.addRows.size == c.adds.size)
-        c.adds.zip(c.addRows).foreach { case (f, n) => if (n >= 0) rows(f) = n }
-      c.removes.foreach(stats.remove)
-      c.removes.foreach(blooms.remove)
-      c.removes.foreach(addV.remove)
-      c.removes.foreach(statsN.remove)
-      c.removes.foreach(bloomsN.remove)
-      c.removes.foreach(shBlooms.remove)
-      c.removes.foreach(rows.remove)
+      c.adds.foreach(a => live(a.path) = a.copy(version = c.version))
+      c.removes.foreach(live.remove)
       c.dadds.zipWithIndex.foreach { case (p, i) =>
         ledgers += Ledger(p, c.version, c.drows.lift(i).getOrElse(-1L),
           c.dsigs.lift(i).getOrElse(""))
@@ -664,25 +545,15 @@ object TxTable {
         val gone = c.removes.toSet
         ledgers.filterInPlace(l => !gone.contains(l.path))
       }
-      c.tag.foreach(tags += _)
-      if (c.version == 0L) {
-        statsKey = c.statsKey; statsCols = c.statsCols; check = c.check
-        strCols = c.strCols
-        shingleCols = c.shCols; shingleN = c.shN
-      }
+      tags ++= c.tag
+      if (c.version == 0L)
+        decl = decl.copy(statsKey = c.statsKey, check = c.check,
+          statsCols = c.statsCols, strCols = c.strCols,
+          shingleCols = c.shCols, shingleN = c.shN)
     }
-    // drop stats for files no longer live (removed after the checkpoint)
-    val liveStats = stats.filter { case (f, _) => live.contains(f) }
-    val liveBlooms = blooms.filter { case (f, _) => live.contains(f) }
-    val liveAddV = addV.filter { case (f, _) => live.contains(f) }
-    val liveStatsN = statsN.filter { case (f, _) => live.contains(f) }
-    val liveBloomsN = bloomsN.filter { case (f, _) => live.contains(f) }
-    val liveRows = rows.filter { case (f, _) => live.contains(f) }
-    val liveShBlooms = shBlooms.filter { case (f, _) => live.contains(f) }
-    Snapshot(upTo, live.toSeq, suffix, statsKey, liveStats.toMap, tags.toSet,
-      liveBlooms.toMap, check, liveAddV.toMap, ledgers.toSeq,
-      statsCols, liveStatsN.toMap, liveBloomsN.toMap, evos.toSeq,
-      liveRows.toMap, strCols, shingleCols, shingleN, liveShBlooms.toMap)
+    decl.copy(version = upTo, files = live.keys.toVector, commits = suffix,
+      tags = tags.toSet, live = live.toMap, ledgers = ledgers.toSeq,
+      evos = evos.toSeq)
   }
 
   /** Snapshot-isolated read (optionally at a historical version).
@@ -761,7 +632,7 @@ object TxTable {
         else None))
     else {
       files.groupBy { f =>
-        val av = snap.fileAddV.getOrElse(f, Long.MaxValue)
+        val av = snap.addedAt(f)
         evos.count(_._1 > av) // pending ops form a suffix of the order
       }.toSeq.sortBy(_._1)
         .map { case (pending, fs) =>
@@ -895,7 +766,7 @@ object TxTable {
     // kept files; zombie ledgers awaiting retirement cost nothing)
     val sorted = snap.ledgers.sortBy(_.version).filter(l =>
       files.exists(f =>
-        snap.fileAddV.getOrElse(f, Long.MaxValue) < l.version))
+        snap.addedAt(f) < l.version))
     if (sorted.isEmpty || files.isEmpty) readFilesEvolved(spark, root, snap, files)
     else {
       // every staged batch lands in a fresh uuid dir, so the 2-segment
@@ -906,7 +777,7 @@ object TxTable {
       // group = index of the first ledger applying to the file (all
       // later ledgers apply too); sorted.length = none apply
       def firstApplicable(f: String): Int = {
-        val av = snap.fileAddV.getOrElse(f, Long.MaxValue)
+        val av = snap.addedAt(f)
         val i = sorted.indexWhere(_.version > av)
         if (i < 0) sorted.length else i
       }
@@ -1072,11 +943,11 @@ object TxTable {
       else readFilesEvolved(spark, root, snap, Seq(snap.files.head),
         useCachedSchema = false).limit(0)
     } else snap.commits.sortBy(-_.version).iterator
-      .flatMap(c => c.adds.map(_ -> c.version))
+      .flatMap(c => c.adds.map(_.path -> c.version))
       .find { case (f, _) => Files.exists(Paths.get(root, f)) } match {
         case Some((f, v)) =>
           readFilesEvolved(spark, root,
-            snap.copy(fileAddV = snap.fileAddV + (f -> v)), Seq(f),
+            snap.copy(live = snap.live + (f -> DataFile(f, version = v))), Seq(f),
             useCachedSchema = false).limit(0)
         case None => throw new IllegalStateException(
           s"table at $root has zero live files and no retained data file " +
@@ -1517,7 +1388,7 @@ object TxTable {
                                hashes: Seq[Long]): Seq[String] = {
     val j = snap.shingleCols.indexOf(column)
     snap.files.filter { f =>
-      snap.fileShBlooms.get(f).flatMap(_.lift(j)) match {
+      snap.live(f).shBlooms.lift(j) match {
         case Some(hex) if hex.nonEmpty =>
           val words = KeyBloom.fromHex(hex)
           hashes.forall(h => KeyBloom.mightContainWords(words, h))
@@ -1603,7 +1474,7 @@ object TxTable {
         morRead(spark, root, target, target.files))
     val restored = carried(target, target.files)
     commitLoop(root, tag, s"restore of $root") { now =>
-      Some(restored.commit(now.version + 1, "restore",
+      Some(Commit(now.version + 1, "restore", restored,
         now.files.diff(target.files) ++ now.ledgers.map(_.path), tag))
     }
   }
@@ -1724,18 +1595,18 @@ object TxTable {
     require(snap.version >= 0, s"not a TxTable (no committed log): $root")
     // a STRING stats column's logged bounds are prefix64 CODES, not
     // values — fall through to the scan path (count still folds from
-    // metadata via fileRows; min/max degrade to None via try_cast)
+    // metadata via logged row counts; min/max degrade to None via try_cast)
     val numeric = snap.statsKey.contains(column) || !snap.strCols.contains(column)
     def st(f: String): Option[(Long, Long)] =
       if (numeric) snap.statsOf(f, column) else None
     val sorted = snap.ledgers.sortBy(_.version)
     def ledgerScoped(f: String): Boolean = {
-      val av = snap.fileAddV.getOrElse(f, Long.MaxValue)
+      val av = snap.addedAt(f)
       sorted.exists(_.version > av)
     }
     val (scan, meta) = snap.files.partition(f =>
-      ledgerScoped(f) || !snap.fileRows.contains(f) || st(f).isEmpty)
-    var cnt = meta.map(snap.fileRows).sum
+      ledgerScoped(f) || snap.live(f).rows < 0 || st(f).isEmpty)
+    var cnt = meta.map(snap.live(_).rows).sum
     val ranges = meta.flatMap(st).filter(r => r._1 <= r._2) // skip empty/all-NULL
     var mn = if (ranges.isEmpty) None else Some(ranges.map(_._1).min)
     var mx = if (ranges.isEmpty) None else Some(ranges.map(_._2).max)
@@ -1805,46 +1676,25 @@ object TxTable {
     } :+ count(lit(1)).as("cnt")
   }
 
-  /** Data files staged (or carried by reference) for one commit, with
-    * the per-file metadata the commit records for them: primary and
-    * secondary stats and blooms, row counts (empty = [[tryPublish]]
-    * reads them from the footers) and shingle blooms. */
-  private final case class Staged(
-      files: Seq[String],
-      stats: Seq[(Long, Long)] = Seq.empty,
-      blooms: Seq[String] = Seq.empty,
-      statsN: Seq[Seq[(Long, Long)]] = Seq.empty,
-      bloomsN: Seq[Seq[String]] = Seq.empty,
-      rows: Seq[Long] = Seq.empty,
-      shBlooms: Seq[Seq[String]] = Seq.empty) {
-    /** The commit that adds these files with their metadata. */
-    def commit(version: Long, op: String, removes: Seq[String],
-               tag: Option[String]): Commit =
-      Commit(version, op, files, removes, tag, addStats = stats,
-        addBlooms = blooms, addStatsN = statsN, addBloomsN = bloomsN,
-        addRows = rows, addShBlooms = shBlooms)
-  }
-
   /** `files` carried BY REFERENCE from `s` (restore, clone, adopt), with
-    * the metadata `s`'s log holds for them. A MISSING stats entry means
-    * UNKNOWN range, not empty file: it carries as the full range, which
-    * keeps the file in every pruned read (the (MaxValue, MinValue)
-    * empty-file sentinel would make its rows vanish from them). A
-    * missing bloom carries as "" (none: keep), a missing row count as -1
-    * (unknown). */
-  private def carried(s: Snapshot, files: Seq[String]): Staged = {
+    * the records `s`'s log holds for them. A MISSING range means UNKNOWN,
+    * not empty file: it carries as the full range, which keeps the file
+    * in every pruned read (the (MaxValue, MinValue) empty-file sentinel
+    * would make its rows vanish from them). A missing bloom carries as
+    * "" (none: keep), a missing row count as -1 (unknown). */
+  private def carried(s: Snapshot, files: Seq[String]): Seq[DataFile] = {
     val full = (Long.MinValue, Long.MaxValue)
-    def perCol[T](n: Int, m: Map[String, Seq[T]], none: T) =
-      (0 until n).map(j => files.map(f => m.get(f).flatMap(_.lift(j)).getOrElse(none)))
-    Staged(files,
-      stats = if (s.statsKey.isEmpty) Seq.empty
-        else files.map(s.fileStats.getOrElse(_, full)),
-      blooms = if (s.statsKey.isEmpty) Seq.empty
-        else files.map(s.fileBlooms.getOrElse(_, "")),
-      statsN = perCol(s.statsCols.size, s.fileStatsN, full),
-      bloomsN = perCol(s.statsCols.size, s.fileBloomsN, ""),
-      rows = files.map(s.fileRows.getOrElse(_, -1L)),
-      shBlooms = perCol(s.shingleCols.size, s.fileShBlooms, ""))
+    def pad[T](xs: Seq[T], n: Int, none: T) = (0 until n).map(xs.lift(_).getOrElse(none))
+    files.map { f =>
+      val d = s.live(f)
+      DataFile(f,
+        range = s.statsKey.map(_ => d.range.getOrElse(full)),
+        bloom = s.statsKey.map(_ => d.bloom.getOrElse("")),
+        ranges = pad(d.ranges, s.statsCols.size, full),
+        blooms = pad(d.blooms, s.statsCols.size, ""),
+        rows = d.rows,
+        shBlooms = pad(d.shBlooms, s.shingleCols.size, ""))
+    }
   }
 
   /** Hard-link `f` from `srcRoot` into `dstRoot` under the same relative
@@ -1864,15 +1714,14 @@ object TxTable {
 
   /** Stage `df` under `snap`'s stats and shingle declarations. */
   private def stageOn(df: DataFrame, root: String, snap: Snapshot,
-                      sizeStaged: Boolean = false): Staged = {
-    val st = stageData(df, root, snap.statsKey, snap.statsCols, sizeStaged)
-    st.copy(shBlooms =
-      stageShingles(df, root, st.files, snap.shingleCols, snap.shingleN))
-  }
+                      sizeStaged: Boolean = false): Seq[DataFile] =
+    stageShingles(df, root,
+      stageData(df, root, snap.statsKey, snap.statsCols, sizeStaged),
+      snap.shingleCols, snap.shingleN)
 
-  /** Write `df` as new data files under `root` and gather the metadata
-    * its commit records for them, shingle blooms aside (see
-    * [[Staged]], [[stageShingles]]).
+  /** Write `df` as new data files under `root` and gather the records
+    * its commit logs for them, shingle blooms aside (see
+    * [[stageShingles]]).
     * @param sizeStaged right-size a SHATTERED small staging: when the
     *   written batch lands as many near-empty files (its plan inherited
     *   upstream partitioning — e.g. a streaming state-store output
@@ -1891,10 +1740,10 @@ object TxTable {
   private def stageData(df: DataFrame, root: String,
                         statsKey: Option[String],
                         statsCols: Seq[String] = Seq.empty,
-                        sizeStaged: Boolean = false): Staged = {
+                        sizeStaged: Boolean = false): Seq[DataFile] = {
     val unique0 = java.util.UUID.randomUUID().toString.take(8)
     val dir0 = dataDir(root).resolve(unique0)
-    val allColsPre = statsKey.toSeq ++ statsCols
+    val allCols = statsKey.toSeq ++ statsCols
     // STATS RIDE THE WRITE JOB (observed metrics): whole-batch (min, max,
     // bloom, count) per stats column are collected by the write job's own
     // tasks. When the staging lands as exactly ONE data file — the common
@@ -1906,10 +1755,10 @@ object TxTable {
     // Multi-file stagings (real backfills) keep the distributed per-file
     // pass; the observed agg they discard rides map-side for pennies.
     val (dfW, obsOpt) =
-      if (allColsPre.isEmpty) (df, None)
+      if (allCols.isEmpty) (df, None)
       else scala.util.Try {
         val obs = new org.apache.spark.sql.Observation()
-        val aggs = statsAggs(df.sparkSession, df.schema, allColsPre)
+        val aggs = statsAggs(df.sparkSession, df.schema, allCols)
         (df.observe(obs, aggs.head, aggs.tail: _*), Some(obs))
       }.getOrElse((df, None))
     prof("stage.write")(withFileSizedCoalesce(df.sparkSession)(
@@ -1979,7 +1828,6 @@ object TxTable {
     // null-tolerant bloom agg ignores them (a row NULL in one column
     // still feeds the others), and a file all-NULL in a column gets the
     // empty range (MaxValue, MinValue) — always prunable, correctly.
-    val allCols = statsKey.toSeq ++ statsCols
     // single-file staging: the write job's observed metrics are the
     // file's stats — no second pass. The timed wait guards against a
     // dropped listener event (never observed in practice); on timeout
@@ -1992,7 +1840,14 @@ object TxTable {
         scala.util.Try(Await.result(Future(o.get),
           scala.concurrent.duration.Duration(10, "s"))).toOption
       }
-    if (allCols.isEmpty) Staged(files)
+    // a file's record from its per-column ((min, max), bloom) list
+    val nOff = if (statsKey.isDefined) 1 else 0
+    def record(f: String, cols: Seq[((Long, Long), String)], rows: Long) = {
+      val (primary, secondary) = cols.splitAt(nOff)
+      DataFile(f, primary.headOption.map(_._1), primary.headOption.map(_._2),
+        secondary.map(_._1), secondary.map(_._2), rows)
+    }
+    if (allCols.isEmpty) files.map(DataFile(_))
     else if (observed.isDefined) prof("stage.observed") {
       val m = observed.get
       val cnt = m("cnt").asInstanceOf[Number].longValue
@@ -2008,14 +1863,7 @@ object TxTable {
               m(s"mx_$j").asInstanceOf[Number].longValue)
           (st, Option(m(s"bl_$j")).map(_.toString).getOrElse(""))
         }
-      val nOff = if (statsKey.isDefined) 1 else 0
-      val (stats, blooms) = statsKey match {
-        case None => (Seq.empty[(Long, Long)], Seq.empty[String])
-        case Some(_) => (Seq(colStats(0)._1), Seq(colStats(0)._2))
-      }
-      val statsSecondary = statsCols.indices.map(j => Seq(colStats(nOff + j)._1))
-      val bloomsSecondary = statsCols.indices.map(j => Seq(colStats(nOff + j)._2))
-      Staged(files, stats, blooms, statsSecondary, bloomsSecondary, Seq(cnt))
+      Seq(record(files.head, allCols.indices.map(colStats), cnt))
     }
     else {
       import org.apache.spark.sql.functions.input_file_name
@@ -2023,8 +1871,8 @@ object TxTable {
       // made nullable — pass it explicitly so the re-read skips the
       // per-call footer-based inference setup. Same aggregates as the
       // observed single-file path (statsAggs), grouped per file; per-file
-      // row counts ride the same agg for free (tryPublish skips
-      // footerRows when addRows is pre-filled).
+      // row counts ride the same agg for free (tryPublish reads footers
+      // only for adds without one).
       val reread = df.sparkSession.read.schema(nullableSchema(df.schema))
         .parquet(files.map(f => s"$root/$f"): _*)
       val aggs = statsAggs(df.sparkSession, reread.schema, allCols)
@@ -2044,27 +1892,14 @@ object TxTable {
           }
           name -> (perCol, r.getLong(r.fieldIndex("cnt")))
         }.toMap
-      def colOf(f: String, j: Int): ((Long, Long), String) =
-        byName.get(Paths.get(f).getFileName.toString).map(_._1(j))
-          .getOrElse(((Long.MaxValue, Long.MinValue), ""))
-      val nOff = if (statsKey.isDefined) 1 else 0
-      val (stats, blooms) = statsKey match {
-        case None => (Seq.empty[(Long, Long)], Seq.empty[String])
-        case Some(_) =>
-          (files.map(f => colOf(f, 0)._1), files.map(f => colOf(f, 0)._2))
-      }
-      val statsSecondary = statsCols.indices.map { j =>
-        files.map(f => colOf(f, nOff + j)._1)
-      }
-      val bloomsSecondary = statsCols.indices.map { j =>
-        files.map(f => colOf(f, nOff + j)._2)
-      }
       // a staged file absent from the agg result has exactly zero rows
       // (the scan feeds EVERY row of every listed file into the groupBy)
-      val rows = files.map(f =>
-        byName.get(Paths.get(f).getFileName.toString).map(_._2)
-          .getOrElse(0L))
-      Staged(files, stats, blooms, statsSecondary, bloomsSecondary, rows)
+      val empty = allCols.map(_ => ((Long.MaxValue, Long.MinValue), ""))
+      files.map { f =>
+        val (cols, rows) =
+          byName.getOrElse(Paths.get(f).getFileName.toString, (empty, 0L))
+        record(f, cols, rows)
+      }
     }
   }
 
@@ -2086,16 +1921,16 @@ object TxTable {
     * just works. Files with no shingles (every doc shorter than n
     * words) get the all-zero bloom: every probe prunes them,
     * correctly. */
-  private def stageShingles(df: DataFrame, root: String, files: Seq[String],
-                            shingleCols: Seq[String], n: Int): Seq[Seq[String]] = {
-    if (shingleCols.isEmpty) return Seq.empty
+  private def stageShingles(df: DataFrame, root: String, files: Seq[DataFile],
+                            shingleCols: Seq[String], n: Int): Seq[DataFile] = {
+    if (shingleCols.isEmpty) return files
     import org.apache.spark.sql.functions.{col, concat_ws, expr, input_file_name, lead, lit, lower, monotonically_increasing_id, posexplode_outer, split, udaf, when}
     graft.functions.StrKey.register(df.sparkSession)
     val bloomAgg = udaf(new KeyBloom.AggSized(4096),
       org.apache.spark.sql.Encoders.LONG)
     val reread = df.sparkSession.read.schema(nullableSchema(df.schema))
-      .parquet(files.map(f => s"$root/$f"): _*)
-    shingleCols.map { c =>
+      .parquet(files.map(f => s"$root/${f.path}"): _*)
+    val perCol = shingleCols.map { c =>
       // shingle via posexplode + per-doc window leads (codegen/sort
       // operators throughout) — the Column-level higher-order transform
       // is interpreted per element and dominates staging time on real
@@ -2118,14 +1953,16 @@ object TxTable {
       val sh = withLeads.select(col("f"),
         when(col(s"w${n - 1}").isNotNull,
           concat_ws(" ", (0 until n).map(k => col(s"w$k")): _*)).as("sh"))
-      val byName = prof("stage.shingles")(sh
+      prof("stage.shingles")(sh
         .groupBy("f").agg(bloomAgg(expr("str_hash64(sh)")).as("bl"))
         .collect()).map { r =>
           Paths.get(java.net.URI.create(r.getString(0)).getPath)
             .getFileName.toString -> r.getString(1)
         }.toMap
-      files.map(f =>
-        byName.getOrElse(Paths.get(f).getFileName.toString, ""))
+    }
+    files.map { f =>
+      val name = Paths.get(f.path).getFileName.toString
+      f.copy(shBlooms = perCol.map(_.getOrElse(name, "")))
     }
   }
 
@@ -2175,26 +2012,26 @@ object TxTable {
     Thread.sleep(jitter)
   }
 
-  /** Atomic publish of version `v`: hard-link the rendered body into the
-    * log slot — exactly one writer wins; everyone else gets
-    * FileAlreadyExistsException and must rebase. Every commit that adds
-    * data files gets their footer row counts stamped into the log here —
-    * one chokepoint covers create/append/merge/compact/optimize alike. */
+  /** Atomic publish of version `v` ([[publishOnce]] into the log slot):
+    * exactly one writer wins; everyone else gets false and must rebase.
+    * Every added data file without a row count gets its footer count
+    * stamped into the log here — one chokepoint covers
+    * create/append/merge/compact/optimize alike. */
   private def tryPublish(root: String, c: Commit): Boolean = prof("publish") {
     Files.createDirectories(logDir(root))
-    val withRows0 =
-      if (c.adds.nonEmpty && c.addRows.isEmpty)
-        c.copy(addRows = footerRows(root, c.adds))
-      else c
+    val unknown = c.adds.filter(_.rows < 0).map(_.path)
+    val footers =
+      if (unknown.isEmpty) Map.empty[String, Long]
+      else unknown.zip(footerRows(root, unknown)).toMap
+    val adds = c.adds.map(a => footers.get(a.path).fold(a)(n => a.copy(rows = n)))
     // ledger row counts ride the log too: the MoR read's broadcast-vs-
     // shuffle decision needs the live delete-set volume without opening
     // a footer per ledger per fresh driver. Aliased entries reuse the
-    // adds' just-read footer counts; -1 marks unknown (never broadcast
-    // blindly).
-    val withRows =
-      if (withRows0.dadds.nonEmpty && withRows0.drows.isEmpty) {
-        val byAdd = withRows0.adds.zip(withRows0.addRows).toMap
-        withRows0.copy(drows = withRows0.dadds.map { p =>
+    // adds' counts; -1 marks unknown (never broadcast blindly).
+    val drows =
+      if (c.dadds.nonEmpty && c.drows.isEmpty) {
+        val byAdd = adds.map(a => a.path -> a.rows).toMap
+        c.dadds.map { p =>
           val fs = ledgerFiles(p)
           val known = fs.map(f => byAdd.getOrElse(f, -1L))
           if (known.forall(_ >= 0)) known.sum
@@ -2202,24 +2039,16 @@ object TxTable {
             val fr = footerRows(root, fs)
             if (fr.exists(_ < 0)) -1L else fr.sum
           }
-        })
-      } else withRows0
+        }
+      } else c.drows
     // stamp the commit wall-clock, forced STRICTLY increasing over the
     // predecessor (one small log read) so TIMESTAMP AS OF is a total
     // order even across clock skew between writers — the same
     // "in-commit-timestamp" monotonicity Delta/Iceberg guarantee
     val prevTs =
       if (c.version > 0) commitTs(root, c.version - 1).getOrElse(0L) else 0L
-    val cc = withRows.copy(
-      ts = math.max(System.currentTimeMillis(), prevTs + 1))
-    val tmp = logDir(root).resolve(
-      s".tmp-${java.util.UUID.randomUUID().toString}")
-    Files.writeString(tmp, render(cc))
-    try { Files.createLink(commitPath(root, c.version), tmp); true }
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException => false
-      case NonFatal(e) => throw e
-    } finally Files.deleteIfExists(tmp)
+    publishOnce(commitPath(root, c.version), render(c.copy(adds = adds,
+      drows = drows, ts = math.max(System.currentTimeMillis(), prevTs + 1))))
   }
 
   /** Attempts one commit gets before [[commitLoop]] reports contention. */
@@ -2332,13 +2161,11 @@ object TxTable {
       df.schema(df.schema.fieldIndex(c)).dataType ==
         org.apache.spark.sql.types.StringType
     }
-    val st = stageData(df, root, statsKey, statsCols)
-    val staged =
-      st.copy(shBlooms = stageShingles(df, root, st.files, shingleCols, shingleN))
-    val ok = tryPublish(root,
-      staged.commit(0L, "create", Seq.empty, None).copy(statsKey = statsKey,
-        check = check, statsCols = statsCols, strCols = strCols,
-        shCols = shingleCols, shN = shingleN))
+    val staged = stageShingles(df, root, stageData(df, root, statsKey, statsCols),
+      shingleCols, shingleN)
+    val ok = tryPublish(root, Commit(0L, "create", staged, Seq.empty, None,
+      statsKey = statsKey, check = check, statsCols = statsCols,
+      strCols = strCols, shCols = shingleCols, shN = shingleN))
     if (!ok) throw new IllegalStateException(s"table already exists: $root")
     CommitResult(0L, 1, skipped = false)
   }
@@ -2374,11 +2201,10 @@ object TxTable {
     require(!snap.pendingEvo, "cannot shallow-clone with schema evolutions " +
       s"pending on live files — compact $root first")
     snap.files.foreach(linkInto(root, dstRoot, _))
-    val ok = tryPublish(dstRoot,
-      carried(snap, snap.files).commit(0L, "clone", Seq.empty, None).copy(
-        statsKey = snap.statsKey, check = snap.check,
-        statsCols = snap.statsCols, strCols = snap.strCols,
-        shCols = snap.shingleCols, shN = snap.shingleN))
+    val ok = tryPublish(dstRoot, Commit(0L, "clone", carried(snap, snap.files),
+      Seq.empty, None, statsKey = snap.statsKey, check = snap.check,
+      statsCols = snap.statsCols, strCols = snap.strCols,
+      shCols = snap.shingleCols, shN = snap.shingleN))
     if (!ok) throw new IllegalStateException(s"table already exists: $dstRoot")
     CommitResult(0L, 1, skipped = false)
   }
@@ -2389,7 +2215,7 @@ object TxTable {
     * → branch, write/validate on the branch at leisure (bad data stays
     * invisible to main's readers), then `adoptFrom(main, branch)`
     * PUBLISHES atomically: every file the branch ADDED after the clone
-    * (fileAddV > 0 — clone lands everything at v0) hard-links into the
+    * (added after v0 — clone lands everything at v0) hard-links into the
     * table under its unchanged relative path (uuid dirs are collision-
     * free; cross-filesystem falls back to a copy) and commits as plain
     * adds with the branch log's stats/blooms/row counts carried over —
@@ -2420,7 +2246,7 @@ object TxTable {
     // post-clone adds only: a base file the TABLE has since removed
     // (compaction, delete) must never resurrect through the branch
     val branchAdds = src.files
-      .filter(f => src.fileAddV.getOrElse(f, 0L) > 0L)
+      .filter(f => src.live(f).version > 0L)
     if (branchAdds.isEmpty)
       return CommitResult(dst0.version, 1, skipped = true)
     // AUDIT: adopted rows must satisfy the table's CHECK (scan bounded
@@ -2461,7 +2287,7 @@ object TxTable {
       // idempotence by content, not just by tag
       val adds = branchAdds.filterNot(snap.files.toSet)
       if (adds.isEmpty) None
-      else Some(carried(src, adds).commit(snap.version + 1, "adopt", Seq.empty, tag))
+      else Some(Commit(snap.version + 1, "adopt", carried(src, adds), Seq.empty, tag))
     }
   }
 
@@ -2482,7 +2308,7 @@ object TxTable {
       // commit — this is how compaction/OPTIMIZE fold merge-on-read
       // deletes back into the data
       val next = body(morRead(spark, root, snap, snap.files))
-      Some(stageOn(next, root, snap).commit(snap.version + 1, op,
+      Some(Commit(snap.version + 1, op, stageOn(next, root, snap),
         snap.files ++ snap.ledgers.map(_.path), tag))
     }
 
@@ -2601,7 +2427,7 @@ object TxTable {
     * applies iff the file was added strictly before the ledger's
     * commit). */
   private def ledgerChain(snap: Snapshot, f: String): Int = {
-    val av = snap.fileAddV.getOrElse(f, Long.MaxValue)
+    val av = snap.addedAt(f)
     snap.ledgers.count(_.version > av)
   }
 
@@ -2661,7 +2487,7 @@ object TxTable {
     // bytes moved
     def zombies(s: Snapshot): Seq[String] = s.ledgers.filter(l =>
       !s.files.exists(f =>
-        s.fileAddV.getOrElse(f, Long.MaxValue) < l.version)).map(_.path)
+        s.addedAt(f) < l.version)).map(_.path)
     if (!snap0.files.exists(ledgerChain(snap0, _) > maxLedgers) &&
         zombies(snap0).isEmpty) return None
     var resolved = false // a rebase left nothing over the bound
@@ -2678,8 +2504,8 @@ object TxTable {
         // dead weight — retire it; one still scoping a kept file stays
         val retired = snap.ledgers.filter(l =>
           !keep.exists(f =>
-            l.version > snap.fileAddV.getOrElse(f, Long.MaxValue))).map(_.path)
-        Some(staged.commit(snap.version + 1, "fold-ledgers", hot ++ retired, tag))
+            l.version > snap.addedAt(f))).map(_.path)
+        Some(Commit(snap.version + 1, "fold-ledgers", staged, hot ++ retired, tag))
       }
     }
     if (resolved) None else Some(r)
@@ -2708,14 +2534,15 @@ object TxTable {
       .filter(_.endsWith(".json"))
       .flatMap { n =>
         val j = Files.readString(logDir(root).resolve(n))
-        if (n.endsWith(".ckpt.json"))
-          arrField(j, "files") ++ arrField(j, "dfiles").flatMap(ledgerFiles)
-        else {
+        if (n.endsWith(".ckpt.json")) {
+          val s = parseCkpt(j)
+          s.files ++ s.ledgers.flatMap(l => ledgerFiles(l.path))
+        } else {
           val c = parse(j)
           // delete ledgers are referenced files too; aliased entries
           // keep their backing data files referenced even after a
           // rewrite removed them from the live set
-          c.adds ++ c.dadds.flatMap(ledgerFiles)
+          c.adds.map(_.path) ++ c.dadds.flatMap(ledgerFiles)
         }
       }
       .toSet
@@ -2787,7 +2614,7 @@ object TxTable {
           val p = commitPath(root, v)
           if (Files.exists(p)) {
             val c = parse(Files.readString(p))
-            c.adds ++ c.dadds.flatMap(ledgerFiles)
+            c.adds.map(_.path) ++ c.dadds.flatMap(ledgerFiles)
           } else Seq.empty
         }
     val archivable = names
@@ -2797,7 +2624,7 @@ object TxTable {
     // data files only pre-cutoff commits reference, minus the needed set
     val doomed: Set[String] = archivable.iterator.flatMap { v =>
       val c = parse(Files.readString(commitPath(root, v)))
-      c.adds ++ c.dadds.flatMap(ledgerFiles)
+      c.adds.map(_.path) ++ c.dadds.flatMap(ledgerFiles)
     }.toSet -- needed
     doomed.foreach(f => Files.deleteIfExists(Paths.get(root, f)))
     // archive the commit records below the cutoff, then stale checkpoints
@@ -2837,10 +2664,10 @@ object TxTable {
     commitLoop(root, tag, s"commit to $root", afterPublish = (snap, c) =>
       if (c.removes.isEmpty && snap.evos.isEmpty && c.adds.nonEmpty)
         cachedSchemaFor(root, (snap.evos, snap.files)).foreach(
-          seedAppended(spark, root, snap, c.adds, _, rewrite.schema))) { snap =>
+          seedAppended(spark, root, snap, c.adds.map(_.path), _, rewrite.schema))) { snap =>
       val (keep, next) = body(snap)
       rewrite = next
-      Some(stageOn(next, root, snap, sizeStaged).commit(snap.version + 1, op,
+      Some(Commit(snap.version + 1, op, stageOn(next, root, snap, sizeStaged),
         snap.files.diff(keep), tag))
     }
   }
@@ -2871,8 +2698,8 @@ object TxTable {
     commitLoop(root, tag, s"commit to $root", afterPublish = (snap, c) =>
       if (snap.evos.isEmpty && c.adds.nonEmpty)
         cachedSchemaFor(root, (snap.evos, snap.files)).foreach(
-          seedAppended(spark, root, snap, c.adds, _, batch.schema))) { snap =>
-      Some(staged.commit(snap.version + 1, "append", Seq.empty, tag))
+          seedAppended(spark, root, snap, c.adds.map(_.path), _, batch.schema))) { snap =>
+      Some(Commit(snap.version + 1, "append", staged, Seq.empty, tag))
     }
   }
 
@@ -2990,7 +2817,7 @@ object TxTable {
         "optimizeOn instead")
     transactFiles(spark, root, "optimize-z-incr") { snap =>
       val keep = snap.files.filter(f =>
-        snap.fileAddV.getOrElse(f, Long.MaxValue) <= sinceVersion)
+        snap.addedAt(f) <= sinceVersion)
       val fresh = snap.files.diff(keep)
       val rewrite =
         if (fresh.isEmpty)
@@ -3019,7 +2846,7 @@ object TxTable {
         "optimizeOn instead")
     transactFiles(spark, root, "optimize-z-incr") { snap =>
       val keep = snap.files.filter(f =>
-        snap.fileAddV.getOrElse(f, Long.MaxValue) <= sinceVersion)
+        snap.addedAt(f) <= sinceVersion)
       val fresh = snap.files.diff(keep)
       val rewrite =
         if (fresh.isEmpty)
@@ -3113,11 +2940,11 @@ object TxTable {
     import org.apache.spark.sql.functions.{broadcast, col, input_file_name, max, min}
     val rootAbs = Paths.get(root).toAbsolutePath
     val keysDf = changes.select(col(key).as("k")).distinct()
-    val logStats = snap.fileStats
-    if (snap.statsKey.contains(key) && snap.files.forall(logStats.contains)) {
+    val logStats = snap.files.map(snap.live(_).range)
+    if (snap.statsKey.contains(key) && logStats.forall(_.isDefined)) {
       import spark.implicits._
-      val statsDf = snap.files
-        .map(f => (f, logStats(f)._1, logStats(f)._2))
+      val statsDf = snap.files.zip(logStats.flatten)
+        .map { case (f, (mn, mx)) => (f, mn, mx) }
         .toDF("f", "mn", "mx")
       statsDf.join(broadcast(keysDf),
           col("k").cast("long") >= col("mn") &&
@@ -3178,7 +3005,7 @@ object TxTable {
       if (newLedgers.isEmpty) Seq.empty
       else {
         val applicable = common.filter { f =>
-          val av = to.fileAddV.getOrElse(f, Long.MaxValue)
+          val av = to.addedAt(f)
           newLedgers.exists(_.version > av)
         }
         // resolve each ledger's key signature from the log (aliased
@@ -3355,7 +3182,7 @@ object TxTable {
     val ledgerDf = ledgerKeys(doomed, keys)
     // stage the ledger once; rebased retries re-reference the same file
     val dfiles = stageData(ledgerDf.distinct().coalesce(1), root,
-      statsKey = None).files
+      statsKey = None).map(_.path)
     val dsig = encodeSig(ledgerDf.schema)
     commitLoop(root, tag, s"delete-mor commit to $root") { snap =>
       Some(Commit(snap.version + 1, "delete-mor",
@@ -3434,8 +3261,8 @@ object TxTable {
     // epoch; profiled 656 staged files over a 32-commit drain).
     val staged = stageOn(changes, root, snap0, sizeStaged = true)
     val dfiles =
-      if (staged.files.isEmpty) Seq.empty[String]
-      else Seq("@" + staged.files.mkString(";"))
+      if (staged.isEmpty) Seq.empty[String]
+      else Seq("@" + staged.map(_.path).mkString(";"))
     // the signature comes from the VALIDATED batch schema (the staged
     // parquet round-trips it exactly), long-normalized the same way
     // [[ledgerKeys]] would — no read-back job
@@ -3455,9 +3282,9 @@ object TxTable {
     commitLoop(root, tag, s"merge-mor commit to $root",
       afterPublish = (snap, c) =>
         if (snap.version == snap0.version)
-          seedAppended(spark, root, snap, c.adds, tbl, changes.schema)) { snap =>
-      Some(staged.commit(snap.version + 1, "merge-mor", Seq.empty, tag)
-        .copy(dadds = dfiles, dsigs = dfiles.map(_ => dsig)))
+          seedAppended(spark, root, snap, c.adds.map(_.path), tbl, changes.schema)) { snap =>
+      Some(Commit(snap.version + 1, "merge-mor", staged, Seq.empty, tag,
+        dadds = dfiles, dsigs = dfiles.map(_ => dsig)))
     }
   }
 

@@ -69,7 +69,7 @@ final class GraftFileIndex(
     * footer counts — None unless EVERY live file has one recorded
     * (pre-row-count commits read -1). Zero data I/O. */
   def rowCountFromLog: Option[Long] = {
-    val counts = snap.files.map(f => snap.fileRows.getOrElse(f, -1L))
+    val counts = snap.files.map(snap.live(_).rows)
     if (counts.isEmpty || counts.exists(_ < 0)) None else Some(counts.sum)
   }
 

@@ -107,7 +107,7 @@ class TxTablePropertySpec extends AnyFunSuite {
         assert(got == states(v), s"$at version=$v diverged")
       }
       // log stats stay complete through arbitrary op interleavings
-      assert(snap.fileStats.keySet == snap.files.toSet, s"$at stats")
+      assert(snap.files.forall(snap.live(_).range.isDefined), s"$at stats")
       // the pruned reads resolve the same ledgers at the final version
       val probe = Seq(0L, 5L, 6L, 17L, 30L, 99L)
       assert(TxTable.pointRead(spark, root, probe).as[(Long, String)]

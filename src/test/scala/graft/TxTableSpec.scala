@@ -233,7 +233,7 @@ class TxTableSpec extends AnyFunSuite {
       root, statsKey = Some("k"))
     val snap = TxTable.snapshot(root)
     assert(snap.statsKey.contains("k"))
-    assert(snap.fileStats.keySet == snap.files.toSet,
+    assert(snap.files.forall(snap.live(_).range.isDefined),
       "every committed file must carry log stats")
     // a range inside one file's span: the scan lists ONE file of 4
     val pruned = TxTable.readPruned(spark, root, 10L, 12L)
@@ -257,7 +257,7 @@ class TxTableSpec extends AnyFunSuite {
       (0L until 10L).map(i => (i, "upd")).toDF("k", "v"), "k")
     val v1 = TxTable.snapshot(root)
     // stats stay complete after the CoW commit (new files carry them)
-    assert(v1.fileStats.keySet == v1.files.toSet)
+    assert(v1.files.forall(v1.live(_).range.isDefined))
     assert(v0.files.toSet.intersect(v1.files.toSet).size == 3)
     assert(rows(root) ==
       (0L until 100L).map(i => (i, if (i < 10) "upd" else "base")).toSet)
@@ -295,7 +295,7 @@ class TxTableSpec extends AnyFunSuite {
     assert(snap.commits.length == 1, s"suffix len ${snap.commits.length}")
     // stats + statsKey survive checkpoint consolidation
     assert(snap.statsKey.contains("k"))
-    assert(snap.fileStats.keySet == snap.files.toSet)
+    assert(snap.files.forall(snap.live(_).range.isDefined))
     assert(rows(root).size == 22)
     // time travel below the checkpoint still folds from v0
     assert(rows(root, 1).toSet == Set((0L, "v0"), (1L, "tagged")))
@@ -492,6 +492,76 @@ class TxTableSpec extends AnyFunSuite {
       TxTable.create(Seq((1L, -1L)).toDF("k", "v"), freshRoot() + "/t2",
         Some("k"), Some("v >= 0"))
     }
+  }
+
+  test("a multi-line CHECK survives the log: valid appends land, violations refuse") {
+    import spark.implicits._
+    val root = freshRoot() + "/t"
+    val check = "k >= 0\n  AND v IS NOT NULL"
+    TxTable.create(Seq((1L, "a")).toDF("k", "v"), root, check = Some(check))
+    assert(TxTable.snapshot(root).check.contains(check))
+    TxTable.append(spark, root, Seq((2L, "b")).toDF("k", "v"))
+    assertThrows[IllegalStateException] {
+      TxTable.append(spark, root, Seq((-3L, "c")).toDF("k", "v"))
+    }
+    assert(rows(root) == Set((1L, "a"), (2L, "b")))
+  }
+
+  test("an epoch tag holding a tab is found again: its replay is skipped") {
+    import spark.implicits._
+    val root = freshRoot() + "/t"
+    TxTable.create(Seq((1L, "a")).toDF("k", "v"), root)
+    val tag = Some("app=x\tid/epoch=1")
+    val first = TxTable.append(spark, root, Seq((2L, "b")).toDF("k", "v"), tag)
+    val replay = TxTable.append(spark, root, Seq((2L, "b")).toDF("k", "v"), tag)
+    assert(!first.skipped && replay.skipped && replay.version == first.version)
+    assert(rows(root).size == 2)
+  }
+
+  test("golden log format: commit and checkpoint bytes decode and re-encode identically") {
+    import TxTable.{DataFile, Ledger}
+    val f1 = "data/a1/part-00000.parquet"
+    val odd = "data/b2/we\"ird\\pa,th.parquet" // '"', '\' and ','
+    val commit = """{"version":7,"op":"merge-mor","adds":["data/a1/part-00000.parquet",""" +
+      """"data/b2/we\"ird\\pa,th.parquet"],"removes":["data/z9/part-00000.parquet"],""" +
+      """"tag":"app=x/epoch=7","statskey":"k","check":"k >= 0 AND v <> \"q\"","amin":[1,-3],""" +
+      """"amax":[5,9],"abloom":["00ff",""],"dadds":["@data/a1/part-00000.parquet;""" +
+      """data/b2/we\"ird\\pa,th.parquet"],"drows":[7],"dsigs":["k:bigint;d:decimal(10,2)"],""" +
+      """"statscols":["s","t"],"strcols":["t"],"shcols":["doc"],"shn":3,"ash_0":["5a","5b"],""" +
+      """"amin_0":[1,3],"amax_0":[2,4],"amin_1":[-5,0],"amax_1":[-1,0],"abloom_0":["0a","0b"],""" +
+      """"abloom_1":["1a",""],"evops":["rename:a:b"],"arows":[3,4],"ts":1700000000123}"""
+    val c = TxTable.parse(commit)
+    assert(c == TxTable.Commit(7L, "merge-mor",
+      Seq(DataFile(f1, Some((1L, 5L)), Some("00ff"), Seq((1L, 2L), (-5L, -1L)),
+          Seq("0a", "1a"), 3L, Seq("5a")),
+        DataFile(odd, Some((-3L, 9L)), Some(""), Seq((3L, 4L), (0L, 0L)),
+          Seq("0b", ""), 4L, Seq("5b"))),
+      Seq("data/z9/part-00000.parquet"), Some("app=x/epoch=7"), Some("k"),
+      Some("k >= 0 AND v <> \"q\""), Seq(s"@$f1;$odd"), Seq("s", "t"),
+      Seq("rename:a:b"), 1700000000123L, Seq("t"), Seq("doc"), 3, Seq(7L),
+      Seq("k:bigint;d:decimal(10,2)")))
+    assert(TxTable.render(c) == commit)
+    val ckpt = """{"version":20,"files":["data/a1/part-00000.parquet",""" +
+      """"data/b2/we\"ird\\pa,th.parquet"],"tags":["app=x/epoch=1","app=x/epoch=2"],""" +
+      """"statskey":"k","check":"k >= 0","fmin":[1,6],"fmax":[5,9],"fbloom":["00ff",""],""" +
+      """"fver":[3,12],"dfiles":["data/l1/part-00000.parquet","@data/b2/we\"ird\\pa,th.parquet"],""" +
+      """"dvers":[15,18],"drows":[2,1],"dsigs":["k:bigint","k:bigint;d:decimal(10,2)"],""" +
+      """"statscols":["s","t"],"strcols":["t"],"shcols":["doc"],"shn":3,"fsh_0":["5a","5b"],""" +
+      """"fmin_0":[1,5],"fmax_0":[2,6],"fmin_1":[3,7],"fmax_1":[4,8],"fbloom_0":["0a","1a"],""" +
+      """"fbloom_1":["0b",""],"evv":[4,9],"evo":["rename:a:b","widen:v:long"],"frows":[3,4]}"""
+    val s = TxTable.parseCkpt(ckpt)
+    assert(s == TxTable.Snapshot(20L, Seq(f1, odd), Seq.empty, Some("k"),
+      Set("app=x/epoch=1", "app=x/epoch=2"),
+      Map(f1 -> DataFile(f1, Some((1L, 5L)), Some("00ff"), Seq((1L, 2L), (3L, 4L)),
+          Seq("0a", "0b"), 3L, Seq("5a"), 3L),
+        odd -> DataFile(odd, Some((6L, 9L)), None, Seq((5L, 6L), (7L, 8L)),
+          Seq("1a", ""), 4L, Seq("5b"), 12L)),
+      Some("k >= 0"),
+      Seq(Ledger("data/l1/part-00000.parquet", 15L, 2L, "k:bigint"),
+        Ledger("@" + odd, 18L, 1L, "k:bigint;d:decimal(10,2)")),
+      Seq("s", "t"), Seq((4L, "rename:a:b"), (9L, "widen:v:long")), Seq("t"),
+      Seq("doc"), 3))
+    assert(TxTable.renderCkpt(s) == ckpt)
   }
 
   test("restore: metadata-only rollback; stats and blooms stay live") {
@@ -1372,8 +1442,8 @@ class TxTableSpec extends AnyFunSuite {
         java.nio.file.Paths.get(br, f)), s"$f was copied, not linked")
     }
     // stats/blooms/rows carried — pruning machinery works without recompute
-    assert(snapB.statsKey.contains("k") && snapB.fileStats.nonEmpty &&
-      snapB.fileBlooms.nonEmpty && snapB.fileRows.nonEmpty)
+    assert(snapB.statsKey.contains("k") && snapB.live.values.exists(_.range.isDefined) &&
+      snapB.live.values.exists(_.bloom.isDefined) && snapB.live.values.exists(_.rows >= 0))
     assert(TxTable.metaAggregate(spark, br, "k").count == 40L)
     // divergence: branch merge, source append — neither sees the other
     TxTable.mergeCow(spark, br,
@@ -1789,7 +1859,7 @@ class TxTableSpec extends AnyFunSuite {
     // within-bound files carried by reference: epoch-15..20 data files
     // survive the fold commit untouched
     val snap = TxTable.snapshot(root)
-    assert(snap.files.exists(f => snap.fileAddV.get(f).exists(_ == 15L)),
+    assert(snap.files.exists(snap.live(_).version == 15L),
       "the newest within-bound epoch file must carry by reference")
     // replayed maintenance epoch is a detected no-op, even though the
     // first run left nothing over-bound
@@ -2064,7 +2134,7 @@ class TxTableSpec extends AnyFunSuite {
     // zero-copy: the adopted file is the SAME inode as the branch's
     val adopted = TxTable.snapshot(main).files
       .filterNot(TxTable.snapshot(branch).files
-        .filter(f => TxTable.snapshot(branch).fileAddV.getOrElse(f, 0L) == 0L)
+        .filter(f => TxTable.snapshot(branch).live(f).version == 0L)
         .toSet)
     assert(adopted.nonEmpty)
     adopted.foreach { f =>
@@ -2306,7 +2376,7 @@ class TxTableSpec extends AnyFunSuite {
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
       try r.getRecordCount finally r.close()
     }
-    assert(snap.files.map(snap.fileRows) == byFooter,
+    assert(snap.files.map(snap.live(_).rows) == byFooter,
       "logged per-file row counts must equal parquet footer counts")
   }
 
