@@ -8,8 +8,9 @@ import graft.functions.StrKey
 /** The conservative stats/bloom evaluator: can this predicate match any
   * row of a file with the given per-column [min,max] (long-normalized)
   * and bloom? It is the one per-file skipping decision: the planner's
-  * [[graft.sources.GraftFileIndex]] and every pruned [[TxTable]] read
-  * and accounting reach it through [[TxTable.Snapshot.kept]].
+  * [[graft.sources.GraftFileIndex]] and [[TxTable.readWhere]] /
+  * [[TxTable.keptFiles]] reach it through [[TxTable.Snapshot.kept]],
+  * both with the predicate as Spark's optimizer leaves it.
   *
   * Long-normalized stats are EXACT for integral and date columns
   * (bit-preserving casts — point probes may also consult the bloom) and
@@ -28,6 +29,7 @@ object GraftSkipping {
                   admits: (String, Long) => Boolean): Boolean = e match {
     case And(l, r) => provesEmpty(l, stats, admits) || provesEmpty(r, stats, admits)
     case Or(l, r)  => provesEmpty(l, stats, admits) && provesEmpty(r, stats, admits)
+    case Literal(false, BooleanType) => true // a predicate folded to false
 
     case EqualTo(AttrCol(c, dt), Literal(v, _)) => emptyEq(c, dt, v, stats, admits)
     case EqualTo(Literal(v, _), AttrCol(c, dt)) => emptyEq(c, dt, v, stats, admits)

@@ -5,9 +5,9 @@ import java.nio.file.{Files, Path, Paths}
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference,
-  Expression, GreaterThanOrEqual, In, LessThanOrEqual, Literal, StartsWith}
-import org.apache.spark.sql.types.{LongType, StringType}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
+import org.apache.spark.sql.functions.col
 
 /** A minimal log-structured ACID table over parquet — the transactional
   * story the MERGE/SCD2/diff dataflows (Q-qual-03/04/05) compose with:
@@ -674,7 +674,7 @@ object TxTable {
                              snap: Snapshot, ls: Seq[(Ledger, String)])
       : Map[String, Array[Long]] = {
     import org.apache.spark.sql.functions.{col, lit}
-    import org.apache.spark.sql.types.{StructField, StructType}
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val cached = Option(ledgerKeyCache.get(root))
       .getOrElse(Map.empty[String, Array[Long]])
     val missing = ls.filterNot(t => cached.contains(t._1.path))
@@ -1171,22 +1171,56 @@ object TxTable {
         .map(_.copy(nullable = true))))
   }
 
-  /** Range read with METADATA-ONLY file pruning: the commit log's
-    * per-file [min, max] stats decide which files can hold rows in
-    * [lo, hi] — files outside the range are never opened, touched, or
-    * even listed to the scan. Result ≡ `read(...).where(key BETWEEN lo
-    * AND hi)` (the residual filter still applies inside kept files;
-    * files without stats are conservatively read). This is the
-    * point-lookup/range-scan story for a 100 TB table: on a
-    * range-clustered layout the scan cost is proportional to the
-    * selected range, not the table. After a schema evolution the result
-    * schema is the union over the files actually read — a pruned read
-    * that only touches pre-evolution files won't surface the new column
-    * (read the full table when the complete schema matters). */
-  def readPruned(spark: SparkSession, root: String,
-                 lo: Long, hi: Long): DataFrame = {
+  /** PRUNED read: result ≡ `read(...).where(where)`, but only the files
+    * the commit log cannot rule out are opened. Each live file's logged
+    * per-column [min, max] and key bloom are tested against `where` in
+    * the form the planner hands [[graft.sources.GraftFileIndex]] (see
+    * [[logCondition]]): a range, IN, equality or prefix predicate on any
+    * declared stats column — numeric, or string via the prefix64 /
+    * hash64 encodings of `stageData` — prunes with zero data I/O, and
+    * any other shape keeps the file. `where` is still applied inside
+    * kept files, so the result is exact; merge-on-read ledgers and
+    * schema-evolution eras resolve as in [[read]]. With every file
+    * pruned the result is empty with the table's schema. On a range-
+    * clustered layout (see [[optimize]], [[optimizeZ]]) the scan cost
+    * follows the selected range, not the table. */
+  def readWhere(spark: SparkSession, root: String, where: Column): DataFrame = {
+    val (snap, cond) = pruning(spark, root, where)
+    readKept(spark, root, snap, snap.kept(cond), where)
+  }
+
+  /** [[readWhere]]'s file selection, from the log alone: (files kept by
+    * ranges, files kept by ranges and blooms, live files). The gap
+    * between the first two is the blooms' contribution. Submits no Spark
+    * job unless a schema evolution is pending. */
+  def keptFiles(spark: SparkSession, root: String, where: Column): (Int, Int, Int) = {
+    val (snap, cond) = pruning(spark, root, where)
+    (snap.kept(cond, useBlooms = false).size, snap.kept(cond).size, snap.files.size)
+  }
+
+  private def pruning(spark: SparkSession, root: String,
+                      where: Column): (Snapshot, Expression) = {
     val snap = snapshot(root)
-    readPrunedAt(spark, root, snap, primaryKey(snap, root), lo, hi)
+    require(snap.version >= 0, s"not a TxTable (no committed log): $root")
+    (snap, logCondition(spark, root, snap, where))
+  }
+
+  /** `where` as a skipping condition for [[Snapshot.kept]]: resolved
+    * against `snap`'s current schema and optimized, which gives the form
+    * the planner hands [[graft.sources.GraftFileIndex]] — casts on
+    * integral columns unwrapped, literals narrowed to the column type,
+    * long IN lists as InSet. A shape [[GraftSkipping]] does not match,
+    * such as a numeric literal against a string column, keeps the file.
+    * Planned over an empty RDD, because over an empty LocalRelation the
+    * optimizer would drop the Filter; a `where` that folds to false
+    * leaves no Filter over an empty LocalRelation, and keeps no file. */
+  private def logCondition(spark: SparkSession, root: String, snap: Snapshot,
+                           where: Column): Expression = {
+    val plan = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      currentSchema(spark, root, snap)).where(where).queryExecution.optimizedPlan
+    plan.collectFirst { case f: Filter => f.condition }
+      .getOrElse(Literal(!plan.isInstanceOf[LocalRelation]))
   }
 
   private def primaryKey(snap: Snapshot, root: String): String = {
@@ -1195,35 +1229,6 @@ object TxTable {
       s"table at $root declares no stats key — use create(df, root, Some(col))"))
   }
 
-  /** Numeric pruning entry points need a DECLARED stats column (the
-    * primary key or a secondary `statsCols` entry) that is not a STRING
-    * one: STRING stats columns hold prefix64-ENCODED bounds (see
-    * stageData), so they are refused loudly rather than compared as raw
-    * longs. */
-  private def requireNumericStats(snap: Snapshot, column: String): Unit = {
-    require(!snap.strCols.contains(column),
-      s"'$column' is a STRING stats column (prefix64-encoded bounds) — " +
-        "use readPrunedOnStr / prefixRead / pointReadOnStr")
-    require(snap.statsKey.contains(column) || snap.statsCols.contains(column),
-      s"no stats declared for column '$column' " +
-        s"(primary = ${snap.statsKey.getOrElse("-")}, " +
-        s"secondary = ${snap.statsCols.mkString("[", ",", "]")})")
-  }
-
-  // Pruning conditions are built in the log's own domain — a LongType
-  // attribute with long literals for numeric stats columns, a StringType
-  // one for string columns — so [[Snapshot.kept]] compares them exactly
-  // against the logged bounds. The residual `pred` applied inside kept
-  // files makes every result exact.
-  private def longAttr(column: String): Expression =
-    AttributeReference(column, LongType)()
-  private def strAttr(column: String): Expression =
-    AttributeReference(column, StringType)()
-  private def between(a: Expression, lo: Any, hi: Any): Expression =
-    And(GreaterThanOrEqual(a, Literal(lo)), LessThanOrEqual(a, Literal(hi)))
-  private def in(a: Expression, keys: Seq[Any]): Expression =
-    In(a, keys.map(Literal(_)))
-
   /** `read(...).where(pred)` opening only the `kept` files; with every
     * file pruned the result is empty with the table's schema. */
   private def readKept(spark: SparkSession, root: String, snap: Snapshot,
@@ -1231,134 +1236,25 @@ object TxTable {
     (if (kept.isEmpty) emptyRead(spark, root, snap)
      else morRead(spark, root, snap, kept)).where(pred)
 
-  /** [[readPruned]] on ANY declared stats column: after a z-order
-    * OPTIMIZE the files tile BOTH clustered dimensions, so a range read
-    * on the secondary column prunes from the log exactly like one on the
-    * primary key. Result ≡ `read(...).where(column BETWEEN lo AND hi)`. */
+  /** [[readWhere]] on `key IN keys`, `key` being the table's stats key. */
+  def pointRead(spark: SparkSession, root: String, keys: Seq[Long]): DataFrame =
+    readWhere(spark, root, col(primaryKey(snapshot(root), root)).cast("long").isin(keys: _*))
+
+  /** [[readWhere]] on `column BETWEEN lo AND hi`. */
   def readPrunedOn(spark: SparkSession, root: String, column: String,
                    lo: Long, hi: Long): DataFrame =
-    readPrunedAt(spark, root, snapshot(root), column, lo, hi)
+    readWhere(spark, root, col(column).cast("long").between(lo, hi))
 
-  private def readPrunedAt(spark: SparkSession, root: String, snap: Snapshot,
-                           column: String, lo: Long, hi: Long): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    require(snap.version >= 0, s"not a TxTable (no committed log): $root")
-    requireNumericStats(snap, column)
-    readKept(spark, root, snap, snap.kept(between(longAttr(column), lo, hi)),
-      col(column).cast("long").between(lo, hi))
-  }
+  /** [[keptFiles]] of [[pointRead]]. */
+  def pointPruneAccounting(root: String, keys: Seq[Long]): (Int, Int, Int) =
+    keptFiles(SparkSession.active, root,
+      col(primaryKey(snapshot(root), root)).cast("long").isin(keys: _*))
 
-  /** Point read: result ≡ `read(...).where(key IN keys)`, but only the
-    * files whose logged range admits some key AND whose bloom claims
-    * possible membership of that key are opened — zero data I/O to
-    * decide. This is the point-lookup story on the layout range stats
-    * can't help with: per-epoch appended files each spanning the whole
-    * key domain. */
-  def pointRead(spark: SparkSession, root: String,
-                keys: Seq[Long]): DataFrame = {
-    val snap = snapshot(root)
-    pointReadAt(spark, root, snap, primaryKey(snap, root), keys)
-  }
-
-  /** [[pointRead]] on ANY declared stats column — secondary columns carry
-    * their own per-file blooms in the log, so a point probe on a
-    * non-primary dimension skips files with zero data I/O too. */
-  def pointReadOn(spark: SparkSession, root: String, column: String,
-                  keys: Seq[Long]): DataFrame =
-    pointReadAt(spark, root, snapshot(root), column, keys)
-
-  private def pointReadAt(spark: SparkSession, root: String, snap: Snapshot,
-                          column: String, keys: Seq[Long]): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    require(snap.version >= 0, s"not a TxTable (no committed log): $root")
-    requireNumericStats(snap, column)
-    readKept(spark, root, snap, snap.kept(in(longAttr(column), keys)),
-      col(column).cast("long").isin(keys: _*))
-  }
-
-  // ---- STRING-axis pruning reads ------------------------------------
-  // A string statsCol's logged (min, max) live in the prefix64 domain
-  // and its bloom keys on hash64 of the full value (see stageData):
-  // monotonicity of the encoding makes the kept set a SUPERSET of the
-  // files actually holding matches.
-
-  private def requireStrStats(root: String,
-                              snap: Snapshot, column: String): Unit = {
-    require(snap.version >= 0, s"not a TxTable (no committed log): $root")
-    require(snap.strCols.contains(column),
-      s"'$column' is not a declared STRING stats column " +
-        s"(string = ${snap.strCols.mkString("[", ",", "]")}, " +
-        s"secondary = ${snap.statsCols.mkString("[", ",", "]")})")
-  }
-
-  /** [[readPrunedOn]] for a STRING stats column. Result ≡
-    * `read(...).where(column BETWEEN lo AND hi)` (binary collation) —
-    * only files whose prefix64 range intersects [prefix64(lo),
-    * prefix64(hi)] are opened; strings equal through their first 8
-    * bytes collapse, which only widens the kept set. */
-  def readPrunedOnStr(spark: SparkSession, root: String, column: String,
-                      lo: String, hi: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val snap = snapshot(root)
-    requireStrStats(root, snap, column)
-    readKept(spark, root, snap, snap.kept(between(strAttr(column), lo, hi)),
-      col(column).between(lit(lo), lit(hi)))
-  }
-
-  /** PREFIX read (`column LIKE 'p%'`): the value range of every string
-    * starting with `p` is [prefix64(p), upper64(p)] in the encoded
-    * domain, so prefix predicates prune from the log exactly like
-    * ranges. Result ≡ `read(...).where(startswith(column, p))`. */
-  def prefixRead(spark: SparkSession, root: String, column: String,
-                 p: String): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val snap = snapshot(root)
-    requireStrStats(root, snap, column)
-    readKept(spark, root, snap,
-      snap.kept(StartsWith(strAttr(column), Literal(p))),
-      col(column).startsWith(p))
-  }
-
-  /** [[pointReadOn]] for a STRING stats column: the prefix64 range test
-    * admits every 8-byte-prefix sibling, so the hash64 BLOOM is what
-    * makes string point probes selective. Result ≡
-    * `read(...).where(column IN keys)`. */
-  def pointReadOnStr(spark: SparkSession, root: String, column: String,
-                     keys: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val snap = snapshot(root)
-    requireStrStats(root, snap, column)
-    readKept(spark, root, snap, snap.kept(in(strAttr(column), keys)),
-      col(column).isin(keys: _*))
-  }
-
-  /** (kept, total) accounting for a string range read — the log-only
-    * selection rule of [[readPrunedOnStr]]. */
-  def pruneAccountingOnStr(root: String, column: String,
-                           lo: String, hi: String): (Int, Int) = {
-    val snap = snapshot(root)
-    requireStrStats(root, snap, column)
-    (snap.kept(between(strAttr(column), lo, hi)).size, snap.files.size)
-  }
-
-  /** [[pruneAccountingOnStr]] with [[prefixRead]]'s selection rule. */
-  def prefixAccounting(root: String, column: String, p: String): (Int, Int) = {
-    val snap = snapshot(root)
-    requireStrStats(root, snap, column)
-    (snap.kept(StartsWith(strAttr(column), Literal(p))).size, snap.files.size)
-  }
-
-  /** (files kept by prefix-range stats alone, by range+bloom, total) for
-    * a string point read — [[pointPruneAccountingOn]]'s string twin;
-    * the gap between the first two numbers is the bloom's contribution,
-    * which on string axes is usually ALL of it. */
-  def pointPruneAccountingOnStr(root: String, column: String,
-                                keys: Seq[String]): (Int, Int, Int) = {
-    val snap = snapshot(root)
-    requireStrStats(root, snap, column)
-    val cond = in(strAttr(column), keys)
-    (snap.kept(cond, useBlooms = false).size, snap.kept(cond).size,
-      snap.files.size)
+  /** (files a range read of [lo, hi] on the stats key opens, live files). */
+  def pruneAccounting(root: String, lo: Long, hi: Long): (Int, Int) = {
+    val (_, kept, total) = keptFiles(SparkSession.active, root,
+      col(primaryKey(snapshot(root), root)).cast("long").between(lo, hi))
+    (kept, total)
   }
 
   // ---- SHINGLE (word n-gram) phrase probes --------------------------
@@ -1433,7 +1329,6 @@ object TxTable {
     * driver-bounded. `keys`'s first column must cast to long. */
   def pointReadKeys(spark: SparkSession, root: String, keys: DataFrame,
                     maxDriverKeys: Int = 10000): DataFrame = {
-    import org.apache.spark.sql.functions.col
     val snap = snapshot(root)
     val key = primaryKey(snap, root)
     // probe column name must not collide with any table column; a NULL
@@ -1444,7 +1339,8 @@ object TxTable {
       .where(col("__graft_probe_k").isNotNull).distinct()
     val head = kd.limit(maxDriverKeys + 1).collect()
     if (head.length <= maxDriverKeys)
-      pointRead(spark, root, head.map(_.getLong(0)).toSeq.sorted)
+      readWhere(spark, root,
+        col(key).cast("long").isin(head.map(_.getLong(0)).toSeq.sorted: _*))
     else
       morRead(spark, root, snap, snap.files)
         .join(kd, col(key).cast("long") === col("__graft_probe_k"), "left_semi")
@@ -1477,26 +1373,6 @@ object TxTable {
       Some(Commit(now.version + 1, "restore", restored,
         now.files.diff(target.files) ++ now.ledgers.map(_.path), tag))
     }
-  }
-
-  /** (files kept by range stats alone, files kept by range+bloom, total
-    * live files) for a point read — the log-only pruning ledger. */
-  def pointPruneAccounting(root: String, keys: Seq[Long]): (Int, Int, Int) = {
-    val snap = snapshot(root)
-    pointPruneAccountingAt(snap, primaryKey(snap, root), keys)
-  }
-
-  /** [[pointPruneAccounting]] for any declared stats column. */
-  def pointPruneAccountingOn(root: String, column: String,
-                             keys: Seq[Long]): (Int, Int, Int) =
-    pointPruneAccountingAt(snapshot(root), column, keys)
-
-  private def pointPruneAccountingAt(snap: Snapshot, column: String,
-                                     keys: Seq[Long]): (Int, Int, Int) = {
-    requireNumericStats(snap, column)
-    val cond = in(longAttr(column), keys)
-    (snap.kept(cond, useBlooms = false).size, snap.kept(cond).size,
-      snap.files.size)
   }
 
   /** Retained commit history, oldest first: (version, op, n_adds,
@@ -1698,18 +1574,24 @@ object TxTable {
   }
 
   /** Hard-link `f` from `srcRoot` into `dstRoot` under the same relative
-    * path, unless it is already there; across filesystems, copy it —
-    * still correct, data files being immutable. */
+    * path; across filesystems, copy it. A target that already exists —
+    * left by an earlier or a concurrent adopt of the same file — is the
+    * same file (data files are immutable and uuid-named), so it counts
+    * as done. The copy lands under a tmp name and is renamed into place,
+    * so a concurrent adopt never takes a half-written copy for done. */
   private def linkInto(srcRoot: String, dstRoot: String, f: String): Unit = {
     val src = Paths.get(srcRoot, f).toAbsolutePath
     val dst = Paths.get(dstRoot, f)
     Files.createDirectories(dst.getParent)
-    if (!Files.exists(dst))
-      try Files.createLink(dst, src)
-      catch {
-        case _: UnsupportedOperationException |
-             _: java.nio.file.FileSystemException => Files.copy(src, dst)
-      }
+    try Files.createLink(dst, src)
+    catch {
+      case _: java.nio.file.FileAlreadyExistsException => ()
+      case _: UnsupportedOperationException |
+           _: java.nio.file.FileSystemException =>
+        val tmp = dst.resolveSibling(s".tmp-${java.util.UUID.randomUUID}")
+        Files.copy(src, tmp)
+        Files.move(tmp, dst, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    }
   }
 
   /** Stage `df` under `snap`'s stats and shingle declarations. */
@@ -2106,7 +1988,7 @@ object TxTable {
   /** Create a new table at `root` from `df` (version 0).
     * @param statsKey a declared stats column (must be integral): every
     *   commit then records per-file [min, max] of it for its adds, making
-    *   [[readPruned]] and [[mergeCow]]'s file selection metadata-only.
+    *   [[readWhere]] and [[mergeCow]]'s file selection metadata-only.
     * @param check a declared CHECK constraint (a boolean SQL predicate):
     *   this and every later append/merge batch must satisfy it or the
     *   commit is refused — the data-quality gate at the table boundary.
@@ -2337,7 +2219,6 @@ object TxTable {
   def replaceWhere(spark: SparkSession, root: String, lo: Long, hi: Long,
                    batch: DataFrame,
                    tag: Option[String] = None): CommitResult = {
-    import org.apache.spark.sql.functions.col
     val snap0 = snapshot(root)
     require(snap0.version >= 0, s"not a TxTable: $root")
     val key = primaryKey(snap0, root)
@@ -2351,7 +2232,8 @@ object TxTable {
         "beyond its own scope)")
     transactFiles(spark, root, "replace-where", tag) { snap =>
       // stats-less files rewrite conservatively
-      val touched = snap.kept(between(longAttr(key), lo, hi))
+      val touched = snap.kept(
+        logCondition(spark, root, snap, col(key).cast("long").between(lo, hi)))
       val keep = snap.files.diff(touched)
       val survivors =
         if (touched.isEmpty)
@@ -2365,14 +2247,6 @@ object TxTable {
             !col(key).cast("long").between(lo, hi))
       (keep, survivors.unionByName(batch))
     }
-  }
-
-  /** (files a [[replaceWhere]] on [lo, hi] would rewrite, total live
-    * files) — the metadata-only selection rule, exposed. */
-  def replaceAccounting(root: String, lo: Long, hi: Long): (Int, Int) = {
-    val snap = snapshot(root)
-    (snap.statsKey.fold(snap.files)(k => snap.kept(between(longAttr(k), lo, hi))).size,
-      snap.files.size)
   }
 
   /** TIME-BASED retention — the "RETAIN N DAYS" policy spelled as an
@@ -2640,7 +2514,6 @@ object TxTable {
   def merge(spark: SparkSession, root: String, changes: DataFrame,
             keys: Seq[String], tag: Option[String] = None): CommitResult =
     transact(spark, root, "merge", tag) { current =>
-      import org.apache.spark.sql.functions.col
       // anti-join keeps unmatched current rows; union brings every change
       // allowMissingColumns = schema evolution: a column new to the
       // changes surfaces as NULL on carried-over rows (and vice versa)
@@ -2708,14 +2581,13 @@ object TxTable {
     * normal optimistic commit. A streamed-into table accretes files that
     * EACH span the whole key domain (every epoch carries all keys), so
     * the log's per-file [min, max] can never exclude anything and
-    * [[readPruned]] degenerates to a full scan. After OPTIMIZE the files
+    * [[readWhere]] degenerates to a full scan. After OPTIMIZE the files
     * tile the key space with tight disjoint stats, so a range read opens
     * ~(selected range / table range) of the files — the layout move that
     * turns a 100 TB table's point/range lookups from O(table) to
     * O(result). Time travel to pre-OPTIMIZE versions still resolves. */
   def optimize(spark: SparkSession, root: String,
                targetFiles: Int = 4): CommitResult = {
-    import org.apache.spark.sql.functions.col
     val key = snapshot(root).statsKey.getOrElse(
       throw new IllegalArgumentException(
         s"optimize needs a stats key — create(df, root, statsKey = Some(...))"))
@@ -2731,15 +2603,25 @@ object TxTable {
     * log alone. */
   def optimizeOn(spark: SparkSession, root: String, column: String,
                  targetFiles: Int = 4): CommitResult = {
-    import org.apache.spark.sql.functions.col
-    val snap = snapshot(root)
-    val declared = snap.statsKey.toSeq ++ snap.statsCols
-    require(declared.contains(column),
-      s"optimizeOn($column) needs the column declared for stats " +
-        s"(have ${declared.mkString("[", ",", "]")}) — the re-clustered " +
-        "layout would otherwise record no prunable metadata")
+    requireAxes(snapshot(root), "optimizeOn", Seq(column), numeric = false)
     transact(spark, root, "optimize")(
       _.repartitionByRange(targetFiles, col(column)).sortWithinPartitions(column))
+  }
+
+  /** The clustering axes of `what` must be declared for stats — the
+    * re-clustered layout would otherwise record no prunable metadata —
+    * and, when `numeric`, not string ones: the z-order curves bucket by
+    * equal-frequency quantiles. */
+  private def requireAxes(snap: Snapshot, what: String, axes: Seq[String],
+                          numeric: Boolean = true): Unit = {
+    val declared = snap.statsKey.toSeq ++ snap.statsCols
+    require(axes.forall(declared.contains),
+      s"$what(${axes.mkString(", ")}) needs every dimension declared for " +
+        s"stats (have ${declared.mkString("[", ",", "]")}) — the " +
+        "re-clustered layout would otherwise record no prunable metadata")
+    require(!numeric || axes.forall(c => !snap.strCols.contains(c)),
+      s"$what needs numeric axes (equal-frequency quantile bucketing) — " +
+        "cluster a string axis with optimizeOn instead")
   }
 
   /** Multi-dimensional OPTIMIZE: re-cluster the live snapshot along the
@@ -2756,16 +2638,7 @@ object TxTable {
     * Time travel to pre-OPTIMIZE versions still resolves. */
   def optimizeZ(spark: SparkSession, root: String, x: String, y: String,
                 targetFiles: Int = 4): CommitResult = {
-    import org.apache.spark.sql.functions.col
-    val snap = snapshot(root)
-    val declared = snap.statsKey.toSeq ++ snap.statsCols
-    require(Seq(x, y).forall(declared.contains),
-      s"optimizeZ($x, $y) needs both dimensions declared for stats " +
-        s"(have ${declared.mkString("[", ",", "]")}) — the re-clustered " +
-        "layout would otherwise record no prunable metadata")
-    require(Seq(x, y).forall(c => !snap.strCols.contains(c)),
-      "optimizeZ needs numeric axes (equal-frequency quantile " +
-        "bucketing) — cluster a string axis with optimizeOn instead")
+    requireAxes(snapshot(root), "optimizeZ", Seq(x, y))
     transact(spark, root, "optimize-z")(
       ZOrderLayout.clusterByZ(_, col(x), col(y), targetFiles))
   }
@@ -2779,16 +2652,7 @@ object TxTable {
     * dimension halves per-axis tile resolution at a fixed file budget). */
   def optimizeZN(spark: SparkSession, root: String, columns: Seq[String],
                  targetFiles: Int = 8): CommitResult = {
-    import org.apache.spark.sql.functions.col
-    val snap = snapshot(root)
-    val declared = snap.statsKey.toSeq ++ snap.statsCols
-    require(columns.forall(declared.contains),
-      s"optimizeZN(${columns.mkString(", ")}) needs every dimension " +
-        s"declared for stats (have ${declared.mkString("[", ",", "]")}) — " +
-        "the re-clustered layout would otherwise record no prunable metadata")
-    require(columns.forall(c => !snap.strCols.contains(c)),
-      "optimizeZN needs numeric axes (equal-frequency quantile " +
-        "bucketing) — cluster a string axis with optimizeOn instead")
+    requireAxes(snapshot(root), "optimizeZN", columns)
     transact(spark, root, "optimize-z")(
       ZOrderLayout.clusterByZN(_, columns.map(col), targetFiles))
   }
@@ -2806,26 +2670,9 @@ object TxTable {
     * the previous optimize commit's version. */
   def optimizeZSince(spark: SparkSession, root: String, x: String, y: String,
                      sinceVersion: Long, targetFiles: Int = 4): CommitResult = {
-    import org.apache.spark.sql.functions.col
-    val snap0 = snapshot(root)
-    val declared = snap0.statsKey.toSeq ++ snap0.statsCols
-    require(Seq(x, y).forall(declared.contains),
-      s"optimizeZSince($x, $y) needs both dimensions declared for stats " +
-        s"(have ${declared.mkString("[", ",", "]")})")
-    require(Seq(x, y).forall(c => !snap0.strCols.contains(c)),
-      "optimizeZSince needs numeric axes — cluster a string axis with " +
-        "optimizeOn instead")
-    transactFiles(spark, root, "optimize-z-incr") { snap =>
-      val keep = snap.files.filter(f =>
-        snap.addedAt(f) <= sinceVersion)
-      val fresh = snap.files.diff(keep)
-      val rewrite =
-        if (fresh.isEmpty)
-          emptyRead(spark, root, snap)
-        else ZOrderLayout.clusterByZ(
-          morRead(spark, root, snap, fresh), col(x), col(y), targetFiles)
-      (keep, rewrite)
-    }
+    requireAxes(snapshot(root), "optimizeZSince", Seq(x, y))
+    retileSince(spark, root, sinceVersion)(
+      ZOrderLayout.clusterByZ(_, col(x), col(y), targetFiles))
   }
 
   /** INCREMENTAL [[optimizeZN]]: re-tile only the files added after
@@ -2835,69 +2682,22 @@ object TxTable {
   def optimizeZNSince(spark: SparkSession, root: String,
                       columns: Seq[String], sinceVersion: Long,
                       targetFiles: Int = 8): CommitResult = {
-    import org.apache.spark.sql.functions.col
-    val snap0 = snapshot(root)
-    val declared = snap0.statsKey.toSeq ++ snap0.statsCols
-    require(columns.forall(declared.contains),
-      s"optimizeZNSince(${columns.mkString(", ")}) needs every dimension " +
-        s"declared for stats (have ${declared.mkString("[", ",", "]")})")
-    require(columns.forall(c => !snap0.strCols.contains(c)),
-      "optimizeZNSince needs numeric axes — cluster a string axis with " +
-        "optimizeOn instead")
+    requireAxes(snapshot(root), "optimizeZNSince", columns)
+    retileSince(spark, root, sinceVersion)(
+      ZOrderLayout.clusterByZN(_, columns.map(col), targetFiles))
+  }
+
+  /** Rewrite the effective content of the files added after
+    * `sinceVersion` through `cluster`; older files are kept. */
+  private def retileSince(spark: SparkSession, root: String, sinceVersion: Long)
+                         (cluster: DataFrame => DataFrame): CommitResult =
     transactFiles(spark, root, "optimize-z-incr") { snap =>
-      val keep = snap.files.filter(f =>
-        snap.addedAt(f) <= sinceVersion)
+      val keep = snap.files.filter(snap.addedAt(_) <= sinceVersion)
       val fresh = snap.files.diff(keep)
-      val rewrite =
-        if (fresh.isEmpty)
-          emptyRead(spark, root, snap)
-        else ZOrderLayout.clusterByZN(
-          morRead(spark, root, snap, fresh), columns.map(col), targetFiles)
-      (keep, rewrite)
+      (keep, if (fresh.isEmpty) emptyRead(spark, root, snap)
+             else cluster(morRead(spark, root, snap, fresh)))
     }
-  }
 
-  /** Metadata-only pruning accounting: (files a [lo, hi] range read
-    * would open, live files total) — [[readPruned]]'s selection rule,
-    * exposed so layout decisions (did OPTIMIZE help?) are checkable
-    * without scanning data. */
-  def pruneAccounting(root: String, lo: Long, hi: Long): (Int, Int) = {
-    val snap = snapshot(root)
-    pruneAccountingAt(snap, primaryKey(snap, root), lo, hi)
-  }
-
-  /** [[pruneAccounting]] for any declared stats column. */
-  def pruneAccountingOn(root: String, column: String,
-                        lo: Long, hi: Long): (Int, Int) =
-    pruneAccountingAt(snapshot(root), column, lo, hi)
-
-  private def pruneAccountingAt(snap: Snapshot, column: String,
-                                lo: Long, hi: Long): (Int, Int) = {
-    requireNumericStats(snap, column)
-    (snap.kept(between(longAttr(column), lo, hi)).size, snap.files.length)
-  }
-
-  /** Copy-on-write MERGE — the merge shape that holds at 100 TB: only
-    * files whose key range can CONTAIN a changed key are rewritten
-    * (anti-join + union, exactly [[merge]]'s semantics); every other
-    * file carries over by reference in the commit. When the table was
-    * created with a stats key, file selection reads ONLY the commit
-    * log's per-file [min, max] — zero data I/O before the rewrite
-    * itself; otherwise one distributed pass computes the ranges. A
-    * change batch with entirely new keys touches ZERO existing files —
-    * pure incremental append. On a range-partitioned table (writers
-    * cluster by key, e.g. time), a merge touches only the tail files —
-    * the streaming-upsert shape. min/max is a sound over-approximation:
-    * a file inside the range but without the key is rewritten verbatim,
-    * never corrupted.
-    *
-    * Composite merge keys: pass `mergeKeys` (which must CONTAIN `key`) to
-    * upsert on a composite identity while files are still selected by
-    * `key`'s ranges alone — the streaming-upsert shape, where a keyed
-    * window aggregate merges on (window, group) but an epoch's files are
-    * picked by the window-time column. `key` ∈ `mergeKeys` is what makes
-    * range selection SOUND: every current row matching a change's full
-    * key shares its `key` value, so it must live in a touched file. */
   /** Copy-on-write DELETE — [[mergeCow]]'s file selection (metadata-only
     * when the table has log stats) with a remove-rows rewrite: files
     * whose `key` range can contain a doomed key are rewritten WITHOUT
@@ -2908,7 +2708,6 @@ object TxTable {
   def deleteCow(spark: SparkSession, root: String, doomed: DataFrame,
                 key: String, tag: Option[String] = None): CommitResult =
     transactFiles(spark, root, "delete-cow", tag) { snap =>
-      import org.apache.spark.sql.functions.col
       val touched = selectTouched(spark, root, snap, doomed, key)
       val keep = snap.files.filterNot(touched)
       val rewrite =
@@ -3038,8 +2837,8 @@ object TxTable {
         if (keyRows.length > 10000) applicable // too many to prune by
         else {
           val doomedKeys = keyRows.map(_.getLong(0)).toSeq
-          to.statsKey.fold(applicable)(k =>
-            to.copy(files = applicable).kept(in(longAttr(k), doomedKeys)))
+          to.statsKey.fold(applicable)(k => to.copy(files = applicable).kept(
+            logCondition(spark, root, to, col(k).cast("long").isin(doomedKeys: _*))))
         }
         }
       }
@@ -3063,6 +2862,27 @@ object TxTable {
         col("pre"), col("post")): _*)
   }
 
+  /** Copy-on-write MERGE — the merge shape that holds at 100 TB: only
+    * files whose key range can CONTAIN a changed key are rewritten
+    * (anti-join + union, exactly [[merge]]'s semantics); every other
+    * file carries over by reference in the commit. When the table was
+    * created with a stats key, file selection reads ONLY the commit
+    * log's per-file [min, max] — zero data I/O before the rewrite
+    * itself; otherwise one distributed pass computes the ranges. A
+    * change batch with entirely new keys touches ZERO existing files —
+    * pure incremental append. On a range-partitioned table (writers
+    * cluster by key, e.g. time), a merge touches only the tail files —
+    * the streaming-upsert shape. min/max is a sound over-approximation:
+    * a file inside the range but without the key is rewritten verbatim,
+    * never corrupted.
+    *
+    * Composite merge keys: pass `mergeKeys` (which must CONTAIN `key`) to
+    * upsert on a composite identity while files are still selected by
+    * `key`'s ranges alone — the streaming-upsert shape, where a keyed
+    * window aggregate merges on (window, group) but an epoch's files are
+    * picked by the window-time column. `key` ∈ `mergeKeys` is what makes
+    * range selection SOUND: every current row matching a change's full
+    * key shares its `key` value, so it must live in a touched file. */
   def mergeCow(spark: SparkSession, root: String, changes: DataFrame,
                key: String, tag: Option[String] = None,
                mergeKeys: Seq[String] = Seq.empty): CommitResult = {
@@ -3072,7 +2892,6 @@ object TxTable {
         "otherwise a matching row could hide in an unselected file")
     enforceCheck(changes, snapshot(root).check, "merge changes")
     transactFiles(spark, root, "merge-cow", tag, sizeStaged = true) { snap =>
-      import org.apache.spark.sql.functions.col
       // selection reads ONLY the commit log's per-file [min,max] when the
       // table has a stats key — zero data I/O before the rewrite itself
       val touched = selectTouched(spark, root, snap, changes, key)
@@ -3165,7 +2984,6 @@ object TxTable {
   /** The ledger projection for [[deleteMorKeys]] / [[mergeMorKeys]]:
     * long-normalized only when that is lossless. */
   private def ledgerKeys(df: DataFrame, keys: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.col
     if (keys.size == 1 && isIntegral(
         df.schema(df.schema.fieldIndex(keys.head)).dataType))
       df.select(col(keys.head).cast("long").as(keys.head))

@@ -278,7 +278,7 @@ object CustomOps {
         throw new IllegalStateException(
           "feed-maintained index diverged from the from-scratch assignment")
       TxTable.optimizeOn(s, idx, "cell", targetFiles = 8)
-      val (kept, total) = TxTable.pruneAccountingOn(idx, "cell", 0L, 1L)
+      val (_, kept, total) = TxTable.keptFiles(s, idx, col("cell").between(0L, 1L))
       if (kept * 2 > total) throw new IllegalStateException(
         s"cell-clustered index did not prune: opens $kept/$total")
       val qs = emb.filter(col("vec_id") < 5)

@@ -1170,19 +1170,19 @@ object Extras {
         .agg(max("o_orderkey"), max("o_custkey")).head()
         .toSeq.map(_.asInstanceOf[Number].longValue).toArray
       val (kq, cq) = (maxK / 4, maxC / 4)
-      val (kb, nb) = TxTable.pruneAccountingOn(root, "o_orderkey", 1L, kq)
-      val (cb, _) = TxTable.pruneAccountingOn(root, "o_custkey", 1L, cq)
+      val (_, kb, nb) = TxTable.keptFiles(s, root, col("o_orderkey").between(1L, kq))
+      val (_, cb, _) = TxTable.keptFiles(s, root, col("o_custkey").between(1L, cq))
       if (kb != nb || cb != nb || nb < 4) throw new IllegalStateException(
         s"expected a layout unprunable on both dims, got k=$kb c=$cb of $nb")
       TxTable.optimizeZ(s, root, "o_orderkey", "o_custkey",
         targetFiles = 16)                                        // v4
-      val (ka, na) = TxTable.pruneAccountingOn(root, "o_orderkey", 1L, kq)
-      val (ca, nca) = TxTable.pruneAccountingOn(root, "o_custkey", 1L, cq)
+      val (_, ka, na) = TxTable.keptFiles(s, root, col("o_orderkey").between(1L, kq))
+      val (_, ca, nca) = TxTable.keptFiles(s, root, col("o_custkey").between(1L, cq))
       if (ka * 2 > na) throw new IllegalStateException(
         s"z-order did not tighten the primary dim: opens $ka/$na")
       if (ca * 2 > nca) throw new IllegalStateException(
         s"z-order did not tighten the secondary dim: opens $ca/$nca")
-      TxTable.readPrunedOn(s, root, "o_custkey", 1L, cq)
+      TxTable.readWhere(s, root, col("o_custkey").between(1L, cq))
         .orderBy("o_orderkey")
     },
 
@@ -1212,19 +1212,19 @@ object Extras {
       (1 to 3).foreach(b => TxTable.append(s, root, batch(b)))   // v1..v3
       // per-epoch layout: every file spans the whole name domain, so
       // string stats exclude nothing — asserted from the log
-      val (k0, n0) = TxTable.pruneAccountingOnStr(root, "p_name", "b", "m")
+      val (_, k0, n0) = TxTable.keptFiles(s, root, col("p_name").between("b", "m"))
       if (k0 != n0 || n0 < 4) throw new IllegalStateException(
         s"expected a string-unprunable epoch layout, got $k0 of $n0")
       TxTable.optimizeOn(s, root, "p_name", targetFiles = 8)     // v4
       // 8 distinct leading letters (b..s); a [b, i] range read on the
       // re-clustered layout opens at most half the files
-      val (k1, n1) = TxTable.pruneAccountingOnStr(root, "p_name", "b", "i")
+      val (_, k1, n1) = TxTable.keptFiles(s, root, col("p_name").between("b", "i"))
       if (k1 * 2 > n1) throw new IllegalStateException(
         s"string range read still opens $k1 of $n1 after optimizeOn")
-      val (kp, np) = TxTable.prefixAccounting(root, "p_name", "r")
+      val (_, kp, np) = TxTable.keptFiles(s, root, col("p_name").startsWith("r"))
       if (kp * 2 > np) throw new IllegalStateException(
         s"prefix read still opens $kp of $np after optimizeOn")
-      val viaPrefix = TxTable.prefixRead(s, root, "p_name", "r").count()
+      val viaPrefix = TxTable.readWhere(s, root, col("p_name").startsWith("r")).count()
       val viaPlain = TxTable.read(s, root)
         .where(col("p_name").startsWith("r")).count()
       if (viaPrefix != viaPlain) throw new IllegalStateException(
@@ -1234,14 +1234,14 @@ object Extras {
       val probe = src.filter(col("p_partkey") === 100).head().getString(1)
       val wantProbe = TxTable.read(s, root)
         .where(col("p_name") === probe).count()
-      if (TxTable.pointReadOnStr(s, root, "p_name", Seq(probe)).count()
+      if (TxTable.readWhere(s, root, col("p_name") === probe).count()
           != wantProbe || wantProbe < 1) throw new IllegalStateException(
         "string point read lost rows")
-      val (_, bloomKept, tot) = TxTable.pointPruneAccountingOnStr(
-        root, "p_name", Seq("no such part name"))
+      val (_, bloomKept, tot) = TxTable.keptFiles(s, root,
+        col("p_name") === "no such part name")
       if (bloomKept > tot / 2) throw new IllegalStateException(
         s"absent-key probe kept $bloomKept of $tot files")
-      TxTable.readPrunedOnStr(s, root, "p_name", "b", "i")
+      TxTable.readWhere(s, root, col("p_name").between("b", "i"))
         .groupBy(substring(col("p_name"), 1, 1).as("letter"))
         .agg(count(lit(1)).as("n"), sum(col("cents")).as("cents_sum"))
         .orderBy("letter")
@@ -1371,7 +1371,7 @@ object Extras {
         root, statsKey = Some("o_orderkey"))
       val maxK = src.agg(max("o_orderkey")).head().getLong(0)
       val hi = maxK / 4
-      val (touched, total) = TxTable.replaceAccounting(root, 1L, hi)
+      val (_, touched, total) = TxTable.keptFiles(s, root, col("o_orderkey").between(1L, hi))
       if (touched * 2 > total) throw new IllegalStateException(
         s"quarter-range backfill would rewrite $touched of $total files")
       val fixed = src.filter(col("o_orderkey").between(1L, hi))
@@ -1512,7 +1512,7 @@ object Extras {
         .map(_.asInstanceOf[Number].longValue)
       val quarters = dims.zip(maxes.map(_ / 4))
       quarters.foreach { case (c, q) =>
-        val (kept, total) = TxTable.pruneAccountingOn(root, c, 1L, q)
+        val (_, kept, total) = TxTable.keptFiles(s, root, col(c).between(1L, q))
         if (kept != total || total < 4) throw new IllegalStateException(
           s"expected a layout unprunable on $c, opens $kept/$total")
       }
@@ -1526,12 +1526,12 @@ object Extras {
       // 1/2; production sizes tiles to ~1 GB files instead)
       TxTable.optimizeZN(s, root, dims, targetFiles = 128)       // v4
       quarters.foreach { case (c, q) =>
-        val (kept, total) = TxTable.pruneAccountingOn(root, c, 1L, q)
+        val (_, kept, total) = TxTable.keptFiles(s, root, col(c).between(1L, q))
         if (kept * 2 > total) throw new IllegalStateException(
           s"3-dim z-order did not tighten $c: opens $kept/$total")
       }
       val (c3, q3) = quarters(2)
-      TxTable.readPrunedOn(s, root, c3, 1L, q3)
+      TxTable.readWhere(s, root, col(c3).between(1L, q3))
         .orderBy("l_orderkey", "l_partkey", "l_suppkey", "qty")
     },
 
@@ -1615,7 +1615,7 @@ object Extras {
     // rewrite at any step, O(new files) regardless of table size).
     // Asserted in-query: staging is invisible to main pre-publish, the
     // adopt is tag-idempotent, and the carried stats keep range pruning
-    // working on adopted files (readPruned opens only them). Oracle =
+    // working on adopted files (readWhere opens only them). Oracle =
     // the same rollup straight off lineitem — branch lifecycle must be
     // result-invisible.
     "Q-qual-36" -> { (s, d) =>
@@ -1637,7 +1637,7 @@ object Extras {
       val staged = TxTable.read(s, main).count() - before
       // pruning works on the adopted files' carried stats: a range that
       // only the staged rows cover reads some rows without full scan
-      val lo = TxTable.readPruned(s, main, 4L, 4L).count()
+      val lo = TxTable.readWhere(s, main, col("k") === 4L).count()
       TxTable.read(s, main)
         .groupBy((col("k") % 7).as("bucket"))
         .agg(count(lit(1)).as("n"), sum("p").as("p_sum"), sum("q").as("q_sum"))
@@ -2543,14 +2543,14 @@ object Extras {
       def batch(b: Int) = ev.filter(col("event_id") % 4 === b).drop("event_id")
       TxTable.create(batch(0), root, statsKey = Some("k"))     // v0
       (1 to 3).foreach(b => TxTable.append(s, root, batch(b))) // v1..v3
-      val (kBefore, nBefore) = TxTable.pruneAccounting(root, 3L, 5L)
+      val (_, kBefore, nBefore) = TxTable.keptFiles(s, root, col("k").between(3L, 5L))
       if (kBefore != nBefore || nBefore < 4) throw new IllegalStateException(
         s"expected an unprunable epoch layout, got $kBefore/$nBefore")
       TxTable.optimize(s, root, targetFiles = 4)               // v4
-      val (kAfter, nAfter) = TxTable.pruneAccounting(root, 3L, 5L)
+      val (_, kAfter, nAfter) = TxTable.keptFiles(s, root, col("k").between(3L, 5L))
       if (kAfter * 2 > nAfter) throw new IllegalStateException(
         s"optimize did not tighten file stats: range read opens $kAfter/$nAfter")
-      TxTable.readPruned(s, root, 3L, 5L)
+      TxTable.readWhere(s, root, col("k").between(3L, 5L))
         .groupBy("k", "event_type")
         .agg(count(lit(1)).as("n"), sum(col("cents")).as("cents"))
         .orderBy("k", "event_type")
@@ -2578,12 +2578,13 @@ object Extras {
       TxTable.create(batch(0), root, statsKey = Some("o_orderkey")) // v0
       (1 to 3).foreach(b => TxTable.append(s, root, batch(b)))      // v1..v3
       val keys = Seq(8L, 13L, 121L, 517L, 1001L, 1004L) // classes {0,1} only
-      val (rangeKept, bloomKept, total) = TxTable.pointPruneAccounting(root, keys)
+      val (rangeKept, bloomKept, total) =
+        TxTable.keptFiles(s, root, col("o_orderkey").isin(keys: _*))
       if (rangeKept != total || total < 4) throw new IllegalStateException(
         s"expected range-unprunable epoch layout, got $rangeKept/$total")
       if (bloomKept > total - 2) throw new IllegalStateException(
         s"blooms failed to prune the keyless residue classes: $bloomKept/$total")
-      TxTable.pointRead(s, root, keys)
+      TxTable.readWhere(s, root, col("o_orderkey").isin(keys: _*))
         .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
         .orderBy("o_orderkey")
     },

@@ -27,7 +27,8 @@ import graft.operators.TxTable
   * Skipping is strictly conservative: a file is dropped only when a
   * top-level conjunct provably matches no row. The decision is
   * [[TxTable.Snapshot.kept]] — the same [[graft.operators.GraftSkipping]]
-  * evaluator the TxTable API's pruned reads use.
+  * evaluator [[TxTable.readWhere]] and [[TxTable.keptFiles]] use, which
+  * optimize their predicate into the form these data filters have.
   *
   * File sizes come from one filesystem stat per live file at index
   * construction; a production deployment would record lengths in the
@@ -89,7 +90,7 @@ final class GraftFileIndex(
 object GraftFileIndex {
   /** Last (total live files, files kept) per table root — the pruning
     * accounting specs and queries assert on (same role as
-    * [[TxTable]]'s pointPruneAccounting, but for the planner path). */
+    * [[TxTable.keptFiles]], but for the planner path). */
   private val listings = new ConcurrentHashMap[String, (Int, Int)]()
   private def record(root: String, total: Int, kept: Int): Unit =
     listings.put(root, (total, kept))

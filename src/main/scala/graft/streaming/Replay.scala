@@ -3,6 +3,8 @@ package graft.streaming
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -127,16 +129,19 @@ object Replay {
     (spark.table(name), dropped)
   }
 
-  /** Like `run` but also reports the FINAL state-store footprint per
-    * stateful operator — (operatorName, numRowsTotal, memoryUsedBytes)
-    * from the last progress that carried state metrics. This is the
-    * state-observability hook the bounded-state specs assert on: after
-    * a watermarked multi-chunk drain, the rows left in state must be
-    * the OPEN windows only — the watermark's purge is what makes a
-    * stateful query survive an unbounded stream, and this makes that
-    * contract measurable instead of assumed. */
+  /** Like `run` but also reports, per stateful operator, the FINAL
+    * state-store footprint — (operatorName, numRowsTotal,
+    * memoryUsedBytes) from the last progress that carried state metrics
+    * — and its custom metrics (RocksDB gets and puts, ...) summed over
+    * every batch of the drain. This is the state-observability hook the
+    * bounded-state specs assert on: after a watermarked multi-chunk
+    * drain, the rows left in state must be the OPEN windows only — the
+    * watermark's purge is what makes a stateful query survive an
+    * unbounded stream, and this makes that contract measurable instead
+    * of assumed. The summed counters measure a drain's state work
+    * independently of the host's speed. */
   def runWithStateUsage(streamDf: DataFrame, outputMode: String)
-      : (DataFrame, Seq[(String, Long, Long)]) = {
+      : (DataFrame, Seq[(String, Long, Long, Map[String, Long])]) = {
     val spark = streamDf.sparkSession
     val name = s"replay_${counter.incrementAndGet()}"
     val usage = withReplayPartitions(spark) {
@@ -148,11 +153,15 @@ object Replay {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      Option(q.recentProgress).toSeq.flatten
+      val withState = Option(q.recentProgress).toSeq.flatten
         .filter(p => Option(p.stateOperators).exists(_.nonEmpty))
-        .lastOption.toSeq
-        .flatMap(_.stateOperators.toSeq.map(op =>
-          (op.operatorName, op.numRowsTotal, op.memoryUsedBytes)))
+      withState.lastOption.toSeq.flatMap(_.stateOperators.toSeq.zipWithIndex.map {
+        case (op, i) =>
+          (op.operatorName, op.numRowsTotal, op.memoryUsedBytes,
+            withState.flatMap(_.stateOperators.lift(i))
+              .flatMap(_.customMetrics.asScala.map { case (k, v) => k -> v.longValue })
+              .groupMapReduce(_._1)(_._2)(_ + _))
+      })
     }
     (spark.table(name), usage)
   }

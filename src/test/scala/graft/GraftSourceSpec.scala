@@ -238,13 +238,11 @@ class GraftSourceSpec extends AnyFunSuite {
     assert(got == want && want.nonEmpty)
   }
 
-  test("TxTable's pruned reads and the planner keep the same files and rows") {
+  /** Six append-only files: range-clustered and domain-spanning on the
+    * long key k, with a long secondary b and a string s, both with
+    * blooms. */
+  private def parityTable(root: String, rnd: scala.util.Random): Unit = {
     import spark.implicits._
-    val rnd = new scala.util.Random(20261018L)
-    val root = freshRoot()
-    // append-only (the format scan refuses MoR ledgers): range-clustered
-    // and domain-spanning files on the long key k, a long secondary b
-    // and a string s, both with blooms
     def batch(i: Int) = (0 until 40).map { j =>
       val k = if (i % 2 == 0) i * 100L + rnd.nextInt(100) else rnd.nextInt(600).toLong
       (k, rnd.nextInt(1000).toLong,
@@ -252,39 +250,64 @@ class GraftSourceSpec extends AnyFunSuite {
     }.toDF("k", "b", "s").coalesce(1)
     TxTable.create(batch(0), root, Some("k"), None, Seq("b", "s"))
     (1 until 6).foreach(i => TxTable.append(spark, root, batch(i)))
-    val rows = TxTable.read(spark, root).as[(Long, Long, String)].collect()
+  }
+
+  /** Three rounds of random range and IN predicates on k and b, and
+    * range, prefix and IN predicates on s, with values drawn from `rows`
+    * and from outside them. */
+  private def predicates(rnd: scala.util.Random,
+                         rows: Array[(Long, Long, String)]): Seq[Column] = {
     def someS(): String =
       if (rnd.nextBoolean()) rows(rnd.nextInt(rows.length))._3
       else s"${('a' + rnd.nextInt(7)).toChar}${rnd.nextInt(60)}"
-    def sameAs(api: DataFrame, kept: Int, planner: Column): Unit = {
-      GraftFileIndex.resetListing(root)
-      val got = spark.read.format("graft").load(root).where(planner)
-        .as[(Long, Long, String)].collect().sorted.toSeq
-      assert(GraftFileIndex.lastListing(root).map(_._2).contains(kept),
-        s"$planner: API kept $kept, planner ${GraftFileIndex.lastListing(root)}")
-      assert(api.as[(Long, Long, String)].collect().sorted.toSeq == got,
-        s"$planner: rows differ")
-    }
-    for (_ <- 0 until 3) {
-      for ((c, vs) <- Seq("k" -> rows.map(_._1), "b" -> rows.map(_._2))) {
+    (0 until 3).flatMap { _ =>
+      Seq("k" -> rows.map(_._1), "b" -> rows.map(_._2)).flatMap { case (c, vs) =>
         val lo = rnd.nextInt(1000).toLong - 20
         val hi = lo + rnd.nextInt(150)
-        sameAs(TxTable.readPrunedOn(spark, root, c, lo, hi),
-          TxTable.pruneAccountingOn(root, c, lo, hi)._1, col(c).between(lo, hi))
         val keys = Seq.fill(1 + rnd.nextInt(12))(
           if (rnd.nextBoolean()) rnd.nextInt(1100).toLong else vs(rnd.nextInt(vs.length)))
-        sameAs(TxTable.pointReadOn(spark, root, c, keys),
-          TxTable.pointPruneAccountingOn(root, c, keys)._2, col(c).isin(keys: _*))
+        Seq(col(c).between(lo, hi), col(c).isin(keys: _*))
+      } ++ {
+        val (lo, hi) = Seq(someS(), someS()).sorted match { case Seq(a, b) => (a, b) }
+        val p = someS().take(1 + rnd.nextInt(2))
+        Seq(col("s").between(lo, hi), col("s").startsWith(p),
+          col("s").isin(Seq.fill(1 + rnd.nextInt(12))(someS()): _*))
       }
-      val (lo, hi) = Seq(someS(), someS()).sorted match { case Seq(a, b) => (a, b) }
-      sameAs(TxTable.readPrunedOnStr(spark, root, "s", lo, hi),
-        TxTable.pruneAccountingOnStr(root, "s", lo, hi)._1, col("s").between(lo, hi))
-      val p = someS().take(1 + rnd.nextInt(2))
-      sameAs(TxTable.prefixRead(spark, root, "s", p),
-        TxTable.prefixAccounting(root, "s", p)._1, col("s").startsWith(p))
-      val keys = Seq.fill(1 + rnd.nextInt(12))(someS())
-      sameAs(TxTable.pointReadOnStr(spark, root, "s", keys),
-        TxTable.pointPruneAccountingOnStr(root, "s", keys)._2, col("s").isin(keys: _*))
     }
+  }
+
+  test("TxTable's pruned reads and the planner keep the same files and rows") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(20261018L)
+    val root = freshRoot()
+    parityTable(root, rnd)
+    val rows = TxTable.read(spark, root).as[(Long, Long, String)].collect()
+    for (p <- predicates(rnd, rows)) {
+      GraftFileIndex.resetListing(root)
+      val got = spark.read.format("graft").load(root).where(p)
+        .as[(Long, Long, String)].collect().sorted.toSeq
+      val kept = TxTable.keptFiles(spark, root, p)._2
+      assert(GraftFileIndex.lastListing(root).map(_._2).contains(kept),
+        s"$p: readWhere kept $kept, planner ${GraftFileIndex.lastListing(root)}")
+      assert(TxTable.readWhere(spark, root, p).as[(Long, Long, String)]
+        .collect().sorted.toSeq == got, s"$p: rows differ")
+    }
+  }
+
+  test("readWhere over live MoR ledgers keeps the rows read().where() keeps") {
+    // the format scan refuses this table: readWhere is its pruned read
+    import spark.implicits._
+    val rnd = new scala.util.Random(20261020L)
+    val root = freshRoot()
+    parityTable(root, rnd)
+    TxTable.deleteMorKeys(spark, root, (0L until 600L by 7).toDF("k"), Seq("k"))
+    TxTable.mergeMor(spark, root, (0L until 600L by 11)
+      .map(k => (k, k + 1000L, s"u$k")).toDF("k", "b", "s"), "k")
+    assert(TxTable.snapshot(root).ledgers.size == 2)
+    val all = TxTable.read(spark, root)
+    for (p <- predicates(rnd, all.as[(Long, Long, String)].collect()))
+      assert(TxTable.readWhere(spark, root, p).as[(Long, Long, String)]
+        .collect().sorted.toSeq ==
+        all.where(p).as[(Long, Long, String)].collect().sorted.toSeq, s"$p")
   }
 }

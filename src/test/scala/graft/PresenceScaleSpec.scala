@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -31,30 +31,34 @@ class PresenceScaleSpec extends AnyFunSuite {
   // assertion would measure nothing
   private val T2 = T1 + TTL / 2
 
+  /** Write `df` as ONE parquet file into `tmp`/stream, stamped with
+    * chunk `i`'s modification time. One file per chunk: multiple
+    * same-mod-time parts would each become their own maxFilesPerTrigger
+    * batch in arbitrary order, and once the first advances the
+    * watermark to its chunk's event time the siblings' rows arrive late
+    * and drop. */
+  private def writeChunk(tmp: java.nio.file.Path, i: Int, df: DataFrame): Unit = {
+    val f = tmp.resolve(s"c$i")
+    df.coalesce(1).write.mode("overwrite").parquet(f.toString)
+    val listing = Files.list(f)
+    val part = try listing.toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .find(_.getFileName.toString.endsWith(".parquet")).get finally listing.close()
+    val out = tmp.resolve("stream").resolve(s"c$i.parquet")
+    Files.copy(part, out)
+    Files.setLastModifiedTime(out,
+      java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
+  }
+
   test("TTL eviction semantics on a hand fixture (timer offline + re-online)") {
     import spark.implicits._
     val tmp = graft.queries.tempDir("graft_presence_hand")
     val dir = Files.createDirectory(tmp.resolve("stream"))
-    def writeChunk(i: Int, rows: Seq[(String, Long)]): Unit = {
-      val f = tmp.resolve(s"c$i")
-      rows.toDF("device_id", "ts_ms").coalesce(1)
-        .write.mode("overwrite").parquet(f.toString)
-      val listing = Files.list(f)
-      val parts = try listing.toArray.map(_.asInstanceOf[java.nio.file.Path])
-        .filter(_.getFileName.toString.endsWith(".parquet")) finally listing.close()
-      parts.zipWithIndex.foreach { case (p, j) =>
-        val out = dir.resolve(s"c${i}_$j.parquet")
-        Files.copy(p, out)
-        Files.setLastModifiedTime(out,
-          java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-      }
-    }
     // a: seen at T0 only -> timeout offline at T0+TTL, evicted
     // b: seen at T0 and T1 -> data-derived offline+online, stays in state
     // c: first seen at T1 -> online, stays
-    writeChunk(1, Seq("a" -> T0, "b" -> T0))
-    writeChunk(2, Seq("b" -> T1, "c" -> T1))
-    writeChunk(3, Seq("sentinel" -> T2))
+    writeChunk(tmp, 1, Seq("a" -> T0, "b" -> T0).toDF("device_id", "ts_ms"))
+    writeChunk(tmp, 2, Seq("b" -> T1, "c" -> T1).toDF("device_id", "ts_ms"))
+    writeChunk(tmp, 3, Seq("sentinel" -> T2).toDF("device_id", "ts_ms"))
     val schema = spark.read.parquet(tmp.resolve("c1").toString).schema
     val src = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(dir.toString)
@@ -84,28 +88,11 @@ class PresenceScaleSpec extends AnyFunSuite {
     val ACTIVE = 100000L
     val tmp = graft.queries.tempDir("graft_presence_scale")
     val dir = Files.createDirectory(tmp.resolve("stream"))
-    def writeChunk(i: Int, df: org.apache.spark.sql.DataFrame): Unit = {
-      val f = tmp.resolve(s"c$i")
-      // ONE file per chunk: multiple same-mod-time parts would each
-      // become their own maxFilesPerTrigger batch in arbitrary order,
-      // and once the first advances the watermark to its chunk's event
-      // time the siblings' rows arrive late and drop
-      df.coalesce(1).write.mode("overwrite").parquet(f.toString)
-      val listing = Files.list(f)
-      val parts = try listing.toArray.map(_.asInstanceOf[java.nio.file.Path])
-        .filter(_.getFileName.toString.endsWith(".parquet")) finally listing.close()
-      parts.zipWithIndex.foreach { case (p, j) =>
-        val out = dir.resolve(s"c${i}_$j.parquet")
-        Files.copy(p, out)
-        Files.setLastModifiedTime(out,
-          java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-      }
-    }
-    writeChunk(1, spark.range(N).select(
+    writeChunk(tmp, 1, spark.range(N).select(
       concat(lit("d"), col("id")).as("device_id"), lit(T0).as("ts_ms")))
-    writeChunk(2, spark.range(ACTIVE).select(
+    writeChunk(tmp, 2, spark.range(ACTIVE).select(
       concat(lit("d"), col("id")).as("device_id"), lit(T1).as("ts_ms")))
-    writeChunk(3, spark.range(1).select(
+    writeChunk(tmp, 3, spark.range(1).select(
       lit("sentinel").as("device_id"), lit(T2).as("ts_ms")))
     val schema = spark.read.parquet(tmp.resolve("c1").toString).schema
     val src = spark.readStream.schema(schema)
@@ -124,7 +111,7 @@ class PresenceScaleSpec extends AnyFunSuite {
       // the state-observability contract at 5M keys: rows ≈ open keys
       // (ACTIVE re-seen at T1 + sentinel), NOT the 5M that flowed through
       assert(usage.size == 1, s"one stateful operator expected: $usage")
-      val (_, stateRows, stateBytes) = usage.head
+      val (_, stateRows, stateBytes, _) = usage.head
       info(s"state rows after drain: $stateRows (open keys = ${ACTIVE + 1}), " +
         s"memoryUsedBytes $stateBytes")
       assert(stateRows >= ACTIVE + 1, s"state under-counts open keys: $usage")
@@ -142,30 +129,19 @@ class PresenceScaleSpec extends AnyFunSuite {
     // the data-driven one plus one trailing offline per device the final
     // watermark proves idle (the presence event detect structurally
     // cannot emit for a device that stays gone), and (b) COST — same
-    // drain, same RocksDB store, wall-clock ratio ledgered (BASELINE.md)
-    // with a loose 3x tripwire so an eviction regression fails loudly.
+    // drain, same RocksDB store, state-store gets + puts summed over the
+    // drain with a loose 3x tripwire so an eviction regression fails
+    // loudly. The counters do not move with the host's load; the
+    // wall-clock ratio (BASELINE.md) is only reported.
     import spark.implicits._
     val DEV = 60000L
     val tmp = graft.queries.tempDir("graft_presence_ab")
     val dir = Files.createDirectory(tmp.resolve("stream"))
-    def writeChunk(i: Int, df: org.apache.spark.sql.DataFrame): Unit = {
-      val f = tmp.resolve(s"c$i")
-      df.coalesce(1).write.mode("overwrite").parquet(f.toString)
-      val listing = Files.list(f)
-      val parts = try listing.toArray.map(_.asInstanceOf[java.nio.file.Path])
-        .filter(_.getFileName.toString.endsWith(".parquet")) finally listing.close()
-      parts.zipWithIndex.foreach { case (p, j) =>
-        val out = dir.resolve(s"c${i}_$j.parquet")
-        Files.copy(p, out)
-        Files.setLastModifiedTime(out,
-          java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-      }
-    }
-    writeChunk(1, spark.range(DEV).select(
+    writeChunk(tmp, 1, spark.range(DEV).select(
       concat(lit("d"), col("id")).as("device_id"), lit(T0).as("ts_ms")))
-    writeChunk(2, spark.range(DEV / 3).select(
+    writeChunk(tmp, 2, spark.range(DEV / 3).select(
       concat(lit("d"), col("id")).as("device_id"), lit(T1).as("ts_ms")))
-    writeChunk(3, spark.range(1).select(
+    writeChunk(tmp, 3, spark.range(1).select(
       lit("sentinel").as("device_id"), lit(T2).as("ts_ms")))
     val schema = spark.read.parquet(tmp.resolve("c1").toString).schema
     def src = spark.readStream.schema(schema)
@@ -173,27 +149,29 @@ class PresenceScaleSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      def drain(df: org.apache.spark.sql.DataFrame)
-          : (Set[(String, String, Long)], Double) = {
+      // (rows, state gets + puts over the drain, wall-clock seconds)
+      def drain(df: DataFrame): (Set[(String, String, Long)], Long, Double) = {
         val t = System.nanoTime()
-        val out = Replay.run(df, "append").as[(String, String, Long)]
-          .collect().toSet
-        (out, (System.nanoTime() - t) / 1e9)
+        val (out, usage) = Replay.runWithStateUsage(df, "append")
+        val rows = out.as[(String, String, Long)].collect().toSet
+        assert(usage.size == 1, s"one stateful operator expected: $usage")
+        val m = usage.head._4
+        (rows, m("rocksdbGetCount") + m("rocksdbPutCount"), (System.nanoTime() - t) / 1e9)
       }
-      // evicting first: the JVM/page-cache warmup lands on it, biasing
-      // the ratio AGAINST it — conservative
-      val (evict, evictSec) = drain(Presence.detectEvict(spark, src, TTL).toDF())
-      val (data, dataSec) = drain(Presence.detect(spark, src, TTL).toDF())
+      val (evict, evictOps, evictSec) = drain(Presence.detectEvict(spark, src, TTL).toDF())
+      val (data, dataOps, dataSec) = drain(Presence.detect(spark, src, TTL).toDF())
       // devices idle since T0 (not re-seen at T1): T0 + TTL <= wm = T2
       val trailing = (DEV / 3 until DEV).map(i =>
         (s"d$i", "offline", T0 + TTL)).toSet
       assert(evict == data ++ trailing,
         s"evicting != detect + trailing: extra=${(evict -- data -- trailing).take(3)} " +
           s"missing=${(data ++ trailing -- evict).take(3)}")
-      info(f"detect: $dataSec%.1f s, detectEvict: $evictSec%.1f s " +
-        f"(ratio ${evictSec / dataSec}%.2f, ${data.size} + ${trailing.size} rows)")
-      assert(evictSec <= dataSec * 3,
-        f"evicting drain regressed past the 3x tripwire: $evictSec%.1f vs $dataSec%.1f")
+      info(f"state gets + puts: detect $dataOps, detectEvict $evictOps " +
+        f"(ratio ${evictOps.toDouble / dataOps}%.2f); wall clock: detect $dataSec%.1f s, " +
+        f"detectEvict $evictSec%.1f s (ratio ${evictSec / dataSec}%.2f); " +
+        s"${data.size} + ${trailing.size} rows")
+      assert(evictOps <= dataOps * 3,
+        s"evicting drain regressed past the 3x tripwire: $evictOps vs $dataOps state gets + puts")
     } finally
       spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
   }
@@ -209,26 +187,13 @@ class PresenceScaleSpec extends AnyFunSuite {
     import spark.implicits._
     val tmp = graft.queries.tempDir("graft_presence_clog")
     val dir = Files.createDirectory(tmp.resolve("stream"))
-    def writeChunk(i: Int, df: org.apache.spark.sql.DataFrame): Unit = {
-      val f = tmp.resolve(s"c$i")
-      df.coalesce(1).write.mode("overwrite").parquet(f.toString)
-      val listing = Files.list(f)
-      val parts = try listing.toArray.map(_.asInstanceOf[java.nio.file.Path])
-        .filter(_.getFileName.toString.endsWith(".parquet")) finally listing.close()
-      parts.zipWithIndex.foreach { case (p, j) =>
-        val out = dir.resolve(s"c${i}_$j.parquet")
-        Files.copy(p, out)
-        Files.setLastModifiedTime(out,
-          java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-      }
-    }
     val KEYS = 150000L
-    writeChunk(1, spark.range(KEYS).select(
+    writeChunk(tmp, 1, spark.range(KEYS).select(
       concat(lit("d"), col("id")).as("device_id"), lit(T0).as("ts_ms")))
     // three delta batches: the SAME 1k devices re-seen inside the TTL —
     // state size stays ~KEYS, per-batch change is ~1k rows
     (2 to 4).foreach { i =>
-      writeChunk(i, spark.range(1000L).select(
+      writeChunk(tmp, i, spark.range(1000L).select(
         concat(lit("d"), col("id")).as("device_id"),
         lit(T0 + (i - 1) * 10000L).as("ts_ms")))
     }

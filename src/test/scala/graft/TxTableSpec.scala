@@ -224,7 +224,7 @@ class TxTableSpec extends AnyFunSuite {
     assert(rows(root) == Set((1L, "b")))
   }
 
-  test("stats-keyed table: readPruned opens only overlapping files") {
+  test("stats-keyed table: readWhere opens only overlapping files") {
     import spark.implicits._
     val root = freshRoot()
     TxTable.create(
@@ -236,13 +236,13 @@ class TxTableSpec extends AnyFunSuite {
     assert(snap.files.forall(snap.live(_).range.isDefined),
       "every committed file must carry log stats")
     // a range inside one file's span: the scan lists ONE file of 4
-    val pruned = TxTable.readPruned(spark, root, 10L, 12L)
+    val pruned = TxTable.readWhere(spark, root, col("k").between(10L, 12L))
     assert(pruned.inputFiles.length == 1,
       s"expected 1 file scanned, got ${pruned.inputFiles.length}")
     assert(pruned.as[(Long, String)].collect().map(_._1).sorted.toSeq ==
       Seq(10L, 11L, 12L))
     // a range outside all stats: zero rows, nothing read beyond schema
-    assert(TxTable.readPruned(spark, root, 5000L, 6000L).count() == 0L)
+    assert(TxTable.readWhere(spark, root, col("k").between(5000L, 6000L)).count() == 0L)
   }
 
   test("stats flow through merges; CoW file selection is log-only") {
@@ -262,16 +262,16 @@ class TxTableSpec extends AnyFunSuite {
     assert(rows(root) ==
       (0L until 100L).map(i => (i, if (i < 10) "upd" else "base")).toSet)
     // pruned read after the merge still resolves correctly
-    val after = TxTable.readPruned(spark, root, 0L, 5L)
+    val after = TxTable.readWhere(spark, root, col("k").between(0L, 5L))
     assert(after.as[(Long, String)].collect().forall(_._2 == "upd"))
   }
 
-  test("readPruned refuses a table without a stats key") {
+  test("pointRead refuses a table without a stats key") {
     import spark.implicits._
     val root = freshRoot()
     TxTable.create(Seq((1L, "a")).toDF("k", "v"), root)
     assertThrows[IllegalArgumentException] {
-      TxTable.readPruned(spark, root, 0L, 10L)
+      TxTable.pointRead(spark, root, Seq(1L))
     }
   }
 
@@ -342,7 +342,7 @@ class TxTableSpec extends AnyFunSuite {
     assert(byK(5L) == ("base", None), "pre-evolution rows surface NULL w")
     assert(byK.size == 21)
     // pruned reads reconcile the evolved schema too
-    val pruned = TxTable.readPruned(spark, root, 0L, 5L)
+    val pruned = TxTable.readWhere(spark, root, col("k").between(0L, 5L))
     assert(pruned.columns.contains("w") || pruned.columns.contains("v"))
   }
 
@@ -446,7 +446,7 @@ class TxTableSpec extends AnyFunSuite {
     assert(rows(root) == before)
     val (ka, na) = TxTable.pruneAccounting(root, 10L, 19L)
     assert(na >= 5 && ka <= 1, s"10% key range should open <=1 of $na files, opened $ka")
-    val pruned = TxTable.readPruned(spark, root, 10L, 19L)
+    val pruned = TxTable.readWhere(spark, root, col("k").between(10L, 19L))
       .as[(Long, String)].collect().toSet
     assert(pruned == before.filter { case (k, _) => k >= 10 && k <= 19 })
     // the pre-optimize version still resolves exactly
@@ -844,7 +844,7 @@ class TxTableSpec extends AnyFunSuite {
     assert(rows(root).map(_._1).forall(_ % 5 != 0))
     assert(rows(root).size == 32)
     assert(TxTable.pointRead(spark, root, Seq(10L, 11L)).count() == 1L)
-    assert(TxTable.readPruned(spark, root, 4L, 6L).count() == 2L) // 4, 6
+    assert(TxTable.readWhere(spark, root, col("k").between(4L, 6L)).count() == 2L) // 4, 6
     // time travel to v0 still sees everything
     assert(rows(root, 0L).size == 40)
     // the change feed nets the MoR delete as 'delete' rows, nothing else
@@ -960,9 +960,9 @@ class TxTableSpec extends AnyFunSuite {
       .toDF("k", "t", "v").coalesce(1)
     TxTable.create(batch(0), root, Some("k"), None, statsCols = Seq("t"))
     (1 to 2).foreach(b => TxTable.append(spark, root, batch(b)))
-    val (kk, nk) = TxTable.pruneAccountingOn(root, "k", 10L, 19L)
+    val (_, kk, nk) = TxTable.keptFiles(spark, root, col("k").between(10L, 19L))
     assert(kk == nk && nk == 3, s"k spans every file: $kk/$nk")
-    val (kt, nt) = TxTable.pruneAccountingOn(root, "t", 110L, 150L)
+    val (_, kt, nt) = TxTable.keptFiles(spark, root, col("t").between(110L, 150L))
     assert(kt == 1 && nt == 3, s"t range read must open 1 of 3 files, opened $kt")
     val got = TxTable.readPrunedOn(spark, root, "t", 110L, 150L)
       .as[(Long, Long, String)].collect().toSet
@@ -971,14 +971,11 @@ class TxTableSpec extends AnyFunSuite {
       .as[(Long, Long, String)].collect().toSet
     assert(got == want && want.size == 41)
     // point probes on t carry their own blooms: keys from one batch only
-    val (rk, bk, tot) = TxTable.pointPruneAccountingOn(root, "t", Seq(205L, 271L))
+    val (rk, bk, tot) = TxTable.keptFiles(spark, root, col("t").isin(205L, 271L))
     assert(tot == 3 && bk == 1, s"t point probe kept $bk of $tot")
-    val pts = TxTable.pointReadOn(spark, root, "t", Seq(205L, 271L))
+    val pts = TxTable.readWhere(spark, root, col("t").isin(205L, 271L))
       .as[(Long, Long, String)].collect().toSet
     assert(pts.map(_._2) == Set(205L, 271L))
-    // an undeclared column refuses loudly instead of pruning wrongly
-    assertThrows[IllegalArgumentException](
-      TxTable.pruneAccountingOn(root, "v", 0L, 1L))
   }
 
   test("secondary column with NULLs: stats pass tolerates them, reads stay exact") {
@@ -990,7 +987,7 @@ class TxTableSpec extends AnyFunSuite {
       (3L, java.lang.Long.valueOf(30L), "b")).toDF("k", "t", "v")
     TxTable.create(df, root, Some("k"), None, statsCols = Seq("t"))
     assert(TxTable.read(spark, root).count() == 3L)
-    assert(TxTable.pointReadOn(spark, root, "t", Seq(30L)).count() == 1L)
+    assert(TxTable.readWhere(spark, root, col("t") === 30L).count() == 1L)
     // a batch all-NULL in t appends fine and its file prunes for t probes
     val nulls = Seq((4L, null.asInstanceOf[java.lang.Long], "n2"))
       .toDF("k", "t", "v")
@@ -1013,8 +1010,8 @@ class TxTableSpec extends AnyFunSuite {
     (1 to 3).foreach(b => TxTable.append(spark, root, batch(b)))
     val before = TxTable.read(spark, root)
       .as[(Long, Long, String)].collect().toSet
-    val (kb, nb) = TxTable.pruneAccountingOn(root, "k", 0L, 24L)
-    val (tb, _) = TxTable.pruneAccountingOn(root, "t", 0L, 24L)
+    val (_, kb, nb) = TxTable.keptFiles(spark, root, col("k").between(0L, 24L))
+    val (_, tb, _) = TxTable.keptFiles(spark, root, col("t").between(0L, 24L))
     assert(kb == nb && tb == nb && nb == 4, "epoch layout must be unprunable on both dims")
     val res = TxTable.optimizeZ(spark, root, "k", "t", targetFiles = 16)
     assert(res.version == 4L)
@@ -1023,8 +1020,8 @@ class TxTableSpec extends AnyFunSuite {
     // each z-tile covers a compact (k, t) sub-square: a quarter-domain
     // range on EITHER dimension opens at most half the files (ideal is a
     // quarter; half leaves room for range-partition boundary wobble)
-    val (ka, na) = TxTable.pruneAccountingOn(root, "k", 0L, 24L)
-    val (ta, nta) = TxTable.pruneAccountingOn(root, "t", 0L, 24L)
+    val (_, ka, na) = TxTable.keptFiles(spark, root, col("k").between(0L, 24L))
+    val (_, ta, nta) = TxTable.keptFiles(spark, root, col("t").between(0L, 24L))
     assert(na >= 8 && ka * 2 <= na, s"k range read opens $ka/$na after optimizeZ")
     assert(ta * 2 <= nta, s"t range read opens $ta/$nta after optimizeZ")
     // pruned results stay exact on both dimensions
@@ -1067,7 +1064,7 @@ class TxTableSpec extends AnyFunSuite {
       .as[(Long, Long, String)].collect().toSet == before)
     // the accretion is now prunable on the secondary dim too: a quarter
     // range opens at most half of the NEW tiles (old tiles already tile)
-    val (kept, total) = TxTable.pruneAccountingOn(root, "t", 0L, 24L)
+    val (_, kept, total) = TxTable.keptFiles(spark, root, col("t").between(0L, 24L))
     assert(total == tiles.size + 8 && kept <= tiles.size / 2 + 4,
       s"after incremental re-tile a quarter t-range opens $kept/$total")
   }
@@ -1111,10 +1108,10 @@ class TxTableSpec extends AnyFunSuite {
     (1 to 11).foreach(b => TxTable.append(spark, root, batch(b))) // ckpt at v10
     assert(TxTable.snapshot(root).commits.size < 12,
       "snapshot must resolve from the v10 checkpoint, not the full history")
-    val (kt, nt) = TxTable.pruneAccountingOn(root, "t", 500L, 549L)
+    val (_, kt, nt) = TxTable.keptFiles(spark, root, col("t").between(500L, 549L))
     assert(nt == 12 && kt == 1,
       s"checkpoint-resolved t stats kept $kt of $nt")
-    val got = TxTable.pointReadOn(spark, root, "t", Seq(503L))
+    val got = TxTable.readWhere(spark, root, col("t") === 503L)
       .as[(Long, Long, Long)].collect().toSet
     assert(got == Set((3L * 16 + 5, 503L, 5L)))
   }
@@ -1499,31 +1496,23 @@ class TxTableSpec extends AnyFunSuite {
     (1 to 2).foreach(b => TxTable.append(spark, root, batch(b)))
     assert(TxTable.snapshot(root).strCols == Seq("s"))
     // range read: [b, d) lives entirely in batch 0's file
-    val (kr, nr) = TxTable.pruneAccountingOnStr(root, "s", "b", "d")
+    val (_, kr, nr) = TxTable.keptFiles(spark, root, col("s").between("b", "d"))
     assert(nr == 3 && kr == 1, s"string range read kept $kr of $nr")
-    val got = TxTable.readPrunedOnStr(spark, root, "s", "b", "d")
+    val got = TxTable.readWhere(spark, root, col("s").between("b", "d"))
       .as[(Long, String)].collect().toSet
     val want = TxTable.read(spark, root)
       .where(col("s").between("b", "d")).as[(Long, String)].collect().toSet
     assert(got == want && want.nonEmpty)
     // prefix read: 'i-' prefixed rows live only in batch 1's file
-    val (kp, np) = TxTable.prefixAccounting(root, "s", "i-")
+    val (_, kp, np) = TxTable.keptFiles(spark, root, col("s").startsWith("i-"))
     assert(np == 3 && kp == 1, s"prefix read kept $kp of $np")
-    val gotP = TxTable.prefixRead(spark, root, "s", "i-")
+    val gotP = TxTable.readWhere(spark, root, col("s").startsWith("i-"))
       .as[(Long, String)].collect().toSet
     val wantP = TxTable.read(spark, root)
       .where(col("s").startsWith("i-")).as[(Long, String)].collect().toSet
     assert(gotP == wantP && wantP.nonEmpty)
-    // numeric entry points refuse the string axis loudly
-    assertThrows[IllegalArgumentException](
-      TxTable.readPrunedOn(spark, root, "s", 0L, 1L))
-    assertThrows[IllegalArgumentException](
-      TxTable.pointReadOn(spark, root, "s", Seq(1L)))
     assertThrows[IllegalArgumentException](
       TxTable.optimizeZ(spark, root, "k", "s"))
-    // and the string entry points refuse an undeclared/numeric column
-    assertThrows[IllegalArgumentException](
-      TxTable.prefixRead(spark, root, "k", "a"))
   }
 
   test("string point reads: hash blooms prune where prefix ranges cannot") {
@@ -1539,17 +1528,16 @@ class TxTableSpec extends AnyFunSuite {
     TxTable.create(batch(0), root, Some("k"), None, statsCols = Seq("s"))
     (1 to 2).foreach(b => TxTable.append(spark, root, batch(b)))
     val (rangeKept, bloomKept, total) =
-      TxTable.pointPruneAccountingOnStr(root, "s", Seq("document-1-17"))
+      TxTable.keptFiles(spark, root, col("s") === "document-1-17")
     assert(total == 3 && rangeKept == 3,
       s"shared-prefix layout must be range-unprunable, kept $rangeKept")
     assert(bloomKept == 1, s"hash bloom must keep 1 of 3, kept $bloomKept")
-    val got = TxTable.pointReadOnStr(spark, root, "s",
-      Seq("document-1-17", "document-2-55"))
+    val got = TxTable.readWhere(spark, root,
+      col("s").isin("document-1-17", "document-2-55"))
       .as[(Long, String)].collect().toSet
     assert(got == Set((117L, "document-1-17"), (255L, "document-2-55")))
     // a missing key returns empty (bloom may keep files; filter is exact)
-    assert(TxTable.pointReadOnStr(spark, root, "s",
-      Seq("document-9-99")).count() == 0L)
+    assert(TxTable.readWhere(spark, root, col("s") === "document-9-99").count() == 0L)
   }
 
   test("string stats: 8-byte truncation collapses, never falsely prunes") {
@@ -1561,21 +1549,20 @@ class TxTableSpec extends AnyFunSuite {
       (3L, "aaaaaaaa-three")).toDF("k", "s")
     TxTable.create(df, root, Some("k"), None, statsCols = Seq("s"))
     // equal-prefix range: the file must be KEPT and the result exact
-    assert(TxTable.readPrunedOnStr(spark, root, "s",
-      "aaaaaaaa-two", "aaaaaaaa-two").as[(Long, String)].collect().toSet ==
+    assert(TxTable.readWhere(spark, root,
+      col("s").between("aaaaaaaa-two", "aaaaaaaa-two")).as[(Long, String)].collect().toSet ==
       Set((2L, "aaaaaaaa-two")))
-    assert(TxTable.prefixRead(spark, root, "s", "aaaaaaaa-t")
+    assert(TxTable.readWhere(spark, root, col("s").startsWith("aaaaaaaa-t"))
       .as[(Long, String)].collect().toSet ==
       Set((2L, "aaaaaaaa-two"), (3L, "aaaaaaaa-three")))
     // point read beyond the prefix: bloom keys on the FULL value
-    assert(TxTable.pointReadOnStr(spark, root, "s", Seq("aaaaaaaa-one"))
-      .count() == 1L)
+    assert(TxTable.readWhere(spark, root, col("s") === "aaaaaaaa-one").count() == 1L)
     // multi-byte UTF-8 values truncate mid-codepoint safely (byte-wise
     // monotone on both sides)
     val root2 = freshRoot() + "/t2"
     TxTable.create(Seq((1L, "héllo-wörld"), (2L, "zèta"))
       .toDF("k", "s"), root2, Some("k"), None, statsCols = Seq("s"))
-    assert(TxTable.readPrunedOnStr(spark, root2, "s", "h", "i")
+    assert(TxTable.readWhere(spark, root2, col("s").between("h", "i"))
       .as[(Long, String)].collect().toSet == Set((1L, "héllo-wörld")))
   }
 
@@ -1592,16 +1579,14 @@ class TxTableSpec extends AnyFunSuite {
       "snapshot must resolve from the v10 checkpoint")
     assert(TxTable.snapshot(root).strCols == Seq("s"),
       "strCols must survive checkpoint consolidation")
-    val (kc, nc) = TxTable.prefixAccounting(root, "s", "c-")
+    val (_, kc, nc) = TxTable.keptFiles(spark, root, col("s").startsWith("c-"))
     assert(nc == 12 && kc == 1, s"post-checkpoint prefix read kept $kc of $nc")
     // clone carries the string-stats declaration and the pruning works
     val cl = s"$base/clone"
     TxTable.cloneShallow(root, cl)
     assert(TxTable.snapshot(cl).strCols == Seq("s"))
-    val (kcl, ncl) = TxTable.prefixAccounting(cl, "s", "c-")
+    val (_, kcl, ncl) = TxTable.keptFiles(spark, cl, col("s").startsWith("c-"))
     assert(ncl == 12 && kcl == 1, s"clone prefix read kept $kcl of $ncl")
-    assertThrows[IllegalArgumentException](
-      TxTable.readPrunedOn(spark, cl, "s", 0L, 1L))
     // metaAggregate on the string axis: count folds from metadata, the
     // prefix-encoded bounds never surface as values
     val ma = TxTable.metaAggregate(spark, root, "s")
@@ -1714,7 +1699,7 @@ class TxTableSpec extends AnyFunSuite {
       .repartitionByRange(4, col("k")).sortWithinPartitions("k")
     TxTable.create(df, root, statsKey = Some("k"))
     // metadata-only selection: [100, 199] lives in 1 of 4 files
-    val (touched, total) = TxTable.replaceAccounting(root, 100L, 199L)
+    val (_, touched, total) = TxTable.keptFiles(spark, root, col("k").between(100L, 199L))
     assert(total == 4 && touched == 1, s"backfill would rewrite $touched of $total")
     val fixed = (100L until 200L).map(k => (k, s"fixed$k")).toDF("k", "v")
     val r1 = TxTable.replaceWhere(spark, root, 100L, 199L, fixed,
@@ -1766,19 +1751,36 @@ class TxTableSpec extends AnyFunSuite {
       (None, "nullrow")))
   }
 
-  test("string accounting entry points refuse non-string stats columns") {
+  test("readWhere keeps every file its predicate cannot prune by: casts, stats-less columns, OR") {
     import spark.implicits._
     val root = freshRoot() + "/t"
-    TxTable.create(Seq((1L, "a")).toDF("k", "v"), root, statsKey = Some("k"))
-    // 'k' carries NUMERIC stats: its prefix64-encoded bound comparison is
-    // meaningless, so the accounting twins must fail loudly like the
-    // read paths do, not return garbage (kept, total) numbers.
-    assertThrows[IllegalArgumentException](
-      TxTable.pruneAccountingOnStr(root, "k", "a", "b"))
-    assertThrows[IllegalArgumentException](
-      TxTable.prefixAccounting(root, "k", "a"))
-    assertThrows[IllegalArgumentException](
-      TxTable.pointPruneAccountingOnStr(root, "k", Seq("a")))
+    // three files, disjoint on the long stats key k and on the string
+    // stats column s (digit strings "10".."19", "20".."29", "30".."39");
+    // v has no stats
+    def batch(b: Int) = (0 until 10).map(i => (b * 100L + i, s"${b + 1}$i", b * 10L + i))
+      .toDF("k", "s", "v").coalesce(1)
+    TxTable.create(batch(0), root, Some("k"), None, statsCols = Seq("s"))
+    (1 to 2).foreach(b => TxTable.append(spark, root, batch(b)))
+    val all = TxTable.read(spark, root)
+    def check(p: org.apache.spark.sql.Column, kept: (Int, Int, Int), keys: Set[Long]): Unit = {
+      var got = (-1, -1, -1)
+      assert(JobCount(spark.sparkContext, s"keptFiles $p") {
+        got = TxTable.keptFiles(spark, root, p)
+      } == 0, s"$p")
+      assert(got == kept, s"$p")
+      def ks(df: org.apache.spark.sql.DataFrame) = df.select("k").as[Long].collect().toSet
+      assert(ks(TxTable.readWhere(spark, root, p)) == keys && ks(all.where(p)) == keys, s"$p")
+    }
+    // the optimizer leaves a cast on the column, which the log cannot
+    // test: every file is kept (a prefix64 bound compared as a number,
+    // or a long bound as a string, would drop rows)
+    check(col("s") === 25, (3, 3, 3), Set(105L))
+    check(col("k").startsWith("1"), (3, 3, 3), Set(1L) ++ (100L to 109L))
+    check(col("v") === 15L, (3, 3, 3), Set(105L))
+    // a file is dropped only when both sides of an OR prove it empty
+    check(col("k").between(0L, 5L) || col("s") === "35", (2, 2, 3), (0L to 5L).toSet + 205L)
+    // a predicate the optimizer folds to false keeps no file
+    check(col("k") === 1L && col("k") === 2L, (0, 0, 3), Set.empty)
   }
 
   test("pruned reads survive a zero-live-file snapshot (schema recovery)") {
@@ -1792,7 +1794,7 @@ class TxTableSpec extends AnyFunSuite {
     // table schema instead of NoSuchElementException on files.head.
     TxTable.replaceWhere(spark, root, 0L, 9L,
       Seq.empty[(Long, String)].toDF("k", "v"))
-    val r = TxTable.readPruned(spark, root, 3L, 5L)
+    val r = TxTable.readWhere(spark, root, col("k").between(3L, 5L))
     assert(r.columns.toSeq == Seq("k", "v") && r.count() == 0)
     val p = TxTable.pointRead(spark, root, Seq(3L))
     assert(p.columns.toSeq == Seq("k", "v") && p.count() == 0)
@@ -2147,7 +2149,7 @@ class TxTableSpec extends AnyFunSuite {
     assert(TxTable.adoptFrom(spark, main, branch).skipped,
       "already-adopted files must not double-add")
     // stats rode the adopt: a pruned range read opens only matching files
-    assert(TxTable.readPruned(spark, main, 120L, 130L)
+    assert(TxTable.readWhere(spark, main, col("k").between(120L, 130L))
       .as[(Long, String)].collect().forall(_._2 == "staged"))
     // vacuum on MAIN must not reclaim the shared physical file
     TxTable.vacuumOrphans(main)
@@ -2185,6 +2187,31 @@ class TxTableSpec extends AnyFunSuite {
     assert(adopt(0).jobs == adopt(1).jobs && adopt(0).inputRecords == adopt(1).inputRecords,
       s"x1: ${adopt(0)}; x8: ${adopt(1)}")
     assert(adopt.forall(_.jobs == 0), s"a CHECK-free adopt runs no Spark job: $adopt")
+  }
+
+  test("two concurrent adopts of one branch both succeed; one commit adds the files") {
+    import spark.implicits._
+    // both adopts hard-link the same branch files into main: a target
+    // the other adopt linked first is the same immutable file
+    for (round <- 1 to 20) {
+      val tmp = freshRoot()
+      val (main, branch) = (s"$tmp/main", s"$tmp/branch")
+      TxTable.create(Seq((0L, "base")).toDF("k", "v"), main, Some("k"))
+      TxTable.cloneShallow(main, branch)
+      TxTable.append(spark, branch, (1L to 32L).map((_, "staged")).toDF("k", "v").repartition(8))
+      val go = new java.util.concurrent.CyclicBarrier(2)
+      val got = new java.util.concurrent.ConcurrentLinkedQueue[scala.util.Try[TxTable.CommitResult]]
+      val ts = (1 to 2).map(_ => new Thread(() => {
+        go.await(); got.add(scala.util.Try(TxTable.adoptFrom(spark, main, branch)))
+      }))
+      ts.foreach(_.start()); ts.foreach(_.join())
+      import scala.jdk.CollectionConverters._
+      val rs = got.asScala.toList
+      assert(rs.size == 2 && rs.forall(_.isSuccess), s"round $round: $rs")
+      assert(rs.count(!_.get.skipped) == 1, s"round $round: $rs")
+      assert(TxTable.history(main).count(_._2 == "adopt") == 1, s"round $round")
+      assert(rows(main).size == 33, s"round $round")
+    }
   }
 
   test("adopt widens the union schema: a branch-added column surfaces as NULL on old rows") {
@@ -2336,12 +2363,12 @@ class TxTableSpec extends AnyFunSuite {
     TxTable.create(batch(0), root, Some("k"), None, statsCols = Seq("s"))
     (1 to 3).foreach(b => TxTable.append(spark, root, batch(b)))
     val before = TxTable.read(spark, root).as[(Long, String)].collect().toSet
-    val (k0, n0) = TxTable.pruneAccountingOnStr(root, "s", "d", "f")
+    val (_, k0, n0) = TxTable.keptFiles(spark, root, col("s").between("d", "f"))
     assert(k0 == n0 && n0 == 4, "epoch layout must be unprunable on s")
     TxTable.optimizeOn(spark, root, "s", targetFiles = 4)
     assert(TxTable.read(spark, root)
       .as[(Long, String)].collect().toSet == before)
-    val (k1, n1) = TxTable.pruneAccountingOnStr(root, "s", "d", "f")
+    val (_, k1, n1) = TxTable.keptFiles(spark, root, col("s").between("d", "f"))
     assert(k1 * 2 <= n1, s"post-optimizeOn range read opens $k1/$n1")
   }
 
