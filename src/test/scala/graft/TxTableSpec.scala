@@ -1751,7 +1751,7 @@ class TxTableSpec extends AnyFunSuite {
       (None, "nullrow")))
   }
 
-  test("readWhere keeps every file its predicate cannot prune by: casts, stats-less columns, OR") {
+  test("readWhere keeps every file it cannot prune by: casts, stats-less columns, OR") {
     import spark.implicits._
     val root = freshRoot() + "/t"
     // three files, disjoint on the long stats key k and on the string
