@@ -1184,25 +1184,31 @@ object TxTable {
     * pruned the result is empty with the table's schema. On a range-
     * clustered layout (see [[optimize]], [[optimizeZ]]) the scan cost
     * follows the selected range, not the table. */
-  def readWhere(spark: SparkSession, root: String, where: Column): DataFrame = {
-    val (snap, cond) = pruning(spark, root, where)
-    readKept(spark, root, snap, snap.kept(cond), where)
-  }
+  def readWhere(spark: SparkSession, root: String, where: Column): DataFrame =
+    readWhereAt(spark, root, committed(root), where)
+
+  private def readWhereAt(spark: SparkSession, root: String, snap: Snapshot,
+                          where: Column): DataFrame =
+    readKept(spark, root, snap, snap.kept(logCondition(spark, root, snap, where)), where)
 
   /** [[readWhere]]'s file selection, from the log alone: (files kept by
     * ranges, files kept by ranges and blooms, live files). The gap
     * between the first two is the blooms' contribution. Submits no Spark
     * job unless a schema evolution is pending. */
-  def keptFiles(spark: SparkSession, root: String, where: Column): (Int, Int, Int) = {
-    val (snap, cond) = pruning(spark, root, where)
+  def keptFiles(spark: SparkSession, root: String, where: Column): (Int, Int, Int) =
+    keptFilesAt(spark, root, committed(root), where)
+
+  private def keptFilesAt(spark: SparkSession, root: String, snap: Snapshot,
+                          where: Column): (Int, Int, Int) = {
+    val cond = logCondition(spark, root, snap, where)
     (snap.kept(cond, useBlooms = false).size, snap.kept(cond).size, snap.files.size)
   }
 
-  private def pruning(spark: SparkSession, root: String,
-                      where: Column): (Snapshot, Expression) = {
+  /** The latest snapshot of the table at `root`, which must exist. */
+  private def committed(root: String): Snapshot = {
     val snap = snapshot(root)
     require(snap.version >= 0, s"not a TxTable (no committed log): $root")
-    (snap, logCondition(spark, root, snap, where))
+    snap
   }
 
   /** `where` as a skipping condition for [[Snapshot.kept]]: resolved
@@ -1237,8 +1243,10 @@ object TxTable {
      else morRead(spark, root, snap, kept)).where(pred)
 
   /** [[readWhere]] on `key IN keys`, `key` being the table's stats key. */
-  def pointRead(spark: SparkSession, root: String, keys: Seq[Long]): DataFrame =
-    readWhere(spark, root, col(primaryKey(snapshot(root), root)).cast("long").isin(keys: _*))
+  def pointRead(spark: SparkSession, root: String, keys: Seq[Long]): DataFrame = {
+    val snap = committed(root)
+    readWhereAt(spark, root, snap, keyColumn(snap, root).isin(keys: _*))
+  }
 
   /** [[readWhere]] on `column BETWEEN lo AND hi`. */
   def readPrunedOn(spark: SparkSession, root: String, column: String,
@@ -1246,16 +1254,22 @@ object TxTable {
     readWhere(spark, root, col(column).cast("long").between(lo, hi))
 
   /** [[keptFiles]] of [[pointRead]]. */
-  def pointPruneAccounting(root: String, keys: Seq[Long]): (Int, Int, Int) =
-    keptFiles(SparkSession.active, root,
-      col(primaryKey(snapshot(root), root)).cast("long").isin(keys: _*))
+  def pointPruneAccounting(root: String, keys: Seq[Long]): (Int, Int, Int) = {
+    val snap = committed(root)
+    keptFilesAt(SparkSession.active, root, snap, keyColumn(snap, root).isin(keys: _*))
+  }
 
   /** (files a range read of [lo, hi] on the stats key opens, live files). */
   def pruneAccounting(root: String, lo: Long, hi: Long): (Int, Int) = {
-    val (_, kept, total) = keptFiles(SparkSession.active, root,
-      col(primaryKey(snapshot(root), root)).cast("long").between(lo, hi))
+    val snap = committed(root)
+    val (_, kept, total) = keptFilesAt(SparkSession.active, root, snap,
+      keyColumn(snap, root).between(lo, hi))
     (kept, total)
   }
+
+  /** The stats key of `snap` as a long column. */
+  private def keyColumn(snap: Snapshot, root: String): Column =
+    col(primaryKey(snap, root)).cast("long")
 
   // ---- SHINGLE (word n-gram) phrase probes --------------------------
   // The decontamination primitive at FILE granularity: "which files

@@ -2,10 +2,11 @@ package graft.queries
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables
-import graft.operators.IvfIndex
+import graft.operators.{IvfIndex, TxTable}
 
 /** Completeness extensions beyond SURVEY §2B's initial list:
   *  - Q-llm-13: embedding-cosine near-dup dedup (the 5th dedup mode) —
@@ -25,6 +26,17 @@ object Extras {
              i -> $a[i]::DOUBLE * $a[i]::DOUBLE)))
          * sqrt(list_sum(list_transform(generate_series(1, len($b)),
              i -> $b[i]::DOUBLE * $b[i]::DOUBLE)))))"""
+
+  /** `src` landed at `root` as `n` one-file epochs split on `key % n`:
+    * slice 0 through `create` (v0), slices 1..n-1 appended (v1..v(n-1)).
+    * Every slice spans the whole domain of any other column, so the
+    * epoch layout prunes on nothing until a layout operation runs. */
+  private def landInSlices(s: SparkSession, root: String, src: DataFrame,
+                           key: String, n: Int)(create: DataFrame => Unit): Unit = {
+    def slice(b: Int) = src.filter(col(key) % n === b).coalesce(1)
+    create(slice(0))
+    (1 until n).foreach(b => TxTable.append(s, root, slice(b)))
+  }
 
   val queries: Map[String, Q] = Map(
     // ---- Q-llm-13: embedding-cosine near-dup. Blocking by shared IVF
@@ -981,9 +993,8 @@ object Extras {
       val src = Tables.customer(s, d)
         .select(col("c_custkey"), col("c_mktsegment"),
           floor(col("c_acctbal") * 100 + lit(0.5)).cast("bigint").as("cents"))
-      def batch(b: Int) = src.filter(col("c_custkey") % 8 === b).coalesce(1)
-      TxTable.create(batch(0), root, statsKey = Some("c_custkey"))   // v0
-      (1 to 7).foreach(b => TxTable.append(s, root, batch(b)))       // v1..v7
+      landInSlices(s, root, src, "c_custkey", 8)(                     // v0..v7
+        TxTable.create(_, root, statsKey = Some("c_custkey")))
       // a raw scan of the data dir, IGNORING the log: the compliance
       // auditor's view — are the doomed bytes physically present?
       def residualKeys(): Long = {
@@ -1042,9 +1053,8 @@ object Extras {
       val src = Tables.orders(s, d)
         .filter(col("o_orderkey") <= 6000)
         .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
-      def batch(b: Int) = src.filter(col("o_orderkey") % 4 === b).coalesce(1)
-      TxTable.create(batch(0), root, statsKey = Some("o_orderkey")) // v0
-      (1 to 3).foreach(b => TxTable.append(s, root, batch(b)))      // v1..v3
+      landInSlices(s, root, src, "o_orderkey", 4)(                 // v0..v3
+        TxTable.create(_, root, statsKey = Some("o_orderkey")))
       val filesV3 = TxTable.snapshot(root).files.toSet
       // v4: MoR-delete the %7 cohort — a metadata-plus-ledger commit
       TxTable.deleteMor(s, root,
@@ -1104,9 +1114,8 @@ object Extras {
       val src = Tables.orders(s, d)
         .filter(col("o_orderkey") <= 6000)
         .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
-      def batch(b: Int) = src.filter(col("o_orderkey") % 4 === b).coalesce(1)
-      TxTable.create(batch(0), root, Some("o_orderkey"))        // v0
-      (1 to 3).foreach(b => TxTable.append(s, root, batch(b)))  // v1..v3
+      landInSlices(s, root, src, "o_orderkey", 4)(             // v0..v3
+        TxTable.create(_, root, Some("o_orderkey")))
       TxTable.deleteCow(s, root,
         src.filter(col("o_orderkey") % 3 === 0).select("o_orderkey"),
         "o_orderkey")                                           // v4
@@ -1161,10 +1170,8 @@ object Extras {
       val src = Tables.orders(s, d)
         .filter(col("o_orderkey") <= 6000)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-      def batch(b: Int) = src.filter(col("o_orderkey") % 4 === b).coalesce(1)
-      TxTable.create(batch(0), root, Some("o_orderkey"), None,
-        statsCols = Seq("o_custkey"))                            // v0
-      (1 to 3).foreach(b => TxTable.append(s, root, batch(b)))   // v1..v3
+      landInSlices(s, root, src, "o_orderkey", 4)(               // v0..v3
+        TxTable.create(_, root, Some("o_orderkey"), None, statsCols = Seq("o_custkey")))
       // quarter-domain probe ranges, derived once (SF-adaptive)
       val Array(maxK, maxC) = src
         .agg(max("o_orderkey"), max("o_custkey")).head()
@@ -1206,10 +1213,8 @@ object Extras {
       val src = Tables.part(s, d)
         .select(col("p_partkey"), col("p_name"),
           floor(col("p_retailprice") * 100 + 0.5).cast("bigint").as("cents"))
-      def batch(b: Int) = src.filter(col("p_partkey") % 4 === b).coalesce(1)
-      TxTable.create(batch(0), root, Some("p_partkey"), None,
-        statsCols = Seq("p_name"))                               // v0
-      (1 to 3).foreach(b => TxTable.append(s, root, batch(b)))   // v1..v3
+      landInSlices(s, root, src, "p_partkey", 4)(                // v0..v3
+        TxTable.create(_, root, Some("p_partkey"), None, statsCols = Seq("p_name")))
       // per-epoch layout: every file spans the whole name domain, so
       // string stats exclude nothing — asserted from the log
       val (_, k0, n0) = TxTable.keptFiles(s, root, col("p_name").between("b", "m"))
@@ -1267,10 +1272,9 @@ object Extras {
       val root = tempDir("graft_qual28").toString + "/tbl"
       val src = Tables.documents(s, d)
         .select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
-      def batch(b: Int) = src.filter(col("doc_id") % 10 === b).coalesce(1)
-      TxTable.create(batch(0), root, Some("doc_id"), None, Seq.empty,
-        shingleCols = Seq("text"), shingleN = 5)                 // v0
-      (1 to 9).foreach(b => TxTable.append(s, root, batch(b)))   // v1..v9
+      landInSlices(s, root, src, "doc_id", 10)(                  // v0..v9
+        TxTable.create(_, root, Some("doc_id"), None, Seq.empty,
+          shingleCols = Seq("text"), shingleN = 5))
       // the probe phrase: doc 0's first seven canonical tokens (derived
       // the same way on the oracle side — SF-independent), i.e. three
       // overlapping 5-grams the probe must find TOGETHER in a file
@@ -1502,10 +1506,9 @@ object Extras {
         .filter(col("l_orderkey") <= 6000)
         .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
           col("l_quantity").cast("bigint").as("qty"))
-      def batch(b: Int) = src.filter(col("l_orderkey") % 4 === b).coalesce(1)
-      TxTable.create(batch(0), root, Some("l_orderkey"), None,
-        statsCols = Seq("l_partkey", "l_suppkey"))               // v0
-      (1 to 3).foreach(b => TxTable.append(s, root, batch(b)))   // v1..v3
+      landInSlices(s, root, src, "l_orderkey", 4)(               // v0..v3
+        TxTable.create(_, root, Some("l_orderkey"), None,
+          statsCols = Seq("l_partkey", "l_suppkey")))
       val dims = Seq("l_orderkey", "l_partkey", "l_suppkey")
       val maxes = src.agg(max("l_orderkey"), max("l_partkey"),
         max("l_suppkey")).head().toSeq
@@ -2540,9 +2543,8 @@ object Extras {
         col("user_id").as("k"), col("event_type"),
         floor(col("value") * 100 + 0.5).cast("bigint").as("cents"),
         col("event_id"))
-      def batch(b: Int) = ev.filter(col("event_id") % 4 === b).drop("event_id")
-      TxTable.create(batch(0), root, statsKey = Some("k"))     // v0
-      (1 to 3).foreach(b => TxTable.append(s, root, batch(b))) // v1..v3
+      landInSlices(s, root, ev, "event_id", 4)(                // v0..v3
+        TxTable.create(_, root, statsKey = Some("k")))
       val (_, kBefore, nBefore) = TxTable.keptFiles(s, root, col("k").between(3L, 5L))
       if (kBefore != nBefore || nBefore < 4) throw new IllegalStateException(
         s"expected an unprunable epoch layout, got $kBefore/$nBefore")
@@ -2574,9 +2576,8 @@ object Extras {
       val src = Tables.orders(s, d)
         .filter(col("o_orderkey") <= 6000)
         .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
-      def batch(b: Int) = src.filter(col("o_orderkey") % 4 === b).coalesce(1)
-      TxTable.create(batch(0), root, statsKey = Some("o_orderkey")) // v0
-      (1 to 3).foreach(b => TxTable.append(s, root, batch(b)))      // v1..v3
+      landInSlices(s, root, src, "o_orderkey", 4)(                 // v0..v3
+        TxTable.create(_, root, statsKey = Some("o_orderkey")))
       val keys = Seq(8L, 13L, 121L, 517L, 1001L, 1004L) // classes {0,1} only
       val (rangeKept, bloomKept, total) =
         TxTable.keptFiles(s, root, col("o_orderkey").isin(keys: _*))

@@ -2,20 +2,25 @@ package graft.queries
 
 import java.nio.file.{Files, Path}
 import java.nio.file.attribute.FileTime
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong, AtomicReference}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryException
 import org.apache.spark.sql.types.DecimalType
 
 import graft.codec.AvroEnvelope
 import graft.core.Tables
+import graft.operators.TxTable
+import graft.sources.GraftStreamSink
 import graft.streaming.{Presence, Replay}
 
 /** Q-scan-03/04, Q-str-*, Q-join-08/09: the streaming surface
   * (SURVEY.md §2B), verified by batch-equivalence replay — each query runs
-  * as a REAL Structured Streaming job (file source, AvailableNow trigger,
-  * memory sink) and its drained result must hash-match the DuckDB batch
+  * as a REAL Structured Streaming job drained by `Replay.drain` (file or
+  * table source, AvailableNow trigger, memory / foreachBatch / graft
+  * sink) and its drained result must hash-match the DuckDB batch
   * rendering of the same semantics.
   *
   * The watermark is the reference's intended 3.5 s out-of-orderness bound
@@ -30,15 +35,14 @@ object StreamingQueries {
   private def wsSec(c: String) = unix_timestamp(col(c)).as("ws_sec")
 
   /** Max event time of the events table, computed ONCE per input dir per
-    * JVM. The five sentinel-staging replays (Q-str-08/10/11/12/15) each
+    * JVM. The sentinel-staging replays (Q-str-08/10/11/12/15) each
     * need it to build a watermark-advancing far-future row, and each
     * paid a full second scan of the input for the one value — this
     * amortizes the aggregate to a single scan. Sound to cache: the
     * driver's testdata dirs are immutable. */
   private val maxTsCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.sql.Timestamp]()
-  private def maxEventTs(s: org.apache.spark.sql.SparkSession,
-                         d: String): java.sql.Timestamp =
+  private def maxEventTs(s: SparkSession, d: String): java.sql.Timestamp =
     maxTsCache.computeIfAbsent(d,
       _ => Tables.events(s, d).agg(max("ts")).collect()(0).getTimestamp(0))
 
@@ -58,27 +62,98 @@ object StreamingQueries {
     }
   }
 
-  /** Stage the events table as 4 time-ordered chunks in a stream-in
-    * directory (one micro-batch per mtime-ordered file under
-    * maxFilesPerTrigger=1). ONE global-sort pass writes every chunk
+  /** Stage the parquet dirs `batches`, in order, in a stream-in dir under
+    * `tmp` — dir i's files stamped a minute after dir i-1's, since
+    * file-source batch order follows mod-time — and return its opener:
+    * the dir read one file (one micro-batch) per trigger, with the first
+    * dir's schema. A drain that resumes in a fresh session opens it
+    * again there. */
+  private def stageStream(s: SparkSession, tmp: Path,
+                          batches: Seq[Path]): SparkSession => DataFrame = {
+    val dir = Files.createDirectory(tmp.resolve("stream"))
+    batches.zipWithIndex.foreach { case (b, i) =>
+      copyParts(b, dir, s"b${i}_", 1000000000000L + i * 60000L)
+    }
+    val schema = s.read.parquet(batches.head.toString).schema
+    session => session.readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1).parquet(dir.toString)
+  }
+
+  /** [[stageStream]] of `batches`, each written as one parquet file. */
+  private def stageBatches(s: SparkSession, tmp: Path,
+                           batches: Seq[DataFrame]): SparkSession => DataFrame =
+    stageStream(s, tmp, batches.zipWithIndex.map { case (df, i) =>
+      val p = tmp.resolve(s"batch$i")
+      df.coalesce(1).write.mode("overwrite").parquet(p.toString)
+      p
+    })
+
+  /** The events table as 4 time-ordered chunks, one micro-batch each
+    * ([[stageStream]]). ONE global-sort pass writes every chunk
     * (`partitionBy` fans the sorted stream out to the chunk dirs in a
-    * single job) — the four drain queries previously paid the ntile sort
-    * once per chunk. Returns (streamDir, chunk-1 DataFrame — the
-    * streaming-schema template and any seed reads). */
-  private def stageChunks(s: org.apache.spark.sql.SparkSession, d: String,
-                          tmp: Path): (String, org.apache.spark.sql.DataFrame) = {
-    val ev = Tables.events(s, d)
+    * single job). */
+  private def stageChunks(s: SparkSession, d: String,
+                          tmp: Path): SparkSession => DataFrame = {
     val wOrd = Window.orderBy(col("ts"), col("event_id"))
-    ev.withColumn("chunk", ntile(4).over(wOrd))
+    Tables.events(s, d).withColumn("chunk", ntile(4).over(wOrd))
       .coalesce(1)
       .write.partitionBy("chunk").mode("overwrite").parquet(s"$tmp/chunks")
-    val dir = Files.createDirectory(tmp.resolve("stream"))
-    (1 to 4).foreach { c =>
-      copyParts(tmp.resolve("chunks").resolve(s"chunk=$c"), dir, s"c${c}_",
-        1000000000000L + c * 60000L)
-    }
-    (dir.toString, s.read.parquet(s"$tmp/chunks/chunk=1"))
+    stageStream(s, tmp, (1 to 4).map(c => tmp.resolve("chunks").resolve(s"chunk=$c")))
   }
+
+  /** [[stageBatches]] of `batches` and then one SENTINEL batch: a row per
+    * `types` entry (user -1, event ids -1, -2, ...) stamped `aheadMs`
+    * past the input's max event time, whose watermark advance flushes
+    * every append-mode window, timer and outer-join row the real events
+    * leave open. Callers filter the sentinel out of the result. */
+  private def stageWithSentinel(s: SparkSession, d: String, tmp: Path,
+                                batches: Seq[DataFrame], aheadMs: Long,
+                                types: String*): SparkSession => DataFrame = {
+    import s.implicits._
+    val ts = new java.sql.Timestamp(maxEventTs(s, d).getTime + aheadMs)
+    val sentinel = types.zipWithIndex
+      .map { case (t, i) => (-1L - i, ts, -1L, t, 0.0, "{}") }
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+    stageBatches(s, tmp, batches :+ sentinel)
+  }
+
+  /** Purchases joined (`how`) to the same user's clicks in the 5 minutes
+    * before them, each side under a 10-minute watermark — the interval
+    * join family. `events` is evaluated once per side. */
+  private def purchaseClicks(events: => DataFrame, how: String): DataFrame = {
+    def side(kind: String, p: String) = events
+      .filter(col("event_type") === kind)
+      .select(col("event_id").as(s"${p}_id"), col("user_id").as(s"${p}_user"),
+        col("ts").as(s"${p}_ts"))
+      .withWatermark(s"${p}_ts", "10 minutes")
+    side("purchase", "p").join(side("click", "c"),
+      col("p_user") === col("c_user") &&
+      col("c_ts") > col("p_ts") - expr("INTERVAL 5 MINUTES") &&
+      col("c_ts") <= col("p_ts"),
+      how)
+  }
+
+  /** `ev` counted per 10-second tumbling window and event type, plus the
+    * `more` aggregates: (ws_sec, event_type, n, more...). */
+  private def windowCounts(ev: DataFrame, more: Column*): DataFrame = {
+    val agg = ev.groupBy(window(col("ts"), "10 seconds"), col("event_type"))
+      .agg(count(lit(1)).as("n"), more: _*)
+    agg.select(wsSec("window.start") +: agg.columns.toSeq.tail.map(col): _*)
+  }
+
+  private def valSum: Column =
+    Portable.r(sum(col("value").cast(DecimalType(30, 10))).cast("double"), 2)
+      .as("val_sum")
+
+  /** v0 of a table the windowed counts drain into: schema only, from a
+    * BATCH twin of the counts (a streaming frame can't seed a write).
+    * Stats-keyed by ws_sec so each epoch's merge selects its files from
+    * the log: an epoch only touches files whose ws_sec range overlaps the
+    * windows it changed — on a long-running table, old-window files stop
+    * being rewritten entirely. */
+  private def createCountsTable(s: SparkSession, d: String, root: String): Unit =
+    TxTable.create(windowCounts(Tables.events(s, d)).limit(0).coalesce(1),
+      root, statsKey = Some("ws_sec"))
 
   val queries: Map[String, Q] = Map(
     // ---- Q-scan-03: streaming file source, counts per type
@@ -129,13 +204,7 @@ object StreamingQueries {
     // ---- Q-str-01: tumbling 10 s window per event_type (3.5 s watermark)
     "Q-str-01" -> { (s, d) =>
       Replay.run(
-        Replay.eventsStream(s, d)
-          .withWatermark("ts", WM)
-          .groupBy(window(col("ts"), "10 seconds"), col("event_type"))
-          .agg(count(lit(1)).as("n"),
-            Portable.r(sum(col("value").cast(DecimalType(30, 10))).cast("double"), 2)
-              .as("val_sum"))
-          .select(wsSec("window.start"), col("event_type"), col("n"), col("val_sum")),
+        windowCounts(Replay.eventsStream(s, d).withWatermark("ts", WM), valSum),
         "complete").orderBy("ws_sec", "event_type")
     },
 
@@ -199,18 +268,8 @@ object StreamingQueries {
     // micro-batch admission control (how a 100 TB backlog is actually
     // ingested) semantically free.
     "Q-str-18" -> { (s, d) =>
-      val tmp = tempDir("graft_str18")
-      val (dir, raw) = stageChunks(s, d, tmp)
-      val src = s.readStream.schema(raw.schema)
-        .option("maxFilesPerTrigger", 1).parquet(dir)
-      Replay.run(
-        src
-          .withWatermark("ts", WM)
-          .groupBy(window(col("ts"), "10 seconds"), col("event_type"))
-          .agg(count(lit(1)).as("n"),
-            Portable.r(sum(col("value").cast(DecimalType(30, 10))).cast("double"), 2)
-              .as("val_sum"))
-          .select(wsSec("window.start"), col("event_type"), col("n"), col("val_sum")),
+      val open = stageChunks(s, d, tempDir("graft_str18"))
+      Replay.run(windowCounts(open(s).withWatermark("ts", WM), valSum),
         "complete").orderBy("ws_sec", "event_type")
     },
 
@@ -227,11 +286,8 @@ object StreamingQueries {
     // "row_number() <= 3" rendering — admission across micro-batch
     // boundaries equals the one-shot decision.
     "Q-str-26" -> { (s, d) =>
-      val tmp = tempDir("graft_str26")
-      val (dir, raw) = stageChunks(s, d, tmp)
-      val src = s.readStream.schema(raw.schema)
-        .option("maxFilesPerTrigger", 1).parquet(dir)
-      val admitted = graft.streaming.Quota(s, src,
+      val open = stageChunks(s, d, tempDir("graft_str26"))
+      val admitted = graft.streaming.Quota(s, open(s),
         quota = 3, windowSec = 86400L) // watermark applied inside
       Replay.run(admitted.toDF(), "append")
         .groupBy("ws_sec", "user_id")
@@ -253,27 +309,13 @@ object StreamingQueries {
     // exactly the keys a batch changes, no more).
     "Q-str-19" -> { (s, d) =>
       val tmp = tempDir("graft_str19")
-      val (dir, raw) = stageChunks(s, d, tmp)
+      val open = stageChunks(s, d, tmp)
       val log = s"$tmp/log"
-      val q = s.readStream.schema(raw.schema)
-        .option("maxFilesPerTrigger", 1).parquet(dir)
-        .withWatermark("ts", WM)
-        .groupBy(window(col("ts"), "10 seconds"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .select(wsSec("window.start"), col("event_type"), col("n"))
-        .writeStream
-        .outputMode("update")
-        .foreachBatch {
-          (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-           epoch: Long) =>
-            df.toDF().withColumn("epoch", lit(epoch))
-              .write.mode("append").parquet(log)
-            ()
-        }
-        .option("checkpointLocation", tempDir("graft_ckpt19").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      Replay.drain(windowCounts(open(s).withWatermark("ts", WM)), "update")(
+        _.foreachBatch { (df: DataFrame, epoch: Long) =>
+          df.withColumn("epoch", lit(epoch)).write.mode("append").parquet(log)
+          ()
+        })
       // foreachBatch may RE-RUN a batch with the same epochId (that is the
       // replay contract) — a retried epoch appends its (key, epoch) rows
       // again. Dedup on (key, epoch) before BOTH reads so the latest-per-key
@@ -302,56 +344,29 @@ object StreamingQueries {
     // it double-applies or if the serialized version count drifts. The
     // final table must equal the one-shot batch aggregate.
     "Q-str-20" -> { (s, d) =>
-      import graft.operators.TxTable
       val tmp = tempDir("graft_str20")
-      val (dir, raw) = stageChunks(s, d, tmp)
+      val open = stageChunks(s, d, tmp)
       val root = s"$tmp/tbl"
-      val agg = s.readStream.schema(raw.schema)
-        .option("maxFilesPerTrigger", 1).parquet(dir)
-        .withWatermark("ts", WM)
-        .groupBy(window(col("ts"), "10 seconds"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .select(wsSec("window.start"), col("event_type"), col("n"))
-      // v0: the empty table (one schema-only parquet file) — built from a
-      // BATCH twin of the agg (a streaming frame can't seed a write).
-      // Stats-keyed by ws_sec so each epoch's COPY-ON-WRITE merge selects
-      // its files from the log: a keyed window aggregate merges on the
-      // composite (ws_sec, event_type), but an epoch only touches files
-      // whose ws_sec range overlaps the windows it changed — on a long-
-      // running table, old-window files stop being rewritten entirely.
-      TxTable.create(
-        raw.groupBy(window(col("ts"), "10 seconds"), col("event_type"))
-          .agg(count(lit(1)).as("n"))
-          .select(wsSec("window.start"), col("event_type"), col("n"))
-          .limit(0).coalesce(1),
-        root, statsKey = Some("ws_sec"))
+      createCountsTable(s, d, root)
       // stash one epoch's change set so the replay attempt below
       // re-presents the IDENTICAL payload. The stash is a localCheckpoint
       // HANDLE (materialized blocks in the block manager, distributed on
       // a cluster), not a driver collect — a bulk epoch at 100 TB never
-      // lands on the driver (r12 verdict item 9).
-      val stash = new java.util.concurrent.atomic.AtomicReference[
-        org.apache.spark.sql.DataFrame]()
-      val epochs = new java.util.concurrent.atomic.AtomicLong(0L)
-      val q = agg.writeStream
-        .outputMode("update")
-        .foreachBatch {
-          (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-           epoch: Long) =>
-            val changes =
-              if (epoch == 1L) {
-                val cp = df.toDF().localCheckpoint()
-                stash.set(cp); cp
-              } else df.toDF()
-            TxTable.mergeCow(s, root, changes, "ws_sec",
-              Some(s"app=str20/epoch=$epoch"), Seq("ws_sec", "event_type"))
-            epochs.incrementAndGet()
-            ()
-        }
-        .option("checkpointLocation", tempDir("graft_ckpt20").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      // lands on the driver.
+      val stash = new AtomicReference[DataFrame]()
+      val epochs = new AtomicLong(0L)
+      Replay.drain(windowCounts(open(s).withWatermark("ts", WM)), "update")(
+        _.foreachBatch { (df: DataFrame, epoch: Long) =>
+          val changes =
+            if (epoch == 1L) {
+              val cp = df.localCheckpoint()
+              stash.set(cp); cp
+            } else df
+          TxTable.mergeCow(s, root, changes, "ws_sec",
+            Some(s"app=str20/epoch=$epoch"), Seq("ws_sec", "event_type"))
+          epochs.incrementAndGet()
+          ()
+        })
       // the deliberate replay: same epoch tag, same payload — the log
       // must recognize it and skip
       val replay = TxTable.mergeCow(s, root, stash.get(), "ws_sec",
@@ -380,45 +395,21 @@ object StreamingQueries {
     // must hash-match the from-scratch batch answer (feed completeness:
     // nothing lost, nothing double-counted, across every commit).
     "Q-str-21" -> { (s, d) =>
-      import graft.operators.TxTable
       val tmp = tempDir("graft_str21")
-      val (dir, raw) = stageChunks(s, d, tmp)
+      val open = stageChunks(s, d, tmp)
       val root = s"$tmp/tbl"
-      val agg = s.readStream.schema(raw.schema)
-        .option("maxFilesPerTrigger", 1).parquet(dir)
-        .withWatermark("ts", WM)
-        .groupBy(window(col("ts"), "10 seconds"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .select(wsSec("window.start"), col("event_type"), col("n"))
-      TxTable.create(
-        raw.groupBy(window(col("ts"), "10 seconds"), col("event_type"))
-          .agg(count(lit(1)).as("n"))
-          .select(wsSec("window.start"), col("event_type"), col("n"))
-          .limit(0).coalesce(1),
-        root, statsKey = Some("ws_sec"))
-      val q = agg.writeStream
-        .outputMode("update")
-        .foreachBatch {
-          (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-           epoch: Long) =>
-            // streaming plans run AQE-off, so the update-mode aggregate
-            // batch arrives as one near-empty output partition per
-            // post-shuffle task and would shatter into ~20 files per
-            // epoch (and snowball every later CoW epoch's touched-file
-            // count). Size the commit from the materialized count — the
-            // graft sink's pattern (GraftStream.addBatch), ~2M rows per
-            // file capped at the session parallelism.
-            val cp = df.toDF().localCheckpoint()
-            val parts = math.max(1L, math.min(cp.count() / 2000000L + 1L,
-              s.sparkContext.defaultParallelism.toLong)).toInt
-            TxTable.mergeCow(s, root, cp.coalesce(parts), "ws_sec",
-              Some(s"app=str21/epoch=$epoch"), Seq("ws_sec", "event_type"))
-            ()
-        }
-        .option("checkpointLocation", tempDir("graft_ckpt21").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      createCountsTable(s, d, root)
+      Replay.drain(windowCounts(open(s).withWatermark("ts", WM)), "update")(
+        _.foreachBatch { (df: DataFrame, epoch: Long) =>
+          // the graft sink's count-sized commit: the update-mode batch
+          // would otherwise shatter into ~20 files per epoch (and
+          // snowball every later CoW epoch's touched-file count)
+          val cp = df.localCheckpoint()
+          TxTable.mergeCow(s, root,
+            cp.coalesce(GraftStreamSink.commitPartitions(s, cp.count())), "ws_sec",
+            Some(s"app=str21/epoch=$epoch"), Seq("ws_sec", "event_type"))
+          ()
+        })
       // downstream: one feed per committed version, deltas netted in a
       // single distributed rollup (no driver-side accumulation)
       val ver = TxTable.snapshot(root).version
@@ -451,48 +442,27 @@ object StreamingQueries {
     // table must hash-match the one-shot batch aggregate — the whole
     // point: a crash mid-stream is invisible in the sink.
     "Q-str-23" -> { (s, d) =>
-      import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
       import scala.jdk.CollectionConverters._
-      import graft.operators.TxTable
       val tmp = tempDir("graft_str23")
-      val (dir, raw) = stageChunks(s, d, tmp)
+      val open = stageChunks(s, d, tmp)
       val root = s"$tmp/tbl"
-      val ckpt = tempDir("graft_ckpt23").toString
-      TxTable.create(
-        raw.groupBy(window(col("ts"), "10 seconds"), col("event_type"))
-          .agg(count(lit(1)).as("n"))
-          .select(wsSec("window.start"), col("event_type"), col("n"))
-          .limit(0).coalesce(1),
-        root, statsKey = Some("ws_sec"))
+      val ckpt = Some(tempDir("graft_ckpt23").toString)
+      createCountsTable(s, d, root)
       def aggOf(session: SparkSession) =
-        session.readStream.schema(raw.schema)
-          .option("maxFilesPerTrigger", 1).parquet(dir)
-          .withWatermark("ts", WM)
-          .groupBy(window(col("ts"), "10 seconds"), col("event_type"))
-          .agg(count(lit(1)).as("n"))
-          .select(wsSec("window.start"), col("event_type"), col("n"))
+        windowCounts(open(session).withWatermark("ts", WM))
       // phase 1: commit epochs 0 and 1, then die after 1's commit lands
       val crashed = new AtomicBoolean(false)
-      val q1 = aggOf(s).writeStream
-        .outputMode("update")
-        .foreachBatch {
-          (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-           epoch: Long) =>
-            TxTable.mergeCow(s, root, df.toDF(), "ws_sec",
-              Some(s"app=str23/epoch=$epoch"), Seq("ws_sec", "event_type"))
-            if (epoch == 1L) {
-              crashed.set(true)
-              throw new RuntimeException("simulated crash after epoch-1 commit")
-            }
-            ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q1.awaitTermination()
-      catch {
-        case _: org.apache.spark.sql.streaming.StreamingQueryException => ()
-      }
+      try Replay.drain(aggOf(s), "update", ckpt)(
+        _.foreachBatch { (df: DataFrame, epoch: Long) =>
+          TxTable.mergeCow(s, root, df, "ws_sec",
+            Some(s"app=str23/epoch=$epoch"), Seq("ws_sec", "event_type"))
+          if (epoch == 1L) {
+            crashed.set(true)
+            throw new RuntimeException("simulated crash after epoch-1 commit")
+          }
+          ()
+        })
+      catch { case _: StreamingQueryException => () }
       if (!crashed.get()) throw new IllegalStateException(
         "crash point never reached — epoch 1 did not run")
       val verAtCrash = TxTable.snapshot(root).version
@@ -502,28 +472,21 @@ object StreamingQueries {
       val s2 = s.newSession()
       val skips = new AtomicLong(0L)
       val epochsSeen = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
-      val q2 = aggOf(s2).writeStream
-        .outputMode("update")
-        .foreachBatch {
-          (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-           epoch: Long) =>
-            epochsSeen.add(epoch)
-            val r = TxTable.mergeCow(s2, root, df.toDF(), "ws_sec",
-              Some(s"app=str23/epoch=$epoch"), Seq("ws_sec", "event_type"))
-            if (r.skipped) {
-              skips.incrementAndGet()
-              // a detected replay is consumed-and-discarded, not left
-              // unread: the engine still requires the batch fully
-              // processed (state stores must commit for this epoch —
-              // Spark validates it), only the sink effect is elided
-              df.toDF().write.format("noop").mode("overwrite").save()
-            }
-            ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q2.awaitTermination()
+      Replay.drain(aggOf(s2), "update", ckpt)(
+        _.foreachBatch { (df: DataFrame, epoch: Long) =>
+          epochsSeen.add(epoch)
+          val r = TxTable.mergeCow(s2, root, df, "ws_sec",
+            Some(s"app=str23/epoch=$epoch"), Seq("ws_sec", "event_type"))
+          if (r.skipped) {
+            skips.incrementAndGet()
+            // a detected replay is consumed-and-discarded, not left
+            // unread: the engine still requires the batch fully
+            // processed (state stores must commit for this epoch —
+            // Spark validates it), only the sink effect is elided
+            df.write.format("noop").mode("overwrite").save()
+          }
+          ()
+        })
       if (!epochsSeen.contains(1L) || skips.get() < 1L)
         throw new IllegalStateException(
           s"recovered stream never replayed the committed epoch " +
@@ -551,41 +514,26 @@ object StreamingQueries {
     // epoch) identity — the at-least-once sink contract made idempotent
     // on the read side, exactly Q-str-19's discipline.
     "Q-str-24" -> { (s, d) =>
-      import java.util.concurrent.atomic.AtomicBoolean
       val tmp = tempDir("graft_str24")
-      val (dir, raw) = stageChunks(s, d, tmp)
+      val open = stageChunks(s, d, tmp)
       val log = s"$tmp/log"
-      val ckpt = tempDir("graft_ckpt24").toString
-      def transitionsOf(session: SparkSession) =
-        Presence.detect(session,
-          session.readStream.schema(raw.schema)
-            .option("maxFilesPerTrigger", 1).parquet(dir)
-            .select(col("user_id").cast("string").as("device_id"),
-              unix_millis(col("ts")).as("ts_ms")),
-          ttlMillis = 3600000L).toDF()
+      val ckpt = Some(tempDir("graft_ckpt24").toString)
       def drain(session: SparkSession, crashAt: Option[Long]): Unit = {
         val crashed = new AtomicBoolean(false)
-        val q = transitionsOf(session).writeStream
-          .outputMode("append")
-          .foreachBatch {
-            (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-             epoch: Long) =>
-              df.toDF().withColumn("epoch", lit(epoch))
-                .write.mode("append").parquet(log)
-              if (crashAt.contains(epoch)) {
-                crashed.set(true)
-                throw new RuntimeException("simulated crash after sink write")
-              }
-              ()
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination()
-        catch {
-          case e: org.apache.spark.sql.streaming.StreamingQueryException =>
-            if (crashAt.isEmpty) throw e
-        }
+        val transitions = Presence.detect(session,
+          open(session).select(col("user_id").cast("string").as("device_id"),
+            unix_millis(col("ts")).as("ts_ms")),
+          ttlMillis = 3600000L).toDF()
+        try Replay.drain(transitions, "append", ckpt)(
+          _.foreachBatch { (df: DataFrame, epoch: Long) =>
+            df.withColumn("epoch", lit(epoch)).write.mode("append").parquet(log)
+            if (crashAt.contains(epoch)) {
+              crashed.set(true)
+              throw new RuntimeException("simulated crash after sink write")
+            }
+            ()
+          })
+        catch { case e: StreamingQueryException => if (crashAt.isEmpty) throw e }
         if (crashAt.isDefined && !crashed.get())
           throw new IllegalStateException("crash point never reached")
       }
@@ -600,18 +548,6 @@ object StreamingQueries {
         .orderBy("device_id", "ts_ms", "state")
     },
 
-    // ---- Q-str-25: streaming MERGE-ON-READ upsert sink — Q-str-20's
-    // exactly-once drain with the epoch commit cost 100 TB actually
-    // allows: each micro-batch's changed (window, event_type) rows land
-    // via mergeMorKeys as ONE commit (composite-key delete ledger + new
-    // row versions), so an epoch REWRITES NOTHING no matter how the
-    // table is clustered (asserted: the file set only grows across the
-    // drain) — where the CoW sink pays a rewrite of every file holding
-    // a touched window. The same epoch-tag idempotence gates replays
-    // (asserted: a deliberate re-merge no-ops), a post-drain compaction
-    // folds all ledgers (asserted), and the final content hash-matches
-    // the one-shot batch aggregate — the cost model changed, the
-    // results did not.
     // ---- Q-str-27: the NATIVE table-to-table streaming pipeline — no
     // foreachBatch anywhere: `readStream.format("graft")` turns the
     // source table's commit log into micro-batches (offset = log
@@ -624,10 +560,9 @@ object StreamingQueries {
     // live in the two logs, not in user code. Final table hash-matches
     // the one-shot batch aggregate.
     "Q-str-27" -> { (s, d) =>
-      import graft.operators.TxTable
       val tmp = tempDir("graft_str27")
       val (src, dst) = (s"$tmp/src", s"$tmp/dst")
-      val ckpt = tempDir("graft_ckpt27").toString
+      val ckpt = Some(tempDir("graft_ckpt27").toString)
       // the source table accretes the events in 4 time-ordered epochs
       val ev = Tables.events(s, d)
       val wOrd = Window.orderBy(col("ts"), col("event_id"))
@@ -638,22 +573,13 @@ object StreamingQueries {
         TxTable.append(s, src,
           chunked.filter(col("chunk") === c).drop("chunk").coalesce(1))
       }
-      def drain(): Unit = {
-        val q = s.readStream.format("graft")
+      def drain(): Unit = Replay.drain(
+        windowCounts(s.readStream.format("graft")
           .option("maxVersionsPerTrigger", "1").load(src)
-          .withWatermark("ts", WM)
-          .groupBy(window(col("ts"), "10 seconds"), col("event_type"))
-          .agg(count(lit(1)).as("n"))
-          .select(wsSec("window.start"), col("event_type"), col("n"))
-          .writeStream.outputMode("update")
-          .format("graft").option("path", dst)
+          .withWatermark("ts", WM)), "update", ckpt)(
+        _.format("graft").option("path", dst)
           .option("mergeKeys", "ws_sec,event_type")
-          .option("statsKey", "ws_sec")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+          .option("statsKey", "ws_sec"))
       drain()
       val v = TxTable.snapshot(dst).version
       if (v != 4L) throw new IllegalStateException(
@@ -678,10 +604,9 @@ object StreamingQueries {
     // batch, the feed costs O(files touched by that version), never the
     // table — how a 100 TB replica follows a primary.
     "Q-str-28" -> { (s, d) =>
-      import graft.operators.TxTable
       val tmp = tempDir("graft_str28")
       val (src, dst) = (s"$tmp/src", s"$tmp/dst")
-      val ckpt = tempDir("graft_ckpt28").toString
+      val ckpt = Some(tempDir("graft_ckpt28").toString)
       val t = Tables.orders(s, d).filter(col("o_orderkey") <= 6000)
         .select(col("o_orderkey"),
           floor(col("o_totalprice") * 100 + lit(0.5)).cast("long").as("cents"))
@@ -701,35 +626,27 @@ object StreamingQueries {
           .select("o_orderkey"), "o_orderkey")
       TxTable.create(t.limit(0).coalesce(1), dst,
         statsKey = Some("o_orderkey"))
-      val batches = new java.util.concurrent.atomic.AtomicLong(0L)
-      def drain(): Unit = {
-        val q = s.readStream.format("graft")
+      val batches = new AtomicLong(0L)
+      def drain(): Unit = Replay.drain(
+        s.readStream.format("graft")
           .option("readChangeFeed", "true")
           .option("changeKeys", "o_orderkey")
           .option("maxVersionsPerTrigger", "1")
-          .load(src)
-          .writeStream
-          .foreachBatch {
-            (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-             epoch: Long) =>
-              batches.incrementAndGet()
-              val c = df.toDF().localCheckpoint()
-              val dels = c.filter(col("post").isNull).select("o_orderkey")
-              if (!dels.isEmpty)
-                TxTable.deleteMor(s, dst, dels, "o_orderkey",
-                  Some(s"str28d/epoch=$epoch"))
-              val ups = c.filter(col("post").isNotNull)
-                .select(col("o_orderkey"), col("post.cents").as("cents"))
-              if (!ups.isEmpty)
-                TxTable.mergeCow(s, dst, ups, "o_orderkey",
-                  Some(s"str28u/epoch=$epoch"))
-              ()
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+          .load(src), "append", ckpt)(
+        _.foreachBatch { (df: DataFrame, epoch: Long) =>
+          batches.incrementAndGet()
+          val c = df.localCheckpoint()
+          val dels = c.filter(col("post").isNull).select("o_orderkey")
+          if (!dels.isEmpty)
+            TxTable.deleteMor(s, dst, dels, "o_orderkey",
+              Some(s"str28d/epoch=$epoch"))
+          val ups = c.filter(col("post").isNotNull)
+            .select(col("o_orderkey"), col("post.cents").as("cents"))
+          if (!ups.isEmpty)
+            TxTable.mergeCow(s, dst, ups, "o_orderkey",
+              Some(s"str28u/epoch=$epoch"))
+          ()
+        })
       drain()
       if (batches.get() < 5) throw new IllegalStateException(
         s"expected one paced batch per source version (5), saw ${batches.get()}")
@@ -746,51 +663,39 @@ object StreamingQueries {
       dstNow.orderBy("o_orderkey")
     },
 
+    // ---- Q-str-25: streaming MERGE-ON-READ upsert sink — Q-str-20's
+    // exactly-once drain with the epoch commit cost 100 TB actually
+    // allows: each micro-batch's changed (window, event_type) rows land
+    // via mergeMorKeys as ONE commit (composite-key delete ledger + new
+    // row versions), so an epoch REWRITES NOTHING no matter how the
+    // table is clustered (asserted: the file set only grows across the
+    // drain) — where the CoW sink pays a rewrite of every file holding
+    // a touched window. The same epoch-tag idempotence gates replays
+    // (asserted: a deliberate re-merge no-ops), a post-drain compaction
+    // folds all ledgers (asserted), and the final content hash-matches
+    // the one-shot batch aggregate — the cost model changed, the
+    // results did not.
     "Q-str-25" -> { (s, d) =>
-      import graft.operators.TxTable
       val tmp = tempDir("graft_str25")
-      val (dir, raw) = stageChunks(s, d, tmp)
+      val open = stageChunks(s, d, tmp)
       val root = s"$tmp/tbl"
-      val agg = s.readStream.schema(raw.schema)
-        .option("maxFilesPerTrigger", 1).parquet(dir)
-        .withWatermark("ts", WM)
-        .groupBy(window(col("ts"), "10 seconds"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .select(wsSec("window.start"), col("event_type"), col("n"))
-      TxTable.create(
-        raw.groupBy(window(col("ts"), "10 seconds"), col("event_type"))
-          .agg(count(lit(1)).as("n"))
-          .select(wsSec("window.start"), col("event_type"), col("n"))
-          .limit(0).coalesce(1),
-        root, statsKey = Some("ws_sec"))
+      createCountsTable(s, d, root)
       // localCheckpoint HANDLE, not a driver collect — see Q-str-20
-      val stash = new java.util.concurrent.atomic.AtomicReference[
-        org.apache.spark.sql.DataFrame]()
-      val shrank = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val q = agg.writeStream
-        .outputMode("update")
-        .foreachBatch {
-          (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-           epoch: Long) =>
-            // same count-sized commit as Q-str-21 / the graft sink: the
-            // AQE-off micro-batch otherwise stages ~20 near-empty files
-            // per MoR epoch
-            val cp = df.toDF().localCheckpoint()
-            val parts = math.max(1L, math.min(cp.count() / 2000000L + 1L,
-              s.sparkContext.defaultParallelism.toLong)).toInt
-            val changes = cp.coalesce(parts)
-            if (epoch == 1L) stash.set(changes)
-            val before = TxTable.snapshot(root).files.toSet
-            TxTable.mergeMorKeys(s, root, changes,
-              Seq("ws_sec", "event_type"), Some(s"app=str25/epoch=$epoch"))
-            if (!before.subsetOf(TxTable.snapshot(root).files.toSet))
-              shrank.set(true)
-            ()
-        }
-        .option("checkpointLocation", tempDir("graft_ckpt25").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      val stash = new AtomicReference[DataFrame]()
+      val shrank = new AtomicBoolean(false)
+      Replay.drain(windowCounts(open(s).withWatermark("ts", WM)), "update")(
+        _.foreachBatch { (df: DataFrame, epoch: Long) =>
+          // same count-sized commit as Q-str-21 / the graft sink
+          val cp = df.localCheckpoint()
+          val changes = cp.coalesce(GraftStreamSink.commitPartitions(s, cp.count()))
+          if (epoch == 1L) stash.set(changes)
+          val before = TxTable.snapshot(root).files.toSet
+          TxTable.mergeMorKeys(s, root, changes,
+            Seq("ws_sec", "event_type"), Some(s"app=str25/epoch=$epoch"))
+          if (!before.subsetOf(TxTable.snapshot(root).files.toSet))
+            shrank.set(true)
+          ()
+        })
       if (shrank.get()) throw new IllegalStateException(
         "a MoR epoch rewrote or removed a data file")
       val replay = TxTable.mergeMorKeys(s, root, stash.get(),
@@ -840,29 +745,14 @@ object StreamingQueries {
     // drops batch 3's late rows must have been planned from batch 1's data.
     // Oracle = on-time rows only.
     "Q-str-04" -> { (s, d) =>
-      val tmp = tempDir("graft_str04")
       val ev = Tables.events(s, d)
-      ev.filter(col("ts") >= to_timestamp(lit("2024-01-20")) && col("event_id") % 2 === 0)
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/ontime1")
-      ev.filter(col("ts") >= to_timestamp(lit("2024-01-20")) && col("event_id") % 2 === 1)
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/ontime2")
-      ev.filter(col("ts") < to_timestamp(lit("2024-01-05")))
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/late")
-      val dir = Files.createDirectory(tmp.resolve("stream"))
-      copyParts(tmp.resolve("ontime1"), dir, "a_", 1000000000000L)
-      copyParts(tmp.resolve("ontime2"), dir, "a2_", 1000000050000L)
-      copyParts(tmp.resolve("late"), dir, "b_", 1000000100000L)
-
-      val raw = s.read.parquet(s"$tmp/ontime1") // schema (ts already timestamp)
-      val stream = s.readStream.schema(raw.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(dir.toString)
-        .withWatermark("ts", WM)
-        .groupBy(window(col("ts"), "10 seconds"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .select(wsSec("window.start"), col("event_type"), col("n"))
-      val (res, _) = Replay.runWithDropCount(stream, "update")
-      res.groupBy("ws_sec", "event_type").agg(max("n").as("n"))
+      val onTime = col("ts") >= to_timestamp(lit("2024-01-20"))
+      val open = stageBatches(s, tempDir("graft_str04"), Seq(
+        ev.filter(onTime && col("event_id") % 2 === 0),
+        ev.filter(onTime && col("event_id") % 2 === 1),
+        ev.filter(col("ts") < to_timestamp(lit("2024-01-05")))))
+      Replay.run(windowCounts(open(s).withWatermark("ts", WM)), "update")
+        .groupBy("ws_sec", "event_type").agg(max("n").as("n"))
         .orderBy("ws_sec", "event_type")
     },
 
@@ -884,16 +774,10 @@ object StreamingQueries {
       val stream = Replay.eventsStream(s, d)
         .select(col("user_id").cast("string").as("device_id"),
           unix_millis(col("ts")).as("ts_ms"))
-      val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try
+      Replay.withRocksDb(s) {
         Replay.run(
           Presence.detectTws(s, stream, ttlMillis = 3600000L).toDF(),
           "append").orderBy("device_id", "ts_ms", "state")
-      finally prev match {
-        case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
       }
     },
 
@@ -911,21 +795,15 @@ object StreamingQueries {
       val stream = Replay.eventsStream(s, d)
         .select(col("user_id").cast("string").as("device_id"),
           unix_millis(col("ts")).as("ts_ms"))
-      val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try
+      Replay.withRocksDb(s) {
         Replay.run(
           Presence.detectEvict(s, stream, ttlMillis = 3600000L).toDF(),
           "append").orderBy("device_id", "ts_ms", "state")
-      finally prev match {
-        case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
       }
     },
 
     // ---- Q-str-30: the reference pipeline END-TO-END through the kafka
-    // COLUMN contract at sf scale (round-9; reference ops #1→#5 chained,
+    // COLUMN contract at sf scale (reference ops #1→#5 chained,
     // `WeatherProcessingJob.java:65-77`): events → avro envelopes →
     // kafka-shaped records (key/value/topic/partition/offset/timestamp/
     // timestampType/headers) staged and replayed under the connector's
@@ -957,16 +835,10 @@ object StreamingQueries {
       val raw = graft.streaming.KafkaShape.source(s, s"$tmp/records")
         .select(col("value")).as[Array[Byte]]
       val readings = AvroEnvelope.decode(s, raw)
-      val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try
+      Replay.withRocksDb(s) {
         Replay.run(
           graft.WeatherJob.plan(s, readings, ttlMillis = 3600000L),
           "append").orderBy("device_id", "ts_ms", "state")
-      finally prev match {
-        case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
       }
     },
 
@@ -979,39 +851,19 @@ object StreamingQueries {
     // buffering; a far-future sentinel advances the watermark so every
     // real timer fires. Oracle = batch gap-and-island SQL.
     "Q-str-12" -> { (s, d) =>
-      val tmp = tempDir("graft_str12")
       val ev = Tables.events(s, d)
-      ev.filter(col("event_id") % 2 === 0)
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/h1")
-      ev.filter(col("event_id") % 2 === 1)
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/h2")
-      val maxTs = maxEventTs(s, d)
-      val sentTs = new java.sql.Timestamp(maxTs.getTime + 3600L * 1000)
-      import s.implicits._
-      Seq((-1L, sentTs, -1L, "sentinel", 0.0, "{}"))
-        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/sent")
-      val dir = Files.createDirectory(tmp.resolve("stream"))
-      copyParts(tmp.resolve("h1"), dir, "a_", 1000000000000L)
-      copyParts(tmp.resolve("h2"), dir, "b_", 1000000050000L)
-      copyParts(tmp.resolve("sent"), dir, "c_", 1000000100000L)
-      val raw = s.read.parquet(s"$tmp/h1")
-      val stream = s.readStream.schema(raw.schema)
-        .option("maxFilesPerTrigger", 1).parquet(dir.toString)
+      val open = stageWithSentinel(s, d, tempDir("graft_str12"),
+        Seq(ev.filter(col("event_id") % 2 === 0), ev.filter(col("event_id") % 2 === 1)),
+        aheadMs = 3600L * 1000, "sentinel")
+      val stream = open(s)
         .withWatermark("ts", WM)
         .select(col("user_id"), unix_millis(col("ts")).as("ts_ms"))
-      val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try
+      Replay.withRocksDb(s) {
         Replay.run(
           graft.streaming.Sessionize.sessions(s, stream, gapMs = 30000L).toDF(),
           "append")
           .filter(col("user_id") =!= -1)
           .orderBy("user_id", "session_start_ms")
-      finally prev match {
-        case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
       }
     },
 
@@ -1032,13 +884,8 @@ object StreamingQueries {
       val out = tempDir("graft_str07").toString
       def writeEpoch(df: DataFrame, epoch: Long): Unit =
         df.write.mode("overwrite").parquet(s"$out/epoch=$epoch")
-      val q = Replay.eventsStream(s, d).writeStream
-        .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                         epoch: Long) => writeEpoch(df.toDF(), epoch) }
-        .option("checkpointLocation", tempDir("graft_ckpt07").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      Replay.drain(Replay.eventsStream(s, d))(
+        _.foreachBatch { (df: DataFrame, epoch: Long) => writeEpoch(df, epoch) })
       // simulate duplicate delivery of epoch 0: same data, same epoch id —
       // the overwrite makes it a no-op on the final state
       writeEpoch(Tables.events(s, d), 0L)
@@ -1078,22 +925,15 @@ object StreamingQueries {
     // oracle — emitted as one row per (sink, type).
     "Q-str-17" -> { (s, d) =>
       val out = tempDir("graft_str17").toString
-      val q = Replay.eventsStream(s, d)
-        .select(col("event_id"), col("event_type"), col("value"))
-        .writeStream
-        .foreachBatch {
-          (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-           epoch: Long) =>
-            val batch = df.toDF().persist()
-            try {
-              batch.write.mode("overwrite").parquet(s"$out/pq/epoch=$epoch")
-              batch.write.mode("overwrite").json(s"$out/js/epoch=$epoch")
-            } finally { batch.unpersist(); () }
-        }
-        .option("checkpointLocation", tempDir("graft_ckpt17").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      Replay.drain(Replay.eventsStream(s, d)
+          .select(col("event_id"), col("event_type"), col("value")))(
+        _.foreachBatch { (df: DataFrame, epoch: Long) =>
+          val batch = df.persist()
+          try {
+            batch.write.mode("overwrite").parquet(s"$out/pq/epoch=$epoch")
+            batch.write.mode("overwrite").json(s"$out/js/epoch=$epoch")
+          } finally { batch.unpersist(); () }
+        })
       val pq = s.read.parquet(s"$out/pq").drop("epoch")
         .groupBy("event_type").agg(count(lit(1)).as("n"))
         .select(lit("parquet").as("sink"), col("event_type"), col("n"))
@@ -1118,22 +958,7 @@ object StreamingQueries {
 
     // ---- Q-join-09: stream-stream interval join with watermarks
     "Q-join-09" -> { (s, d) =>
-      val purchases = Replay.eventsStream(s, d)
-        .filter(col("event_type") === "purchase")
-        .select(col("event_id").as("p_id"), col("user_id").as("p_user"),
-          col("ts").as("p_ts"))
-        .withWatermark("p_ts", "10 minutes")
-      val clicks = Replay.eventsStream(s, d)
-        .filter(col("event_type") === "click")
-        .select(col("event_id").as("c_id"), col("user_id").as("c_user"),
-          col("ts").as("c_ts"))
-        .withWatermark("c_ts", "10 minutes")
-      Replay.run(
-        purchases.join(clicks,
-          col("p_user") === col("c_user") &&
-          col("c_ts") > col("p_ts") - expr("INTERVAL 5 MINUTES") &&
-          col("c_ts") <= col("p_ts")),
-        "append")
+      Replay.run(purchaseClicks(Replay.eventsStream(s, d), "inner"), "append")
         .select("p_id", "c_id", "p_user")
         .orderBy("p_id", "c_id")
     },
@@ -1159,11 +984,7 @@ object StreamingQueries {
         .filter(col("event_type") === "purchase")
         .select(col("event_type"), col("ts"))
       Replay.run(
-        purchases.unionByName(clicks)
-          .withWatermark("ts", WM)
-          .groupBy(window(col("ts"), "10 seconds"), col("event_type"))
-          .agg(count(lit(1)).as("n"))
-          .select(wsSec("window.start"), col("event_type"), col("n")),
+        windowCounts(purchases.unionByName(clicks).withWatermark("ts", WM)),
         "complete").orderBy("ws_sec", "event_type")
     },
 
@@ -1174,23 +995,7 @@ object StreamingQueries {
     // at scale this is the cheap form of Q-join-09: no row multiplication
     // from multi-click users, state bounded by the interval either way.
     "Q-str-13" -> { (s, d) =>
-      val purchases = Replay.eventsStream(s, d)
-        .filter(col("event_type") === "purchase")
-        .select(col("event_id").as("p_id"), col("user_id").as("p_user"),
-          col("ts").as("p_ts"))
-        .withWatermark("p_ts", "10 minutes")
-      val clicks = Replay.eventsStream(s, d)
-        .filter(col("event_type") === "click")
-        .select(col("event_id").as("c_id"), col("user_id").as("c_user"),
-          col("ts").as("c_ts"))
-        .withWatermark("c_ts", "10 minutes")
-      Replay.run(
-        purchases.join(clicks,
-          col("p_user") === col("c_user") &&
-          col("c_ts") > col("p_ts") - expr("INTERVAL 5 MINUTES") &&
-          col("c_ts") <= col("p_ts"),
-          "left_semi"),
-        "append")
+      Replay.run(purchaseClicks(Replay.eventsStream(s, d), "left_semi"), "append")
         .select("p_id", "p_user")
         .orderBy("p_id")
     },
@@ -1203,37 +1008,8 @@ object StreamingQueries {
     // flushing every unmatched purchase. The oracle is then the plain
     // batch LEFT JOIN, no cutoff arithmetic.
     "Q-str-08" -> { (s, d) =>
-      val tmp = tempDir("graft_str08")
-      val ev = Tables.events(s, d)
-      ev.coalesce(1).write.mode("overwrite").parquet(s"$tmp/real")
-      val maxTs = maxEventTs(s, d)
-      val sentTs = new java.sql.Timestamp(maxTs.getTime + 3600L * 1000)
-      import s.implicits._
-      Seq((-1L, sentTs, -1L, "purchase", 0.0, "{}"),
-          (-2L, sentTs, -1L, "click", 0.0, "{}"))
-        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/sent")
-      val dir = Files.createDirectory(tmp.resolve("stream"))
-      copyParts(tmp.resolve("real"), dir, "a_", 1000000000000L)
-      copyParts(tmp.resolve("sent"), dir, "b_", 1000000100000L)
-      val raw = s.read.parquet(s"$tmp/real") // ts already timestamp
-      val src = s.readStream.schema(raw.schema)
-        .option("maxFilesPerTrigger", 1).parquet(dir.toString)
-      val purchases = src.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("p_id"), col("user_id").as("p_user"),
-          col("ts").as("p_ts"))
-        .withWatermark("p_ts", "10 minutes")
-      val clicks = src.filter(col("event_type") === "click")
-        .select(col("event_id").as("c_id"), col("user_id").as("c_user"),
-          col("ts").as("c_ts"))
-        .withWatermark("c_ts", "10 minutes")
-      Replay.run(
-        purchases.join(clicks,
-          col("p_user") === col("c_user") &&
-          col("c_ts") > col("p_ts") - expr("INTERVAL 5 MINUTES") &&
-          col("c_ts") <= col("p_ts"),
-          "leftOuter"),
-        "append")
+      val src = sentinelPair(s, d, "graft_str08")
+      Replay.run(purchaseClicks(src, "leftOuter"), "append")
         .filter(col("p_user") =!= -1)
         .select("p_id", "c_id", "p_user")
         .orderBy("p_id", "c_id")
@@ -1244,37 +1020,8 @@ object StreamingQueries {
     // join window (same two-batch sentinel staging). Completes the
     // streaming join family: inner/left/full/semi/right.
     "Q-str-15" -> { (s, d) =>
-      val tmp = tempDir("graft_str15")
-      val ev = Tables.events(s, d)
-      ev.coalesce(1).write.mode("overwrite").parquet(s"$tmp/real")
-      val maxTs = maxEventTs(s, d)
-      val sentTs = new java.sql.Timestamp(maxTs.getTime + 3600L * 1000)
-      import s.implicits._
-      Seq((-1L, sentTs, -1L, "purchase", 0.0, "{}"),
-          (-2L, sentTs, -1L, "click", 0.0, "{}"))
-        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/sent")
-      val dir = Files.createDirectory(tmp.resolve("stream"))
-      copyParts(tmp.resolve("real"), dir, "a_", 1000000000000L)
-      copyParts(tmp.resolve("sent"), dir, "b_", 1000000100000L)
-      val raw = s.read.parquet(s"$tmp/real")
-      val src = s.readStream.schema(raw.schema)
-        .option("maxFilesPerTrigger", 1).parquet(dir.toString)
-      val purchases = src.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("p_id"), col("user_id").as("p_user"),
-          col("ts").as("p_ts"))
-        .withWatermark("p_ts", "10 minutes")
-      val clicks = src.filter(col("event_type") === "click")
-        .select(col("event_id").as("c_id"), col("user_id").as("c_user"),
-          col("ts").as("c_ts"))
-        .withWatermark("c_ts", "10 minutes")
-      Replay.run(
-        purchases.join(clicks,
-          col("p_user") === col("c_user") &&
-          col("c_ts") > col("p_ts") - expr("INTERVAL 5 MINUTES") &&
-          col("c_ts") <= col("p_ts"),
-          "rightOuter"),
-        "append")
+      val src = sentinelPair(s, d, "graft_str15")
+      Replay.run(purchaseClicks(src, "rightOuter"), "append")
         .filter(col("c_user") =!= -1)
         .select("p_id", "c_id", "c_user")
         .orderBy(col("c_id"), col("p_id"))
@@ -1287,37 +1034,8 @@ object StreamingQueries {
     // Oracle = plain batch FULL JOIN. NULL join keys sort via explicit
     // NULLS FIRST on both engines.
     "Q-str-10" -> { (s, d) =>
-      val tmp = tempDir("graft_str10")
-      val ev = Tables.events(s, d)
-      ev.coalesce(1).write.mode("overwrite").parquet(s"$tmp/real")
-      val maxTs = maxEventTs(s, d)
-      val sentTs = new java.sql.Timestamp(maxTs.getTime + 3600L * 1000)
-      import s.implicits._
-      Seq((-1L, sentTs, -1L, "purchase", 0.0, "{}"),
-          (-2L, sentTs, -1L, "click", 0.0, "{}"))
-        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/sent")
-      val dir = Files.createDirectory(tmp.resolve("stream"))
-      copyParts(tmp.resolve("real"), dir, "a_", 1000000000000L)
-      copyParts(tmp.resolve("sent"), dir, "b_", 1000000100000L)
-      val raw = s.read.parquet(s"$tmp/real")
-      val src = s.readStream.schema(raw.schema)
-        .option("maxFilesPerTrigger", 1).parquet(dir.toString)
-      val purchases = src.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("p_id"), col("user_id").as("p_user"),
-          col("ts").as("p_ts"))
-        .withWatermark("p_ts", "10 minutes")
-      val clicks = src.filter(col("event_type") === "click")
-        .select(col("event_id").as("c_id"), col("user_id").as("c_user"),
-          col("ts").as("c_ts"))
-        .withWatermark("c_ts", "10 minutes")
-      Replay.run(
-        purchases.join(clicks,
-          col("p_user") === col("c_user") &&
-          col("c_ts") > col("p_ts") - expr("INTERVAL 5 MINUTES") &&
-          col("c_ts") <= col("p_ts"),
-          "fullOuter"),
-        "append")
+      val src = sentinelPair(s, d, "graft_str10")
+      Replay.run(purchaseClicks(src, "fullOuter"), "append")
         .filter(coalesce(col("p_user"), col("c_user")) =!= -1)
         .select(col("p_id"), col("c_id"),
           coalesce(col("p_user"), col("c_user")).as("u"))
@@ -1335,22 +1053,10 @@ object StreamingQueries {
     // window-agg over the (unique) events table — it hash-matches only if
     // every injected duplicate was dropped.
     "Q-str-11" -> { (s, d) =>
-      val tmp = tempDir("graft_str11")
       val ev = Tables.events(s, d)
-      ev.coalesce(1).write.mode("overwrite").parquet(s"$tmp/src")
-      val maxTs = maxEventTs(s, d)
-      val sentTs = new java.sql.Timestamp(maxTs.getTime + 31L * 24 * 3600 * 1000)
-      import s.implicits._
-      Seq((-1L, sentTs, -1L, "sentinel", 0.0, "{}"))
-        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/sent")
-      val dir = Files.createDirectory(tmp.resolve("stream"))
-      copyParts(tmp.resolve("src"), dir, "a_", 1000000000000L)
-      copyParts(tmp.resolve("src"), dir, "b_", 1000000050000L) // replays
-      copyParts(tmp.resolve("sent"), dir, "c_", 1000000100000L)
-      val raw = s.read.parquet(s"$tmp/src")
-      val stream = s.readStream.schema(raw.schema)
-        .option("maxFilesPerTrigger", 1).parquet(dir.toString)
+      val open = stageWithSentinel(s, d, tempDir("graft_str11"), Seq(ev, ev),
+        aheadMs = 31L * 24 * 3600 * 1000, "sentinel")
+      val stream = open(s)
         .withWatermark("ts", "30 days")
         .dropDuplicatesWithinWatermark("event_id")
         .groupBy(window(col("ts"), "60 seconds"), col("event_type"))
@@ -1362,6 +1068,13 @@ object StreamingQueries {
         .orderBy("ws_sec", "event_type")
     }
   )
+
+  /** The events and then a far-future purchase+click sentinel pair, one
+    * stream of two micro-batches, staged under a fresh `tag` dir: the
+    * input of the outer interval joins (Q-str-08/10/15). */
+  private def sentinelPair(s: SparkSession, d: String, tag: String): DataFrame =
+    stageWithSentinel(s, d, tempDir(tag), Seq(Tables.events(s, d)),
+      aheadMs = 3600L * 1000, "purchase", "click")(s)
 
   // batch gap-and-island rendering of the presence state machine, shared by
   // the flatMapGroupsWithState (Q-str-05) and transformWithState (Q-str-09)

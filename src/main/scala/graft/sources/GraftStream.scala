@@ -262,9 +262,7 @@ final class GraftStreamSink(
       // than churn the log with empty versions (consistent under
       // replay: empty then, empty now)
       if (n == 0L) return
-      val parts = math.max(1L, math.min(n / 2000000L + 1L,
-        spark.sparkContext.defaultParallelism.toLong)).toInt
-      val df = cp.coalesce(parts)
+      val df = cp.coalesce(GraftStreamSink.commitPartitions(spark, n))
       val tag = Some(s"graftsink/epoch=$batchId")
       if (mergeKeys.nonEmpty && morUpserts)
         TxTable.mergeMorKeys(spark, root, df, mergeKeys, tag)
@@ -278,4 +276,12 @@ final class GraftStreamSink(
     } finally fresh.foreach(_.unpersist(blocking = false))
   }
   override def toString: String = s"GraftStreamSink[$root]"
+}
+
+object GraftStreamSink {
+
+  /** Output partitions for committing a materialized micro-batch of
+    * `rows` rows: ~2M rows per file, capped at the session parallelism. */
+  def commitPartitions(spark: SparkSession, rows: Long): Int =
+    math.min(rows / 2000000L + 1L, spark.sparkContext.defaultParallelism.toLong).toInt
 }

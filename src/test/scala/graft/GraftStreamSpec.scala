@@ -4,12 +4,12 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.EngineSession
 import graft.operators.TxTable
 import graft.sources.GraftSource
+import graft.streaming.Replay
 
 /** The table log as a native streaming endpoint: `readStream.format
   * ("graft")` emits each commit's additions as micro-batches (offsets =
@@ -26,14 +26,8 @@ class GraftStreamSpec extends AnyFunSuite {
                     options: Map[String, String] = Map.empty): Unit = {
     var reader = spark.readStream.format("graft")
     options.foreach { case (k, v) => reader = reader.option(k, v) }
-    val q = reader.load(src)
-      .writeStream.format("graft")
-      .option("path", dst)
-      .option("statsKey", "k")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Replay.drain(reader.load(src), checkpoint = Some(ckpt))(
+      _.format("graft").option("path", dst).option("statsKey", "k"))
   }
 
   test("graft-to-graft drain: every commit's adds flow through, incrementally") {
@@ -86,21 +80,16 @@ class GraftStreamSpec extends AnyFunSuite {
         (e * 10L until e * 10L + 60L).map(k => (k, e.toLong))
           .toDF("k", "e").coalesce(1))
     }
-    def drainMor(): Unit = {
-      val q = spark.readStream.format("graft")
+    def drainMor(): Unit = Replay.drain(
+      spark.readStream.format("graft")
         .option("maxVersionsPerTrigger", "1")
         .option("ignoreChanges", "true")
-        .load(src)
-        .writeStream.format("graft")
+        .load(src), checkpoint = Some(ckpt))(
+      _.format("graft")
         .option("path", dst)
         .option("mergeKeys", "k")
         .option("mergeMode", "mor")
-        .option("statsKey", "k")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+        .option("statsKey", "k"))
     drainMor()
     // the MoR contract: no upsert epoch rewrote or removed a data file
     val pv = TxTable.snapshot(dst).version
@@ -143,23 +132,18 @@ class GraftStreamSpec extends AnyFunSuite {
       TxTable.append(spark, src,
         (0L until 50L).map(k => (k, e.toLong)).toDF("k", "e").coalesce(1))
     }
-    def drainMor(): Unit = {
-      val q = spark.readStream.format("graft")
+    def drainMor(): Unit = Replay.drain(
+      spark.readStream.format("graft")
         .option("maxVersionsPerTrigger", "1")
         .option("ignoreChanges", "true")
-        .load(src)
-        .writeStream.format("graft")
+        .load(src), checkpoint = Some(ckpt))(
+      _.format("graft")
         .option("path", dst)
         .option("mergeKeys", "k")
         .option("mergeMode", "mor")
         .option("foldEvery", "3")
         .option("maxLedgers", "2")
-        .option("statsKey", "k")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+        .option("statsKey", "k"))
     drainMor()
     val (chain, live) = TxTable.ledgerPressure(dst)
     assert(chain <= 2 + 3, // bound + at most foldEvery-1 epochs since
@@ -192,14 +176,9 @@ class GraftStreamSpec extends AnyFunSuite {
       s"expected the appends-only refusal, got: ${e.getCause.getMessage}")
     // ignoreChanges: the merge's rewritten file flows (at-least-once) —
     // the sink's mergeKeys turns that replay back into exactly-once rows
-    val q = spark.readStream.format("graft")
-      .option("ignoreChanges", "true").load(src)
-      .writeStream.format("graft")
-      .option("path", dst).option("mergeKeys", "k")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Replay.drain(spark.readStream.format("graft")
+        .option("ignoreChanges", "true").load(src), checkpoint = Some(ckpt))(
+      _.format("graft").option("path", dst).option("mergeKeys", "k"))
     val got = TxTable.read(spark, dst).as[(Long, String)].collect().toSet
     assert(got.size == 101 && got.contains((7L, "V7")) && got.contains((200L, "v200")))
   }
@@ -214,26 +193,17 @@ class GraftStreamSpec extends AnyFunSuite {
       src, statsKey = Some("k"))
     val seen = java.util.concurrent.ConcurrentHashMap
       .newKeySet[(Long, String, Option[String], Option[String])]()
-    def drainCdc(): Unit = {
-      val q = spark.readStream.format("graft")
+    def drainCdc(): Unit = Replay.drain(
+      spark.readStream.format("graft")
         .option("readChangeFeed", "true").option("changeKeys", "k")
-        .load(src)
-        .writeStream
-        .foreachBatch {
-          (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-           _: Long) =>
-            df.collect().foreach { r =>
-              seen.add((r.getLong(0), r.getString(1),
-                if (r.isNullAt(2)) None else Some(r.getStruct(2).getString(0)),
-                if (r.isNullAt(3)) None else Some(r.getStruct(3).getString(0))))
-            }
-            ()
+        .load(src), checkpoint = Some(ckpt))(
+      _.foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+        df.collect().foreach { r =>
+          seen.add((r.getLong(0), r.getString(1),
+            if (r.isNullAt(2)) None else Some(r.getStruct(2).getString(0)),
+            if (r.isNullAt(3)) None else Some(r.getStruct(3).getString(0))))
         }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+      })
     drainCdc() // initial snapshot: 100 inserts, pre = NULL
     assert(seen.size == 100 && seen.asScala.forall(c =>
       c._2 == "insert" && c._3.isEmpty && c._4.isDefined))

@@ -62,9 +62,7 @@ class PresenceScaleSpec extends AnyFunSuite {
     val schema = spark.read.parquet(tmp.resolve("c1").toString).schema
     val src = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(dir.toString)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    Replay.withRocksDb(spark) {
       val (out, usage) = Replay.runWithStateUsage(
         Presence.detectEvict(spark, src, TTL).toDF(), "append")
       val got = out.as[(String, String, Long)].collect().toSet
@@ -78,12 +76,10 @@ class PresenceScaleSpec extends AnyFunSuite {
       assert(usage.size == 1, s"one stateful operator expected: $usage")
       val stateRows = usage.head._2
       assert(stateRows == 3L, s"state should hold b, c, sentinel: $usage")
-    } finally
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
   }
 
   test("5M distinct devices: state bounded by open keys, idle fleet evicted") {
-    import spark.implicits._
     val N = 5000000L
     val ACTIVE = 100000L
     val tmp = graft.queries.tempDir("graft_presence_scale")
@@ -97,13 +93,15 @@ class PresenceScaleSpec extends AnyFunSuite {
     val schema = spark.read.parquet(tmp.resolve("c1").toString).schema
     val src = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(dir.toString)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val (out, usage) = Replay.runWithStateUsage(
-        Presence.detectEvict(spark, src, TTL).toDF(), "append")
-      val counts = out.groupBy("state").count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    Replay.withRocksDb(spark) {
+      // the 10.1M output rows are counted per state batch by batch: a
+      // memory sink would hold them all in the driver heap
+      val counts = scala.collection.concurrent.TrieMap.empty[String, Long]
+      val usage = Replay.stateUsage(Replay.drain(Presence.detectEvict(spark, src, TTL).toDF())(
+        _.foreachBatch { (df: DataFrame, _: Long) =>
+          df.groupBy("state").count().collect().foreach(r =>
+            counts.updateWith(r.getString(0))(c => Some(c.getOrElse(0L) + r.getLong(1))))
+        }))
       // every device came online; the ACTIVE set re-cycled offline+online;
       // the idle (N - ACTIVE) fleet got its offline from the TIMEOUT
       assert(counts("online") == N + ACTIVE + 1, s"online: $counts")
@@ -117,8 +115,7 @@ class PresenceScaleSpec extends AnyFunSuite {
       assert(stateRows >= ACTIVE + 1, s"state under-counts open keys: $usage")
       assert(stateRows <= (ACTIVE + 1) * 2,
         s"state not bounded by open keys: $stateRows rows vs ${ACTIVE + 1} open")
-    } finally
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
   }
 
   test("A/B: data-driven detect vs evicting detectEvict (event-time timeout, WeatherJob default)",
@@ -146,9 +143,7 @@ class PresenceScaleSpec extends AnyFunSuite {
     val schema = spark.read.parquet(tmp.resolve("c1").toString).schema
     def src = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(dir.toString)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    Replay.withRocksDb(spark) {
       // (rows, state gets + puts over the drain, wall-clock seconds)
       def drain(df: DataFrame): (Set[(String, String, Long)], Long, Double) = {
         val t = System.nanoTime()
@@ -172,8 +167,7 @@ class PresenceScaleSpec extends AnyFunSuite {
         s"${data.size} + ${trailing.size} rows")
       assert(evictOps <= dataOps * 3,
         s"evicting drain regressed past the 3x tripwire: $evictOps vs $dataOps state gets + puts")
-    } finally
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
   }
 
   test("changelog checkpointing: steady-state upload is DELTA-sized, not a state snapshot",
@@ -198,25 +192,19 @@ class PresenceScaleSpec extends AnyFunSuite {
         lit(T0 + (i - 1) * 10000L).as("ts_ms")))
     }
     val schema = spark.read.parquet(tmp.resolve("c1").toString).schema
+    // both drains run at Replay.drain's one fixed state partition count:
+    // every partition commits its own snapshot zip + SST (full) or
+    // changelog (clog) per version, so the ratio depends on the count,
+    // which must not follow the host's cpus
     def drain(clog: Boolean, ckpt: String): Unit = {
       val src = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(dir.toString)
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      spark.conf.set("spark.sql.streaming.stateStore.rocksdb" +
-        ".changelogCheckpointing.enabled", clog.toString)
-      try {
-        val q = Presence.detect(spark, src, TTL).toDF()
-          .writeStream.outputMode("append").format("noop")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      } finally {
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        spark.conf.unset("spark.sql.streaming.stateStore.rocksdb" +
-          ".changelogCheckpointing.enabled")
-      }
+      val clogKey = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+      spark.conf.set(clogKey, clog.toString)
+      try Replay.withRocksDb(spark) {
+        Replay.drain(Presence.detect(spark, src, TTL).toDF(), "append", Some(ckpt))(
+          _.format("noop"))
+      } finally spark.conf.unset(clogKey)
     }
     // per-version committed bytes under <ckpt>/state: every byte a
     // version adds. That is its N.zip (snapshot metadata) or N.changelog
@@ -260,17 +248,8 @@ class PresenceScaleSpec extends AnyFunSuite {
     }
     val ckptFull = tmp.resolve("ckpt_full").toString
     val ckptClog = tmp.resolve("ckpt_clog").toString
-    // both drains at one fixed state partition count: every partition
-    // commits its own snapshot zip + SST (full) or changelog (clog) per
-    // version, so the ratio depends on the count, which must not follow
-    // the host's cpus
-    val partsKey = "spark.sql.shuffle.partitions"
-    val prevParts = spark.conf.getOption(partsKey)
-    spark.conf.set(partsKey, "4")
-    try {
-      drain(clog = false, ckptFull)
-      drain(clog = true, ckptClog)
-    } finally prevParts.fold(spark.conf.unset(partsKey))(spark.conf.set(partsKey, _))
+    drain(clog = false, ckptFull)
+    drain(clog = true, ckptClog)
     val (fullV1, fullLater) = steadyBytes(ckptFull)
     val (clogV1, clogLater) = steadyBytes(ckptClog)
     info(f"v1 bytes: full=$fullV1%,d clog=$clogV1%,d; " +

@@ -53,19 +53,13 @@ class SessionizeSpec extends AnyFunSuite {
       .parquet(streamDir.toString)
       .withWatermark("ts", "1 second")
       .select(col("user_id"), unix_millis(col("ts")).as("ts_ms"))
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try
+    Replay.withRocksDb(spark) {
       Replay.run(Sessionize.sessions(spark, stream, gap).toDF(), "append")
         .filter(col("user_id") =!= -1)
         .orderBy("user_id", "session_start_ms")
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
         .toSeq
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -84,7 +78,7 @@ class SessionizeSpec extends AnyFunSuite {
 
   test("state-schema evolution: upgraded processor resumes a v1 checkpoint mid-session") {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode, Trigger}
+    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     val tmp = Files.createTempDirectory("graft_sess_evo")
     val streamDir = Files.createDirectory(tmp.resolve("stream"))
     val ckpt = tmp.resolve("ckpt").toString
@@ -108,25 +102,19 @@ class SessionizeSpec extends AnyFunSuite {
       .withWatermark("ts", "1 second")
       .select(col("user_id"), unix_millis(col("ts")).as("ts_ms"))
       .as[Sessionize.SessEvent]
-    val confs = Seq(
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      // Avro state encoding is what makes the schema EVOLVABLE (the
-      // default unsaferow encoding pins the exact binary layout)
-      "spark.sql.streaming.stateStore.encodingFormat" -> "avro")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    // Avro state encoding is what makes the schema EVOLVABLE (the
+    // default unsaferow encoding pins the exact binary layout)
+    val encoding = "spark.sql.streaming.stateStore.encodingFormat"
+    val prev = spark.conf.getOption(encoding)
+    spark.conf.set(encoding, "avro")
+    try Replay.withRocksDb(spark) {
       // file sink: the one sink shape that RECOVERS from a checkpoint
       // (memory sink refuses), so phase 2 genuinely resumes phase 1
       val outDir = tmp.resolve("out").toString
       def drain(ds: org.apache.spark.sql.Dataset[Sessionize.SessionOut])
           : Seq[(Long, Long, Long, Long)] = {
-        val q = ds.toDF().writeStream.format("json")
-          .option("path", outDir)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+        Replay.drain(ds.toDF(), "append", Some(ckpt))(
+          _.format("json").option("path", outDir))
         spark.read.schema(
             "user_id LONG, session_start_ms LONG, session_end_ms LONG, " +
               "n_events LONG")
@@ -151,8 +139,7 @@ class SessionizeSpec extends AnyFunSuite {
         (2L, base + 8000L, base + 8000L, 1L))
       assert(got == want,
         s"resumed-upgraded drain must equal the uninterrupted answer: $got")
-    } finally prev.foreach { case (k, o) =>
-      o.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    } finally prev.fold(spark.conf.unset(encoding))(spark.conf.set(encoding, _))
   }
 }
 

@@ -167,14 +167,11 @@ class StreamingSpec extends AnyFunSuite {
       Presence.detect(spark, stream, 3600000L).toDF(), "append")
       .collect().map(_.toString).sorted.toSeq
     // the v2 API only runs on the RocksDB state store
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val v2 = Replay.run(
-        Presence.detectTws(spark, stream, 3600000L).toDF(), "append")
+    val v2 = Replay.withRocksDb(spark) {
+      Replay.run(Presence.detectTws(spark, stream, 3600000L).toDF(), "append")
         .collect().map(_.toString).sorted.toSeq
-      assert(v2 == v1)
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
+    assert(v2 == v1)
   }
 
   test("presence replay under RocksDB state store matches the default provider") {
@@ -184,50 +181,36 @@ class StreamingSpec extends AnyFunSuite {
     val d = "/root/testdata/sf0.001"
     val expected = SparkEntry.queries("Q-str-05")(spark, d)
       .collect().map(_.toString).sorted.toSeq
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val got = SparkEntry.queries("Q-str-05")(spark, d)
-        .collect().map(_.toString).sorted.toSeq
-      assert(got == expected)
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    val got = graft.streaming.Replay.withRocksDb(spark) {
+      SparkEntry.queries("Q-str-05")(spark, d).collect().map(_.toString).sorted.toSeq
+    }
+    assert(got == expected)
   }
 
   /** Drains `rows` (one parquet file, so one data batch and then the
     * AvailableNow no-data batch at wm = max event time) through
-    * `Presence.detectEvict` under the given state store provider.
-    * Returns the output and the names of the files under the state dir. */
+    * `Presence.detectEvict`, on RocksDB or on the session's default
+    * (HDFS-backed) state store. Returns the output and the names of the
+    * files under the state dir. */
   private def drainEvict(tag: String, rows: Seq[(String, Long)], ttl: Long,
-                         provider: String): (Set[(String, String, Long)], Seq[String]) = {
+                         rocksDb: Boolean): (Set[(String, String, Long)], Seq[String]) = {
     import spark.implicits._
-    import graft.streaming.Presence
+    import graft.streaming.{Presence, Replay}
     val tmp = graft.queries.tempDir(s"graft_evict_$tag")
     val src = tmp.resolve("src").toString
     rows.toDF("device_id", "ts_ms").coalesce(1).write.parquet(src)
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, provider)
-    try {
-      val stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-      val ckpt = tmp.resolve("ckpt")
-      val q = Presence.detectEvict(spark, stream, ttl).toDF()
-        .writeStream.format("memory").queryName(s"evict_$tag")
-        .option("checkpointLocation", ckpt.toString).outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val out = spark.table(s"evict_$tag").as[(String, String, Long)].collect().toSet
-      val walk = java.nio.file.Files.walk(ckpt.resolve("state"))
-      val names = try walk.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
-        .filter(java.nio.file.Files.isRegularFile(_))
-        .map(_.getFileName.toString) finally walk.close()
-      (out, names)
-    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
+    val ckpt = tmp.resolve("ckpt")
+    def drain() = Replay.drain(Presence.detectEvict(spark, stream, ttl).toDF(), "append",
+      Some(ckpt.toString))(_.format("memory").queryName(s"evict_$tag"))
+    if (rocksDb) Replay.withRocksDb(spark)(drain()) else drain()
+    val out = spark.table(s"evict_$tag").as[(String, String, Long)].collect().toSet
+    val walk = java.nio.file.Files.walk(ckpt.resolve("state"))
+    val names = try walk.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(java.nio.file.Files.isRegularFile(_))
+      .map(_.getFileName.toString) finally walk.close()
+    (out, names)
   }
-
-  private val RocksDbProvider =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-  private val HdfsProvider =
-    "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
 
   // a: last-seen + ttl == the final watermark (set by z) -> offline;
   // b: one millisecond later -> still online at the final watermark
@@ -240,12 +223,12 @@ class StreamingSpec extends AnyFunSuite {
     ("b", "online", EvictT0 + 1), ("z", "online", EvictT0 + EvictTtl))
 
   test("evicting presence: last-seen + ttl equal to the final watermark emits the OFFLINE") {
-    val (out, _) = drainEvict("boundary", evictRows, EvictTtl, RocksDbProvider)
+    val (out, _) = drainEvict("boundary", evictRows, EvictTtl, rocksDb = true)
     assert(out == evictExpected)
   }
 
   test("evicting presence runs on the default HDFS-backed state store") {
-    val (out, files) = drainEvict("hdfs", evictRows, EvictTtl, HdfsProvider)
+    val (out, files) = drainEvict("hdfs", evictRows, EvictTtl, rocksDb = false)
     assert(out == evictExpected)
     // the HDFS-backed provider commits N.delta files; RocksDB would
     // commit N.zip / N.changelog
@@ -292,12 +275,10 @@ class StreamingSpec extends AnyFunSuite {
     // download one zip. (PresenceScaleSpec prices the upload-size win.)
     val d = "/root/testdata/sf0.001"
     import org.apache.spark.sql.functions._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     spark.conf.set(
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
       "true")
-    try {
+    try graft.streaming.Replay.withRocksDb(spark) {
       val recovered = SparkEntry.queries("Q-str-23")(spark, d)
       val batch = graft.core.Tables.events(spark, d)
         .groupBy((floor(unix_timestamp(col("ts")) / 10) * 10).cast("long")
@@ -310,11 +291,25 @@ class StreamingSpec extends AnyFunSuite {
       val presStraight = SparkEntry.queries("Q-str-05")(spark, d)
         .collect().map(_.toString).sorted.toSeq
       assert(presRecovered == presStraight)
-    } finally {
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      spark.conf.unset(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
+    } finally spark.conf.unset(
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
+  }
+
+  test("a drain whose sink throws restores the session's partition count and state store") {
+    import graft.streaming.Replay
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.stateStore.providerClass")
+    val before = keys.map(spark.conf.getOption)
+    // the Q-str-23 crash shape: the foreachBatch sink throws mid-drain
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      Replay.withRocksDb(spark) {
+        Replay.drain(Replay.eventsStream(spark, "/root/testdata/sf0.001")
+            .groupBy("event_type").count(), "complete")(
+          _.foreachBatch { (_: org.apache.spark.sql.DataFrame, _: Long) =>
+            throw new RuntimeException("simulated crash") })
+      }
     }
+    assert(keys.map(spark.conf.getOption) == before)
   }
 
   test("watermark bounds state: a 4-chunk windowed drain ends with open windows only") {
